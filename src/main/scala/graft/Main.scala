@@ -1630,10 +1630,9 @@ object Main {
             // append conforms to the index's own flavor
             graft.ext.Search.appendToPostingsIndex(docs, idCol, textCol,
               cfg.outDir)
-          val n = spark.read.parquet(s"${cfg.outDir}/stats").head()
-          println(s"postings index at ${cfg.outDir}: ${n.getAs[Long]("n_docs")} " +
-            s"docs, ${n.getAs[Long]("total_tokens")} tokens, " +
-            s"${n.getAs[Int]("buckets")} buckets")
+          val (n, t, b) = graft.ext.Search.readBaseStats(spark, cfg.outDir)
+          println(s"postings index at ${cfg.outDir}: $n docs, $t tokens, " +
+            s"$b buckets")
         case "semdedup" =>
           // semantic dedup against a frozen centroid artifact (--mode
           // train-centroids output or an ANN index's centroids/): label,

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.EngineParquet
 
 /**
  * Query-side full-text search over the corpus: BM25 ranking and
@@ -333,7 +334,7 @@ object Search {
       s"postings index at $dir has no term dictionary (terms/): it " +
         "predates the dictionary scheme — rebuild with buildPostingsIndex " +
         "or run search-compact to create it, then retry the fuzzy/prefix query")
-    val raw = spark.read.parquet(p.toString)
+    val raw = EngineParquet.read(spark, Seq(p.toString))
     // a term-level prefilter commutes with the per-term df aggregation —
     // applying it BEFORE the groupBy cuts the vocabulary-sized shuffle to
     // candidate terms only (the relaxed-expansion fast path)
@@ -1012,21 +1013,35 @@ object Search {
     * this marker's relevance) before attaching a fresh checkpoint to an
     * index that already folded higher ids. */
   private def readFoldedBatch(spark: org.apache.spark.sql.SparkSession,
-                              dir: String): Long = {
-    val df = spark.read.parquet(s"$dir/stats")
-    if (df.schema.fieldNames.contains("folded_batch"))
-      df.head().getAs[Long]("folded_batch")
+                              dir: String): Long =
+    foldedBatchOf(statsRecord(spark, dir))
+
+  private def foldedBatchOf(r: org.apache.spark.sql.Row): Long =
+    if (r.schema.fieldNames.contains("folded_batch"))
+      r.getAs[Long]("folded_batch")
     else -1L
-  }
+
+  /** The one row of a record table ([[writeStats]], the deletes record),
+    * read on the driver — no Spark job. */
+  private def record(spark: org.apache.spark.sql.SparkSession,
+                     path: String): org.apache.spark.sql.Row =
+    EngineParquet.rows(spark, path).headOption.getOrElse(
+      throw new IllegalStateException(s"no record in $path"))
+
+  private def statsRecord(spark: org.apache.spark.sql.SparkSession,
+                          dir: String): org.apache.spark.sql.Row =
+    record(spark, s"$dir/stats")
 
   /** Full base record incl. the folded-tombstone triple (absent on
     * pre-tombstone indexes → (-1, 0, 0): no generation folded yet). */
   private def readBaseStatsFull(spark: org.apache.spark.sql.SparkSession,
                                 dir: String)
+      : (Long, Long, Int, Long, Long, Long) =
+    baseStatsOf(statsRecord(spark, dir))
+
+  private def baseStatsOf(r: org.apache.spark.sql.Row)
       : (Long, Long, Int, Long, Long, Long) = {
-    val df = spark.read.parquet(s"$dir/stats")
-    val r = df.head()
-    val has = df.schema.fieldNames.contains("tomb_epoch")
+    val has = r.schema.fieldNames.contains("tomb_epoch")
     (r.getAs[Long]("n_docs"), r.getAs[Long]("total_tokens"),
       r.getAs[Int]("buckets"),
       if (has) r.getAs[Long]("tomb_epoch") else -1L,
@@ -1066,20 +1081,24 @@ object Search {
     // with ZERO tombstones (takedowns resurface) until some maintenance
     // op happened to run. Two existence probes in the common case.
     healTombstoneSwap(fs, dir)
-    val (n0, t0, buckets, fe, fd, ft) = readBaseStatsFull(spark, dir)
+    val base = statsRecord(spark, dir)
+    val (n0, t0, buckets, fe, fd, ft) = baseStatsOf(base)
     val bs = new org.apache.hadoop.fs.Path(s"$dir/batch_stats")
     val (n1, t1) =
       if (!fs.exists(bs)) (n0, t0)
       else {
         // only deltas NEWER than what the base record already folded
         // (folded_batch, written by compaction's stats fold — a crash
-        // before the delta-dir removal cannot double-count)
-        val foldedBatch = readFoldedBatch(spark, dir)
-        val r = spark.read.parquet(bs.toString)
-          .where(col("batch") > foldedBatch)
-          .agg(sum("n_docs"), sum("total_tokens")).head()
-        (n0 + (if (r.isNullAt(0)) 0L else r.getLong(0)),
-          t0 + (if (r.isNullAt(1)) 0L else r.getLong(1)))
+        // before the delta-dir removal cannot double-count); each
+        // `batch=N` delta is a one-row record read on the driver
+        val foldedBatch = foldedBatchOf(base)
+        val deltas = fs.listStatus(bs).toSeq.filter { st =>
+          val name = st.getPath.getName
+          st.isDirectory && name.startsWith("batch=") &&
+            name.stripPrefix("batch=").toLongOption.exists(_ > foldedBatch)
+        }.flatMap(st => EngineParquet.rows(spark, st.getPath.toString))
+        (n0 + deltas.map(_.getAs[Long]("n_docs")).sum,
+          t0 + deltas.map(_.getAs[Long]("total_tokens")).sum)
       }
     deleteStats(spark, dir) match {
       case None => (n1, t1, buckets)
@@ -1255,7 +1274,7 @@ object Search {
         !f.getPath.getName.startsWith("_") &&
         !f.getPath.getName.startsWith(".")))
       .take(1).toSeq.headOption
-      .map(f => spark.read.parquet(f.getPath.toString)
+      .map(f => EngineParquet.read(spark, Seq(f.getPath.toString))
         .schema.fieldNames.contains("positions"))
   }
 
@@ -1336,11 +1355,22 @@ object Search {
                       query: String, k: Int,
                       params: Bm25Params = Bm25Params(),
                       roundTo: Int = 4, minShouldMatch: Int = 1,
-                      searchAfter: Option[(Double, Any)] = None): DataFrame = {
+                      searchAfter: Option[(Double, Any)] = None): DataFrame =
+    indexedBm25TopKWith(spark, dir, readStats(spark, dir), query, k, params,
+      roundTo, minShouldMatch, searchAfter)
+
+  /** [[indexedBm25TopK]] over an already-read [[readStats]] triple (a
+    * caller that needed the stats itself reads them once per query). */
+  private def indexedBm25TopKWith(spark: org.apache.spark.sql.SparkSession,
+                                  dir: String, indexStats: (Long, Long, Int),
+                                  query: String, k: Int, params: Bm25Params,
+                                  roundTo: Int, minShouldMatch: Int,
+                                  searchAfter: Option[(Double, Any)])
+      : DataFrame = {
     require(minShouldMatch >= 1, "minShouldMatch must be >= 1")
     val terms = queryTerms(query)
     require(terms.nonEmpty, "empty query")
-    val (nDocs, totalTokens, buckets) = readStats(spark, dir)
+    val (nDocs, totalTokens, buckets) = indexStats
     val avgdl = totalTokens.toDouble / nDocs
     val pruned = prunedPostings(spark, dir, terms, buckets)
     // exact per-term df in ONE bounded aggregate (|terms| longs)
@@ -1486,7 +1516,8 @@ object Search {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
     val p = new org.apache.hadoop.fs.Path(s"$dir/deletes/ids")
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
+    if (fs.exists(p)) Some(EngineParquet.read(spark, Seq(p.toString)))
+    else None
   }
 
   /**
@@ -1576,10 +1607,9 @@ object Search {
     val p = new org.apache.hadoop.fs.Path(s"$dir/deletes/stats")
     if (!fs.exists(p)) None
     else {
-      val df = spark.read.parquet(p.toString)
-      val r = df.head()
+      val r = record(spark, p.toString)
       Some((r.getAs[Long]("n_docs_removed"), r.getAs[Long]("tokens_removed"),
-        if (df.schema.fieldNames.contains("epoch")) r.getAs[Long]("epoch")
+        if (r.schema.fieldNames.contains("epoch")) r.getAs[Long]("epoch")
         else 0L))
     }
   }
@@ -1604,9 +1634,14 @@ object Search {
     // be absent when nothing ever hashed there
     val paths = needed.map(b => s"$root/tb=$b")
       .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+    // schema off one footer on the driver, `tb` typed as written
+    def read(ps: Seq[String]): DataFrame =
+      EngineParquet.read(spark, ps, Map("basePath" -> root),
+        Seq(org.apache.spark.sql.types.StructField("tb",
+          org.apache.spark.sql.types.IntegerType)))
     val pruned0 =
       if (paths.nonEmpty)
-        spark.read.option("basePath", root).parquet(paths: _*)
+        read(paths)
           .where(col("tb").isin(needed.map(_.asInstanceOf[Any]): _*))
       else {
         // no needed bucket exists -> nothing can match. Take ANY one
@@ -1620,8 +1655,7 @@ object Search {
             fs.listStatus(rootPath).filter(_.isDirectory).take(1)
           else Array.empty[org.apache.hadoop.fs.FileStatus]
         any.headOption match {
-          case Some(d) => spark.read.option("basePath", root)
-            .parquet(d.getPath.toString).where(lit(false))
+          case Some(d) => read(Seq(d.getPath.toString)).where(lit(false))
           case None => spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             org.apache.spark.sql.types.StructType(Seq(
@@ -2750,14 +2784,17 @@ object Search {
     val fixed = pTerms.init
     val prefix = pTerms.last
     val distinctFixed = fixed.distinct.sorted
-    // ONE row-local codegen kernel per pass computes (dl, ptf, df flags)
-    // from a single tokenize ([[graft.functions.PhrasePrefixStats]]) —
-    // the HOF formulation this replaces (`filter(sequence(...))` starts
+    // ONE row-local codegen kernel per expression tree computes (dl, ptf,
+    // df flags) from a single tokenize ([[graft.functions.PhrasePrefixStats]])
+    // — the HOF formulation this replaces (`filter(sequence(...))` starts
     // scan + `exists(startsWith)` + per-expression re-tokenize) is
     // CodegenFallback: an interpreted lambda per candidate start and 3-4
-    // tokenizes per row per pass. Bit-identical by the kernel's
-    // differential spec; same two-pass shape (bounded stats aggregate,
-    // then the map-only scoring scan).
+    // tokenizes per row per pass. The scoring scan evaluates the kernel
+    // twice per surviving row (the committed plan keeps
+    // `phrase_prefix_stats` in both the pushed Filter on `ptf > 0` and the
+    // Project), so that pass tokenizes twice. Bit-identical by the
+    // kernel's differential spec; same two-pass shape (bounded stats
+    // aggregate, then the map-only scoring scan).
     val statsCol = graft.functions.EsFunctions.phrase_prefix_stats(
       col(textCol), fixed, prefix)
     // one bounded aggregate: n, Σdl, exact df per fixed term, relaxed
@@ -2834,23 +2871,26 @@ object Search {
     val (nDocs, totalTokens, buckets) = readStats(spark, dir)
     val avgdl = totalTokens.toDouble / nDocs
     val allTerms = (distinctFixed ++ expansion).distinct.sorted
+    // ONE postings open per query: the pruned read doubles as the schema
+    // probe (" " can never be a token, so a single-term phrase with no
+    // expansion still gets a typed, empty frame)
+    val pruned = prunedPostings(spark, dir,
+      if (allTerms.isEmpty) Seq(" ") else allTerms, buckets)
     // positional-schema check FIRST (it needs only the postings schema,
     // not the expansion): a non-positional index must refuse loudly even
     // when the prefix matches no vocabulary term — an empty result from
     // an index that could never serve the query would mask the misuse
-    val schemaProbe = prunedPostings(spark, dir, Seq(" "), buckets)
-    require(schemaProbe.schema.fieldNames.contains("positions"),
+    require(pruned.schema.fieldNames.contains("positions"),
       s"postings index at $dir stores no positions (built with " +
         "positional = false, or predating the positional schema): rebuild " +
         "with positional postings to serve phrase-prefix queries")
     if (expansion.isEmpty)
       // no vocabulary term carries the prefix — empty result, typed off
       // the index's own postings schema (the indexedRelaxedTopK trick)
-      return schemaProbe
+      return pruned
         .where(lit(false))
         .select(col("doc_id"), lit(0).cast("int").as("rank"),
           lit(0.0).as("score"))
-    val pruned = prunedPostings(spark, dir, allTerms, buckets)
     // exact fixed dfs + relaxed prefix df in ONE bounded aggregate over
     // the pruned, post-tombstone postings
     val dfRow = pruned.agg(count(lit(1)).as("_n"),
@@ -3684,12 +3724,13 @@ object Search {
       s"no like-text term reaches min_term_freq=$minTermFreq")
     val dfMap = termDictionary(spark, dir, Some(inSet(col("term"), cands)))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val (nDocs, _, _) = readStats(spark, dir)
-    val selected = selectMltTerms(tf, dfMap, nDocs, maxQueryTerms,
+    val indexStats = readStats(spark, dir)
+    val selected = selectMltTerms(tf, dfMap, indexStats._1, maxQueryTerms,
       minTermFreq, minDocFreq)
     require(selected.nonEmpty,
       s"no candidate term reaches min_doc_freq=$minDocFreq")
-    indexedBm25TopK(spark, dir, selected.mkString(" "), k, params, roundTo)
+    indexedBm25TopKWith(spark, dir, indexStats, selected.mkString(" "), k,
+      params, roundTo, minShouldMatch = 1, searchAfter = None)
   }
 
   /**

@@ -15,6 +15,7 @@ import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.immutable.Seq
+import scala.jdk.CollectionConverters._
 
 /**
  * DataSource V2 connector for shard-addressed bundles:
@@ -32,8 +33,13 @@ import scala.collection.immutable.Seq
  * `?routing=k` hits one shard). This subsumes the optimizer-rule approach of
  * [[graft.plans.BundleRoutingPruning]] (still available for readers that
  * bypass the connector): the V2 source needs no session extension — pushdown
- * happens in [[FileScanBuilder.pushFilters]], before partition listing, so
- * the non-matching `_shard=*` directories are never even listed at scale.
+ * happens in [[FileScanBuilder.pushFilters]], so the scan's partition filter
+ * drops the non-matching `_shard=*` directories and their files are never
+ * opened. They are still listed: the delegate's `InMemoryFileIndex` lists
+ * the whole `data/` tree once per table (an alias scoped to one index of a
+ * multi-index bundle lists only that index's tree). A parquet bundle's
+ * schema comes from one data file's footer, read on the driver
+ * ([[EngineParquet]]), so planning a routed lookup submits no Spark job.
  *
  * Works for single-index bundles (`data/_shard=k/`) and multi-index bundles
  * (`data/_index=i/_shard=k/` written by [[graft.sink.BundleSink.writeMulti]];
@@ -108,7 +114,13 @@ class BundleDataSource extends org.apache.spark.sql.connector.catalog.TableProvi
         (Seq(s"$root/data/_index=$idx"), new CaseInsensitiveStringMap(m))
       case None => (Seq(s"$root/data"), options)
     }
-    BundleTable(s"graft-bundle $root", spark, opts, paths, schema, fmt, shards)
+    // a parquet bundle's data schema comes off one footer on the driver
+    // (the engine wrote it): no inference job before a routed lookup
+    val declared = schema.orElse(
+      if (fmt == "json") None
+      else EngineParquet.schema(spark, paths.head,
+        opts.asCaseSensitiveMap().asScala.toMap))
+    BundleTable(s"graft-bundle $root", spark, opts, paths, declared, fmt, shards)
   }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -128,8 +140,9 @@ class BundleDataSource extends org.apache.spark.sql.connector.catalog.TableProvi
   // so DataStreamReader falls back to this V1 StreamSourceProvider path.
 
   /** Streaming schema: fixed layout for json bundles (no inference scan);
-    * parquet from footers (one bounded batch-read). Multi-index bundles
-    * append `_index` ahead of `_shard` — the directory order. */
+    * parquet from one footer read on the driver plus the listing's
+    * partition columns. Multi-index bundles append `_index` ahead of
+    * `_shard` — the directory order. */
   private def streamSchema(spark: SparkSession, root: String,
                            fmt: String, multi: Boolean): StructType =
     if (fmt == "json") {
@@ -139,7 +152,7 @@ class BundleDataSource extends org.apache.spark.sql.connector.catalog.TableProvi
           org.apache.spark.sql.types.StructField("_index", StringType) :+
           org.apache.spark.sql.types.StructField("_shard", IntegerType))
       else base
-    } else spark.read.parquet(s"$root/data").schema
+    } else EngineParquet.read(spark, Seq(s"$root/data")).schema
 
   private def isMulti(spark: SparkSession, root: String): Boolean = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -485,7 +498,8 @@ case class BundleTable(name: String, sparkSession: SparkSession,
 object BundleTable {
   /** json bundle data files have a fixed layout — skip a full-data inference
     * scan (at 100 TB that pass would dwarf most queries); parquet schemas
-    * come from footers (cheap) unless caller-specified. */
+    * arrive declared from the connector's driver-side footer read, and are
+    * inferred here only under that read's fallbacks. */
   private[sources] def effectiveSchema(declared: Option[StructType],
                                        bundleFormat: String): Option[StructType] =
     declared.orElse(
