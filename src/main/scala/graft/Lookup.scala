@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
  *   graft.Lookup <bundleDir> <routingKey>
  *   graft.Lookup <installDir> <alias> <routingKey>
  *
- * Uses [[graft.plans.BundleRoutingPruning]] so only the one shard directory
- * implied by the routing hash is scanned. The 3-arg form queries THROUGH an
+ * Reads through the `graft-bundle` connector, so only the one shard
+ * directory implied by the routing hash is listed and scanned; the output
+ * names the partition filter and the directories the scan listed. The 3-arg form queries THROUGH an
  * install root's alias indirection (`_aliases/<alias>`, the reference's
  * "query the alias, not the index") — pruning is identical: the connector
  * scopes a multi-index bundle to the alias's `_index=` partition in the
@@ -45,9 +46,16 @@ object Lookup {
           (scoped, root, args(2))
         }
       val df = df0.filter(col("_routing") === key)
-      val plan = df.queryExecution.executedPlan.toString
-      val pruned = "PartitionFilters: \\[[^\\]]*_shard[^\\]]*\\]".r.findFirstIn(plan)
+      val plan = df.queryExecution.executedPlan
+      val pruned = "PartitionFilters: \\[[^\\]]*_shard[^\\]]*\\]".r.findFirstIn(plan.toString)
       println(s"partition pruning: ${pruned.getOrElse("NONE (full scan!)")}")
+      // planning listed the files of the partitions the filters kept
+      val listed = plan.collectFirst {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+      }.collect {
+        case f: org.apache.spark.sql.execution.datasources.v2.FileScan => f.fileIndex
+      }.collect { case i: graft.sources.BundleShardIndex => i.listedDirs }
+      println(s"partition dirs listed: ${listed.map(_.mkString(", ")).getOrElse("?")}")
       val rows = df.collect()
       println(s"${rows.length} docs for routing '$key' " +
         s"(shard ${graft.functions.EsMurmur3.shard(key, BundleReader.numShards(spark, dir))})")

@@ -2334,14 +2334,16 @@ object Similarity {
                         maxBucket: Int = 10000,
                         strictRecall: Boolean = false,
                         shuffleFloat32: Boolean = false): DataFrame = {
-    val n = df.count()
+    // one count, and only when auto knobs or the broadcast gate need it
+    lazy val n = df.count()
     val (tablesR, bitsR) =
       if (tables == 0 || bits == 0)
         autoLshKnobs(n, threshold, strict = strictRecall)
       else (tables, bits)
+    val budget = broadcastVerifyBudget(df.sparkSession)
     lshPairsForTables(df, idCol, vecCol, threshold, dim, 0 until tablesR,
       bitsR, roundTo, maxBucket, shuffleFloat32,
-      broadcastVerify = broadcastVerifyFits(df, n, dim))
+      broadcastVerify = budget > 0 && broadcastVerifyFits(n, dim, budget))
       .groupBy("id_a", "id_b").agg(first("sim").as("sim"))
   }
 
@@ -2351,16 +2353,33 @@ object Similarity {
     * instead of the 8·dim-byte unit vector every signature row otherwise
     * carries — and the exact-verify dot reads both vectors from one
     * broadcast hash relation instead. The estimate is the UnsafeRow
-    * footprint of (id, array<double> dim); the knob
-    * `spark.graft.lsh.broadcastVerifyMaxBytes` (default 1g, 0 disables)
-    * bounds what each executor must hold, the same budget conversation as
-    * `autoBroadcastJoinThreshold` — at corpus sizes past it (the 10M+
-    * tiers, any 100 TB-class corpus) the vector-carrying exchange remains
-    * the scale path, staged when scratch disk binds. */
-  private def broadcastVerifyFits(df: DataFrame, n: Long, dim: Int): Boolean = {
-    val maxBytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      df.sparkSession.conf.get("spark.graft.lsh.broadcastVerifyMaxBytes", "1g"))
-    maxBytes > 0 && n * (8L * dim + 56L) <= maxBytes
+    * footprint of (id, array<double> dim), against
+    * [[broadcastVerifyBudget]]; at corpus sizes past it (the 10M+ tiers,
+    * any 100 TB-class corpus) the vector-carrying exchange remains the
+    * scale path, staged when scratch disk binds. */
+  private def broadcastVerifyFits(n: Long, dim: Int, budget: Long): Boolean =
+    n * (8L * dim + 56L) <= budget
+
+  /** The broadcast-verify budget in bytes (0 = broadcast-verify off):
+    * the knob `spark.graft.lsh.broadcastVerifyMaxBytes` (default 1g, 0
+    * disables) bounds what each executor must hold, the same budget
+    * conversation as `autoBroadcastJoinThreshold`. The broadcast table is
+    * collected through the driver, so `spark.driver.maxResultSize` (default
+    * 1g, 0 = unlimited) bounds it too: a table the knob admits but that
+    * limit refuses would abort the job. The budget is therefore the knob,
+    * clamped to 3/4 of `maxResultSize`: the quarter left covers the
+    * collected rows' framing beyond the row-size estimate, and a 1M-row
+    * 64-dim corpus (~568 MB estimated) still broadcasts at the defaults. */
+  private[graft] def broadcastVerifyBudget(knobBytes: Long, maxResultSizeBytes: Long): Long =
+    if (knobBytes <= 0) 0L
+    else if (maxResultSizeBytes <= 0) knobBytes
+    else math.min(knobBytes, maxResultSizeBytes / 4 * 3)
+
+  private def broadcastVerifyBudget(spark: org.apache.spark.sql.SparkSession): Long = {
+    def bytes(s: String) = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s)
+    broadcastVerifyBudget(
+      bytes(spark.conf.get("spark.graft.lsh.broadcastVerifyMaxBytes", "1g")),
+      bytes(spark.sparkContext.getConf.get("spark.driver.maxResultSize", "1g")))
   }
 
   /** One LSH candidate-join pass over an explicit TABLE-ID subset —
@@ -2490,14 +2509,15 @@ object Similarity {
                               strictRecall: Boolean = false,
                               shuffleFloat32: Boolean = true): DataFrame = {
     require(passes >= 1, "passes must be >= 1")
-    val nStaged = df.count()
+    lazy val nStaged = df.count()
     val (tablesR, bitsR) =
       if (tables == 0 || bits == 0)
         autoLshKnobs(nStaged, threshold, strict = strictRecall)
       else (tables, bits)
     require(passes <= tablesR, s"passes ($passes) > tables ($tablesR)")
     val perPass = (tablesR + passes - 1) / passes
-    val bcastVerify = broadcastVerifyFits(df, nStaged, dim)
+    val budget = broadcastVerifyBudget(df.sparkSession)
+    val bcastVerify = budget > 0 && broadcastVerifyFits(nStaged, dim, budget)
     val parts = (0 until tablesR).grouped(perPass).toSeq.map { group =>
       val accepted = lshPairsForTables(df, idCol, vecCol, threshold, dim,
         group, bitsR, roundTo, maxBucket, shuffleFloat32,

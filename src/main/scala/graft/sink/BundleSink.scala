@@ -504,12 +504,14 @@ object BundleSink {
         return Result(outDir, shards, per.values.map(_.totalDocs).sum, mergedAll)
       }
     }
-    val numShards = BundleManifest.numShards(spark, outDir)
-    val format = BundleManifest.format(spark, outDir)
-    val codec = BundleManifest.compression(spark, outDir)
+    // one manifest read: every field below comes from the same snapshot
+    val snapshot = BundleManifest.raw(spark, outDir)
+    val numShards = BundleManifest.numShardsIn(snapshot, outDir)
+    val format = BundleManifest.formatOf(snapshot)
+    val codec = BundleManifest.compressionOf(snapshot)
       .getOrElse(if (format == "json") "gzip" else "zstd")
-    val indexName = BundleManifest.indexName(spark, outDir)
-    val typeName = BundleManifest.typeName(spark, outDir)
+    val indexName = BundleManifest.indexNameOf(snapshot)
+    val typeName = BundleManifest.typeNameOf(snapshot)
     require(data.columns.contains("_routing"),
       s"bundle inserts need a _routing column (placement is derived from " +
         s"it; got ${data.columns.mkString(", ")}) — build rows with " +
@@ -518,7 +520,7 @@ object BundleSink {
     if (overwrite)
       return write(docs, outDir, numShards, format = format,
         indexName = indexName, typeName = typeName, compression = Some(codec))
-    val prior = BundleManifest.shardCounts(spark, outDir).getOrElse(
+    val prior = BundleManifest.shardCountsOf(snapshot).getOrElse(
       throw new IllegalStateException(s"$outDir manifest has no shardCounts " +
         "(unsealed streaming bundle?) — seal it before INSERT INTO, or " +
         "use overwrite"))
@@ -582,8 +584,7 @@ object BundleSink {
         // we own version `next`: publish its content under the claimed name
         // (tmp + rename — only the claim owner ever writes this name)
         val manifest = manifestJson(indexName, typeName, outDir, numShards,
-          format, codec, merged, carriedAliasFragment(head.orElse(
-            Some(graft.sources.BundleManifest.raw(spark, outDir)))), next)
+          format, codec, merged, carriedAliasFragment(head.orElse(Some(snapshot))), next)
         val tmp = new org.apache.hadoop.fs.Path(casDir(outDir), s".tmp-$tag-v$next")
         val o = fs.create(tmp, true); o.write(manifest.getBytes("UTF-8")); o.close()
         if (!fs.rename(tmp, new org.apache.hadoop.fs.Path(casDir(outDir), s"v$next.json")))

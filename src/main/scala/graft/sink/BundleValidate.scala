@@ -73,7 +73,12 @@ object BundleValidate {
         .schema(graft.streaming.BundleStream.bundleSchema.add("_index",
           org.apache.spark.sql.types.StringType))
         .json(s"$bundleRoot/data")
-      case _ => spark.read.parquet(s"$bundleRoot/data")
+      // _index declared a string: inference would type numeric-looking
+      // index names as ints (and drop leading zeros)
+      case _ => graft.sources.EngineParquet.read(spark, Seq(s"$bundleRoot/data"),
+        partitionColumns = Seq(
+          org.apache.spark.sql.types.StructField("_index", org.apache.spark.sql.types.StringType),
+          org.apache.spark.sql.types.StructField("_shard", org.apache.spark.sql.types.IntegerType)))
     }
     val rows = df.groupBy(col("_index"), col("_shard"))
       .agg(count(lit(1)).as("docs"),
@@ -121,10 +126,11 @@ object BundleValidate {
   def validate(spark: SparkSession, bundleDir: String): Report = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(bundleDir), spark.sparkContext.hadoopConfiguration)
-    val n = BundleReader.numShards(spark, bundleDir)
     // chain-aware: after concurrent appends the authoritative counts are
-    // the CAS chain head, which the manifest.json mirror can lag
+    // the CAS chain head, which the manifest.json mirror can lag; one read,
+    // so the shard count and the counts come from the same snapshot
     val manifest = graft.sources.BundleManifest.raw(spark, bundleDir)
+    val n = graft.sources.BundleManifest.numShardsIn(manifest, bundleDir)
     val manifestCounts = graft.sources.BundleManifest.parseShardCounts(manifest)
     val manifestTotal = graft.sources.BundleManifest.totalDocsOf(manifest)
       .getOrElse(-1L)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, E
 import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
+import org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex
 import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.{FileScanBuilder, FileTable}
@@ -34,12 +35,15 @@ import scala.jdk.CollectionConverters._
  * [[graft.plans.BundleRoutingPruning]] (still available for readers that
  * bypass the connector): the V2 source needs no session extension — pushdown
  * happens in [[FileScanBuilder.pushFilters]], so the scan's partition filter
- * drops the non-matching `_shard=*` directories and their files are never
- * opened. They are still listed: the delegate's `InMemoryFileIndex` lists
- * the whole `data/` tree once per table (an alias scoped to one index of a
- * multi-index bundle lists only that index's tree). A parquet bundle's
- * schema comes from one data file's footer, read on the driver
- * ([[EngineParquet]]), so planning a routed lookup submits no Spark job.
+ * drops the non-matching `_shard=*` directories. Files are listed at scan
+ * planning, only for the partitions that survive: the table's
+ * [[BundleShardIndex]] knows the shard directories from directory listings
+ * alone, so a routed lookup lists one shard directory and never opens or
+ * lists the others (an alias scoped to one index of a multi-index bundle
+ * starts from that index's directory). A parquet bundle's schema comes from
+ * one data file's footer, read on the driver ([[EngineParquet]]), so
+ * planning a routed lookup submits no Spark job, and one `load` builds one
+ * table (alias, manifest, footer and directory reads once).
  *
  * Works for single-index bundles (`data/_shard=k/`) and multi-index bundles
  * (`data/_index=i/_shard=k/` written by [[graft.sink.BundleSink.writeMulti]];
@@ -101,35 +105,31 @@ class BundleDataSource extends org.apache.spark.sql.connector.catalog.TableProvi
     }
   }
 
+  /** The table [[inferSchema]] built, with the options it was built from.
+    * Spark asks ONE provider instance for `inferSchema` and then for
+    * `getTable` with the schema that call returned
+    * (`DataSourceV2Utils.getTableFromProvider`, a new instance per `load`),
+    * so the second call reuses the first's alias, manifest, footer and
+    * directory reads instead of repeating them. */
+  private var inferred: Option[(java.util.Map[String, String], BundleTable)] = None
+
   private def makeTable(options: CaseInsensitiveStringMap,
                         schema: Option[StructType]): BundleTable = {
     val (root, scopedIdx) = resolveRoot(options)
-    val spark = sparkSession
-    val fmt = BundleManifest.format(spark, root)
-    val shards = BundleManifest.numShards(spark, root)
-    val (paths, opts) = scopedIdx match {
-      case Some(idx) =>
-        val m = new java.util.HashMap[String, String](options.asCaseSensitiveMap())
-        m.put("basePath", s"$root/data")
-        (Seq(s"$root/data/_index=$idx"), new CaseInsensitiveStringMap(m))
-      case None => (Seq(s"$root/data"), options)
-    }
-    // a parquet bundle's data schema comes off one footer on the driver
-    // (the engine wrote it): no inference job before a routed lookup
-    val declared = schema.orElse(
-      if (fmt == "json") None
-      else EngineParquet.schema(spark, paths.head,
-        opts.asCaseSensitiveMap().asScala.toMap))
-    BundleTable(s"graft-bundle $root", spark, opts, paths, declared, fmt, shards)
+    BundleTable.at(sparkSession, root, scopedIdx, options, schema)
   }
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    makeTable(options, None).schema
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val table = makeTable(options, None)
+    inferred = Some(options.asCaseSensitiveMap() -> table)
+    table.schema
+  }
 
   override def getTable(schema: StructType,
                         partitioning: Array[org.apache.spark.sql.connector.expressions.Transform],
                         properties: java.util.Map[String, String]): Table =
-    makeTable(new CaseInsensitiveStringMap(properties), Option(schema))
+    inferred.collect { case (opts, table) if opts == properties && table.schema == schema => table }
+      .getOrElse(makeTable(new CaseInsensitiveStringMap(properties), Option(schema)))
 
   // ===== streaming read: readStream.format("graft-bundle").load(dir) =====
   // Delegates to Spark's OWN file-stream source (seen-files log = exactly-
@@ -139,10 +139,11 @@ class BundleDataSource extends org.apache.spark.sql.connector.catalog.TableProvi
   // of asked of the caller. BundleTable is a FileTable (BATCH_READ only),
   // so DataStreamReader falls back to this V1 StreamSourceProvider path.
 
-  /** Streaming schema: fixed layout for json bundles (no inference scan);
-    * parquet from one footer read on the driver plus the listing's
-    * partition columns. Multi-index bundles append `_index` ahead of
-    * `_shard` — the directory order. */
+  /** Streaming schema: fixed layout for json bundles (no inference scan),
+    * where multi-index bundles append `_index` ahead of `_shard` (the
+    * directory order); parquet takes the batch table's derivation — one
+    * footer read on the driver plus the partition columns of the shard
+    * directories, no file listing. */
   private def streamSchema(spark: SparkSession, root: String,
                            fmt: String, multi: Boolean): StructType =
     if (fmt == "json") {
@@ -152,7 +153,8 @@ class BundleDataSource extends org.apache.spark.sql.connector.catalog.TableProvi
           org.apache.spark.sql.types.StructField("_index", StringType) :+
           org.apache.spark.sql.types.StructField("_shard", IntegerType))
       else base
-    } else EngineParquet.read(spark, Seq(s"$root/data")).schema
+    } else BundleTable.at(spark, root, None,
+      new CaseInsensitiveStringMap(java.util.Map.of("path", root)), None).schema
 
   private def isMulti(spark: SparkSession, root: String): Boolean = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -361,7 +363,12 @@ object BundleManifest {
   }
 
   def numShards(spark: SparkSession, bundleDir: String): Int =
-    numShardsOf(read(spark, bundleDir)).getOrElse(
+    numShardsIn(read(spark, bundleDir), bundleDir)
+
+  /** The shard count of `bundleDir`'s manifest content; a manifest without
+    * one is an error. */
+  private[graft] def numShardsIn(manifest: String, bundleDir: String): Int =
+    numShardsOf(manifest).getOrElse(
       throw new IllegalStateException(s"no numShards in $bundleDir manifest"))
 
   /** Bundle data format as recorded by the writer ("json" when absent —
@@ -381,11 +388,12 @@ object BundleManifest {
 
   /** Per-shard doc counts from the manifest; None when the manifest has no
     * counts yet (streaming-state bundle before seal). */
-  def shardCounts(spark: SparkSession, bundleDir: String): Option[Map[Int, Long]] = {
-    val m = read(spark, bundleDir)
-    if (jsonNode(m).path("shardCounts").isObject) Some(parseShardCounts(m))
+  def shardCounts(spark: SparkSession, bundleDir: String): Option[Map[Int, Long]] =
+    shardCountsOf(read(spark, bundleDir))
+
+  private[graft] def shardCountsOf(manifest: String): Option[Map[Int, Long]] =
+    if (jsonNode(manifest).path("shardCounts").isObject) Some(parseShardCounts(manifest))
     else None
-  }
 }
 
 /**
@@ -397,7 +405,7 @@ object BundleManifest {
  * `SupportsRead`/`SupportsWrite` table the insert stays on the V2 path and
  * reaches [[newWriteBuilder]]'s V1 fallback, which enforces the bundle
  * contract. Scan building still uses Spark's own parquet/json file scans
- * (via the delegate's file index) wrapped with [[RoutingShardPushdown]] so
+ * (over the [[BundleShardIndex]]) wrapped with [[RoutingShardPushdown]] so
  * the `_routing -> _shard` implication lands in the scan's partition
  * filters.
  */
@@ -414,13 +422,23 @@ case class BundleTable(name: String, sparkSession: SparkSession,
   private def userSpecifiedSchema: Option[StructType] =
     BundleTable.effectiveSchema(declaredSchema, bundleFormat)
 
-  /** Owns file listing, partition discovery and schema reconciliation;
-    * a field so the directory is listed once per table instance. */
+  /** Partitions from the shard directories; each kept partition's files
+    * listed when a scan is planned. */
+  private lazy val shardIndex = new BundleShardIndex(sparkSession,
+    new org.apache.hadoop.fs.Path(paths.head), options.asCaseSensitiveMap().asScala.toMap,
+    userSpecifiedSchema)
+
+  /** Owns schema reconciliation and the format's scan, over the shard
+    * index; a field so one table instance lists each directory once. */
   private lazy val delegate: FileTable =
-    if (isParquet) ParquetTable(name, sparkSession, options, paths,
-      userSpecifiedSchema, classOf[ParquetFileFormat])
-    else JsonTable(name, sparkSession, options, paths,
-      userSpecifiedSchema, classOf[JsonFileFormat])
+    if (isParquet) new ParquetTable(name, sparkSession, options, paths,
+      userSpecifiedSchema, classOf[ParquetFileFormat]) {
+      override lazy val fileIndex: PartitioningAwareFileIndex = shardIndex
+    }
+    else new JsonTable(name, sparkSession, options, paths,
+      userSpecifiedSchema, classOf[JsonFileFormat]) {
+      override lazy val fileIndex: PartitioningAwareFileIndex = shardIndex
+    }
 
   override def schema(): StructType = delegate.schema
 
@@ -496,6 +514,31 @@ case class BundleTable(name: String, sparkSession: SparkSession,
 }
 
 object BundleTable {
+  /** The table over bundle `root` (one index of it when `scopedIdx` is
+    * set): format and shard count from ONE manifest read, a parquet data
+    * schema from one footer read on the driver, no file listing. */
+  private[sources] def at(spark: SparkSession, root: String, scopedIdx: Option[String],
+                          options: CaseInsensitiveStringMap,
+                          schema: Option[StructType]): BundleTable = {
+    val manifest = BundleManifest.raw(spark, root)
+    val fmt = BundleManifest.formatOf(manifest)
+    val shards = BundleManifest.numShardsIn(manifest, root)
+    val (paths, opts) = scopedIdx match {
+      case Some(idx) =>
+        val m = new java.util.HashMap[String, String](options.asCaseSensitiveMap())
+        m.put("basePath", s"$root/data")
+        (Seq(s"$root/data/_index=$idx"), new CaseInsensitiveStringMap(m))
+      case None => (Seq(s"$root/data"), options)
+    }
+    // a parquet bundle's data schema comes off one footer on the driver
+    // (the engine wrote it): no inference job before a routed lookup
+    val declared = schema.orElse(
+      if (fmt == "json") None
+      else EngineParquet.schema(spark, paths.head,
+        opts.asCaseSensitiveMap().asScala.toMap))
+    BundleTable(s"graft-bundle $root", spark, opts, paths, declared, fmt, shards)
+  }
+
   /** json bundle data files have a fixed layout — skip a full-data inference
     * scan (at 100 TB that pass would dwarf most queries); parquet schemas
     * arrive declared from the connector's driver-side footer read, and are

@@ -38,7 +38,7 @@ object EngineParquet {
   /** Spark's file-listing filter (`HadoopFSUtils.shouldFilterOutPathName`,
     * minus the summary files the engine never writes): hidden and
     * underscore names are skipped, except partition directories. */
-  private def visible(st: FileStatus): Boolean = {
+  private[sources] def visible(st: FileStatus): Boolean = {
     val n = st.getPath.getName
     !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
       n.endsWith("._COPYING_"))

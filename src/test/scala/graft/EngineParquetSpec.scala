@@ -6,7 +6,6 @@ import graft.sources.{BundleTable, EngineParquet}
 import graft.transform.DocTransform
 import java.nio.file.Files
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
@@ -27,36 +26,7 @@ class EngineParquetSpec extends SparkSpec {
 
   private def exists(p: String): Boolean = fs(p).exists(new Path(p))
 
-  /** Spark jobs submitted while `body` runs, counted by a listener between
-    * two sentinel jobs (listener delivery is asynchronous; the sentinels
-    * bracket exactly the jobs `body` submitted). */
-  private def jobsDuring(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.spec.sentinel"
-    val events = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        events.put(Option(e.properties).flatMap(p => Option(p.getProperty(key)))
-          .getOrElse("job"))
-    }
-    def sentinel(tag: String): Unit = {
-      sc.setLocalProperty(key, tag)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sentinel("start")
-      body
-      sentinel("end")
-      var seen = Vector.empty[String]
-      while (!seen.contains("end")) {
-        val e = events.poll(30, java.util.concurrent.TimeUnit.SECONDS)
-        assert(e != null, "listener never saw the end sentinel")
-        seen :+= e
-      }
-      seen.dropWhile(_ != "start").drop(1).takeWhile(_ != "end").size
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsDuring(body: => Any): Int = jobsSubmitted(body).size
 
   private val tb = StructField("tb", IntegerType)
 

@@ -563,6 +563,52 @@ class SimilaritySpec extends SparkSpec {
       s"an Exchange carries the vector column:\n$exchangeInputs")
   }
 
+  test("broadcast-verify budget: the knob clamped to 3/4 of spark.driver.maxResultSize") {
+    val g = 1L << 30
+    assert(Similarity.broadcastVerifyBudget(g, g) === g / 4 * 3)
+    assert(Similarity.broadcastVerifyBudget(g, 0L) === g, "maxResultSize 0 = unlimited")
+    assert(Similarity.broadcastVerifyBudget(0L, g) === 0L, "knob 0 disables")
+    assert(Similarity.broadcastVerifyBudget(100L << 20, g) === (100L << 20))
+    assert(Similarity.broadcastVerifyBudget(4 * g, 2 * g) === 3 * g / 2)
+    // the 1M x 64-dim bench corpus keeps broadcast-verify at the defaults
+    assert(1000000L * (8L * 64 + 56) <= Similarity.broadcastVerifyBudget(g, g))
+  }
+
+  test("cosineNearDupsLsh/Staged count the corpus only for auto knobs or an enabled " +
+      "broadcast budget") {
+    val dim = 8
+    val rnd = new scala.util.Random(61)
+    // repartitioned: a count over a local relation runs no job at all
+    val corpus = (0 until 60).map(i =>
+      (i.toLong, Seq.fill(dim)(rnd.nextGaussian().toFloat))).toDF("vec_id", "embedding")
+      .repartition(2)
+    val knob = "spark.graft.lsh.broadcastVerifyMaxBytes"
+    // adaptive execution off: a count is then one job named by its call site
+    def countJobs(v: String)(call: => Any): Int = {
+      val confs = Seq(knob -> v, "spark.sql.adaptive.enabled" -> "false")
+      val old = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, x) => spark.conf.set(k, x) }
+      try jobsSubmitted(call).count(_.startsWith("count at Similarity.scala"))
+      finally old.foreach {
+        case (k, Some(o)) => spark.conf.set(k, o)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    def lsh(tables: Int, bits: Int) = Similarity.cosineNearDupsLsh(corpus, "vec_id",
+      "embedding", threshold = 0.9, dim = dim, tables = tables, bits = bits)
+    def staged(tables: Int, bits: Int) = Similarity.cosineNearDupsLshStaged(corpus,
+      "vec_id", "embedding", threshold = 0.9, dim = dim, passes = 2,
+      tables = tables, bits = bits)
+    // explicit knobs, broadcast off: nothing needs the corpus size
+    assert(countJobs("0")(lsh(4, 6)) === 0)
+    assert(countJobs("0")(staged(4, 6)) === 0)
+    // the broadcast gate or auto knobs need it: one count each
+    assert(countJobs("1g")(lsh(4, 6)) > 0)
+    assert(countJobs("1g")(staged(4, 6)) > 0)
+    assert(countJobs("0")(lsh(0, 0)) > 0)
+    assert(countJobs("0")(staged(0, 0)) > 0)
+  }
+
   test("autoLshKnobs: bits scale with corpus size, tables re-buy the " +
       "recall target; auto mode matches explicit-knob quality") {
     // sizing laws: buckets ~targetBucket rows -> bits grows with n; the

@@ -30,4 +30,37 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.spark
   def sf(dir: String, table: String): org.apache.spark.sql.DataFrame =
     Tables.load(spark, s"/root/testdata/$dir", table)
+
+  /** The Spark jobs submitted while `body` runs, each named by its last
+    * stage (`count at Similarity.scala:2338`), seen by a listener between
+    * two sentinel jobs (listener delivery is asynchronous; the sentinels
+    * bracket exactly the jobs `body` submitted). */
+  def jobsSubmitted(body: => Any): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.spec.sentinel"
+    val events = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        events.put(Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+          .getOrElse(e.stageInfos.lastOption.map(_.name).getOrElse("job")))
+    }
+    def sentinel(tag: String): Unit = {
+      sc.setLocalProperty(key, tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sentinel("start")
+      body
+      sentinel("end")
+      var seen = Vector.empty[String]
+      while (!seen.contains("end")) {
+        val e = events.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+        assert(e != null, "listener never saw the end sentinel")
+        seen :+= e
+      }
+      seen.dropWhile(_ != "start").drop(1).takeWhile(_ != "end")
+    } finally sc.removeSparkListener(listener)
+  }
 }
