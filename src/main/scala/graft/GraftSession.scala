@@ -23,14 +23,6 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
   def builder(appName: String): SparkSession.Builder = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // NOTE: BundleRoutingPruning is intentionally NOT injected here.
-    // injectOptimizerRule places a rule inside the fixed-point operator
-    // batch, where it re-runs many times for every query — measured ~20%
-    // on the full bench suite even though no query had a bundle scan.
-    // BundleReader.read installs it via experimental.extraOptimizations
-    // (a once-per-optimization batch) exactly where bundles are read;
-    // `--conf spark.sql.extensions=graft.plans.GraftExtensions` remains
-    // available for cluster-wide opt-in.
     SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
       .appName(appName)

@@ -103,19 +103,8 @@ object BundleCompact {
     fs.delete(oldDir, true)
     // refresh shard_state.json: per-shard docs survive compaction unchanged
     // (the _shard column value is the placement), but files/bytes don't
-    if (!multi) locally {
-      val states = (0 until numShards).map { sh =>
-        val dir = new Path(s"$bundleDir/data/_shard=$sh")
-        val (files, bytes) =
-          if (fs.exists(dir))
-            fs.listStatus(dir).filter(_.isFile).filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
-              .foldLeft((0L, 0L)) { case ((f, b), st) => (f + 1, b + st.getLen) }
-          else (0L, 0L)
-        s"""{"shard":$sh,"docs":${perShard.getOrElse(sh, 0L)},"files":$files,"bytes":$bytes}"""
-      }
-      val out = fs.create(new Path(bundleDir, "shard_state.json"), true)
-      out.write(states.mkString("[", ",", "]").getBytes("UTF-8")); out.close()
-    }
+    if (!multi) ShardState.write(fs, new Path(bundleDir, ShardState.FileName),
+      ShardState.list(fs, dataDir, numShards, perShard))
     Result(numShards, before, listDataFiles(fs, dataDir), total)
   }
 

@@ -267,12 +267,12 @@ object BundleInstall {
                 alias: String): org.apache.spark.sql.DataFrame =
     spark.read.format("graft-bundle").option("alias", alias).load(installDir)
 
-  private def manifestCompleted(fs: FileSystem, dir: Path): Boolean = {
-    val in = fs.open(new Path(dir, "manifest.json"))
-    val m = new String(in.readAllBytes(), "UTF-8")
-    in.close()
-    """"state":"completed"""".r.findFirstIn(m).isDefined
-  }
+  /** The producer's manifest records `state` completed (Jackson-parsed:
+    * pretty-printed manifests count; a half-written one does not). */
+  private def manifestCompleted(fs: FileSystem, dir: Path): Boolean =
+    BundleSink.readFile(fs, new Path(dir, "manifest.json")).exists(m =>
+      scala.util.Try(graft.sources.BundleManifest.jsonNode(m).path("state")
+        .asText == "completed").getOrElse(false))
 
   // ===================================================================
   // Multi-consumer shard assignment — the reference server's

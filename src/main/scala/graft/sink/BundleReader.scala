@@ -1,19 +1,13 @@
 package graft.sink
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.MetadataBuilder
 
 /**
- * Reads a bundle written by [[BundleSink]] back as a DataFrame.
- *
- * [[read]] goes through the DataSource V2 connector
- * ([[graft.sources.BundleDataSource]], `format("graft-bundle")`): the source
- * resolves the manifest itself and owns `_routing -> _shard` partition
- * pruning natively — no session extension required. [[readTagged]] is the
- * pre-connector path (plain file reader + `_shard` metadata tag +
- * [[graft.plans.BundleRoutingPruning]] optimizer rule), kept for sessions
- * that read bundle data through their own scans.
+ * Reads a bundle written by [[BundleSink]] back as a DataFrame, through the
+ * DataSource V2 connector ([[graft.sources.BundleDataSource]],
+ * `format("graft-bundle")`): the source resolves the manifest itself and
+ * owns `_routing -> _shard` partition pruning natively — no session
+ * extension required.
  */
 object BundleReader {
 
@@ -27,35 +21,6 @@ object BundleReader {
 
   /** Read a bundle through the V2 connector (manifest-driven format +
     * native routing/shard pushdown). */
-  def read(spark: SparkSession, bundleDir: String,
-           formatOverride: Option[String] = None): DataFrame = {
-    // formatOverride is honored by re-reading through the plain reader —
-    // the connector always trusts the manifest
-    formatOverride match {
-      case Some(f) if f != format(spark, bundleDir) => readTagged(spark, bundleDir, Some(f))
-      case _ => spark.read.format("graft-bundle").load(bundleDir)
-    }
-  }
-
-  /** Legacy reader: plain file source + metadata-tagged `_shard` column +
-    * the [[graft.plans.BundleRoutingPruning]] session rule. Same results and
-    * (rule-installed) same pruning as [[read]]; for readers that can't use
-    * the connector. */
-  def readTagged(spark: SparkSession, bundleDir: String,
-                 formatOverride: Option[String] = None): DataFrame = {
-    val n = numShards(spark, bundleDir)
-    val df = formatOverride.getOrElse(format(spark, bundleDir)) match {
-      case "json"    => spark.read
-        .schema(graft.streaming.BundleStream.bundleSchema).json(s"$bundleDir/data")
-      case "parquet" | "columnar" => spark.read.parquet(s"$bundleDir/data")
-      case other     => throw new IllegalArgumentException(s"unsupported bundle format: $other")
-    }
-    val meta = new MetadataBuilder()
-      .putLong(graft.plans.BundleRoutingPruning.NumShardsKey, n.toLong).build()
-    graft.plans.GraftExtensions.install(spark)
-    df.select(df.columns.map {
-      case "_shard" => col("_shard").as("_shard", meta)
-      case c        => col(c)
-    }.toIndexedSeq: _*)
-  }
+  def read(spark: SparkSession, bundleDir: String): DataFrame =
+    spark.read.format("graft-bundle").load(bundleDir)
 }

@@ -1,7 +1,7 @@
 package graft.sink
 
 import graft.functions.EsFunctions
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -46,29 +46,27 @@ object BundleValidate {
 
   /** Multi-index bundle ([[BundleSink.writeMulti]] layout:
     * `manifest_<idx>.json` siblings + `data/_index=i/_shard=k/`): one scan
-    * aggregated per (index, shard), each index checked against ITS manifest.
-    * Multi bundles carry no shard_state.json (commit-time listing is a
+    * aggregated per (index, shard), each index checked against ITS current
+    * manifest (the chain head after appends, like [[validate]]). Multi
+    * bundles carry no shard_state.json (commit-time listing is a
     * single-index-writer artifact), so the file/byte expectation is the
     * observed listing — counts and placement are the real gates. */
   def validateMulti(spark: SparkSession, bundleRoot: String): Map[String, Report] = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(bundleRoot), spark.sparkContext.hadoopConfiguration)
     val manifests = fs.listStatus(new org.apache.hadoop.fs.Path(bundleRoot))
-      .map(_.getPath).filter(_.getName.matches("manifest_.*\\.json"))
-      .map { p =>
-        val in = fs.open(p)
-        val m = new String(in.readAllBytes(), "UTF-8"); in.close()
-        val idx = Option(graft.sources.BundleManifest.indexNameOf(m))
-          .filter(_.nonEmpty)
-          .getOrElse(p.getName.stripPrefix("manifest_").stripSuffix(".json"))
-        idx -> m
-      }.toMap
+      .map(_.getPath.getName).filter(_.matches("manifest_.*\\.json"))
+      .map { name =>
+        val ix = BundleSink.IndexFiles.multi(bundleRoot,
+          name.stripPrefix("manifest_").stripSuffix(".json"))
+        ix -> BundleSink.currentManifest(fs, ix)
+      }
     require(manifests.nonEmpty, s"no manifest_*.json in $bundleRoot")
-    val n = graft.sources.BundleManifest.numShardsOf(manifests.head._2)
+    val first = manifests.head._2.get
+    val n = graft.sources.BundleManifest.numShardsOf(first)
       .getOrElse(throw new IllegalStateException(s"no numShards in $bundleRoot manifests"))
     // one aggregated pass over every index
-    val fmt = graft.sources.BundleManifest.formatOf(manifests.head._2)
-    val df = fmt match {
+    val df = graft.sources.BundleManifest.formatOf(first) match {
       case "json" => spark.read
         .schema(graft.streaming.BundleStream.bundleSchema.add("_index",
           org.apache.spark.sql.types.StringType))
@@ -80,47 +78,21 @@ object BundleValidate {
           org.apache.spark.sql.types.StructField("_index", org.apache.spark.sql.types.StringType),
           org.apache.spark.sql.types.StructField("_shard", org.apache.spark.sql.types.IntegerType)))
     }
-    val rows = df.groupBy(col("_index"), col("_shard"))
-      .agg(count(lit(1)).as("docs"),
-        sum(when(EsFunctions.es_shard(col("_routing"), n) =!= col("_shard"), 1L)
-          .otherwise(0L)).as("misplaced"))
-      .collect()
-      .map(r => (r.getString(0), r.getInt(1)) -> (r.getLong(2), r.getLong(3))).toMap
-    val covered = manifests.map { case (idx, manifest) =>
-      val counts = graft.sources.BundleManifest.parseShardCounts(manifest)
-      val total = graft.sources.BundleManifest.totalDocsOf(manifest)
-        .getOrElse(-1L)
-      val shards = (0 until n).map { sh =>
-        val dir = new org.apache.hadoop.fs.Path(s"$bundleRoot/data/_index=$idx/_shard=$sh")
-        val (files, bytes) =
-          if (fs.exists(dir))
-            fs.listStatus(dir).filter(_.isFile).filterNot(st =>
-              st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
-              .foldLeft((0L, 0L)) { case ((f, b), st) => (f + 1, b + st.getLen) }
-          else (0L, 0L)
-        val (docs, misplaced) = rows.getOrElse((idx, sh), (0L, 0L))
-        ShardReport(sh, docs, counts.getOrElse(sh, 0L),
-          files, files, bytes, bytes, misplaced)
-      }
-      idx -> Report(s"$bundleRoot/data/_index=$idx", n, total, shards)
-    }
+    val rows = placement(df, col("_index"), n)
     // data under _index=X with NO manifest_X.json is a half-written bundle
     // (e.g. a producer that died mid-manifest-loop), not ignorable surplus:
     // report each orphan index as failing (expectedDocs 0 vs its observed
     // docs) so install gates refuse the bundle instead of silently
     // installing it minus whole indices
-    val orphanIdx = fs.listStatus(new org.apache.hadoop.fs.Path(s"$bundleRoot/data"))
+    val covered = manifests.map(_._1.name).toSet
+    val orphans = fs.listStatus(new org.apache.hadoop.fs.Path(s"$bundleRoot/data"))
       .filter(_.isDirectory).map(_.getPath.getName)
       .filter(_.startsWith("_index=")).map(_.stripPrefix("_index="))
-      .filterNot(manifests.keySet)
-    val orphans = orphanIdx.map { idx =>
-      val shards = (0 until n).map { sh =>
-        val (docs, misplaced) = rows.getOrElse((idx, sh), (0L, 0L))
-        ShardReport(sh, docs, 0L, 0, 0, 0, 0, misplaced)
-      }
-      idx -> Report(s"$bundleRoot/data/_index=$idx", n, -1L, shards)
+      .filterNot(covered)
+      .map(idx => BundleSink.IndexFiles.multi(bundleRoot, idx) -> None)
+    (manifests ++ orphans).map { case (ix, manifest) =>
+      ix.name -> report(fs, ix, n, manifest, sh => rows.getOrElse((ix.name, sh), (0L, 0L)))
     }.toMap
-    covered ++ orphans
   }
 
   def validate(spark: SparkSession, bundleDir: String): Report = {
@@ -131,43 +103,42 @@ object BundleValidate {
     // so the shard count and the counts come from the same snapshot
     val manifest = graft.sources.BundleManifest.raw(spark, bundleDir)
     val n = graft.sources.BundleManifest.numShardsIn(manifest, bundleDir)
-    val manifestCounts = graft.sources.BundleManifest.parseShardCounts(manifest)
-    val manifestTotal = graft.sources.BundleManifest.totalDocsOf(manifest)
-      .getOrElse(-1L)
-    // shard_state.json is optional (bundles predating it): absent -> expect
-    // the observed listing, i.e. the file/byte checks pass trivially
-    val statePath = new org.apache.hadoop.fs.Path(bundleDir, "shard_state.json")
-    val state: Map[Int, (Long, Long)] =
-      if (!fs.exists(statePath)) Map.empty
-      else {
-        val in = fs.open(statePath)
-        val s = new String(in.readAllBytes(), "UTF-8"); in.close()
-        // docs may be the commit-time -1 sentinel on a json bundle whose
-        // notifier refresh never ran (crash after commit) — files/bytes are
-        // still the commit's exact listing
-        """\{"shard":(\d+),"docs":-?\d+,"files":(\d+),"bytes":(\d+)\}""".r
-          .findAllMatchIn(s)
-          .map(m => m.group(1).toInt -> (m.group(2).toLong, m.group(3).toLong)).toMap
-      }
-    // one aggregated pass: per-shard docs + placement mismatches
-    val rows = BundleReader.read(spark, bundleDir)
-      .groupBy(col("_shard"))
+    val rows = placement(BundleReader.read(spark, bundleDir), lit(""), n)
+    report(fs, BundleSink.IndexFiles.single(bundleDir), n, Some(manifest),
+      sh => rows.getOrElse(("", sh), (0L, 0L)))
+  }
+
+  /** One aggregated pass: (index, shard) -> (docs, docs whose `_shard` is
+    * not the ES murmur3 of their `_routing`); index "" for `index = lit("")`. */
+  private def placement(df: DataFrame, index: Column,
+                        n: Int): Map[(String, Int), (Long, Long)] =
+    df.groupBy(index, col("_shard"))
       .agg(count(lit(1)).as("docs"),
         sum(when(EsFunctions.es_shard(col("_routing"), n) =!= col("_shard"), 1L)
           .otherwise(0L)).as("misplaced"))
-      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+      .collect()
+      .map(r => (r.getString(0), r.getInt(1)) -> (r.getLong(2), r.getLong(3))).toMap
+
+  /** Index `ix` checked shard by shard: docs ([[placement]]) against its
+    * manifest's counts (none for an orphan index), files and bytes listed
+    * under its data dir against its shard_state.json — the listing itself
+    * where it has none (multi-index bundles, bundles predating the file).
+    * `rows` gives a shard's (docs, misplaced). */
+  private def report(fs: org.apache.hadoop.fs.FileSystem, ix: BundleSink.IndexFiles,
+                     n: Int, manifest: Option[String],
+                     rows: Int => (Long, Long)): Report = {
+    val expected = manifest.fold(Map.empty[Int, Long])(graft.sources.BundleManifest.parseShardCounts)
+    val state = ix.state.flatMap(ShardState.read(fs, _)).getOrElse(Seq.empty)
+      .map(e => e.shard -> (e.files, e.bytes)).toMap
     val shards = (0 until n).map { sh =>
-      val dir = new org.apache.hadoop.fs.Path(s"$bundleDir/data/_shard=$sh")
-      val (files, bytes) =
-        if (fs.exists(dir))
-          fs.listStatus(dir).filter(_.isFile).filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
-            .foldLeft((0L, 0L)) { case ((f, b), st) => (f + 1, b + st.getLen) }
-        else (0L, 0L)
-      val (docs, misplaced) = rows.getOrElse(sh, (0L, 0L))
+      val (files, bytes) = ShardState.listing(fs,
+        new org.apache.hadoop.fs.Path(ix.data, s"_shard=$sh"))
+      val (docs, misplaced) = rows(sh)
       val (expFiles, expBytes) = state.getOrElse(sh, (files, bytes))
-      ShardReport(sh, docs, manifestCounts.getOrElse(sh, 0L),
+      ShardReport(sh, docs, expected.getOrElse(sh, 0L),
         files, expFiles, bytes, expBytes, misplaced)
     }
-    Report(bundleDir, n, manifestTotal, shards)
+    Report(ix.workDir, n, manifest.flatMap(graft.sources.BundleManifest.totalDocsOf)
+      .getOrElse(-1L), shards)
   }
 }

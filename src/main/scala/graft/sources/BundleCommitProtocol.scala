@@ -73,20 +73,16 @@ class BundleCommitProtocol(jobId: String, path: String,
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("_shard="))
       .sortBy(_.getPath.getName.stripPrefix("_shard=").toInt)
     val entries = shardDirs.map { d =>
-      val shard = d.getPath.getName.stripPrefix("_shard=").toInt
-      val files = fs.listStatus(d.getPath).filter(_.isFile)
-        .filterNot(st => st.getPath.getName.startsWith("_") ||
-          st.getPath.getName.startsWith("."))
-      val bytes = files.map(_.getLen).sum
+      val files = graft.sink.ShardState.dataFiles(fs, d.getPath)
       val docs = files.foldLeft(0L) { (acc, st) =>
         if (acc < 0 || !st.getPath.getName.contains(".parquet")) -1L
         else acc + parquetRowCount(st, conf)
       }
-      s"""{"shard":$shard,"docs":$docs,"files":${files.length},"bytes":$bytes}"""
+      graft.sink.ShardState.Entry(d.getPath.getName.stripPrefix("_shard=").toInt,
+        docs, files.length, files.map(_.getLen).sum)
     }
-    val out = fs.create(new Path(bundleRoot, "shard_state.json"), true)
-    out.write(entries.mkString("[", ",", "]").getBytes("UTF-8"))
-    out.close()
+    graft.sink.ShardState.write(fs,
+      new Path(bundleRoot, graft.sink.ShardState.FileName), entries.toSeq)
   }
 
   /** Exact committed row count from the parquet footer — a metadata read

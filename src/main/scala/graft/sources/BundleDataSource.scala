@@ -31,11 +31,9 @@ import scala.jdk.CollectionConverters._
  * generic sources cannot know — `_routing = 'k'` implies
  * `_shard = es_murmur3('k') % n`, so routing point-lookups prune to a single
  * shard directory natively in the source (the ES routed-search contract,
- * `?routing=k` hits one shard). This subsumes the optimizer-rule approach of
- * [[graft.plans.BundleRoutingPruning]] (still available for readers that
- * bypass the connector): the V2 source needs no session extension — pushdown
- * happens in [[FileScanBuilder.pushFilters]], so the scan's partition filter
- * drops the non-matching `_shard=*` directories. Files are listed at scan
+ * `?routing=k` hits one shard). The source needs no session extension:
+ * pushdown happens in [[FileScanBuilder.pushFilters]], so the scan's
+ * partition filter drops the non-matching `_shard=*` directories. Files are listed at scan
  * planning, only for the partitions that survive: the table's
  * [[BundleShardIndex]] knows the shard directories from directory listings
  * alone, so a routed lookup lists one shard directory and never opens or
@@ -276,30 +274,14 @@ object BundleManifest {
     // an append CAS chain ([[graft.sink.BundleSink.insertInto]] concurrency)
     // outranks the manifest.json mirror: the chain is append-only and
     // atomically claimed, the mirror can lag a racing append by a beat
-    val cas = new org.apache.hadoop.fs.Path(bundleDir, ".manifest-cas")
-    if (fs.exists(cas)) {
-      val J = "v(\\d+)\\.json".r
-      val head = fs.listStatus(cas).flatMap(st => st.getPath.getName match {
-        case J(n) => Some(n.toInt -> st.getPath)
-        case _    => None
-      }).sortBy(-_._1).headOption
-      head.foreach { case (_, p) =>
-        val in = fs.open(p)
-        val m = new String(in.readAllBytes(), "UTF-8"); in.close()
-        return m
-      }
-    }
-    val single = new org.apache.hadoop.fs.Path(bundleDir, "manifest.json")
-    val p =
-      if (fs.exists(single)) single
-      else fs.listStatus(new org.apache.hadoop.fs.Path(bundleDir))
+    graft.sink.BundleSink.currentManifest(fs,
+      graft.sink.BundleSink.IndexFiles.single(bundleDir)).getOrElse {
+      val p = fs.listStatus(new org.apache.hadoop.fs.Path(bundleDir))
         .map(_.getPath).find(_.getName.matches("manifest_.*\\.json"))
         .getOrElse(throw new java.io.FileNotFoundException(
           s"no manifest.json (or manifest_*.json) in $bundleDir"))
-    val in = fs.open(p)
-    val m = new String(in.readAllBytes(), "UTF-8")
-    in.close()
-    m
+      graft.sink.BundleSink.readFile(fs, p).get
+    }
   }
 
   /** Raw manifest content (chain-aware, like every accessor here). */
@@ -315,6 +297,67 @@ object BundleManifest {
   private[graft] def jsonNode(manifest: String)
       : com.fasterxml.jackson.databind.JsonNode =
     mapper.readTree(manifest)
+
+  // ---- the one manifest writer ----
+  import com.fasterxml.jackson.databind.node.ObjectNode
+
+  /** What a completed manifest records beyond the job record: the codec,
+    * per-shard counts, the alias contract ([[aliasContract]]) and, for
+    * manifests published through a CAS chain or by a seal, a version. */
+  private[graft] case class Completed(codec: String, shardCounts: Map[Int, Long],
+                                      aliasContract: ObjectNode,
+                                      version: Option[Int])
+
+  /** Manifest content for every writer: job-record parity with the
+    * reference's ZK node payload ({numberShards, hdfsWorkDir, indexName,
+    * typeName, state}, `ServerNotifier.scala:21-34`) plus the data format;
+    * a completed bundle adds [[Completed]], a streaming bundle before its
+    * seal has none. Jackson writes every field, so names and paths holding
+    * quotes or backslashes round-trip through the accessors below. */
+  private[graft] def render(indexName: String, typeName: String, workDir: String,
+                            numShards: Int, format: String,
+                            completed: Option[Completed]): String = {
+    val m = mapper.createObjectNode().put("indexName", indexName)
+      .put("typeName", typeName).put("workDir", workDir)
+      .put("numShards", numShards).put("format", format)
+    completed match {
+      case Some(c) =>
+        m.put("compression", c.codec).put("totalDocs", c.shardCounts.values.sum)
+        val counts = m.putObject("shardCounts")
+        c.shardCounts.toSeq.sorted.foreach { case (k, v) => counts.put(k.toString, v) }
+        m.setAll[ObjectNode](c.aliasContract)
+        c.version.foreach(v => m.put("version", v))
+        m.put("state", "completed")
+      case None => m.put("state", "streaming")
+    }
+    mapper.writeValueAsString(m)
+  }
+
+  /** `alias` + `finalSettings` (reference alias swap `ESClient.java:154-170`
+    * + health-gated final settings `NodeService.java:129-152`, applied by
+    * the downstream loader), settings in key order. */
+  private[graft] def aliasContract(alias: Option[String],
+                                   finalSettings: Map[String, String]): ObjectNode = {
+    val c = mapper.createObjectNode()
+    alias.fold(c.putNull("alias"))(c.put("alias", _))
+    val s = c.putObject("finalSettings")
+    finalSettings.toSeq.sorted.foreach { case (k, v) => s.put(k, v) }
+    c
+  }
+
+  /** The alias contract of an existing manifest, carried forward across
+    * appends (an append must not strip it); the empty contract when there
+    * is none or the manifest does not parse. */
+  private[graft] def aliasContractOf(manifest: Option[String]): ObjectNode =
+    manifest.flatMap { m =>
+      scala.util.Try(jsonNode(m)).toOption
+        .filter(n => n.has("alias") && n.has("finalSettings"))
+        .map { n =>
+          val c = mapper.createObjectNode()
+          c.set[ObjectNode]("alias", n.get("alias"))
+          c.set[ObjectNode]("finalSettings", n.get("finalSettings"))
+        }
+    }.getOrElse(aliasContract(None, Map.empty))
 
   private[graft] def numShardsOf(manifest: String): Option[Int] = {
     val n = jsonNode(manifest).path("numShards")

@@ -84,10 +84,9 @@ object BundleStreamWriter {
     val mPath = new org.apache.hadoop.fs.Path(outDir, "manifest.json")
     if (!fs.exists(mPath)) {
       val out = fs.create(mPath, true)
-      out.write(
-        s"""{"indexName":"","typeName":"doc","workDir":"$outDir","numShards":$numShards,"format":"json","state":"streaming"}"""
-          .getBytes("UTF-8"))
-      out.close()
+      try out.write(graft.sources.BundleManifest.render("", "doc", outDir,
+        numShards, "json", completed = None).getBytes("UTF-8"))
+      finally out.close()
     }
     val w = docs.writeStream
       .option("checkpointLocation", checkpointDir)
@@ -140,19 +139,8 @@ object BundleStreamWriter {
     val spark = batch.sparkSession
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(outDir), spark.sparkContext.hadoopConfiguration)
-    val partIdx = "part-(\\d+)".r
-    for (shardDir <- fs.listStatus(new Path(staging)) if shardDir.isDirectory) {
-      val shardName = shardDir.getPath.getName // "_shard=k"
-      val target = new Path(s"$outDir/data/$shardName")
-      fs.mkdirs(target)
-      for (f <- fs.listStatus(shardDir.getPath)
-           if f.getPath.getName.startsWith("part-")) {
-        val idx = partIdx.findFirstMatchIn(f.getPath.getName).map(_.group(1)).getOrElse("0")
-        val suffix = f.getPath.getName.replaceAll("part-\\d+-[0-9a-f-]+", "")
-        val dest = new Path(target, s"b$batchId-p$idx$suffix")
-        if (!fs.exists(dest)) fs.rename(f.getPath, dest)
-      }
-    }
+    graft.sink.BundleSink.renameStaged(fs, new Path(staging),
+      new Path(s"$outDir/data"), s"b$batchId")
     fs.delete(new Path(staging), true)
   }
 }
@@ -215,19 +203,8 @@ object AnnIndexStream {
       .write.mode("overwrite").partitionBy("cent_id").parquet(staging)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(indexDir), batch.sparkSession.sparkContext.hadoopConfiguration)
-    val partIdx = "part-(\\d+)".r
-    for (cellDir <- fs.listStatus(new Path(staging)) if cellDir.isDirectory) {
-      val cellName = cellDir.getPath.getName // "cent_id=K"
-      val target = new Path(s"$indexDir/cells/$cellName")
-      fs.mkdirs(target)
-      for (f <- fs.listStatus(cellDir.getPath)
-           if f.getPath.getName.startsWith("part-")) {
-        val idx = partIdx.findFirstMatchIn(f.getPath.getName).map(_.group(1)).getOrElse("0")
-        val suffix = f.getPath.getName.replaceAll("part-\\d+-[0-9a-f-]+", "")
-        val dest = new Path(target, s"b$batchId-p$idx$suffix")
-        if (!fs.exists(dest)) fs.rename(f.getPath, dest)
-      }
-    }
+    graft.sink.BundleSink.renameStaged(fs, new Path(staging),
+      new Path(s"$indexDir/cells"), s"b$batchId")
     fs.delete(new Path(staging), true)
   }
 }
@@ -327,24 +304,8 @@ object PostingsIndexStream {
       }
       fs.delete(new Path(s"$indexDir/.staging-terms/batch=$batchId"), true)
     }
-    for (tbDir <- fs.listStatus(new Path(staging)) if tbDir.isDirectory) {
-      val target = new Path(s"$indexDir/postings/${tbDir.getPath.getName}")
-      fs.mkdirs(target)
-      for (f <- fs.listStatus(tbDir.getPath)
-           if f.getPath.getName.startsWith("part-")) {
-        val idx = partIdx.findFirstMatchIn(f.getPath.getName)
-          .map(_.group(1)).getOrElse("0")
-        val suffix = f.getPath.getName.replaceAll("part-\\d+-[0-9a-f-]+", "")
-        val dest = new Path(target, s"b$batchId-p$idx$suffix")
-        // a silently-failed rename would DROP these postings while the
-        // stats delta still counts their docs — fail loudly instead (the
-        // foreachBatch retry re-stages and the if-absent guard makes the
-        // already-moved files a no-op)
-        if (!fs.exists(dest) && !fs.rename(f.getPath, dest))
-          throw new java.io.IOException(
-            s"postings commit rename failed: ${f.getPath} -> $dest")
-      }
-    }
+    graft.sink.BundleSink.renameStaged(fs, new Path(staging),
+      new Path(s"$indexDir/postings"), s"b$batchId")
     fs.delete(new Path(staging), true)
     // idempotent per-batch stats delta (replay rewrites, never adds):
     // n_docs is a bare count (every batch row, empty/null texts included);

@@ -10,12 +10,10 @@ import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.functions._
 
 /**
- * Routing -> shard pruning, both paths:
- *  - V2 connector (`format("graft-bundle")`): the source injects the implied
- *    `_shard` partition filter inside pushFilters — native pruning, no
- *    session extension (graft.sources.BundleDataSource).
- *  - Legacy: metadata-tagged `_shard` + BundleRoutingPruning optimizer rule
- *    (BundleReader.readTagged).
+ * Routing -> shard pruning through the V2 connector
+ * (`format("graft-bundle")`): the source injects the implied `_shard`
+ * partition filter inside pushFilters — native pruning, no session
+ * extension (graft.sources.BundleDataSource).
  */
 class BundleRoutingPruningSpec extends SparkSpec {
 
@@ -208,24 +206,5 @@ class BundleRoutingPruningSpec extends SparkSpec {
       assert(spark.sql("SELECT count(*) FROM ddl_bundle").head().getLong(0) === 1501L)
       assert(graft.sources.BundleManifest.shardCounts(spark, dir).get.values.sum === 1501L)
     } finally spark.sql("DROP TABLE IF EXISTS ddl_bundle")
-  }
-
-  test("legacy rule path (readTagged): conjunct added, pruned, idempotent") {
-    val dir = writeBundle()
-    val df = BundleReader.readTagged(spark, dir)
-    val routing = "42"
-    val expectShard = EsMurmur3.shard(routing, 5)
-    val q = df.filter(col("_routing") === routing)
-    val optimized = q.queryExecution.optimizedPlan.toString
-    assert(optimized.contains("_shard") && optimized.contains(s"= $expectShard)"),
-      s"no shard conjunct in:\n$optimized")
-    val physical = q.queryExecution.executedPlan.toString
-    assert(physical.contains("PartitionFilters") && physical.contains("_shard"),
-      s"no partition filter in:\n$physical")
-    assert(q.count() > 0)
-    assert(q.filter(col("_shard") =!= expectShard).count() === 0)
-    // idempotency: exactly one injected conjunct
-    val occurrences = "_shard#\\d+ = \\d+".r.findAllIn(optimized).length
-    assert(occurrences === 1, s"expected exactly one shard conjunct:\n$optimized")
   }
 }

@@ -283,5 +283,107 @@ class BundleSinkSpec extends SparkSpec {
         format = "json", compression = Some("zstd"))
     }
     assert(e.getMessage.contains("parquet"))
+    // the multi-index writer checks the same table up front: no _STARTED,
+    // no data/ left behind by a pair its writer cannot produce
+    val em = intercept[IllegalArgumentException] {
+      graft.sink.BundleSink.writeMulti(docs.withColumn("idx",
+        org.apache.spark.sql.functions.lit("a")), s"$out/badm", "idx", 3,
+        format = "json", compression = Some("zstd"))
+    }
+    assert(em.getMessage.contains("parquet"))
+    assert(!Files.exists(Paths.get(s"$out/badm/_STARTED")) &&
+      !Files.exists(Paths.get(s"$out/badm/data")))
+  }
+
+  test("validate: a pretty-printed shard_state.json is parsed, its files entry checked") {
+    val out = tmpDir()
+    val docs = graft.transform.DocTransform.docs(
+      sf("sf0.001", "orders"), "o_orderkey", Some("o_custkey"))
+    graft.sink.BundleSink.write(docs, s"$out/v", numShards = 3,
+      partitionMultiples = 2, repartition = true, indexName = "v")
+    prettyPrint(s"$out/v/shard_state.json")()
+    val intact = graft.sink.BundleValidate.validate(spark, s"$out/v")
+    assert(intact.ok, intact.problems.mkString("; "))
+    // one shard's recorded file count off by one: flagged, not skipped
+    prettyPrint(s"$out/v/shard_state.json") { tree =>
+      val e = tree.get(1).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      e.put("files", e.get("files").asLong + 1)
+    }
+    val bad = graft.sink.BundleValidate.validate(spark, s"$out/v")
+    assert(!bad.ok)
+    assert(bad.problems.exists(p => p.startsWith(s"shard ${bad.shards(1).shard}:") &&
+      p.contains("files")), bad.problems.mkString("; "))
+  }
+
+  test("manifest fields are JSON-escaped: a quote and backslash in typeName round-trip") {
+    val out = tmpDir()
+    val installed = tmpDir()
+    val typeName = "a\"b\\c"
+    val docs = graft.transform.DocTransform.docs(
+      sf("sf0.001", "orders"), "o_orderkey", Some("o_custkey"))
+    graft.sink.BundleSink.write(docs, s"$out/esc", numShards = 3,
+      partitionMultiples = 2, repartition = true, indexName = "esc",
+      typeName = typeName)
+    assert(graft.sources.BundleManifest.typeName(spark, s"$out/esc") === typeName)
+    val rep = graft.sink.BundleValidate.validate(spark, s"$out/esc")
+    assert(rep.ok, rep.problems.mkString("; "))
+    val pass = graft.sink.BundleInstall.installOnce(spark, out, installed)
+    assert(pass.collect { case i: graft.sink.BundleInstall.Installed => i.bundle } === Seq("esc"))
+    assert(graft.sources.BundleManifest.typeName(spark, s"$installed/esc") === typeName)
+  }
+
+  /** Every writer's manifest and shard_state.json content, in write order,
+    * with the fixture's temp root replaced by `<tmp>`. Single-partition
+    * inputs and no exchange keep the data files (hence shard_state bytes)
+    * deterministic. */
+  private def writerOutputs(): Seq[(String, String)] = {
+    import graft.sink.BundleSink
+    import graft.transform.DocTransform
+    import org.apache.spark.sql.functions._
+    val tmp = tmpDir()
+    val seen = Seq.newBuilder[(String, String)]
+    def pin(step: String, files: String*): Unit = files.foreach { f =>
+      seen += s"$step $f" -> Files.readString(Paths.get(tmp, f)).replace(tmp, "<tmp>")
+    }
+    val orders = sf("sf0.001", "orders").coalesce(1)
+    def delta(tag: String) = DocTransform.docs(sf("sf0.001", "region").coalesce(1)
+      .withColumn("rid", concat(lit(s"$tag-"), col("r_regionkey"))), "rid", None)
+    val docs = DocTransform.docs(orders, "o_orderkey", Some("o_custkey"))
+    BundleSink.write(docs, s"$tmp/j", 3, repartition = false, indexName = "j",
+      alias = Some("j_live"), finalSettings = Map("index.refresh_interval" -> "1s"))
+    pin("write-json", "j/manifest.json", "j/shard_state.json")
+    BundleSink.write(docs, s"$tmp/p", 3, repartition = false, format = "parquet",
+      indexName = "p")
+    pin("write-parquet", "p/manifest.json", "p/shard_state.json")
+    BundleSink.insertInto(delta("a"), s"$tmp/j", overwrite = false)
+    pin("append", "j/manifest.json", "j/shard_state.json", "j/.manifest-cas/v1.json")
+    val tiered = docs.withColumn("tier", concat(lit("t"), pmod(col("_id").cast("long"), lit(2))))
+    BundleSink.writeMulti(tiered, s"$tmp/m", "tier", 3, repartition = false,
+      aliasFor = i => Some(s"${i}_live"))
+    pin("write-multi", "m/manifest_t0.json", "m/manifest_t1.json")
+    BundleSink.insertIntoMulti(delta("b").withColumn("_index", lit("t0")), s"$tmp/m")
+    pin("append-multi", "m/manifest_t0.json", "m/.manifest-cas_t0/v1.json")
+    BundleSink.insertIntoMulti(delta("c").withColumn("_index", lit("t1")), s"$tmp/m",
+      overwrite = true)
+    pin("overwrite-multi", "m/manifest_t1.json")
+    orders.write.parquet(s"$tmp/src")
+    val stream = spark.readStream.schema(orders.schema).parquet(s"$tmp/src")
+    graft.streaming.BundleStreamWriter.start(
+      DocTransform.docs(stream, "o_orderkey", Some("o_custkey")), s"$tmp/s", 3,
+      checkpointDir = s"$tmp/ckpt").awaitTermination(120000)
+    pin("stream", "s/manifest.json")
+    graft.streaming.BundleStreamWriter.seal(spark, s"$tmp/s", 3, indexName = "s")
+    pin("seal", "s/manifest.json", "s/shard_state.json")
+    seen.result()
+  }
+
+  test("every writer's manifest and shard_state.json bytes are pinned") {
+    val expected = scala.io.Source.fromResource("graft/pinned_writer_outputs.tsv")
+      .getLines().filter(_.nonEmpty).map { line =>
+        val Array(k, v) = line.split("\t", 2); k -> v
+      }.toSeq
+    val actual = writerOutputs()
+    assert(actual.map(_._1) === expected.map(_._1))
+    for (((k, got), (_, want)) <- actual.zip(expected)) assert(got === want, k)
   }
 }

@@ -71,36 +71,65 @@ class ConcurrentAppendSpec extends SparkSpec {
     assert(BundleValidate.validate(spark, dir).ok)
   }
 
-  test("a stale mirror never wins: readers prefer the chain head") {
+  /** One index under one bundle layout, as the chain laws drive it: its
+    * chain dir, its manifest mirror, its docs before any append, an append
+    * of [[delta]], its authoritative per-shard counts, and its validation. */
+  private case class Target(layout: String, chain: java.io.File,
+                            mirror: java.nio.file.Path, before: Long,
+                            append: String => Unit,
+                            counts: () => Map[Int, Long], valid: () => Boolean)
+
+  /** A fresh single-index bundle, and index t0 of a fresh multi-index one. */
+  private def targets(): Seq[Target] = {
     val (dir, before) = mkBundle()
-    BundleSink.insertInto(delta("x"), dir, overwrite = false)
-    val good = BundleManifest.shardCounts(spark, dir).get
-    assert(good.values.sum === before.totalDocs + 5)
-    // wind the mirror back to the pre-append manifest (a racing appender's
-    // in-flight overwrite, frozen at the worst moment)
-    val stale = ("""{"indexName":"idx","numShards":3,"totalDocs":%d,"shardCounts":{%s},"state":"completed"}""")
-      .format(before.totalDocs,
-        before.shardCounts.toSeq.sorted.map { case (k, v) => s""""$k":$v""" }.mkString(","))
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "manifest.json"),
-      stale.getBytes("UTF-8"))
-    assert(BundleManifest.shardCounts(spark, dir).get === good,
-      "manifest reads must come from the CAS chain while one exists")
-    assert(BundleValidate.validate(spark, dir).ok,
-      "validation must judge the chain head, not the stale mirror")
+    val root = Files.createTempDirectory("graft-casapp-multi").toString + "/multi"
+    val tiered = DocTransform.docs(sf("sf0.001", "orders"), "o_orderkey", Some("o_custkey"))
+      .withColumn("tier", concat(lit("t"), pmod(col("_id").cast("long"), lit(2))))
+    val multi = BundleSink.writeMulti(tiered, root, "tier", numShards = 2,
+      partitionMultiples = 2)
+    def t0 = BundleValidate.validateMulti(spark, root)
+    Seq(
+      Target("single-index", new java.io.File(dir, ".manifest-cas"),
+        java.nio.file.Paths.get(dir, "manifest.json"), before.totalDocs,
+        tag => BundleSink.insertInto(delta(tag), dir, overwrite = false),
+        () => BundleManifest.shardCounts(spark, dir).get,
+        () => BundleValidate.validate(spark, dir).ok),
+      Target("multi-index", new java.io.File(root, ".manifest-cas_t0"),
+        java.nio.file.Paths.get(root, "manifest_t0.json"), multi("t0").totalDocs,
+        tag => BundleSink.insertIntoMulti(delta(tag).withColumn("_index", lit("t0")), root),
+        () => t0("t0").shards.map(s => s.shard -> s.expectedDocs).toMap,
+        () => t0.values.forall(_.ok)))
+  }
+
+  test("a stale mirror never wins: readers prefer the chain head") {
+    for (t <- targets()) {
+      val stale = java.nio.file.Files.readAllBytes(t.mirror)
+      t.append("x")
+      val good = t.counts()
+      assert(good.values.sum === t.before + 5, t.layout)
+      // wind the mirror back to the pre-append manifest (a racing appender's
+      // in-flight overwrite, frozen at the worst moment)
+      java.nio.file.Files.write(t.mirror, stale)
+      java.nio.file.Files.deleteIfExists(
+        t.mirror.resolveSibling(s".${t.mirror.getFileName}.crc"))
+      assert(t.counts() === good,
+        s"${t.layout}: manifest reads must come from the CAS chain while one exists")
+      assert(t.valid(),
+        s"${t.layout}: validation must judge the chain head, not the stale mirror")
+    }
   }
 
   test("sequential appends keep versioning; chain pruned behind the head") {
-    val (dir, before) = mkBundle()
-    for (i <- 1 to 10)
-      BundleSink.insertInto(delta(s"s$i"), dir, overwrite = false)
-    assert(BundleManifest.shardCounts(spark, dir).get.values.sum ===
-      before.totalDocs + 50)
-    val names = new java.io.File(dir, ".manifest-cas").listFiles().map(_.getName)
-    val versions = names.filter(_.endsWith(".json"))
-      .map(_.stripPrefix("v").stripSuffix(".json").toInt).sorted
-    assert(versions.max === 10)
-    assert(versions.min > 2, s"entries >8 behind the head must be pruned: ${versions.toSeq}")
-    assert(BundleValidate.validate(spark, dir).ok)
+    for (t <- targets()) {
+      for (i <- 1 to 10) t.append(s"s$i")
+      assert(t.counts().values.sum === t.before + 50, t.layout)
+      val versions = t.chain.listFiles().map(_.getName).filter(_.endsWith(".json"))
+        .map(_.stripPrefix("v").stripSuffix(".json").toInt).sorted
+      assert(versions.max === 10, t.layout)
+      assert(versions.min > 2,
+        s"${t.layout}: entries >8 behind the head must be pruned: ${versions.toSeq}")
+      assert(t.valid(), t.layout)
+    }
   }
 
   test("a full overwrite deletes the chain: manifest.json is the authority again") {

@@ -42,6 +42,25 @@ class InstallSpec extends SparkSpec {
     assert(pass3.forall(_.isInstanceOf[BundleInstall.Skipped]) && pass3.isEmpty)
   }
 
+  test("pretty-printed manifests: a completed one installs, a streaming one is skipped") {
+    val incoming = Files.createTempDirectory("graft-install-pretty").toString
+    val installed = Files.createTempDirectory("graft-install-pout").toString
+    writeBundle(incoming, "idx_done")
+    writeBundle(incoming, "idx_live")
+    prettyPrint(s"$incoming/idx_done/manifest.json")()
+    prettyPrint(s"$incoming/idx_live/manifest.json") { m =>
+      m.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].put("state", "streaming")
+    }
+    assert(Files.readString(Paths.get(incoming, "idx_done", "manifest.json"))
+      .contains("\"state\" : \"completed\""), "precondition: pretty-printed")
+    val pass = BundleInstall.installOnce(spark, incoming, installed)
+    assert(pass.collect { case i: BundleInstall.Installed => i.bundle } === Seq("idx_done"))
+    assert(pass.collect { case s: BundleInstall.Skipped => (s.bundle, s.reason) }
+      .exists { case (b, r) => b == "idx_live" && r.contains("manifest state not completed") },
+      pass.toString)
+    assert(spark.read.format("graft-bundle").load(s"$installed/idx_done").count() === 1500L)
+  }
+
   test("tamper: a bundle missing a committed data file is marked _INVALID, never installed") {
     val incoming = Files.createTempDirectory("graft-install-tamper").toString
     val installed = Files.createTempDirectory("graft-install-tout").toString

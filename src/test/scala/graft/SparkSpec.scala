@@ -31,6 +31,21 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def sf(dir: String, table: String): org.apache.spark.sql.DataFrame =
     Tables.load(spark, s"/root/testdata/$dir", table)
 
+  /** Rewrite a JSON control file pretty-printed by Jackson, after `edit`
+    * on its parsed tree — the layout an external tool may leave. Drops
+    * Hadoop LocalFS's checksum sidecar, which the out-of-band rewrite
+    * invalidates. */
+  def prettyPrint(path: String)(
+      edit: com.fasterxml.jackson.databind.JsonNode => Unit = _ => ()): Unit = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val p = java.nio.file.Paths.get(path)
+    val tree = mapper.readTree(java.nio.file.Files.readString(p))
+    edit(tree)
+    java.nio.file.Files.writeString(p,
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(tree))
+    java.nio.file.Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+  }
+
   /** The Spark jobs submitted while `body` runs, each named by its last
     * stage (`count at Similarity.scala:2338`), seen by a listener between
     * two sentinel jobs (listener delivery is asynchronous; the sentinels
