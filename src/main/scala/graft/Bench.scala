@@ -249,8 +249,9 @@ object Bench {
       // IVF cells probed at sqrt(nlist) — the quarter-of-nlist probing used
       // through round 3 scanned a constant 25% of the corpus per query
       // regardless of size (pruning that never compounds); sqrt probing
-      // shrinks the probed fraction as n grows and measured recall 1.000 at
-      // the 1M tier (see Similarity.topK scaladoc for the numbers)
+      // shrinks the probed fraction as n grows: at the 1M tier nprobe
+      // 125 -> 22 halved ivf_kmeans latency (18 -> 9 s) at recall 1.000
+      // (the first loss, 0.995, appeared at nprobe=8)
       val bits = math.max(4, (math.log(n / 64.0) / math.log(2)).round.toInt)
       val nlist = math.max(4, (math.sqrt(n.toDouble) / 2).round.toInt)
       val nprobe = math.max(4, math.sqrt(nlist.toDouble).round.toInt)
@@ -1323,7 +1324,7 @@ object Bench {
     // knobs (tables=35, bits=16) is ~98 GB and even the float32 one
     // (~50 GB) plus its SMJ spill overflows this box's ~80 GB scratch —
     // measured, not hypothesized: the single-pass probe died on ENOSPC.
-    // cosineNearDupsLshStaged divides the peak footprint by the pass
+    // cosineNearDupsLsh(passes = p) divides the peak footprint by the pass
     // count at unchanged total work/recall. Gated OUT of full AND the
     // plain 10m tier (its 2.7e10 candidate dots are a ~70 min single
     // run — the committed only10mpipe capture + BASELINE.md carry the
@@ -1346,10 +1347,10 @@ object Bench {
         var plantedFound10 = 0L
         quiesce()
         val sec = time {
-          val pairs = graft.ext.Similarity.cosineNearDupsLshStaged(df10,
-            "vec_id", "embedding", threshold = 0.9, dim = dimE, passes = 6,
-            tables = 0, bits = 0, strictRecall = true,
-            shuffleFloat32 = true).cache()
+          val pairs = graft.ext.Similarity.cosineNearDupsLsh(df10,
+            "vec_id", "embedding", threshold = 0.9, dim = dimE, tables = 0,
+            bits = 0, strictRecall = true, shuffleFloat32 = true,
+            passes = 6).cache()
           found10 = pairs.count()
           plantedFound10 = pairs.filter(col("id_b") === col("id_a") + 1 &&
             col("id_b") % 20 === 19).count()

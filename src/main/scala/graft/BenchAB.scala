@@ -158,12 +158,13 @@ object BenchAB {
           rmrf(d); rmrf(lean)
         }
         Seq(0.0)
-      case "embedlsh1m" | "embedlsh1m_strict" =>
+      case "embedlsh1m" | "embedlsh1m_strict" | "embedlsh1m_sweep" =>
         // the neardup_1m corpus VERBATIM (Bench.scala cloneGen: ids with
         // id % 20 == 19 are jittered clones of id-1 → 50k planted pairs at
         // cosine ~1), 64-dim float vectors. Plain mode = the bench entry's
         // knobs (bits=16, tables=8); _strict = the pipeline stage's knobs
-        // (auto-sized, strict recall floor — 25 tables x 14 bits at 1M).
+        // (auto-sized, strict recall floor — 25 tables x 14 bits at 1M);
+        // _sweep = one run per autoLshKnobs targetBucket.
         val dim = 64
         val cloneGen = udf { (id: Long) =>
           val base = if (id % 20L == 19L) id - 1L else id
@@ -180,7 +181,22 @@ object BenchAB {
         val strict = op.endsWith("_strict")
         var found = 0L
         var planted = 0L
-        val out = (1 to reps).map { r =>
+        val out = if (op.endsWith("_sweep")) {
+          // is the 64-row default bucket still the wall-clock minimum?
+          // Smaller buckets trade verify dots for more tables (more
+          // signature work, more exploded shuffle rows); found must not move
+          Seq(256L, 128L, 64L, 32L, 16L).map { tb =>
+            val (tables, bits) = graft.ext.Similarity.autoLshKnobs(1000000L,
+              threshold = 0.9, targetBucket = tb)
+            diag(s"embedlsh sweep tb=$tb tables=$tables bits=$bits") {
+              val t = time { found = graft.ext.Similarity.cosineNearDupsLsh(df,
+                "vec_id", "embedding", threshold = 0.9, dim = dim,
+                tables = tables, bits = bits).count() }
+              println(f"EMBEDLSH sweep tb=$tb found=$found sec=$t%.2f")
+              t
+            }
+          }
+        } else (1 to reps).map { r =>
           diag(s"embedlsh rep=$r") {
             val t = time {
               val pairs =

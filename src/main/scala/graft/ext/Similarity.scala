@@ -44,6 +44,61 @@ object Similarity {
     * per-element boxing. */
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
+  /** `(idAs, vAs)` rows of `df`: its id and its unit vector, computed once
+    * per row — the exact side of every verify and re-rank join. */
+  private def unitRows(df: DataFrame, id: String, vecCol: String,
+                       idAs: String, vAs: String): DataFrame =
+    df.select(col(id).as(idAs), unitize(asDouble(col(vecCol))).as(vAs))
+
+  /** The rank tail of every top-k path: `row_number` per `qid` by (`by`
+    * desc, nid asc), cut to `k`, out as (qid, nid, rank, sim). `by` is the
+    * rounded `sim` everywhere but the ADC-only index scan, which ranks by
+    * its unrounded score. */
+  private def rankTail(scored: DataFrame, k: Int, by: String = "sim"): DataFrame = {
+    val w = Window.partitionBy("qid").orderBy(col(by).desc, col("nid").asc)
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("qid"), col("nid"), col("rank"), col("sim"))
+  }
+
+  /** Exact re-rank of a shortlist's `(qid, nid)` pairs: attach the query
+    * unit vectors and the corpus ones (`cv`: nid, _cv), score the rounded
+    * dot, [[rankTail]]. Only ids cross the candidate cut; vectors join back
+    * for the finalists alone. */
+  private def exactRerank(cands: DataFrame, queries: DataFrame, qidCol: String,
+                          vecCol: String, cv: DataFrame, k: Int,
+                          roundTo: Int): DataFrame =
+    rankTail(cands.select(col("qid"), col("nid"))
+      .join(unitRows(queries, qidCol, vecCol, "qid", "_qv"), "qid").join(cv, "nid")
+      .select(col("qid"), col("nid"), round(dot(col("_qv"), col("_cv")), roundTo).as("sim")), k)
+
+  /**
+   * Tie-aware two-level shortlist of `(qid, …, _psim)` candidates: `rank()`
+   * per (qid, `part`) then per qid, each cut at `n`. `rank()`, not
+   * `row_number()`: coarse codes make whole clusters tie at one score, and
+   * an arbitrary tie-break here would drop the true neighbour before the
+   * exact stage sees it — ties all advance (bounded by the code-collision
+   * set).
+   *
+   * The per-part cut is provably output-identical to the global cut alone:
+   * a row's per-part rank never exceeds its global rank (its part sees a
+   * subset of the rows above it), so every global survivor passes the
+   * partial cut; and any row the partial cut drops has >= n strictly
+   * better rows in its own part — all of which survive — so its global
+   * rank in the reduced stream still lands past the threshold. The point
+   * at scale: no single task ever sorts a query's FULL candidate stream
+   * (nc * nprobe / nlist rows — a straggler at 10^9 corpus); the global
+   * window sees <= parts * n rows per query (+ tie groups).
+   */
+  private def shortlist(scored: DataFrame, part: String, n: Int): DataFrame = {
+    val wPart = Window.partitionBy("qid", part).orderBy(col("_psim").desc)
+    val wc = Window.partitionBy("qid").orderBy(col("_psim").desc)
+    scored.withColumn("_crank", rank().over(wPart))
+      .filter(col("_crank") <= n)
+      .withColumn("_prank", rank().over(wc))
+      .filter(col("_prank") <= n)
+  }
+
   /**
    * Exact top-k neighbors for each query row by brute force.
    * @param queries (qidCol, vecCol); corpus (idCol, vecCol)
@@ -53,17 +108,13 @@ object Similarity {
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, qidCol: String,
                      idCol: String, vecCol: String, k: Int,
                      roundTo: Int = 4, excludeSelf: Boolean = true): DataFrame = {
-    // unit vectors computed once per row; pair cost = one codegen'd dot
-    val q = queries.select(col(qidCol).as("qid"), unitize(asDouble(col(vecCol))).as("_qv"))
-    val c = corpus.select(col(idCol).as("nid"), unitize(asDouble(col(vecCol))).as("_cv"))
-    val scored = q.crossJoin(c)
+    // pair cost = one codegen'd dot
+    val q = unitRows(queries, qidCol, vecCol, "qid", "_qv")
+    val c = unitRows(corpus, idCol, vecCol, "nid", "_cv")
+    rankTail(q.crossJoin(c)
       .filter(if (excludeSelf) col("qid") =!= col("nid") else lit(true))
       .select(col("qid"), col("nid"),
-        round(dot(col("_qv"), col("_cv")), roundTo).as("sim"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("rank"), col("sim"))
+        round(dot(col("_qv"), col("_cv")), roundTo).as("sim")), k)
   }
 
   /** Deterministic pseudo-random hyperplanes: component j of plane i derived
@@ -162,43 +213,14 @@ object Similarity {
       .filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"), col("_qv"), col("_cv"))
       .dropDuplicates("qid", "nid")
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    cands.select(col("qid"), col("nid"),
-        round(dot(col("_qv"), col("_cv")), roundTo).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("rank"), col("sim"))
-  }
-
-  /**
-   * Spherical k-means coarse quantizer, trained ENTIRELY on a bounded
-   * seeded sample driver-side (greedy farthest-point k-center init +
-   * `iters` spherical Lloyd rounds): the faiss-style design — a coarse
-   * quantizer only buckets vectors, so training on O(nlist·8) samples gives
-   * the same cell structure as training on the corpus, while every
-   * distributed alternative costs full corpus passes. Earlier rounds ran
-   * the Lloyd refinement distributed (argmax-assign + vector_sum per cell
-   * per round): at the 1M bench tier those passes — not the init — were
-   * what kept ivf_kmeans (16 s) near brute force (28 s); the sample-trained
-   * quantizer leaves ONE distributed pass total (the final cell
-   * assignment), with measured recall 1.0 unchanged. All driver math is
-   * O((nlist + iters) · sampleN · dim), deterministic, and
-   * incremental-init-based (see [[farthestPointSeeds]]).
-   * Cells that go empty keep their previous centroid.
-   * Returns broadcast-ready (cent_id int, _centv array<double> unit).
-   */
-  def kmeansCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-                      nlist: Int, iters: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    broadcast(kmeansArray(corpus, idCol, vecCol, nlist, iters).zipWithIndex
-      .map { case (v, i) => (i, v) }.toSeq.toDF("cent_id", "_centv"))
+    rankTail(cands.select(col("qid"), col("nid"),
+      round(dot(col("_qv"), col("_cv")), roundTo).as("sim")), k)
   }
 
   /**
    * Latent-cluster labels over an embedding column: trains `k` spherical
    * k-means centroids (bounded driver sample + deterministic
-   * farthest-point init — the [[kmeansCentroids]] trainer) and adds
+   * farthest-point init — the [[kmeansArray]] trainer) and adds
    * `cluster_id` to EVERY surviving row as one codegen'd argmax
    * projection — map-only, no join, no shuffle; rows with null or
    * wrong-dimension embeddings are dropped (they have no position in the
@@ -350,8 +372,22 @@ object Similarity {
     * out to executors. */
   private[graft] val HierarchicalNlistFrom = 4096
 
-  /** Driver-side centroid set for [[kmeansCentroids]]; index = cent_id.
-    * Routes to the two-level trainer at [[HierarchicalNlistFrom]] cells. */
+  /**
+   * Spherical k-means coarse quantizer (index = cent_id), trained ENTIRELY
+   * on a bounded seeded sample driver-side (greedy farthest-point k-center
+   * init + `iters` spherical Lloyd rounds): the faiss-style design — a
+   * coarse quantizer only buckets vectors, so training on a sample gives
+   * the same cell structure as training on the corpus, while every
+   * distributed alternative costs full corpus passes. Earlier rounds ran
+   * the Lloyd refinement distributed (argmax-assign + vector_sum per cell
+   * per round): at the 1M bench tier those passes — not the init — were
+   * what kept ivf_kmeans (16 s) near brute force (28 s); the sample-trained
+   * quantizer leaves ONE distributed pass total (the final cell
+   * assignment), with measured recall 1.0 unchanged. Deterministic (see
+   * [[farthestPointSeeds]]); cells that go empty keep their previous
+   * centroid. Routes to the two-level trainer at [[HierarchicalNlistFrom]]
+   * cells.
+   */
   private def kmeansArray(corpus: DataFrame, idCol: String, vecCol: String,
                           nlist: Int, iters: Int): IndexedSeq[Seq[Double]] =
     if (nlist >= HierarchicalNlistFrom)
@@ -568,23 +604,19 @@ object Similarity {
     val queryCells = assignCells(queries, qidCol, vecCol, "qid", "_qv", cents, probes = nprobe)
     // each corpus row lives in exactly one cell -> (qid, nid) pairs are
     // already unique; the join on cent_id is the ONLY shuffle here.
-    // Two-level top-k (same output-identity proof as [[ivfPqTopK]], for
-    // row_number: a row's per-cell position in the (sim desc, nid asc)
-    // order never exceeds its global position, and dropping rows past the
-    // per-cell k removes nothing ahead of any global top-k row): no single
-    // task ever sorts a query's full nprobe-cells candidate stream.
+    // Two-level top-k (the [[shortlist]] proof, for row_number: a row's
+    // per-cell position in the (sim desc, nid asc) order never exceeds its
+    // global position, and dropping rows past the per-cell k removes
+    // nothing ahead of any global top-k row): no single task ever sorts a
+    // query's full nprobe-cells candidate stream.
     val wPart = Window.partitionBy("qid", "cent_id")
       .orderBy(col("sim").desc, col("nid").asc)
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    queryCells.join(corpusCells, Seq("cent_id"))
+    rankTail(queryCells.join(corpusCells, Seq("cent_id"))
       .filter(col("qid") =!= col("nid"))
       .select(col("cent_id"), col("qid"), col("nid"),
         round(dot(col("_qv"), col("_cv")), roundTo).as("sim"))
       .withColumn("_crank", row_number().over(wPart))
-      .filter(col("_crank") <= k)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("rank"), col("sim"))
+      .filter(col("_crank") <= k), k)
   }
 
   /** Driver-side centroid set (index = cent_id): k-means when iters > 0,
@@ -1116,15 +1148,11 @@ object Similarity {
     val q = queries.select(col(qidCol).as("qid"),
       graft.functions.PqFunctions.pq_lut(permute(unitize(asDouble(col(vecCol))), model),
         model.centroids, model.m, model.k, model.subDim).as("_lut"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    q.crossJoin(encodedCorpus)
+    rankTail(q.crossJoin(encodedCorpus)
       .filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
         round(graft.functions.PqFunctions.pq_score(col("_lut"), col("codes"), model.k),
-          roundTo).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("rank"), col("sim"))
+          roundTo).as("sim")), k)
   }
 
   /**
@@ -1140,39 +1168,19 @@ object Similarity {
                    qidCol: String, idCol: String, vecCol: String,
                    model: PqModel, k: Int, rerankFactor: Int = 64,
                    roundTo: Int = 4): DataFrame = {
-    // candidate cut uses rank() NOT row_number(): coarse codes make whole
-    // clusters tie at one score, and an arbitrary tie-break here would drop
-    // the true neighbor before the exact stage ever sees it — ties all
-    // advance (bounded by the tie group, i.e. the code-collision set)
     val q = queries.select(col(qidCol).as("qid"),
       graft.functions.PqFunctions.pq_lut(permute(unitize(asDouble(col(vecCol))), model),
         model.centroids, model.m, model.k, model.subDim).as("_lut"))
-    // two-level cut (same proof as [[ivfPqTopK]]'s, with a synthetic
-    // hash bucket since the full scan has no cells): per-(qid, bucket)
-    // rank() never exceeds the global rank(), so the partial filter drops
-    // only rows the global filter would drop — output identical, but no
-    // single task ever sorts one query's full corpus-sized candidate stream
-    val wPart = Window.partitionBy("qid", "_bkt").orderBy(col("_psim").desc)
-    val wc = Window.partitionBy("qid").orderBy(col("_psim").desc)
-    val cands = q.crossJoin(encodedCorpus)
+    // tie-aware [[shortlist]] over a synthetic hash bucket (the full scan
+    // has no cells): no single task ever sorts one query's full
+    // corpus-sized candidate stream
+    val cands = shortlist(q.crossJoin(encodedCorpus)
       .filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
         graft.functions.PqFunctions.pq_score(col("_lut"), col("codes"), model.k).as("_psim"),
-        pmod(xxhash64(col("nid")), lit(64)).as("_bkt"))
-      .withColumn("_crank", rank().over(wPart))
-      .filter(col("_crank") <= k * rerankFactor)
-      .withColumn("_prank", rank().over(wc))
-      .filter(col("_prank") <= k * rerankFactor)
-      .select(col("qid"), col("nid"))
-    val qv = queries.select(col(qidCol).as("qid"), unitize(asDouble(col(vecCol))).as("_qv"))
-    val cv = corpus.select(col(idCol).as("nid"), unitize(asDouble(col(vecCol))).as("_cv"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    cands.join(qv, "qid").join(cv, "nid")
-      .select(col("qid"), col("nid"),
-        round(dot(col("_qv"), col("_cv")), roundTo).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("rank"), col("sim"))
+        pmod(xxhash64(col("nid")), lit(64)).as("_bkt")), "_bkt", k * rerankFactor)
+    exactRerank(cands, queries, qidCol, vecCol,
+      unitRows(corpus, idCol, vecCol, "nid", "_cv"), k, roundTo)
   }
 
   /**
@@ -1203,38 +1211,16 @@ object Similarity {
     // nprobe/nlist of a 10^6+ corpus the candidate stream is 10^7-10^8 rows,
     // and carrying the full-width vectors through that sort multiplied its
     // shuffle ~40x (measured 34 GB spill at the 1M bench tier). The exact
-    // re-rank joins vectors back for just the k*rerankFactor finalists.
-    //
-    // TWO-LEVEL cut: a per-(qid, cent_id) partial top-(k*rerankFactor)
-    // before the global per-qid cut. Provably output-identical at equal
-    // thresholds: a row's per-cell rank() never exceeds its global rank()
-    // (its cell sees a subset of the rows above it), so every global
-    // survivor passes the partial cut; and any row the partial cut drops
-    // has >= k*rerankFactor strictly-better rows in its own cell — all of
-    // which survive — so its global rank in the reduced stream still lands
-    // past the threshold. The point at scale: no single task ever sorts a
-    // query's FULL candidate stream (nc * nprobe / nlist rows — a straggler
-    // at 10^9 corpus); the global window now sees <= nprobe * k *
-    // rerankFactor rows per query (+ tie groups).
-    val wPart = Window.partitionBy("qid", "cent_id").orderBy(col("_psim").desc)
-    val wc = Window.partitionBy("qid").orderBy(col("_psim").desc)
-    val cands = queryCells.join(corpusCells.drop("_cv"), Seq("cent_id"))
+    // re-rank joins vectors back for just the k*rerankFactor finalists;
+    // the per-cell [[shortlist]] cut keeps the global window at <= nprobe
+    // * k * rerankFactor rows per query (+ tie groups).
+    val cands = shortlist(queryCells.join(corpusCells.drop("_cv"), Seq("cent_id"))
       .filter(col("qid") =!= col("nid"))
       .select(col("cent_id"), col("qid"), col("nid"),
-        graft.functions.PqFunctions.pq_score(col("_lut"), col("codes"), model.k).as("_psim"))
-      .withColumn("_crank", rank().over(wPart))
-      .filter(col("_crank") <= k * rerankFactor)
-      .withColumn("_prank", rank().over(wc))
-      .filter(col("_prank") <= k * rerankFactor)
-      .select(col("qid"), col("nid"))
-    val qv = queries.select(col(qidCol).as("qid"), unitize(asDouble(col(vecCol))).as("_qv"))
-    val cv = corpus.select(col(idCol).as("nid"), unitize(asDouble(col(vecCol))).as("_cv"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    cands.join(qv, "qid").join(cv, "nid")
-      .select(col("qid"), col("nid"), round(dot(col("_qv"), col("_cv")), roundTo).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("rank"), col("sim"))
+        graft.functions.PqFunctions.pq_score(col("_lut"), col("codes"), model.k).as("_psim")),
+        "cent_id", k * rerankFactor)
+    exactRerank(cands, queries, qidCol, vecCol,
+      unitRows(corpus, idCol, vecCol, "nid", "_cv"), k, roundTo)
   }
 
   /**
@@ -1275,26 +1261,13 @@ object Similarity {
         col("_qv"), col("cent_id"), flat, dim))
     // candidate stream + two-level tie-aware cut + exact re-rank: the
     // [[ivfPqTopK]] shape verbatim, with the ADC score shifted by _cdot
-    val wPart = Window.partitionBy("qid", "cent_id").orderBy(col("_psim").desc)
-    val wc = Window.partitionBy("qid").orderBy(col("_psim").desc)
-    val cands = queryCells.join(corpusCells, Seq("cent_id"))
+    val cands = shortlist(queryCells.join(corpusCells, Seq("cent_id"))
       .filter(col("qid") =!= col("nid"))
       .select(col("cent_id"), col("qid"), col("nid"),
         (col("_cdot") + graft.functions.PqFunctions.pq_score(
-          col("_lut"), col("codes"), model.k)).as("_psim"))
-      .withColumn("_crank", rank().over(wPart))
-      .filter(col("_crank") <= k * rerankFactor)
-      .withColumn("_prank", rank().over(wc))
-      .filter(col("_prank") <= k * rerankFactor)
-      .select(col("qid"), col("nid"))
-    val qv = queries.select(col(qidCol).as("qid"), unitize(asDouble(col(vecCol))).as("_qv"))
-    val cv = corpus.select(col(idCol).as("nid"), unitize(asDouble(col(vecCol))).as("_cv"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    cands.join(qv, "qid").join(cv, "nid")
-      .select(col("qid"), col("nid"), round(dot(col("_qv"), col("_cv")), roundTo).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("rank"), col("sim"))
+          col("_lut"), col("codes"), model.k)).as("_psim")), "cent_id", k * rerankFactor)
+    exactRerank(cands, queries, qidCol, vecCol,
+      unitRows(corpus, idCol, vecCol, "nid", "_cv"), k, roundTo)
   }
 
   /**
@@ -1598,8 +1571,8 @@ object Similarity {
   /** Query a [[buildIndex]] directory: same contract and (at equal knobs /
     * the same build inputs) bit-identical results to [[ivfPqTopK]] — the
     * difference is what gets READ: only the probed `cent_id=` partitions.
-    * `nprobe < 0` (the default) resolves to √nlist from the loaded index —
-    * the same scaling-correct default the [[topK]] router uses.
+    * `nprobe < 0` (the default) resolves to √nlist (at least 4) from the
+    * loaded index — the probed fraction shrinks as the index grows.
     *
     * Codes-only indexes (`storeVectors = false`) have no vectors to
     * re-rank on, so the exact stage depends on `rerankCorpus`:
@@ -1704,44 +1677,27 @@ object Similarity {
     val hasVec = cells.schema.fieldNames.contains("vec")
     // from here: identical shape to ivfPqTopK (codes-only candidate stream,
     // two-level tie-aware cut, exact re-rank on the index's own vectors)
-    val wPart = Window.partitionBy("qid", "cent_id").orderBy(col("_psim").desc)
-    val wc = Window.partitionBy("qid").orderBy(col("_psim").desc)
-    val scored = queryCells.join(if (hasVec) cells.drop("vec") else cells, Seq("cent_id"))
-      .filter(col("qid") =!= col("nid"))
-      .select(col("cent_id"), col("qid"), col("nid"),
-        (col("_cdot") + graft.functions.PqFunctions.pq_score(
-          col("_lut"), col("codes"), model.k)).as("_psim"))
-      .withColumn("_crank", rank().over(wPart))
-      .filter(col("_crank") <= k * rerankFactor)
-      .withColumn("_prank", rank().over(wc))
-      .filter(col("_prank") <= k * rerankFactor)
+    val scored = shortlist(
+      queryCells.join(if (hasVec) cells.drop("vec") else cells, Seq("cent_id"))
+        .filter(col("qid") =!= col("nid"))
+        .select(col("cent_id"), col("qid"), col("nid"),
+          (col("_cdot") + graft.functions.PqFunctions.pq_score(
+            col("_lut"), col("codes"), model.k)).as("_psim")),
+      "cent_id", k * rerankFactor)
     val cvOpt: Option[DataFrame] =
       if (hasVec) Some(cells.select(col("nid"), col("vec").as("_cv")))
       else rerankCorpus.map { corpus =>
         require(rerankIdCol.nonEmpty,
           "rerankCorpus needs rerankIdCol (the corpus id column)")
         val rvc = if (rerankVecCol.nonEmpty) rerankVecCol else vecCol
-        corpus.select(col(rerankIdCol).as("nid"),
-          unitize(asDouble(col(rvc))).as("_cv"))
+        unitRows(corpus, rerankIdCol, rvc, "nid", "_cv")
       }
     cvOpt match {
       case Some(cv) =>
-        val cands = scored.select(col("qid"), col("nid"))
-        val qv = queries.select(col(qidCol).as("qid"), unitize(asDouble(col(vecCol))).as("_qv"))
-        val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-        cands.join(qv, "qid").join(cv, "nid")
-          .select(col("qid"), col("nid"), round(dot(col("_qv"), col("_cv")), roundTo).as("sim"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k)
-          .select(col("qid"), col("nid"), col("rank"), col("sim"))
+        exactRerank(scored, queries, qidCol, vecCol, cv, k, roundTo)
       case None => // compressed-domain only: ADC ranking, no exact stage
-        val w = Window.partitionBy("qid").orderBy(col("_psim").desc, col("nid").asc)
-        scored
-          .select(col("qid"), col("nid"), round(col("_psim"), roundTo).as("sim"),
-            col("_psim"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k)
-          .select(col("qid"), col("nid"), col("rank"), col("sim"))
+        rankTail(scored.select(col("qid"), col("nid"),
+          round(col("_psim"), roundTo).as("sim"), col("_psim")), k, by = "_psim")
     }
   }
 
@@ -2062,130 +2018,6 @@ object Similarity {
     (n, avg, maxCell.toDouble / n)
   }
 
-  /**
-   * Auto top-k: route by estimated pair count. Below `maxBrutePairs` the
-   * exact cross product is CHEAPER than any bucketing (measured at 10k x
-   * 64-dim: brute 1.1 s vs LSH 5.6 s / IVF 1.6 s — bucketing overhead only
-   * pays for itself once |Q| x |C| outgrows the cluster's appetite for
-   * dots), and it is exact. Above it, IVF with k-means centroids — the
-   * bench's best recall/latency bucketed method on clustered corpora — with
-   * the same data-driven knobs the bench uses. Two count() jobs to decide
-   * is noise next to either path.
-   *
-   * Third tier: past `pqAboveRows` corpus rows, in-cell scoring itself
-   * becomes the bottleneck (nprobe/nlist of the corpus in full-width dots
-   * per query, and full-width vectors through the cell join), so the router
-   * switches to [[ivfPqTopK]]: same IVF pruning, but cells carry m-byte-ish
-   * codes and scoring is m table lookups per pair, with the tie-aware exact
-   * re-rank restoring precision. The OPQ-rotated model is trained on a
-   * bounded sample — one driver-side pass, amortized across the query set.
-   *
-   * Cell pruning only works when the corpus HAS cells: on unclustered
-   * (near-iid) embeddings a neighbor's coarse cell is barely correlated
-   * with the query's, and IVF recall collapses toward nprobe/nlist
-   * (measured 0.4-0.52 on the iid bench corpus, vs 0.94+ for margin-ranked
-   * multiprobe LSH). The router therefore probes clusterability first —
-   * [[clusterability]], one bounded driver-side sample — and routes
-   * unclustered corpora to [[annTopK]] multiprobe instead.
-   *
-   * Zeroth tier: when `indexDir` points at a [[buildIndex]] directory, the
-   * router skips every online path and queries the index — at corpus
-   * sizes where the online methods retrain and re-encode per call, a
-   * standing index is strictly cheaper per batch (1M tier: 4.1 s/batch vs
-   * 5.7 s for online ivf_pq, and the corpus scan drops to the probed
-   * cells). A supplied-but-invalid dir throws rather than silently
-   * falling back to a full retrain — at 100 TB that "fallback" would be
-   * an hours-long surprise.
-   */
-  def topK(queries: DataFrame, corpus: DataFrame, qidCol: String,
-           idCol: String, vecCol: String, k: Int,
-           maxBrutePairs: Long = 50000000L, roundTo: Int = 4,
-           pqAboveRows: Long = 10000000L,
-           clusterabilityMin: Double = 0.5,
-           indexDir: Option[String] = None): DataFrame = indexDir match {
-    case Some(dir) =>
-      val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
-        queries.sparkSession.sparkContext.hadoopConfiguration)
-      val missing = Seq("model", "centroids", "cells").filterNot(p =>
-        fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$p")))
-      if (missing.nonEmpty) throw new IllegalArgumentException(
-        s"indexDir $dir is not a buildIndex directory (missing: ${missing.mkString(", ")})")
-      indexTopK(queries, dir, qidCol, vecCol, k, roundTo = roundTo)
-    case None =>
-    val nq = queries.count()
-    val nc = corpus.count()
-    if (nq * nc <= maxBrutePairs)
-      bruteForceTopK(queries, corpus, qidCol, idCol, vecCol, k, roundTo)
-    else if (clusterability(corpus, vecCol) < clusterabilityMin) {
-      val dim = corpus.select(size(asDouble(col(vecCol)))).head().getInt(0)
-      val bits = math.max(4, (math.log(nc / 64.0) / math.log(2)).round.toInt)
-      annTopK(queries, corpus, qidCol, idCol, vecCol, dim, k,
-        tables = 8, bits = bits, roundTo = roundTo,
-        multiprobe = true, probeBits = 4)
-    } else {
-      val nlist = math.max(4, (math.sqrt(nc.toDouble) / 2).round.toInt)
-      // sqrt(nlist) probes, NOT a constant fraction: nprobe = nlist/4
-      // scanned 25% of the corpus per query at ANY size (the pruning never
-      // compounded); sqrt keeps the probed fraction shrinking as the corpus
-      // grows (1/sqrt(nlist) ~ n^-1/4). Measured at the 1M bench tier:
-      // nprobe 125 -> 22 halves ivf_kmeans latency (18 -> 9 s) at recall
-      // 1.000 (first loss, 0.995, appears at nprobe=8).
-      val nprobe = math.max(4, math.sqrt(nlist.toDouble).round.toInt)
-      if (nc <= pqAboveRows)
-        ivfTopK(queries, corpus, qidCol, idCol, vecCol, k,
-          nlist = nlist, nprobe = nprobe, roundTo = roundTo, kmeansIters = 2)
-      else {
-        val dim = corpus.select(size(asDouble(col(vecCol)))).head().getInt(0)
-        // m: 8-dim subspaces, clamped to a divisor of dim
-        val m = Iterator.iterate(math.max(1, dim / 8))(_ - 1)
-          .find(c => c >= 1 && dim % c == 0).get
-        val model = pqTrain(corpus, vecCol, dim, m = m, k = 16,
-          opqIters = 3)
-        ivfPqTopK(queries, corpus, qidCol, idCol, vecCol, model, k,
-          nlist = nlist, nprobe = nprobe, kmeansIters = 2, roundTo = roundTo)
-      }
-    }
-  }
-
-  /**
-   * How clustered a unit-vector corpus is, in [0, 1]-ish: mean cosine of a
-   * seeded ~2k sample to its best of 16 k-means centers (2 Lloyd rounds,
-   * driver-side — microseconds of math, one bounded collect). Clustered
-   * embedding corpora score near the within-cluster cosine (0.9+); iid
-   * high-dim vectors score near the best-of-16-random-directions baseline
-   * (~0.2-0.35 at dim >= 32). The default routing threshold 0.5 sits well
-   * clear of both.
-   */
-  private[graft] def clusterability(corpus: DataFrame, vecCol: String,
-                                    sampleSize: Int = 2000): Double = {
-    import corpus.sparkSession.implicits._
-    val n = corpus.count()
-    val frac = math.min(1.0, sampleSize.toDouble / math.max(1L, n))
-    // null embeddings decode to null Seqs — filter in the query (and belt-
-    // and-braces driver-side) or the .toArray NPEs and kills the router
-    val sample = corpus.sample(withReplacement = false, frac, seed = 7L)
-      .filter(col(vecCol).isNotNull)
-      .select(unitize(asDouble(col(vecCol)))).as[Seq[Double]]
-      .collect().flatMap(s => Option(s).map(_.toArray)).filter(_.nonEmpty)
-    if (sample.length < 32) return 1.0 // too small to judge; IVF is safe here
-    val kCents = 16
-    val cents = lloyd(sample, math.min(kCents, sample.length), iters = 2)
-      .map { c => // unitize centers so the score is a cosine
-        val nn = math.sqrt(c.map(x => x * x).sum)
-        if (nn == 0) c else c.map(_ / nn)
-      }
-    val simSum = sample.foldLeft(0.0) { (acc, v) =>
-      var best = -1.0
-      cents.foreach { c =>
-        var d = 0.0; var j = 0
-        while (j < v.length && j < c.length) { d += v(j) * c(j); j += 1 }
-        if (d > best) best = d
-      }
-      acc + best
-    }
-    simSum / sample.length
-  }
-
   /** Embedding near-duplicate pairs: cosine >= threshold, id_a < id_b.
     * Brute variant: exact all-pairs, for audits and as the oracle for the
     * bucketed path — O(n^2), guarded by `maxRows` (raise it explicitly for
@@ -2313,52 +2145,115 @@ object Similarity {
    * through the shuffle — 38 GB shuffled / 72 GB spilled on the 10k-row
    * bench corpus vs ~40 MB now. Re-verifying a pair once per colliding
    * table costs a few extra dots per duplicate — nothing next to a
-   * vector-payload shuffle.
+   * vector-payload shuffle. When the corpus' unit-vector table fits the
+   * broadcast-verify budget the vectors do not shuffle at all (see
+   * [[lshPairs]]).
    *
    * `maxBucket` caps degenerate buckets (all-identical corpora) the same way
    * Dedup.minHashNearDups does.
    *
    * `shuffleFloat32` (opt-in): carry the unit vector through the
-   * signature exchange as float32 instead of float64, halving the
-   * dominant shuffle's bytes (at 10M rows x 32 dims x strict knobs the
+   * signature exchange (or the verify broadcast) as float32 instead of
+   * float64, halving its bytes (at 10M rows x 32 dims x strict knobs the
    * float64 exchange is ~98 GB — past a 100 GB-class local disk; float32
    * is ~52 GB). The verify dot still accumulates in double after a cast;
    * the per-component rounding (~1e-7 relative) perturbs `sim` in the
    * ~6th decimal, so a pair within 1e-6 of `threshold` can flip vs the
    * float64 path. Correct for dedup thresholds (0.9/0.95 with planted
    * margins); keep OFF anywhere an oracle pins exact float sequences.
+   *
+   * `passes > 1` bounds scratch disk: the tables run as `passes`
+   * SEQUENTIAL groups, each pass shuffling only its group's signatures —
+   * the peak exchange + sort-spill footprint divides by `passes` while
+   * total work (and recall: the union of the groups is the same table
+   * set, and a pair's accepted `sim` is identical from every table) is
+   * unchanged. Each pass's accepted pairs are localCheckpoint'ed (lineage
+   * truncation releases that pass's shuffle files to the ContextCleaner
+   * before the next pass starts — the whole point; a lazy union would pin
+   * every pass's shuffle on disk at once), then the bounded accepted-pair
+   * union dedupes once. Use it where tables × n × vectorBytes approaches
+   * local scratch (the measured point: 10M × 32 dims at the strict-recall
+   * knobs (35, 16) is a ~50 GB float32 exchange + comparable SMJ spill —
+   * past an ~80 GB scratch disk in one pass, comfortable in 5). On a
+   * cluster, passes also bound the per-stage shuffle a single executor
+   * wave must absorb.
    */
   def cosineNearDupsLsh(df: DataFrame, idCol: String, vecCol: String,
                         threshold: Double, dim: Int, tables: Int = 8,
                         bits: Int = 8, roundTo: Int = 4,
                         maxBucket: Int = 10000,
                         strictRecall: Boolean = false,
-                        shuffleFloat32: Boolean = false): DataFrame = {
-    // one count, and only when auto knobs or the broadcast gate need it
-    lazy val n = df.count()
-    val (tablesR, bitsR) =
-      if (tables == 0 || bits == 0)
-        autoLshKnobs(n, threshold, strict = strictRecall)
-      else (tables, bits)
-    val budget = broadcastVerifyBudget(df.sparkSession)
-    lshPairsForTables(df, idCol, vecCol, threshold, dim, 0 until tablesR,
-      bitsR, roundTo, maxBucket, shuffleFloat32,
-      broadcastVerify = budget > 0 && broadcastVerifyFits(n, dim, budget))
-      .groupBy("id_a", "id_b").agg(first("sim").as("sim"))
+                        shuffleFloat32: Boolean = false,
+                        passes: Int = 1): DataFrame = {
+    require(passes >= 1, "passes must be >= 1")
+    val (tablesR, bitsR, bcast) =
+      lshPlan(Seq(df), threshold, dim, tables, bits, strictRecall)
+    require(passes <= tablesR, s"passes ($passes) > tables ($tablesR)")
+    def pairs(tableIds: Seq[Int]) = lshPairs(df, None, idCol, idCol, vecCol,
+      threshold, dim, tableIds, bitsR, roundTo, maxBucket, shuffleFloat32, bcast)
+    val accepted =
+      if (passes == 1) pairs(0 until tablesR)
+      else (0 until tablesR).grouped((tablesR + passes - 1) / passes).toSeq.map { group =>
+        val pass = pairs(group).localCheckpoint() // eager: materializes + truncates lineage
+        // the pass's shuffle files are now unreferenced; nudge the
+        // ContextCleaner so they leave the disk before the next pass fills it
+        System.gc()
+        pass
+      }.reduce(_ unionByName _)
+    accepted.groupBy("id_a", "id_b").agg(first("sim").as("sim"))
   }
 
-  /** Whether the corpus' unit-vector table fits the broadcast-verify
-    * budget (guide §8 "broadcast the plan" / §3.1): when it does, the LSH
-    * candidate join shuffles BARE (id, table, sig) rows — ~24 bytes each
-    * instead of the 8·dim-byte unit vector every signature row otherwise
-    * carries — and the exact-verify dot reads both vectors from one
-    * broadcast hash relation instead. The estimate is the UnsafeRow
-    * footprint of (id, array<double> dim), against
+  /**
+   * Cross-corpus near-dup: pairs (left id, right id) with cosine >=
+   * threshold — "which incoming documents already exist in the accepted
+   * corpus", the batch complement of the streaming incremental dedup. The
+   * [[cosineNearDupsLsh]] job with two corpora: both sides bucket once,
+   * candidates are bucket collisions only, verify is exact, and the
+   * vectors either ride one exchange or (when both sides' tables fit the
+   * budget) none. Auto knobs (`tables = 0` / `bits = 0`) size by the
+   * LARGER side — per-candidate work is left_bucket × right_bucket per
+   * signature, so the bigger corpus's bucket size is the hazard. Typical
+   * use: anti-join `left` on the returned `id_l` to keep only novel rows.
+   */
+  def crossCorpusNearDups(left: DataFrame, right: DataFrame,
+                          leftId: String, rightId: String, vecCol: String,
+                          threshold: Double, dim: Int, tables: Int = 8,
+                          bits: Int = 8, roundTo: Int = 4,
+                          maxBucket: Int = 10000): DataFrame = {
+    val (tablesR, bitsR, bcast) =
+      lshPlan(Seq(left, right), threshold, dim, tables, bits, strict = false)
+    lshPairs(left, Some(right), leftId, rightId, vecCol, threshold, dim,
+        0 until tablesR, bitsR, roundTo, maxBucket, float32 = false, bcast)
+      .groupBy(col("id_a").as("id_l"), col("id_b").as("id_r"))
+      .agg(first("sim").as("sim"))
+  }
+
+  /** The one place an LSH near-dup job resolves its knobs and its verify
+    * strategy: `(tables, bits, broadcastVerify)`. Each side is counted at
+    * most once, and only when auto knobs (`tables = 0` or `bits = 0`,
+    * sized by the larger side) or an enabled broadcast budget need it.
+    *
+    * Broadcast-verify (guide §8 "broadcast the plan" / §3.1) is chosen when
+    * the unit-vector tables of every side fit the budget together: the LSH
+    * candidate join then shuffles BARE (id, table, sig) rows — ~24 bytes
+    * each instead of the 8·dim-byte unit vector every signature row
+    * otherwise carries — and the exact-verify dot reads both vectors from
+    * broadcast hash relations instead. The estimate is the UnsafeRow
+    * footprint of (id, array<double> dim) per row, against
     * [[broadcastVerifyBudget]]; at corpus sizes past it (the 10M+ tiers,
     * any 100 TB-class corpus) the vector-carrying exchange remains the
     * scale path, staged when scratch disk binds. */
-  private def broadcastVerifyFits(n: Long, dim: Int, budget: Long): Boolean =
-    n * (8L * dim + 56L) <= budget
+  private def lshPlan(sides: Seq[DataFrame], threshold: Double, dim: Int,
+                      tables: Int, bits: Int,
+                      strict: Boolean): (Int, Int, Boolean) = {
+    lazy val counts = sides.map(_.count())
+    val (tablesR, bitsR) =
+      if (tables == 0 || bits == 0)
+        autoLshKnobs(counts.max, threshold, strict = strict)
+      else (tables, bits)
+    val budget = broadcastVerifyBudget(sides.head.sparkSession)
+    (tablesR, bitsR, budget > 0 && counts.sum * (8L * dim + 56L) <= budget)
+  }
 
   /** The broadcast-verify budget in bytes (0 = broadcast-verify off):
     * the knob `spark.graft.lsh.broadcastVerifyMaxBytes` (default 1g, 0
@@ -2382,194 +2277,85 @@ object Similarity {
       bytes(spark.sparkContext.getConf.get("spark.driver.maxResultSize", "1g")))
   }
 
-  /** One LSH candidate-join pass over an explicit TABLE-ID subset —
-    * accepted (verified) pairs, possibly duplicated across tables within
-    * the subset (callers dedupe). The extracted core of
-    * [[cosineNearDupsLsh]]; [[cosineNearDupsLshStaged]] calls it per
-    * table group so the exchange/spill footprint of one pass divides by
-    * the group count. */
-  private def lshPairsForTables(df: DataFrame, idCol: String, vecCol: String,
-                                threshold: Double, dim: Int,
-                                tableIds: Seq[Int], bits: Int, roundTo: Int,
-                                maxBucket: Int,
-                                shuffleFloat32: Boolean,
-                                broadcastVerify: Boolean = false): DataFrame = {
-    if (broadcastVerify)
-      return lshPairsBroadcastVerify(df, idCol, vecCol, threshold, dim,
-        tableIds, bits, roundTo, maxBucket, shuffleFloat32)
-    val unitV = unitize(asDouble(col(vecCol)))
-    val carried = if (shuffleFloat32) unitV.cast("array<float>") else unitV
-    // _table carries the GLOBAL table id so signatures never collide
-    // across tables regardless of which pass computes them
-    val sigs = df.select(col(idCol).as("_nid"), carried.as("_v"),
+  /** Signature rows `(_nid[, _v], _table, _sig)`, one per (vector, table
+    * id). `_table` carries the GLOBAL table id, so signatures never
+    * collide across tables whichever pass computes them. `carry` rides the
+    * unit vector along (the vector-carry verify); without it the rows are
+    * bare keys. */
+  private def lshSigRows(df: DataFrame, id: String, vecCol: String, dim: Int,
+                         tableIds: Seq[Int], bits: Int,
+                         carry: Option[Column]): DataFrame =
+    df.select(Seq(col(id).as("_nid")) ++ carry.map(_.as("_v")) :+
         posexplode(array(tableIds.map(t =>
           struct(lit(t).as("t"),
-            lshSignature(asDouble(col(vecCol)), dim, t, bits).as("s"))): _*)))
-      .select(col("_nid"), col("_v"), col("col.t").as("_table"),
-        col("col.s").as("_sig"))
-    // skew guard: a degenerate bucket (near-identical corpus slice) would
-    // otherwise quadratically dominate one join task. PAYLOAD-FREE: bucket
-    // sizes come from a bare-key groupBy (partial+final agg, no vectors
-    // through its shuffle) and the oversized keys — at most n/maxBucket of
-    // them, driver-bounded — broadcast-anti-join the signature stream. The
-    // earlier count()-over-(_table,_sig)-window form sorted the FULL
-    // vector-carrying signature table through an extra exchange before the
-    // self-join shuffled it again: 2x the dominant shuffle at corpus scale.
-    val guarded = oversizedGuard(sigs, maxBucket)
-    // ALIASED self-join — both sides are the IDENTICAL plan, so the
-    // signature pipeline (unitize + tables x lsh_sig over the whole corpus)
-    // and its exchange are computed ONCE and read twice (canonical-plan
-    // stage reuse). The earlier form renamed columns per side BEFORE the
-    // join, which broke canonical equality and recomputed the full pipeline
-    // for each side — measured 40+ s vs 18 s at the 1M bench tier, with
-    // signature computation (not the join) as the dominant cost.
-    // (probed round 13: a shuffle_hash hint here OOMs building per-task
-    // hash maps over the vector-carrying partitions — SMJ is the right
-    // physical join for this self-join at every scale, and the sort cost
-    // is part of the measured stage floor)
-    // float32-carried vectors cast back to double AT THE DOT (a no-op
-    // projection when _v is already float64): accumulation stays double
-    val dotV = if (shuffleFloat32)
-      dot(asDouble(col("a._v")), asDouble(col("b._v")))
-    else dot(col("a._v"), col("b._v"))
-    guarded.as("a").join(guarded.as("b"),
-        col("a._table") === col("b._table") && col("a._sig") === col("b._sig"))
-      .filter(col("a._nid") < col("b._nid"))
-      .select(col("a._nid").as("id_a"), col("b._nid").as("id_b"),
-        round(dotV, roundTo).as("sim"))
-      .filter(col("sim") >= threshold)
-  }
-
-  /** [[lshPairsForTables]] with the §8 discipline taken one step further:
-    * the signature exchange carries BARE (_nid, _table, _sig) rows — the
-    * unit vector (8·dim bytes, the whole payload) never shuffles at all —
-    * and the exact-verify dot reads both endpoints from ONE broadcast of
-    * the corpus' (id, unit-vector) table, reused by both attach joins
-    * (identical canonical plan → one BroadcastExchange). At the 1M/64-dim
-    * bench point this turns a ~4.5 GB vector-carrying SMJ (the measured
-    * driver-bench GC cliff at small heaps) into a ~190 MB bare-key SMJ
-    * plus a ~550 MB broadcast built once. Accepted pairs and their `sim`
-    * are bit-identical to the carry path: same signatures, same oversized
-    * guard, same dot expression on the same float width (the
-    * `shuffleFloat32` knob narrows the BROADCAST the same way it narrows
-    * the carried column, so each mode's output is unchanged). */
-  private def lshPairsBroadcastVerify(df: DataFrame, idCol: String,
-                                      vecCol: String, threshold: Double,
-                                      dim: Int, tableIds: Seq[Int], bits: Int,
-                                      roundTo: Int, maxBucket: Int,
-                                      shuffleFloat32: Boolean): DataFrame = {
-    val unitV = unitize(asDouble(col(vecCol)))
-    val stored = if (shuffleFloat32) unitV.cast("array<float>") else unitV
-    val vecs = df.select(col(idCol).as("_vid"), stored.as("_v"))
-    val sigs = df.select(col(idCol).as("_nid"),
-        posexplode(array(tableIds.map(t =>
-          struct(lit(t).as("t"),
-            lshSignature(asDouble(col(vecCol)), dim, t, bits).as("s"))): _*)))
-      .select(col("_nid"), col("col.t").as("_table"), col("col.s").as("_sig"))
-    val guarded = oversizedGuard(sigs, maxBucket)
-    val cand = guarded.as("a").join(guarded.as("b"),
-        col("a._table") === col("b._table") && col("a._sig") === col("b._sig"))
-      .filter(col("a._nid") < col("b._nid"))
-      .select(col("a._nid").as("id_a"), col("b._nid").as("id_b"))
-    // verify map-side: candidates stream through two broadcast hash joins
-    // (no exchange touches them) and only accepted (id, id, sim) triplets
-    // survive to the caller's dedup — nothing heavier ever shuffles
-    val dotV = if (shuffleFloat32)
-      dot(asDouble(col("va._v")), asDouble(col("vb._v")))
-    else dot(col("va._v"), col("vb._v"))
-    cand.join(broadcast(vecs.as("va")), col("id_a") === col("va._vid"))
-      .join(broadcast(vecs.as("vb")), col("id_b") === col("vb._vid"))
-      .select(col("id_a"), col("id_b"), round(dotV, roundTo).as("sim"))
-      .filter(col("sim") >= threshold)
-  }
+            lshSignature(asDouble(col(vecCol)), dim, t, bits).as("s"))): _*)): _*)
+      .select(Seq(col("_nid")) ++ carry.map(_ => col("_v")) ++
+        Seq(col("col.t").as("_table"), col("col.s").as("_sig")): _*)
 
   /**
-   * Disk-bounded [[cosineNearDupsLsh]]: the `tables` hash tables run as
-   * `passes` SEQUENTIAL groups, each pass shuffling only its group's
-   * signatures — the peak exchange + sort-spill footprint divides by
-   * `passes` while total work (and recall: the union of the groups is
-   * the same table set, and a pair's accepted `sim` is identical from
-   * every table) is unchanged. Each pass's accepted pairs are
-   * localCheckpoint'ed (lineage truncation releases that pass's shuffle
-   * files to the ContextCleaner before the next pass starts — the whole
-   * point; a lazy union would pin every pass's shuffle on disk at once),
-   * then the bounded accepted-pair union dedupes once.
+   * The one LSH candidate → verify pass: accepted `(id_a, id_b, sim)` pairs
+   * over the table ids `tableIds`, possibly repeated across tables (callers
+   * dedupe). `right = None` is the self-join (`id_a < id_b`); `Some(r)`
+   * pairs `left` rows (`id_a`) with `r` rows (`id_b`).
    *
-   * When to use: corpora where tables × n × vectorBytes approaches local
-   * scratch (the measured point: 10M × 32 dims at the strict-recall
-   * knobs (35, 16) is a ~50 GB float32 exchange + comparable SMJ spill —
-   * past an ~80 GB scratch disk in one pass, comfortable in 5). On a
-   * cluster, passes also bound the per-stage shuffle a single executor
-   * wave must absorb.
+   * Skew guard: a degenerate bucket (near-identical corpus slice) would
+   * otherwise quadratically dominate one join task — [[oversizedGuard]]
+   * drops it on each side without shuffling the payload.
+   *
+   * Self-join: an ALIASED join of one signature plan, so the signature
+   * pipeline (unitize + tables x lsh_sig over the whole corpus) and its
+   * exchange are computed ONCE and read twice (canonical-plan stage
+   * reuse). Renaming columns per side BEFORE the join broke canonical
+   * equality and recomputed the full pipeline for each side — measured
+   * 40+ s vs 18 s at the 1M bench tier. (Probed round 13: a shuffle_hash
+   * hint here OOMs building per-task hash maps over the vector-carrying
+   * partitions — SMJ is the right physical join at every scale.)
+   *
+   * Verify, as [[lshPlan]] decided:
+   *  - carry: the unit vector rides the signature rows through the
+   *    candidate exchange and the dot runs in the join projection;
+   *  - broadcast: the exchange carries BARE (_nid, _table, _sig) rows and
+   *    the dot reads both endpoints from one broadcast of each side's
+   *    (id, unit-vector) table — the self-join's two attach joins share one
+   *    BroadcastExchange (identical canonical plan). At the 1M/64-dim bench
+   *    point this turns a ~4.5 GB vector-carrying SMJ (the measured GC
+   *    cliff at small heaps) into a ~190 MB bare-key SMJ plus a ~550 MB
+   *    broadcast built once, and the candidates stream through the attach
+   *    joins without another exchange.
+   * Both give bit-identical pairs and sims: same signatures, same guard,
+   * same dot on the same float width (`float32` narrows the carried column
+   * and the broadcast alike; the dot casts back and accumulates in double).
    */
-  def cosineNearDupsLshStaged(df: DataFrame, idCol: String, vecCol: String,
-                              threshold: Double, dim: Int, passes: Int,
-                              tables: Int = 0, bits: Int = 0,
-                              roundTo: Int = 4, maxBucket: Int = 10000,
-                              strictRecall: Boolean = false,
-                              shuffleFloat32: Boolean = true): DataFrame = {
-    require(passes >= 1, "passes must be >= 1")
-    lazy val nStaged = df.count()
-    val (tablesR, bitsR) =
-      if (tables == 0 || bits == 0)
-        autoLshKnobs(nStaged, threshold, strict = strictRecall)
-      else (tables, bits)
-    require(passes <= tablesR, s"passes ($passes) > tables ($tablesR)")
-    val perPass = (tablesR + passes - 1) / passes
-    val budget = broadcastVerifyBudget(df.sparkSession)
-    val bcastVerify = budget > 0 && broadcastVerifyFits(nStaged, dim, budget)
-    val parts = (0 until tablesR).grouped(perPass).toSeq.map { group =>
-      val accepted = lshPairsForTables(df, idCol, vecCol, threshold, dim,
-        group, bitsR, roundTo, maxBucket, shuffleFloat32,
-        broadcastVerify = bcastVerify)
-        .localCheckpoint() // eager: materializes + truncates lineage
-      // the pass's shuffle files are now unreferenced; nudge the
-      // ContextCleaner so they leave the disk before the next pass fills it
-      System.gc()
-      accepted
-    }
-    parts.reduce(_ unionByName _)
-      .groupBy("id_a", "id_b").agg(first("sim").as("sim"))
-  }
-
-  /**
-   * Cross-corpus near-dup: pairs (left id, right id) with cosine >=
-   * threshold — "which incoming documents already exist in the accepted
-   * corpus", the batch complement of the streaming incremental dedup. Same
-   * LSH-prefilter + in-join exact-verify shape as [[cosineNearDupsLsh]]
-   * (and the same shuffle discipline: vectors never cross an exchange
-   * post-join); both sides bucket once, candidates are bucket collisions
-   * only. Typical use: anti-join `left` on the returned `id_l` to keep only
-   * novel rows.
-   */
-  def crossCorpusNearDups(left: DataFrame, right: DataFrame,
-                          leftId: String, rightId: String, vecCol: String,
-                          threshold: Double, dim: Int, tables: Int = 8,
-                          bits: Int = 8, roundTo: Int = 4,
-                          maxBucket: Int = 10000): DataFrame = {
-    // tables = 0 / bits = 0 = AUTO (the cosineNearDupsLsh knob law): size
-    // by the LARGER side — per-candidate work is left_bucket × right_bucket
-    // per signature, so the bigger corpus's bucket size is the hazard
-    val (tablesR, bitsR) =
-      if (tables == 0 || bits == 0)
-        autoLshKnobs(math.max(left.count(), right.count()), threshold)
-      else (tables, bits)
-    def sigs(df: DataFrame, id: String, outId: String, vOut: String): DataFrame =
-      df.select(col(id).as(outId), unitize(asDouble(col(vecCol))).as(vOut),
-          posexplode(array((0 until tablesR).map(t =>
-            lshSignature(asDouble(col(vecCol)), dim, t, bitsR)): _*)))
-        .select(col(outId), col(vOut), col("pos").as("_table"), col("col").as("_sig"))
-    // guard BOTH sides: a degenerate bucket in either corpus concentrates
-    // |other-side bucket| x maxBucket candidate pairs into one join task.
-    // Payload-free form — see the [[oversizedGuard]] note in
-    // [[cosineNearDupsLsh]]: bare-key counts + broadcast anti-join, so the
-    // unit vectors cross exactly one exchange (the candidate join's).
-    val l = oversizedGuard(sigs(left, leftId, "id_l", "_vl"), maxBucket)
-    val r = oversizedGuard(sigs(right, rightId, "id_r", "_vr"), maxBucket)
-    l.join(r, Seq("_table", "_sig"))
-      .select(col("id_l"), col("id_r"),
-        round(dot(col("_vl"), col("_vr")), roundTo).as("sim"))
-      .filter(col("sim") >= threshold)
-      .groupBy("id_l", "id_r").agg(first("sim").as("sim"))
+  private def lshPairs(left: DataFrame, right: Option[DataFrame],
+                       leftId: String, rightId: String, vecCol: String,
+                       threshold: Double, dim: Int, tableIds: Seq[Int],
+                       bits: Int, roundTo: Int, maxBucket: Int,
+                       float32: Boolean, broadcastVerify: Boolean): DataFrame = {
+    val unitV = unitize(asDouble(col(vecCol)))
+    val stored = if (float32) unitV.cast("array<float>") else unitV
+    val carry = if (broadcastVerify) None else Some(stored)
+    def guarded(df: DataFrame, id: String) =
+      oversizedGuard(lshSigRows(df, id, vecCol, dim, tableIds, bits, carry), maxBucket)
+    val a = guarded(left, leftId)
+    val b = right.fold(a)(guarded(_, rightId))
+    val joined = a.as("a").join(b.as("b"),
+      col("a._table") === col("b._table") && col("a._sig") === col("b._sig"))
+    val cand = if (right.isEmpty) joined.filter(col("a._nid") < col("b._nid")) else joined
+    def dotOf(x: String, y: String): Column =
+      if (float32) dot(asDouble(col(x)), asDouble(col(y))) else dot(col(x), col(y))
+    val scored =
+      if (!broadcastVerify)
+        cand.select(col("a._nid").as("id_a"), col("b._nid").as("id_b"),
+          round(dotOf("a._v", "b._v"), roundTo).as("sim"))
+      else {
+        def vecs(df: DataFrame, id: String) = df.select(col(id).as("_vid"), stored.as("_v"))
+        val va = vecs(left, leftId)
+        val vb = right.fold(va)(vecs(_, rightId))
+        cand.select(col("a._nid").as("id_a"), col("b._nid").as("id_b"))
+          .join(broadcast(va.as("va")), col("id_a") === col("va._vid"))
+          .join(broadcast(vb.as("vb")), col("id_b") === col("vb._vid"))
+          .select(col("id_a"), col("id_b"), round(dotOf("va._v", "vb._v"), roundTo).as("sim"))
+      }
+    scored.filter(col("sim") >= threshold)
   }
 }

@@ -364,18 +364,12 @@ object CorpusPipeline {
                 "bound the peak footprint), or use nearDupMethod=minhash " +
                 "(linear through 10M) / semantic (SemDeDup, cluster-" +
                 "bounded pair cost) for corpora this size.")
-            embedStagedPasses match {
-              case Some(p) =>
-                graft.ext.Similarity.cosineNearDupsLshStaged(exact, idCol,
-                  embeddingCol, threshold = nearDupThreshold,
-                  dim = row.getInt(0), passes = p, tables = 0, bits = 0,
-                  strictRecall = true, shuffleFloat32 = true)
-              case None =>
-                graft.ext.Similarity.cosineNearDupsLsh(exact, idCol,
-                  embeddingCol, threshold = nearDupThreshold,
-                  dim = row.getInt(0), tables = 0, bits = 0,
-                  strictRecall = true)
-            }
+            // staged passes carry float32 vectors (half the exchange bytes)
+            graft.ext.Similarity.cosineNearDupsLsh(exact, idCol,
+              embeddingCol, threshold = nearDupThreshold,
+              dim = row.getInt(0), tables = 0, bits = 0, strictRecall = true,
+              shuffleFloat32 = embedStagedPasses.isDefined,
+              passes = embedStagedPasses.getOrElse(1))
           case _ =>
             exact.select(col(idCol).as("id_a"), col(idCol).as("id_b")).limit(0)
         }

@@ -70,9 +70,12 @@ object BundleSink {
         col("_index"), EsFunctions.es_partition(col("_routing"), numShards, partitionMultiples))
       else sharded
     val obs = Observation("multi-bundle-counts")
+    // `_index` itself (the spelling insertIntoMulti requires) is the
+    // partition column: drop only a differently named source column
+    val observed = arranged.observe(obs, countByPartition(MultiPartitioning))
     val writer = applyBulkSizing(
-      arranged.observe(obs, countByPartition(MultiPartitioning))
-        .drop(indexCol).write.mode("overwrite").partitionBy(MultiPartitioning: _*),
+      (if (indexCol == "_index") observed else observed.drop(indexCol))
+        .write.mode("overwrite").partitionBy(MultiPartitioning: _*),
       format, bulkActions, bulkSizeBytes).option("compression", codec)
     // _STARTED spans the whole multi-bundle lifecycle: data write + the
     // sequential per-index manifest loop. Without it a polling installer can

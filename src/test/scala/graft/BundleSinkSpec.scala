@@ -179,6 +179,17 @@ class BundleSinkSpec extends SparkSpec {
       assert(res.shardCounts === full, s"index $idx")
       assert(Files.exists(Paths.get(s"$out/multi/manifest_$idx.json")))
     }
+    // `_index`, the column insertIntoMulti requires, routes a write too:
+    // same per-index counts, same rows under the same index directories
+    val viaIndex = graft.sink.BundleSink.writeMulti(
+      docs.withColumnRenamed("idx", "_index"), s"$out/multi_index", "_index",
+      numShards = 4, partitionMultiples = 2)
+    assert(viaIndex.view.mapValues(_.shardCounts).toMap ===
+      results.view.mapValues(_.shardCounts).toMap)
+    def rowsOf(root: String): Seq[String] =
+      spark.read.json(s"$root/data").collect().map(_.toString).toSeq.sorted
+    assert(rowsOf(s"$out/multi_index") === rowsOf(s"$out/multi"))
+    assert(!Files.exists(Paths.get(s"$out/multi_index/_STARTED")))
   }
 
   test("empty input: zero-doc bundle still commits a complete manifest") {

@@ -118,6 +118,16 @@ class SimilaritySpec extends SparkSpec {
       s"expected partial aggregation in plan:\n$plan")
   }
 
+  /** The flat k-means trainer through its persisted artifact: the
+    * centroids trainClusterCentroids writes, read back in cent_id order. */
+  private def kmeans(corpus: org.apache.spark.sql.DataFrame, nlist: Int,
+                     iters: Int): IndexedSeq[Seq[Double]] = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-kmeans").toString
+    Similarity.trainClusterCentroids(corpus, "vec_id", "embedding", nlist, iters,
+      s"$dir/cents")
+    Similarity.loadClusterCentroids(spark, s"$dir/cents")
+  }
+
   test("kmeansCentroids: recovers planted cluster directions") {
     val dim = 8
     val rnd = new scala.util.Random(5)
@@ -127,9 +137,7 @@ class SimilaritySpec extends SparkSpec {
       (i.toLong, c.map(x => (x + 0.05 * rnd.nextGaussian()).toFloat).toSeq)
     }
     val corpus = points.toDF("vec_id", "embedding")
-    val cents = Similarity.kmeansCentroids(corpus, "vec_id", "embedding",
-        nlist = 4, iters = 5)
-      .collect().map(_.getSeq[Double](1))
+    val cents = kmeans(corpus, nlist = 4, iters = 5)
     assert(cents.length === 4)
     // every true center direction is captured by some centroid (cosine > 0.95)
     def cos(a: Seq[Double], b: Seq[Double]): Double = {
@@ -173,9 +181,7 @@ class SimilaritySpec extends SparkSpec {
     }
     // quantization quality parity with flat, measured as the corpus-mean
     // best-centroid cosine (the signal indexDriftReport watches)
-    val flat = Similarity.kmeansCentroids(corpus, "vec_id", "embedding",
-        nlist = 24, iters = 5)
-      .collect().map(_.getSeq[Double](1)).toIndexedSeq
+    val flat = kmeans(corpus, nlist = 24, iters = 5)
     def meanBest(cents: IndexedSeq[Seq[Double]]): Double =
       points.map { case (_, v) =>
         cents.map(ct => cos(v.map(_.toDouble), ct)).max
@@ -489,7 +495,7 @@ class SimilaritySpec extends SparkSpec {
     val single = pairsOf(Similarity.cosineNearDupsLsh(corpus, "vec_id",
       "embedding", threshold = 0.9, dim = dim, tables = 9, bits = 8))
     for (passes <- Seq(1, 3, 9)) {
-      val staged = pairsOf(Similarity.cosineNearDupsLshStaged(corpus,
+      val staged = pairsOf(Similarity.cosineNearDupsLsh(corpus,
         "vec_id", "embedding", threshold = 0.9, dim = dim, passes = passes,
         tables = 9, bits = 8, shuffleFloat32 = false))
       assert(staged === single, s"passes=$passes diverged from single-pass")
@@ -498,7 +504,7 @@ class SimilaritySpec extends SparkSpec {
     // no pair within 1e-4 of the threshold by construction — checked)
     val margin = single.values.map(s => math.abs(s - 0.9)).min
     assert(margin > 1e-4, s"fixture pair sits on the threshold ($margin)")
-    val f32 = pairsOf(Similarity.cosineNearDupsLshStaged(corpus, "vec_id",
+    val f32 = pairsOf(Similarity.cosineNearDupsLsh(corpus, "vec_id",
       "embedding", threshold = 0.9, dim = dim, passes = 3,
       tables = 9, bits = 8, shuffleFloat32 = true))
     assert(f32.keySet === single.keySet)
@@ -530,37 +536,49 @@ class SimilaritySpec extends SparkSpec {
     }
     for (f32 <- Seq(false, true)) {
       // knob=0 disables broadcast-verify -> the vector-carrying exchange
-      val carry = withKnob("0")(pairsOf(Similarity.cosineNearDupsLshStaged(
+      val carry = withKnob("0")(pairsOf(Similarity.cosineNearDupsLsh(
         corpus, "vec_id", "embedding", threshold = 0.9, dim = dim,
         passes = 1, tables = 9, bits = 8, shuffleFloat32 = f32)))
-      val bcast = withKnob("1g")(pairsOf(Similarity.cosineNearDupsLshStaged(
+      val bcast = withKnob("1g")(pairsOf(Similarity.cosineNearDupsLsh(
         corpus, "vec_id", "embedding", threshold = 0.9, dim = dim,
         passes = 1, tables = 9, bits = 8, shuffleFloat32 = f32)))
       assert(carry.nonEmpty, "fixture should contain near-dup pairs")
       assert(bcast === carry,
         s"broadcast-verify diverged from the carry path (float32=$f32)")
     }
+    // cross-corpus: the same verify choice on a left/right split (float64,
+    // its one width)
+    val left = corpus.filter(col("vec_id") % 3 === 0).withColumnRenamed("vec_id", "lid")
+    val right = corpus.filter(col("vec_id") % 3 =!= 0).withColumnRenamed("vec_id", "rid")
+    def cross() = Similarity.crossCorpusNearDups(left, right, "lid", "rid",
+      "embedding", threshold = 0.9, dim = dim, tables = 9, bits = 8)
+    val crossCarry = withKnob("0")(pairsOf(cross()))
+    assert(crossCarry.nonEmpty, "fixture should contain cross-side pairs")
+    assert(withKnob("1g")(pairsOf(cross())) === crossCarry,
+      "cross-corpus broadcast-verify diverged from the carry path")
     // plan law: in broadcast mode the candidate join's exchange carries
     // bare (id, table, sig) rows — the vectors reach the verify dot via
     // broadcast hash joins only, and the identical broadcast subtree is
     // built once (the second attach join reuses the first's exchange)
-    val plan = withKnob("1g")(Similarity.cosineNearDupsLsh(corpus, "vec_id",
-        "embedding", threshold = 0.9, dim = dim, tables = 9, bits = 8)
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-    assert(plan.contains("BroadcastHashJoin"),
-      s"broadcast-verify plan lacks BroadcastHashJoin:\n$plan")
-    // formatted explain prints each operator as a "(n) Exchange" block
-    // whose next "Input [...]" line lists the columns it carries
-    val lines = plan.linesIterator.toIndexedSeq
-    val exchangeInputs = lines.zipWithIndex.collect {
-      case (l, i) if l.matches("""\(\d+\) Exchange.*""") =>
-        lines.drop(i + 1).find(_.trim.startsWith("Input"))
-          .getOrElse("")
+    val plans = withKnob("1g")(Seq(Similarity.cosineNearDupsLsh(corpus, "vec_id",
+        "embedding", threshold = 0.9, dim = dim, tables = 9, bits = 8), cross())
+      .map(_.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))))
+    for (plan <- plans) {
+      assert(plan.contains("BroadcastHashJoin"),
+        s"broadcast-verify plan lacks BroadcastHashJoin:\n$plan")
+      // formatted explain prints each operator as a "(n) Exchange" block
+      // whose next "Input [...]" line lists the columns it carries
+      val lines = plan.linesIterator.toIndexedSeq
+      val exchangeInputs = lines.zipWithIndex.collect {
+        case (l, i) if l.matches("""\(\d+\) Exchange.*""") =>
+          lines.drop(i + 1).find(_.trim.startsWith("Input"))
+            .getOrElse("")
+      }
+      assert(exchangeInputs.nonEmpty, s"expected a signature exchange:\n$plan")
+      assert(!exchangeInputs.exists(_.contains("_v#")),
+        s"an Exchange carries the vector column:\n$exchangeInputs")
     }
-    assert(exchangeInputs.nonEmpty, s"expected a signature exchange:\n$plan")
-    assert(!exchangeInputs.exists(_.contains("_v#")),
-      s"an Exchange carries the vector column:\n$exchangeInputs")
   }
 
   test("broadcast-verify budget: the knob clamped to 3/4 of spark.driver.maxResultSize") {
@@ -596,17 +614,24 @@ class SimilaritySpec extends SparkSpec {
     }
     def lsh(tables: Int, bits: Int) = Similarity.cosineNearDupsLsh(corpus, "vec_id",
       "embedding", threshold = 0.9, dim = dim, tables = tables, bits = bits)
-    def staged(tables: Int, bits: Int) = Similarity.cosineNearDupsLshStaged(corpus,
+    def staged(tables: Int, bits: Int) = Similarity.cosineNearDupsLsh(corpus,
       "vec_id", "embedding", threshold = 0.9, dim = dim, passes = 2,
+      tables = tables, bits = bits, shuffleFloat32 = true)
+    def cross(tables: Int, bits: Int) = Similarity.crossCorpusNearDups(
+      corpus.filter(col("vec_id") < 30), corpus.filter(col("vec_id") >= 30),
+      "vec_id", "vec_id", "embedding", threshold = 0.9, dim = dim,
       tables = tables, bits = bits)
     // explicit knobs, broadcast off: nothing needs the corpus size
     assert(countJobs("0")(lsh(4, 6)) === 0)
     assert(countJobs("0")(staged(4, 6)) === 0)
+    assert(countJobs("0")(cross(4, 6)) === 0)
     // the broadcast gate or auto knobs need it: one count each
     assert(countJobs("1g")(lsh(4, 6)) > 0)
     assert(countJobs("1g")(staged(4, 6)) > 0)
+    assert(countJobs("1g")(cross(4, 6)) > 0)
     assert(countJobs("0")(lsh(0, 0)) > 0)
     assert(countJobs("0")(staged(0, 0)) > 0)
+    assert(countJobs("0")(cross(0, 0)) > 0)
   }
 
   test("autoLshKnobs: bits scale with corpus size, tables re-buy the " +
@@ -703,6 +728,79 @@ class SimilaritySpec extends SparkSpec {
     assert(auto.subsetOf(exact), s"auto false positives: ${auto -- exact}")
     assert(auto.size.toDouble / exact.size >= 0.95,
       s"auto cross-corpus recall ${auto.size}/${exact.size}")
+  }
+
+  test("LSH near-dup outputs are pinned per configuration: count and SHA-256 " +
+      "of the sorted (id_a, id_b, sim) rows") {
+    // captured from the per-shape pair builders this single path replaced
+    // (vector carry, broadcast verify, staged passes, cross-corpus join);
+    // any drift in pairs or in a sim's last rounded digit changes a digest.
+    // At t=0.9 every planted pair collides in every table; at t=0.4 the
+    // cross-cluster pairs collide in a table with p ~ 0.025, so that
+    // digest also pins which signatures meet
+    val dim = 16
+    val rnd = new scala.util.Random(31)
+    val centers = (0 until 10).map(_ => Array.fill(dim)(rnd.nextGaussian()))
+    val points = (0 until 300).map { i =>
+      val c = centers(i % 10)
+      (i.toLong, c.map(x => (x + 0.05 * rnd.nextGaussian()).toFloat).toSeq)
+    }
+    val corpus = points.toDF("vec_id", "embedding")
+    val left = corpus.filter(col("vec_id") % 3 === 0).withColumnRenamed("vec_id", "lid")
+    val right = corpus.filter(col("vec_id") % 3 =!= 0).withColumnRenamed("vec_id", "rid")
+    def digest(df: org.apache.spark.sql.DataFrame): String = {
+      val rows = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .sortBy(r => (r._1, r._2))
+      val sha = java.security.MessageDigest.getInstance("SHA-256").digest(
+        rows.map { case (a, b, s) => s"$a,$b,$s" }.mkString("\n").getBytes("UTF-8"))
+      s"${rows.length} ${sha.map("%02x".format(_)).mkString}"
+    }
+    val knob = "spark.graft.lsh.broadcastVerifyMaxBytes"
+    def withKnob[A](v: String)(f: => A): A = {
+      val old = spark.conf.getOption(knob)
+      spark.conf.set(knob, v)
+      try f finally old match {
+        case Some(o) => spark.conf.set(knob, o)
+        case None => spark.conf.unset(knob)
+      }
+    }
+    def self(t: Double, f32: Boolean, passes: Int = 1) = digest(Similarity.cosineNearDupsLsh(
+      corpus, "vec_id", "embedding", threshold = t, dim = dim, tables = 9,
+      bits = 8, shuffleFloat32 = f32, passes = passes))
+    def cross(t: Double, tables: Int, bits: Int) = digest(Similarity.crossCorpusNearDups(
+      left, right, "lid", "rid", "embedding", threshold = t, dim = dim,
+      tables = tables, bits = bits))
+    val got = Seq(0.9, 0.4).flatMap { t => Seq(
+      s"carry f64 @$t" -> withKnob("0")(self(t, f32 = false)),
+      s"carry f32 @$t" -> withKnob("0")(self(t, f32 = true)),
+      s"broadcast f64 @$t" -> withKnob("1g")(self(t, f32 = false)),
+      s"broadcast f32 @$t" -> withKnob("1g")(self(t, f32 = true)),
+      s"passes 3 f32 @$t" -> self(t, f32 = true, passes = 3),
+      s"cross explicit carry @$t" -> withKnob("0")(cross(t, 9, 8)),
+      s"cross explicit broadcast @$t" -> withKnob("1g")(cross(t, 9, 8)),
+      s"cross auto @$t" -> cross(t, 0, 0))
+    } :+ ("auto strict @0.9" -> digest(Similarity.cosineNearDupsLsh(corpus, "vec_id",
+      "embedding", threshold = 0.9, dim = dim, tables = 0, bits = 0,
+      strictRecall = true)))
+    info(got.map { case (c, d) => s"$c -> $d" }.mkString("\n"))
+    assert(got.toMap === Map(
+      "carry f64 @0.9" -> "4350 d1ffe2f38e4ed436b2d4ff3a9d565d2b03f070ff1cbaff248e385b9eafd11369",
+      "carry f32 @0.9" -> "4350 d1ffe2f38e4ed436b2d4ff3a9d565d2b03f070ff1cbaff248e385b9eafd11369",
+      "broadcast f64 @0.9" -> "4350 d1ffe2f38e4ed436b2d4ff3a9d565d2b03f070ff1cbaff248e385b9eafd11369",
+      "broadcast f32 @0.9" -> "4350 d1ffe2f38e4ed436b2d4ff3a9d565d2b03f070ff1cbaff248e385b9eafd11369",
+      "passes 3 f32 @0.9" -> "4350 d1ffe2f38e4ed436b2d4ff3a9d565d2b03f070ff1cbaff248e385b9eafd11369",
+      "cross explicit carry @0.9" -> "2000 72de8e5d57163507ac20fb2c664d2e591df09cb50474e813b63d54e55a77d01d",
+      "cross explicit broadcast @0.9" -> "2000 72de8e5d57163507ac20fb2c664d2e591df09cb50474e813b63d54e55a77d01d",
+      "cross auto @0.9" -> "2000 72de8e5d57163507ac20fb2c664d2e591df09cb50474e813b63d54e55a77d01d",
+      "carry f64 @0.4" -> "4356 58d2fe63503869b2d00bed613648ad6db42d50042e7f150e4a61a8813c495379",
+      "carry f32 @0.4" -> "4356 58d2fe63503869b2d00bed613648ad6db42d50042e7f150e4a61a8813c495379",
+      "broadcast f64 @0.4" -> "4356 58d2fe63503869b2d00bed613648ad6db42d50042e7f150e4a61a8813c495379",
+      "broadcast f32 @0.4" -> "4356 58d2fe63503869b2d00bed613648ad6db42d50042e7f150e4a61a8813c495379",
+      "passes 3 f32 @0.4" -> "4356 58d2fe63503869b2d00bed613648ad6db42d50042e7f150e4a61a8813c495379",
+      "cross explicit carry @0.4" -> "2000 72de8e5d57163507ac20fb2c664d2e591df09cb50474e813b63d54e55a77d01d",
+      "cross explicit broadcast @0.4" -> "2000 72de8e5d57163507ac20fb2c664d2e591df09cb50474e813b63d54e55a77d01d",
+      "cross auto @0.4" -> "2722 1e3edb460254fc1007ddcb386b82a8506f014c11c63b83238539c85d02bbc270",
+      "auto strict @0.9" -> "4350 d1ffe2f38e4ed436b2d4ff3a9d565d2b03f070ff1cbaff248e385b9eafd11369"))
   }
 
   test("two-level candidate cuts are output-identical to the single global cut") {
@@ -971,34 +1069,6 @@ class SimilaritySpec extends SparkSpec {
         k = 2, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
     assert(postCompact === preCompact, "compaction must be layout-only")
-  }
-
-  test("topK router: indexDir tier queries the standing index; invalid dir throws") {
-    val dim = 12
-    val rnd = new scala.util.Random(83)
-    val centers = (0 until 4).map(_ => Array.fill(dim)(rnd.nextGaussian()))
-    val points = (0 until 240).map { i =>
-      val c = centers(i % 4)
-      (i.toLong, c.map(x => (x + 0.08 * rnd.nextGaussian()).toFloat).toSeq)
-    }
-    val corpus = points.toDF("vec_id", "embedding")
-    val q = corpus.filter(col("vec_id") < 6)
-    val dir = java.nio.file.Files.createTempDirectory("graft-routeridx").toString
-    Similarity.buildIndex(corpus, "vec_id", "embedding", dir,
-      nlist = 4, kmeansIters = 2, m = 4, k = 8)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
-    val routed = rows(Similarity.topK(q, corpus, "vec_id", "vec_id",
-      "embedding", k = 2, indexDir = Some(dir)))
-    val direct = rows(Similarity.indexTopK(q, dir, "vec_id", "embedding", k = 2))
-    assert(routed === direct, "router with indexDir must equal indexTopK")
-    // supplied-but-invalid dir fails fast instead of silently retraining
-    val bad = java.nio.file.Files.createTempDirectory("graft-notanidx").toString
-    val e = intercept[IllegalArgumentException] {
-      Similarity.topK(q, corpus, "vec_id", "vec_id", "embedding", k = 2,
-        indexDir = Some(bad))
-    }
-    assert(e.getMessage.contains("not a buildIndex directory"))
   }
 
   test("splitCell: hot cell re-balanced in place, rows preserved, recall holds") {
@@ -1469,81 +1539,6 @@ class SimilaritySpec extends SparkSpec {
     val drifted = Similarity.indexDriftReport(spark, dir)
     assert(drifted.retrainAdvised, s"shifted append must advise retrain: $drifted")
     assert(drifted.avgCosNow < drifted.builtAvgCos)
-  }
-
-  test("topK auto: exact brute below the pair budget, bucketed IVF above") {
-    val dim = 8
-    val rnd = new scala.util.Random(41)
-    val centers = (0 until 8).map(_ => Array.fill(dim)(rnd.nextGaussian()))
-    val points = (0 until 400).map { i =>
-      val c = centers(i % 8)
-      (i.toLong, c.map(x => (x + 0.05 * rnd.nextGaussian()).toFloat).toSeq)
-    }
-    val corpus = points.toDF("vec_id", "embedding")
-    val q = corpus.filter(col("vec_id") < 16)
-    val brute = Similarity.bruteForceTopK(q, corpus, "vec_id", "vec_id", "embedding", k = 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // small input -> brute path: identical to bruteForceTopK and the plan
-    // carries the cross product
-    val auto = Similarity.topK(q, corpus, "vec_id", "vec_id", "embedding", k = 1)
-    assert(auto.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"))
-    val got = auto.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === brute)
-    // pair budget 0 -> bucketed path: no cross product, high recall
-    val bucketed = Similarity.topK(q, corpus, "vec_id", "vec_id", "embedding",
-      k = 1, maxBrutePairs = 0L)
-    assert(!bucketed.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"))
-    val gotB = bucketed.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val rec = brute.count { case (k2, v) => gotB.get(k2).contains(v) }
-    assert(rec >= 14, s"bucketed auto recall $rec/16")
-    // pqAboveRows 0 -> third tier (IVF-PQ with auto-trained OPQ model):
-    // still no cross product, codes in the cell join, recall holds
-    val pq = Similarity.topK(q, corpus, "vec_id", "vec_id", "embedding",
-      k = 1, maxBrutePairs = 0L, pqAboveRows = 0L)
-    val pqPlan = pq.queryExecution.executedPlan.toString
-    assert(!pqPlan.contains("BroadcastNestedLoopJoin"))
-    assert(pqPlan.contains("pq_score"), "IVF-PQ tier should score via PQ codes")
-    val gotP = pq.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val recP = brute.count { case (k2, v) => gotP.get(k2).contains(v) }
-    assert(recP >= 14, s"IVF-PQ auto tier recall $recP/16")
-  }
-
-  test("topK auto: clusterability probe routes unclustered corpora to multiprobe LSH") {
-    // clustered corpus scores near within-cluster cosine; iid scores near
-    // the best-of-16-random-directions floor — the router threshold (0.5)
-    // separates them with margin
-    val rnd = new scala.util.Random(43)
-    val dim = 32
-    val iid = (0 until 2000).map(i =>
-      (i.toLong, Seq.fill(dim)(rnd.nextGaussian().toFloat))).toDF("vec_id", "embedding")
-    val centers = (0 until 8).map(_ => Array.fill(dim)(rnd.nextGaussian()))
-    val clustered = (0 until 2000).map { i =>
-      val c = centers(i % 8)
-      (i.toLong, c.map(x => (x + 0.05 * rnd.nextGaussian()).toFloat).toSeq)
-    }.toDF("vec_id", "embedding")
-    val cIid = Similarity.clusterability(iid, "embedding")
-    val cClu = Similarity.clusterability(clustered, "embedding")
-    assert(cIid < 0.5, s"iid corpus scored clusterable: $cIid")
-    assert(cClu > 0.8, s"clustered corpus scored unclusterable: $cClu")
-
-    // routing consequence on the iid corpus: forced-bucket auto goes LSH
-    // (no cell join), and beats what forced IVF recalls at the same budget
-    val q = iid.filter(col("vec_id") < 24)
-    val brute = Similarity.bruteForceTopK(q, iid, "vec_id", "vec_id", "embedding", k = 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    def recallOf(df: org.apache.spark.sql.DataFrame): Int = {
-      val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      brute.count { case (k2, v) => got.get(k2).contains(v) }
-    }
-    val auto = Similarity.topK(q, iid, "vec_id", "vec_id", "embedding",
-      k = 1, maxBrutePairs = 0L)
-    assert(!auto.queryExecution.executedPlan.toString.contains("best_cell"),
-      "unclustered corpus must not route to IVF")
-    val autoRec = recallOf(auto)
-    val forcedIvf = recallOf(Similarity.ivfTopK(q, iid, "vec_id", "vec_id", "embedding",
-      k = 1, nlist = 22, nprobe = 5, kmeansIters = 2))
-    assert(autoRec >= forcedIvf, s"LSH auto $autoRec < forced IVF $forcedIvf")
-    assert(autoRec >= 18, s"multiprobe auto recall too low: $autoRec/24")
   }
 
   test("driver-bench clustered config: pq_rerank and ivf_pq recall >= 0.9") {
