@@ -2440,4 +2440,253 @@ class SearchSpec extends SparkSpec {
     val qb = Search.indexedBm25TopK(spark, bound, "spark data", k = 5).collect()
     assert(qf.toSeq === qb.toSeq)
   }
+
+  /** Fixed generated corpus for the pinned-output laws: a skewed
+    * 16-word vocabulary (so phrases, spans and prefixes hit often), ~1 in
+    * 23 texts empty, ~1 in 9 titles null, plus a parent key, a numeric
+    * field and a collapse group. */
+  private lazy val pinCorpus: org.apache.spark.sql.DataFrame = {
+    val rnd = new scala.util.Random(47)
+    val vocab = Seq("spark", "window", "merge", "node", "alpha", "spork",
+      "windows", "winter", "merges", "query", "shard", "route", "token",
+      "index", "beta", "gamma")
+    def words(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(rnd.nextInt(vocab.length) + 1)))
+      .mkString(" ")
+    (0 until 240).map { i =>
+      val text = if (i % 23 == 5) "" else words(1 + rnd.nextInt(16))
+      val title = if (i % 9 == 4) null else words(1 + rnd.nextInt(4))
+      (i.toLong, text, title, (i % 17).toLong, rnd.nextInt(100), s"g${i % 7}")
+    }.toDF("doc_id", "text", "title", "parent_id", "pop", "grp")
+  }
+
+  /** Count and SHA-256 of a result's rows, each rendered as its
+    * comma-joined cells, sorted. */
+  private def pinDigest(df: org.apache.spark.sql.DataFrame): String = {
+    val rows = df.collect().map(_.toSeq.map(String.valueOf).mkString(",")).sorted
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(rows.mkString("\n").getBytes("UTF-8"))
+    s"${rows.length} ${sha.map("%02x".format(_)).mkString}"
+  }
+
+  test("every query kind's scan and indexed top-k are pinned: count and " +
+      "SHA-256 of the sorted rows") {
+    // captured before the query kinds shared one match/score/rank core;
+    // any drift in a matched set, a rank or a score's last rounded digit
+    // changes a digest. Scan and indexed forms of a kind pin separately
+    // (they agree by the bit-identity laws, and here by digest too)
+    val docs = pinCorpus.cache()
+    val root = java.nio.file.Files.createTempDirectory("graft-pinned").toString
+    Search.buildPostingsIndex(docs, "doc_id", "text", s"$root/text", buckets = 8)
+    Search.buildPostingsIndex(docs, "doc_id", "title", s"$root/title", buckets = 8)
+    val dir = s"$root/text"
+    val k = 12
+    val q = "spark window merge"
+    val batch = Seq((1L, "spark window"), (2L, "merge node alpha"), (3L, "query"),
+      (4L, "zzz")).toDF("query_id", "query_text")
+    val page1 = Search.bm25TopK(docs, "doc_id", "text", q, 5).collect()
+    val cursor = Some((page1.last.getDouble(2), page1.last.get(0): Any))
+    val fields = Seq(("text", 1.0), ("title", 2.0))
+    val fieldDirs = Seq((s"$root/text", 1.0), (s"$root/title", 2.0))
+    import Search.BoolNode._
+    val tree = Bool(must = Seq(Term("spark")),
+      should = Seq(Term("window", 2.0), Bool(must = Seq(Term("merge"), Term("alpha")))),
+      mustNot = Seq(Term("node")))
+    val likeId = 7L
+    val likeText = docs.filter(col("doc_id") === likeId).head().getString(1)
+    val got = Seq(
+      "bm25 scan" -> Search.bm25TopK(docs, "doc_id", "text", q, 40),
+      "bm25 indexed" -> Search.indexedBm25TopK(spark, dir, q, 40),
+      "bm25 msm3 scan" -> Search.bm25TopK(docs, "doc_id", "text", q, 40, minShouldMatch = 3),
+      "bm25 msm3 indexed" -> Search.indexedBm25TopK(spark, dir, q, 40, minShouldMatch = 3),
+      "bm25 after scan" -> Search.bm25TopK(docs, "doc_id", "text", q, 5, searchAfter = cursor),
+      "bm25 after indexed" -> Search.indexedBm25TopK(spark, dir, q, 5, searchAfter = cursor),
+      "batch scan" -> Search.bm25TopKBatch(docs, "doc_id", "text", batch, 4),
+      "batch indexed" -> Search.indexedBm25TopKBatch(spark, dir, batch, 4),
+      "fuzzy scan" -> Search.fuzzyTopK(docs, "doc_id", "text", "spork windw", k),
+      "fuzzy indexed" -> Search.indexedFuzzyTopK(spark, dir, "spork windw", k, maxExpansions = 0),
+      "prefix scan" -> Search.prefixTopK(docs, "doc_id", "text", "win mer", k),
+      "prefix indexed" -> Search.indexedPrefixTopK(spark, dir, "win mer", k, maxExpansions = 0),
+      "wildcard scan" -> Search.wildcardTopK(docs, "doc_id", "text", "w?nd* sp*", k),
+      "wildcard indexed" -> Search.indexedWildcardTopK(spark, dir, "w?nd* sp*", k, maxExpansions = 0),
+      "regexp scan" -> Search.regexpTopK(docs, "doc_id", "text", "sp[ao]rk node.?", k),
+      "regexp indexed" -> Search.indexedRegexpTopK(spark, dir, "sp[ao]rk node.?", k, maxExpansions = 0),
+      "multi most scan" -> Search.multiFieldTopK(docs, "doc_id", fields, "spark merge", k),
+      "multi most indexed" -> Search.indexedMultiFieldTopK(spark, fieldDirs, "spark merge", k),
+      "multi best scan" -> Search.multiFieldTopK(docs, "doc_id", fields, "spark merge", k,
+        mode = "best_fields", tieBreaker = 0.3),
+      "multi best indexed" -> Search.indexedMultiFieldTopK(spark, fieldDirs, "spark merge", k,
+        mode = "best_fields", tieBreaker = 0.3),
+      "phrase scan" -> Search.phraseTopK(docs, "doc_id", "text", "spark window", k),
+      "phrase indexed" -> Search.indexedPhraseTopK(spark, dir, "spark window", k),
+      "phrase slop1 scan" -> Search.phraseTopK(docs, "doc_id", "text", "spark window", k, slop = 1),
+      "phrase slop1 indexed" -> Search.indexedPhraseTopK(spark, dir, "spark window", k, slop = 1),
+      "span near scan" -> Search.spanNearTopK(docs, "doc_id", "text", Seq("spark", "merge"), 2, k),
+      "span near indexed" -> Search.indexedSpanNearTopK(spark, dir, Seq("spark", "merge"), 2, k),
+      "span first scan" -> Search.spanFirstTopK(docs, "doc_id", "text", "merge", 3, k),
+      "span first indexed" -> Search.indexedSpanFirstTopK(spark, dir, "merge", 3, k),
+      "span or-near scan" -> Search.spanOrNearTopK(docs, "doc_id", "text",
+        Seq(Seq("spark"), Seq("window", "node")), 1, k),
+      "span or-near indexed" -> Search.indexedSpanOrNearTopK(spark, dir,
+        Seq(Seq("spark"), Seq("window", "node")), 1, k),
+      "span not scan" -> Search.spanNotTopK(docs, "doc_id", "text", Seq("spark", "window"), 2,
+        Seq("node"), pre = 1, post = 1, k = k),
+      "span not indexed" -> Search.indexedSpanNotTopK(spark, dir, Seq("spark", "window"), 2,
+        Seq("node"), pre = 1, post = 1, k = k),
+      "phrase-prefix scan" -> Search.phrasePrefixTopK(docs, "doc_id", "text", "spark win", k),
+      "phrase-prefix indexed" -> Search.indexedPhrasePrefixTopK(spark, dir, "spark win", k,
+        maxExpansions = 0),
+      "bool scan" -> Search.boolTopK(docs, "doc_id", "text", "spark", "window merge", "node", k),
+      "bool indexed" -> Search.indexedBoolTopK(spark, dir, "spark", "window merge", "node", k),
+      "bool-tree scan" -> Search.boolQueryTopK(docs, "doc_id", "text", tree, k),
+      "bool-tree indexed" -> Search.indexedBoolQueryTopK(spark, dir, tree, k),
+      "mlt doc scan" -> Search.moreLikeThisTopK(docs, "doc_id", "text", likeId, k,
+        maxQueryTerms = 4, minTermFreq = 1, minDocFreq = 2),
+      "mlt text scan" -> Search.moreLikeThisTextTopK(docs, "doc_id", "text", likeText, k,
+        maxQueryTerms = 4, minTermFreq = 1, minDocFreq = 2),
+      "mlt indexed" -> Search.indexedMoreLikeThisTopK(spark, dir, likeText, k,
+        maxQueryTerms = 4, minTermFreq = 1, minDocFreq = 2),
+      "terms-set scan" -> Search.termsSetTopK(docs, "doc_id", "text", Seq("spark", "window",
+        "merge"), lit(3), 40),
+      "function-score scan" -> Search.functionScoreTopK(docs, "doc_id", "text", q, k,
+        fieldFactor = Some(("pop", 0.1)), gaussDecay = Some(("pop", 50.0, 20.0, 0.5))),
+      "boosting scan" -> Search.boostingTopK(docs, "doc_id", "text", "spark window", "merge", k),
+      "collapse scan" -> Search.collapseTopK(docs, "doc_id", "text", q, "grp", 5),
+      "rescore scan" -> Search.rescoreTopK(docs, "doc_id", "text", q, "spark window", 5,
+        windowSize = 20),
+      "has-child max scan" -> Search.hasChildTopK(docs, "parent_id", "text", q, 8),
+      "has-child sum scan" -> Search.hasChildTopK(docs, "parent_id", "text", q, 8,
+        scoreMode = "sum", minChildren = 2),
+      "top-hits scan" -> Search.topHitsFacet(docs, "text", q, "doc_id", "grp", 2),
+      "explain scan" -> Search.explainScore(docs.filter(col("doc_id") < 40), "doc_id", "text", q),
+      "top terms indexed" -> Search.indexedTopTerms(spark, dir, 6)
+    ).map { case (name, df) => name -> pinDigest(df) }
+    info(got.map { case (c, d) => s"$c -> $d" }.mkString("\n"))
+    assert(got.toMap === Map(
+      "bm25 scan" ->
+        "40 9b249065f3dccb4723d17b0e147e028df393ba55080d49e23d8e130a95d1d9db",
+      "bm25 indexed" ->
+        "40 9b249065f3dccb4723d17b0e147e028df393ba55080d49e23d8e130a95d1d9db",
+      "bm25 msm3 scan" ->
+        "40 3280aa535ab74c2034577a0c48b470859c279e985fa843911b5b6be768222867",
+      "bm25 msm3 indexed" ->
+        "40 3280aa535ab74c2034577a0c48b470859c279e985fa843911b5b6be768222867",
+      "bm25 after scan" ->
+        "5 8ab372743bf6f13ef3cb8c1f56816afc89767d26fb602fe5a455dd808d738efb",
+      "bm25 after indexed" ->
+        "5 8ab372743bf6f13ef3cb8c1f56816afc89767d26fb602fe5a455dd808d738efb",
+      "batch scan" ->
+        "12 c54bd491e0c2422777742f52b9df6f3ad41f05b9758aec09ce10162c911fafc6",
+      "batch indexed" ->
+        "12 c54bd491e0c2422777742f52b9df6f3ad41f05b9758aec09ce10162c911fafc6",
+      "fuzzy scan" ->
+        "12 450617bbbea9866304a7bbb31886e325a00acdcd5ad627923fee7979970a5873",
+      "fuzzy indexed" ->
+        "12 450617bbbea9866304a7bbb31886e325a00acdcd5ad627923fee7979970a5873",
+      "prefix scan" ->
+        "12 2491140c315afc15b7a36d687b16db775862b71d6c60c564738045302a38d0d0",
+      "prefix indexed" ->
+        "12 2491140c315afc15b7a36d687b16db775862b71d6c60c564738045302a38d0d0",
+      "wildcard scan" ->
+        "12 166d9b55c320818ad564bc2a50921289abf973a45ac2bd8c5ceaa384fccdf057",
+      "wildcard indexed" ->
+        "12 166d9b55c320818ad564bc2a50921289abf973a45ac2bd8c5ceaa384fccdf057",
+      "regexp scan" ->
+        "12 d4f03e804e8911e08074456205b97b08b73e0fab3e6898aae886590433baa08f",
+      "regexp indexed" ->
+        "12 d4f03e804e8911e08074456205b97b08b73e0fab3e6898aae886590433baa08f",
+      "multi most scan" ->
+        "12 4a457a12489fbb89160dab8d31e8f88e42cf18b1caf49e1205748cc028a38b3f",
+      "multi most indexed" ->
+        "12 4a457a12489fbb89160dab8d31e8f88e42cf18b1caf49e1205748cc028a38b3f",
+      "multi best scan" ->
+        "12 ed70a38626a5fae531d49839ca782e0a82c151bf230ff3fd63194b62c46f36eb",
+      "multi best indexed" ->
+        "12 ed70a38626a5fae531d49839ca782e0a82c151bf230ff3fd63194b62c46f36eb",
+      "phrase scan" ->
+        "12 205b3eba976e766b7b9da9a5d0f9fb1f880dca81ca7420b30876c101782e7814",
+      "phrase indexed" ->
+        "12 205b3eba976e766b7b9da9a5d0f9fb1f880dca81ca7420b30876c101782e7814",
+      "phrase slop1 scan" ->
+        "12 cc4f1f6f110935ddbd4331bf491c505e2656ce9d06d689e4c74aa9f1359b9640",
+      "phrase slop1 indexed" ->
+        "12 cc4f1f6f110935ddbd4331bf491c505e2656ce9d06d689e4c74aa9f1359b9640",
+      "span near scan" ->
+        "12 54391f97e70a4d82d6b7d333940398e96f156fe58470ccd4a6ab2a41d8448452",
+      "span near indexed" ->
+        "12 54391f97e70a4d82d6b7d333940398e96f156fe58470ccd4a6ab2a41d8448452",
+      "span first scan" ->
+        "12 aab7d8db0e614692b223d88fe58b4ef26e70381fe8cbaeab0be124fd12f37159",
+      "span first indexed" ->
+        "12 aab7d8db0e614692b223d88fe58b4ef26e70381fe8cbaeab0be124fd12f37159",
+      "span or-near scan" ->
+        "12 51a71d42f54499ef5a08d4b251ffef91cbda89ebeb6b9765c8f4e0288653ee95",
+      "span or-near indexed" ->
+        "12 51a71d42f54499ef5a08d4b251ffef91cbda89ebeb6b9765c8f4e0288653ee95",
+      "span not scan" ->
+        "12 6b788281b29947443aaf0cfa60478371595ff2661db5cb152124e0a47dbb6eb4",
+      "span not indexed" ->
+        "12 6b788281b29947443aaf0cfa60478371595ff2661db5cb152124e0a47dbb6eb4",
+      "phrase-prefix scan" ->
+        "12 3428520c7fb1c980aa87da2534659e3ca278475f0928cfe3a7c93cfe0e9787ee",
+      "phrase-prefix indexed" ->
+        "12 3428520c7fb1c980aa87da2534659e3ca278475f0928cfe3a7c93cfe0e9787ee",
+      "bool scan" ->
+        "12 099df45d8baae80cab713003439efd430c045a0da5fe7535f33ff704f05da3fa",
+      "bool indexed" ->
+        "12 099df45d8baae80cab713003439efd430c045a0da5fe7535f33ff704f05da3fa",
+      "bool-tree scan" ->
+        "12 65bfd3290bcb9a7fb0b00b729892241524203ac9a93bcc10b5270b43587baf04",
+      "bool-tree indexed" ->
+        "12 65bfd3290bcb9a7fb0b00b729892241524203ac9a93bcc10b5270b43587baf04",
+      "mlt doc scan" ->
+        "12 5370ed72f8549aa0ad6d86e12891eb4cf5e0779268588e9a099f6b793fa90536",
+      "mlt text scan" ->
+        "12 f3190272a16a03569026c72b780c911a36254bca0ce1c781ab39f360247f7ac8",
+      "mlt indexed" ->
+        "12 f3190272a16a03569026c72b780c911a36254bca0ce1c781ab39f360247f7ac8",
+      "terms-set scan" ->
+        "40 3280aa535ab74c2034577a0c48b470859c279e985fa843911b5b6be768222867",
+      "function-score scan" ->
+        "12 4a773a126b290dd0b05232d2af918b6c65aa7a20156c96fb8b0cf2c79a5354d2",
+      "boosting scan" ->
+        "12 b525a6f00824e51f974ea044f4e261fa75c83ef6aa4c8ca1d92b25dd4704f92b",
+      "collapse scan" ->
+        "5 c91ebe1dfa84514d02b78593453345987f0a76d241b4c304f36438895f198f12",
+      "rescore scan" ->
+        "5 662d9847cef674be9c9f84aa1d76b4ea42615ad7a93e65721abb7d4fabf06cad",
+      "has-child max scan" ->
+        "8 1d2470bb7cb9dd278020ebc61b6024ba742817e611791fe3299fbff7e84cb7d3",
+      "has-child sum scan" ->
+        "8 e3ff8aa51053e1f94dd2ef086f4cb60fa9e54b90f81a23ce7b6e862c2adb23b3",
+      "top-hits scan" ->
+        "14 d37e6dd1263d4806fd7bcecbc02a6b42dfa35fbc70da9c500bdda882e42b172a",
+      "explain scan" ->
+        "69 6f339f46f4205eb1f9d2ba9247bf397605caf96ce413690841640295c06f19e5",
+      "top terms indexed" ->
+        "6 967cfc6872f56ce94f8082b9bce5b7b08bafbba326e4ae6e619d08bc165c625d"))
+  }
+
+  test("indexed bm25, phrase, phrase-prefix, wildcard and more-like-this " +
+      "submit a pinned number of Spark jobs per query") {
+    // the serving loop's job count, planning included: a stats or df pass
+    // that moves to (or off) the query path changes it
+    val dir = java.nio.file.Files.createTempDirectory("graft-pinjobs").toString
+    Search.buildPostingsIndex(pinCorpus, "doc_id", "text", dir, buckets = 8)
+    val likeText = pinCorpus.filter(col("doc_id") === 7L).head().getString(1)
+    val got = Seq(
+      "bm25" -> (() => Search.indexedBm25TopK(spark, dir, "spark window merge", 10)),
+      "phrase" -> (() => Search.indexedPhraseTopK(spark, dir, "spark window", 10)),
+      "phrase_prefix" -> (() => Search.indexedPhrasePrefixTopK(spark, dir, "spark win", 10,
+        maxExpansions = 0)),
+      "wildcard" -> (() => Search.indexedWildcardTopK(spark, dir, "w?nd*", 10,
+        maxExpansions = 0)),
+      "mlt" -> (() => Search.indexedMoreLikeThisTopK(spark, dir, likeText, 10,
+        minTermFreq = 1, minDocFreq = 2))
+    ).map { case (kind, query) =>
+      query().collect() // warm the footer and listing caches
+      kind -> jobsSubmitted(query().collect()).size
+    }
+    assert(got.toMap === Map("bm25" -> 4, "phrase" -> 4, "phrase_prefix" -> 7,
+      "wildcard" -> 7, "mlt" -> 6))
+  }
 }
