@@ -18,6 +18,21 @@ import graft.sources.EngineParquet
  * BM25: idf = ln(1 + (N - df + 0.5)/(df + 0.5)),
  * score = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)).
  *
+ * One match → score → rank core serves every query kind, in its scan
+ * form and its indexed form alike; each stage's law lives in one place:
+ *  - [[scanScore]], the scan prologue: one tokenization, one stats pass
+ *    ([[scanCounts]] reads N first and refuses an empty corpus), the
+ *    matched-term count and the score column;
+ *  - [[indexRead]], the index prologue: [[readStats]] → the pruned,
+ *    post-tombstone postings → the positional-schema check → one exact df
+ *    aggregate; [[tfPivot]] and [[positionPivot]] then turn postings into
+ *    per-doc tf / position columns;
+ *  - [[bm25Term]], THE term score (the association above, on every path:
+ *    scan, index, batch, phrase-shaped, explain) — why scan == indexed
+ *    holds to the last ulp; [[idfOf]], THE idf;
+ *  - [[rankTail]], the cut + rank window of every single-query top-k, and
+ *    [[topKPerKey]], the bounded per-key heap of the batch/facet forms.
+ *
  * Scale shape (the part that matters at 100 TB):
  *  - [[bm25TopK]] (literal query) is MAP-ONLY + TakeOrderedAndProject:
  *    per-term tf is a codegen'd `size(filter(tokens, = term))` projection —
@@ -31,6 +46,16 @@ import graft.sources.EngineParquet
  *    persisted/bucketed by term for repeated batches.
  *  - [[hybridTopK]] fuses bounded candidate lists (k_cand each), so the
  *    fusion join/window never sees more than 2·k_cand rows.
+ *
+ * Why the kinds do not read one shared `(doc_id, dl, term, tf)` match
+ * source: only the indexed forms can without a plan change (the pruned
+ * postings already are that source). The scan forms are map-only
+ * projections over the token array — an explode-based source would add
+ * the postings Exchange to plans that have none; the phrase, span and
+ * phrase-prefix kinds need positions, which that source drops; the
+ * relaxed scans (fuzzy/prefix/wildcard/regexp) match tokens by predicate,
+ * not by term; and [[bm25TopKBatch]] already builds exactly that source
+ * (by explode) because a query table needs the join.
  *
  * Tokenization is the corpus-wide shared law (same as
  * [[Decontaminate.tokenize]]): lowercase, split on whitespace runs, drop
@@ -52,38 +77,119 @@ object Search {
   def queryTerms(query: String): Seq[String] =
     query.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct.sorted.toSeq
 
+  /** THE idf law over an explicit df — exact, relaxed (expansion) and
+    * union (span_or) dfs and the MLT term selection all fold through this
+    * one scalar form, so every path's float arithmetic is the identical
+    * sequence of operations. */
+  private def idfOf(nDocs: Long, df: Long): Double =
+    math.log(1.0 + (nDocs - df + 0.5) / (df + 0.5))
+
   /** Corpus statistics for a bounded term set: one distributed
     * partial+final aggregate, |terms|+2 longs back to the driver. */
   case class CorpusStats(nDocs: Long, totalTokens: Long, df: Map[String, Long]) {
     require(nDocs > 0, "empty corpus")
     def avgdl: Double = totalTokens.toDouble / nDocs
-    def idf(term: String): Double = {
-      val d = df.getOrElse(term, 0L).toDouble
-      math.log(1.0 + (nDocs - d + 0.5) / (d + 0.5))
-    }
+    def idf(term: String): Double = idfOf(nDocs, df.getOrElse(term, 0L))
   }
 
   def corpusStats(docs: DataFrame, textCol: String, terms: Seq[String]): CorpusStats = {
     val tok = tokens(col(textCol))
-    val dfCols = terms.map(t =>
-      sum(when(array_contains(tok, t), 1L).otherwise(0L)).as(s"df_$t"))
-    val row = docs.agg(
-      count(lit(1)).as("n"),
-      (sum(size(tok).cast("long")).as("tot") +: dfCols): _*).head()
-    CorpusStats(row.getLong(0), row.getLong(1),
-      terms.zipWithIndex.map { case (t, i) => t -> row.getLong(i + 2) }.toMap)
+    scanStats(docs, tok, terms, array_contains(tok, _))
   }
 
-  /** Per-document BM25 score for a literal query as ONE projection column
-    * (fixed term order, all constants folded driver-side). */
-  private def scoreCol(terms: Seq[String], stats: CorpusStats,
-                       p: Bm25Params, tok: Column, dl: Column): Column = {
-    val lenNorm = lit(p.k1) * (lit(1.0 - p.b) + lit(p.b) * dl / lit(stats.avgdl))
-    terms.map { t =>
-      val tf = size(filter(tok, x => x === lit(t))).cast("double")
-      lit(stats.idf(t)) * (tf * lit(p.k1 + 1.0)) / (tf + lenNorm)
-    }.reduce(_ + _)
+  /** ONE bounded aggregate over the corpus: N, then `aggs` as longs (a
+    * null sum reads 0). N is read FIRST and an empty corpus refused —
+    * every sum over zero rows is null. */
+  private def scanCounts(docs: DataFrame, aggs: Seq[Column]): (Long, IndexedSeq[Long]) = {
+    val row = docs.agg(count(lit(1)), aggs: _*).head()
+    require(row.getLong(0) > 0, "empty corpus")
+    (row.getLong(0),
+      aggs.indices.map(i => if (row.isNullAt(i + 1)) 0L else row.getLong(i + 1)))
   }
+
+  /** [[CorpusStats]] of `terms` in one [[scanCounts]] pass; `has(t)` is
+    * the per-doc match test whose count is df(t). */
+  private def scanStats(docs: DataFrame, tok: Column, terms: Seq[String],
+                        has: String => Column): CorpusStats = {
+    val (n, c) = scanCounts(docs, sum(size(tok).cast("long")) +:
+      terms.map(t => sum(when(has(t), 1L).otherwise(0L))))
+    CorpusStats(n, c.head, terms.zip(c.tail).toMap)
+  }
+
+  /** THE BM25 term score: idf · (tf · (k1+1)) / (tf + k1 · ((1 − b) +
+    * b · dl/avgdl)), in exactly this association on every path. */
+  private def bm25Term(idf: Column, tf: Column, dl: Column, avgdl: Double,
+                       p: Bm25Params): Column =
+    idf * (tf * lit(p.k1 + 1.0)) /
+      (tf + lit(p.k1) * (lit(1.0 - p.b) + lit(p.b) * dl / lit(avgdl)))
+
+  /** Σ [[bm25Term]] over `terms` in GIVEN (sorted) order, left-assoc, idf
+    * folded driver-side; `tfOf(t)` reads a term's tf (a token-array
+    * projection on the scan, a pivot column on the index). */
+  private def termScores(terms: Seq[String], stats: CorpusStats, p: Bm25Params,
+                         tfOf: String => Column, dl: Column): Column =
+    terms.map(t => bm25Term(lit(stats.idf(t)), tfOf(t), dl, stats.avgdl, p))
+      .reduce(_ + _)
+
+  /** The scan prologue's columns over ONE tokenization of the text. */
+  private final case class ScanScore(stats: CorpusStats, tok: Column, dl: Column,
+                                     tf: String => Column, matched: Column,
+                                     score: Column)
+
+  /** The scan prologue: tokens, dl, per-term tf, the number of DISTINCT
+    * query terms a doc matches, and its BM25 score over `terms`. A token
+    * is an occurrence of `t` by equality, or by `relaxed(token, t)` for
+    * the fuzzy/prefix/wildcard/regexp kinds (tf, df and the match count
+    * all use it). `stats` reuses an already-run stats pass. */
+  private def scanScore(docs: DataFrame, textCol: String, terms: Seq[String],
+                        params: Bm25Params,
+                        relaxed: Option[(Column, String) => Column] = None,
+                        stats: Option[CorpusStats] = None): ScanScore = {
+    require(terms.nonEmpty, "empty query")
+    val tok = tokens(col(textCol))
+    val dl = size(tok).cast("double")
+    val (has, eq): (String => Column, (Column, String) => Column) = relaxed match {
+      case Some(m) => (t => exists(tok, x => m(x, t)), m)
+      case None => (t => array_contains(tok, t), (x, t) => x === lit(t))
+    }
+    val st = stats.getOrElse(scanStats(docs, tok, terms, has))
+    val tf = (t: String) => size(filter(tok, x => eq(x, t))).cast("double")
+    ScanScore(st, tok, dl, tf,
+      terms.map(t => when(has(t), 1).otherwise(0)).reduce(_ + _),
+      termScores(terms, st, params, tf, dl))
+  }
+
+  /** THE rank tail of every single-query top-k: the distributed
+    * TakeOrdered cut to `k` rows, then `rank` by a window over those ≤ k
+    * rows only (never corpus-sized). `keys` is the sort law — by default
+    * score desc, ties to the smaller id — and `out` the published
+    * columns. */
+  private def rankTail(scored: DataFrame, k: Int,
+                       keys: Seq[Column] = Seq(col("score").desc, col("doc_id").asc),
+                       out: Seq[String] = Seq("doc_id", "rank", "score")): DataFrame =
+    scored.orderBy(keys: _*).limit(k)
+      .withColumn("rank", row_number().over(Window.orderBy(keys: _*)))
+      .select(out.map(col): _*)
+
+  /** THE per-key top-k of the batch and facet forms: a bounded
+    * partial+final [[graft.functions.TopKAgg]] heap per `key`, not a
+    * window partitioned by it (which funnels a key's ENTIRE row set
+    * through one task — a stopword query or a dominant facet value at
+    * 100 TB makes that corpus-sized). ≤ k rows per (task, key) map-side,
+    * ≤ k·tasks shuffled per key. Order (score desc, doc_id asc) via the
+    * negated-score struct; −(−x) restores the score exactly (IEEE
+    * negation is lossless). `carry` columns ride the heap. */
+  private def topKPerKey(scored: DataFrame, key: String, k: Int,
+                         score: String = "score",
+                         carry: Seq[String] = Nil): DataFrame =
+    scored.groupBy(key)
+      .agg(graft.functions.TopKAgg.top_k(
+        struct((-col(score)).as("ns") +: col("doc_id") +: carry.map(col): _*), k)
+        .as("_top"))
+      .select(col(key), posexplode(col("_top")))
+      .select(Seq(col(key), col("col.doc_id").as("doc_id"),
+        (col("pos") + 1).cast("int").as("rank")) ++
+        carry.map(c => col(s"col.$c").as(c)) :+ (-col("col.ns")).as(score): _*)
 
   /**
    * BM25 top-k for one literal query. Map-only scan (no explode, no
@@ -109,25 +215,53 @@ object Search {
                roundTo: Int = 4, minShouldMatch: Int = 1,
                searchAfter: Option[(Double, Any)] = None): DataFrame = {
     require(minShouldMatch >= 1, "minShouldMatch must be >= 1")
-    val terms = queryTerms(query)
-    require(terms.nonEmpty, "empty query")
-    val stats = corpusStats(docs, textCol, terms)
-    val tok = tokens(col(textCol))
-    val dl = size(tok).cast("double")
-    val matched = terms.map(t => when(array_contains(tok, t), 1).otherwise(0))
-      .reduce(_ + _)
-    val scored = docs
-      .where(matched >= minShouldMatch)
-      .select(col(idCol).as("doc_id"),
-        round(scoreCol(terms, stats, params, tok, dl), roundTo).as("score"))
-      .transform(afterFilter(searchAfter))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    // rank assignment runs over ≤ k rows (bounded), AFTER the distributed
-    // TakeOrdered — the single-partition window is k-row, not corpus-sized
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+    bm25TopKWith(docs, idCol, scanScore(docs, textCol, queryTerms(query), params),
+      k, roundTo, lit(minShouldMatch), searchAfter)
+  }
+
+  /** The scan top-k over a [[scanScore]] prologue: docs matching ≥
+    * `minShouldMatch` distinct terms, rounded score, cursor, rank tail —
+    * the scan twin of [[indexedBm25TopKWith]]. */
+  private def bm25TopKWith(docs: DataFrame, idCol: String, s: ScanScore, k: Int,
+                           roundTo: Int, minShouldMatch: Column = lit(1),
+                           searchAfter: Option[(Double, Any)] = None): DataFrame =
+    rankTail(docs.where(s.matched >= minShouldMatch)
+      .select(col(idCol).as("doc_id"), round(s.score, roundTo).as("score"))
+      .transform(afterFilter(searchAfter)), k)
+
+  /** The distinct terms of a query table, sorted (bounded by definition:
+    * queries are tiny). */
+  private def batchTerms(queries: DataFrame): Seq[String] =
+    queries.select(explode(array_distinct(tokens(col("query_text")))).as("term"))
+      .distinct().collect().map(_.getString(0)).sorted.toSeq
+
+  /** The per-query scoring tail of both batch forms over `(doc_id, dl,
+    * term, tf)` postings: the query terms broadcast into the join (never
+    * shuffled), idf folds driver-side, each contribution is [[bm25Term]],
+    * and the per-(query, doc) sum folds in sorted TERM order — not a
+    * commutative sum whose float order follows partitioning; an absent
+    * term adds exactly +0.0 on the single-query paths, which IEEE
+    * addition cannot distinguish from being skipped — so per query the
+    * batch is bit-identical to the single-query forms. The per-query cut
+    * is [[topKPerKey]]. */
+  private def batchTopK(postings: DataFrame, queries: DataFrame, terms: Seq[String],
+                        stats: CorpusStats, k: Int, params: Bm25Params,
+                        roundTo: Int): DataFrame = {
+    val qTerms = queries.select(col("query_id"),
+      explode(array_distinct(tokens(col("query_text")))).as("term"))
+    val idfByTerm = typedLit(terms.map(t => t -> stats.idf(t)).toMap)
+    val scored = postings
+      .join(broadcast(qTerms), Seq("term"))
+      .withColumn("idf", element_at(idfByTerm, col("term")))
+      .withColumn("contrib",
+        bm25Term(col("idf"), col("tf"), col("dl"), stats.avgdl, params))
+      .groupBy("query_id", "doc_id")
+      .agg(sort_array(collect_list(struct(col("term"), col("contrib"))))
+        .as("_c"))
+      .withColumn("score", round(
+        expr("aggregate(_c, 0D, (a, x) -> a + x.contrib)"), roundTo))
+      .drop("_c")
+    topKPerKey(scored, "query_id", k)
   }
 
   /**
@@ -135,7 +269,7 @@ object Search {
    * The inverted-postings shape: corpus explodes ONCE into (doc, term, tf)
    * postings, the (small by definition) query-term table broadcasts into
    * the join, scores aggregate on (query_id, doc_id), per-query top-k via
-   * a window over each query's matched set. `queries` columns:
+   * a bounded heap over each query's matched set. `queries` columns:
    * (query_id, query_text).
    */
   def bm25TopKBatch(docs: DataFrame, idCol: String, textCol: String,
@@ -153,50 +287,10 @@ object Search {
       .agg(count(lit(1)).cast("double").as("tf"))
     // N, avgdl and per-term df for the UNION of the batch's terms in one
     // map-only aggregate pass (no postings re-scan: the postings lineage
-    // below is evaluated exactly once, by the scored aggregation)
-    val allTerms = queries.select(explode(array_distinct(tokens(col("query_text"))))
-      .as("term")).distinct().collect().map(_.getString(0)).sorted.toSeq
-    val stats = corpusStats(docs, textCol, allTerms)
-    // query terms: tiny — broadcast against the postings, never shuffled;
-    // idf folds driver-side (a df=0 term matches no postings anyway)
-    val qTerms = queries.select(col("query_id"),
-      explode(array_distinct(tokens(col("query_text")))).as("term"))
-    val idfByTerm = typedLit(allTerms.map(t => t -> stats.idf(t)).toMap)
-    val contrib = postings
-      .join(broadcast(qTerms), Seq("term"))
-      .withColumn("idf", element_at(idfByTerm, col("term")))
-      // EXACT [[scoreCol]] association — idf * (tf * (k1+1)) — so the
-      // batch path's per-term contribution is bit-identical to the scan
-      // path's (the batch == single-query law holds to the last ulp, not
-      // just empirically)
-      .withColumn("contrib",
-        col("idf") * (col("tf") * lit(params.k1 + 1.0)) /
-          (col("tf") + lit(params.k1) *
-            (lit(1.0 - params.b) + lit(params.b) * col("dl") / lit(stats.avgdl))))
-    // fixed-order sum (the module law): fold contributions in TERM order,
-    // not a commutative sum whose float addition order follows partitioning
-    val scored = contrib.groupBy("query_id", "doc_id")
-      .agg(sort_array(collect_list(struct(col("term"), col("contrib"))))
-        .as("_c"))
-      .withColumn("score", round(
-        expr("aggregate(_c, 0D, (a, x) -> a + x.contrib)"), roundTo))
-      .drop("_c")
-    // per-query top-k as a BOUNDED partial+final aggregate, not a
-    // row_number window: a window partitioned by query_id funnels a
-    // query's ENTIRE matched set through one task (a stopword-ish term at
-    // 100 TB makes that partition corpus-sized). The k-heap aggregate
-    // keeps ≤ k rows per (task, query) map-side, shuffles ≤ k·tasks rows
-    // per query, and never sorts more than k elements in one place.
-    // Ordering law unchanged: (score desc, doc_id asc) via the negated-
-    // score struct; −(−x) restores the rounded score exactly (IEEE
-    // negation is lossless).
-    scored.groupBy("query_id")
-      .agg(graft.functions.TopKAgg.top_k(
-        struct((-col("score")).as("ns"), col("doc_id")), k).as("_top"))
-      .select(col("query_id"), posexplode(col("_top")))
-      .select(col("query_id"), col("col.doc_id").as("doc_id"),
-        (col("pos") + 1).cast("int").as("rank"),
-        (-col("col.ns")).as("score"))
+    // is evaluated exactly once, by the scored aggregation)
+    val allTerms = batchTerms(queries)
+    batchTopK(postings, queries, allTerms, corpusStats(docs, textCol, allTerms),
+      k, params, roundTo)
   }
 
   // ------------------------------------------------------------------
@@ -207,43 +301,17 @@ object Search {
   /** BM25 top-k under a RELAXED token-match predicate: a token counts as
     * an occurrence of query term `t` when `matchTok(token, t)` holds
     * (exact equality gives plain [[bm25TopK]]). tf/df/idf all use the
-    * relaxed counts; fold orders are the bm25TopK laws. Scan-path only by
-    * design: the postings index stores exact terms, so relaxed matching
-    * would need a term-dictionary expansion — an explicit future seam.
-    * Same map-only + TakeOrdered shape; the per-token predicate (edit
-    * distance, prefix test) is the added CPU, not a shuffle. */
+    * relaxed counts; fold orders are the bm25TopK laws. The indexed twin
+    * expands each term against the term dictionary instead
+    * ([[indexedRelaxedTopK]]). Same map-only + TakeOrdered shape; the
+    * per-token predicate (edit distance, prefix test) is the added CPU,
+    * not a shuffle. */
   private def relaxedTopK(docs: DataFrame, idCol: String, textCol: String,
                           terms: Seq[String], k: Int, params: Bm25Params,
                           roundTo: Int)
-                         (matchTok: (Column, String) => Column): DataFrame = {
-    require(terms.nonEmpty, "empty query")
-    val tok = tokens(col(textCol))
-    // relaxed per-term df in ONE bounded aggregate (exists = any token
-    // matches), the corpusStats shape with the predicate swapped in
-    val dfCols = terms.map(t =>
-      sum(when(exists(tok, x => matchTok(x, t)), 1L).otherwise(0L)))
-    val row = docs.agg(count(lit(1)).as("n"),
-      (sum(size(tok).cast("long")) +: dfCols): _*).head()
-    val stats = CorpusStats(row.getLong(0), row.getLong(1),
-      terms.zipWithIndex.map { case (t, i) => t -> row.getLong(i + 2) }.toMap)
-    val dl = size(tok).cast("double")
-    val lenNorm = lit(params.k1) *
-      (lit(1.0 - params.b) + lit(params.b) * dl / lit(stats.avgdl))
-    val score = terms.map { t =>
-      val tf = size(filter(tok, x => matchTok(x, t))).cast("double")
-      lit(stats.idf(t)) * (tf * lit(params.k1 + 1.0)) / (tf + lenNorm)
-    }.reduce(_ + _)
-    val matched = terms.map(t =>
-      when(exists(tok, x => matchTok(x, t)), 1).otherwise(0)).reduce(_ + _)
-    val scored = docs
-      .where(matched > 0)
-      .select(col(idCol).as("doc_id"), round(score, roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
-  }
+                         (matchTok: (Column, String) => Column): DataFrame =
+    bm25TopKWith(docs, idCol,
+      scanScore(docs, textCol, terms, params, relaxed = Some(matchTok)), k, roundTo)
 
   /**
    * Fuzzy-match top-k (the ES `fuzzy` query): a token matches a query
@@ -356,12 +424,8 @@ object Search {
   def indexedTopTerms(spark: org.apache.spark.sql.SparkSession, dir: String,
                       n: Int): DataFrame = {
     require(n > 0, "n must be positive")
-    val top = termDictionary(spark, dir)
-      .orderBy(col("df").desc, col("term").asc)
-      .limit(n)
-    top.withColumn("rank",
-      row_number().over(Window.orderBy(col("df").desc, col("term").asc)))
-      .select("term", "df", "rank")
+    rankTail(termDictionary(spark, dir), n,
+      Seq(col("df").desc, col("term").asc), Seq("term", "df", "rank"))
   }
 
   /** `isin` tolerant of the empty set (zero-arg isin is invalid). */
@@ -433,59 +497,33 @@ object Search {
       dict.filter(p).select(lit(t).as("qt"), col("term"), col("df"))
     }.reduce(_ unionByName _).collect()
     val expansion: Map[String, Seq[String]] = terms.map { t =>
-      val all = matched.filter(_.getString(0) == t)
-        .map(r => (r.getString(1), r.getLong(2))).toSeq
-      val kept =
-        if (maxExpansions > 0 && all.length > maxExpansions)
-          all.sortBy { case (term, df) => (-df, term) }.take(maxExpansions)
-        else all
-      t -> kept.map(_._1)
+      t -> capExpansion(matched.filter(_.getString(0) == t)
+        .map(r => (r.getString(1), r.getLong(2))).toSeq, maxExpansions)
     }.toMap
     val allExp = expansion.values.flatten.toSeq.distinct.sorted
-    val (nDocs, totalTokens, buckets) = readStats(spark, dir)
-    if (allExp.isEmpty)
-      // nothing in the vocabulary matches any query term — empty result,
-      // typed off the index's own postings schema (" " can never be a
-      // token: the tokenization law splits on whitespace)
-      return prunedPostings(spark, dir, Seq(" "), buckets)
-        .where(lit(false))
-        .select(col("doc_id"), lit(0).cast("int").as("rank"),
-          lit(0.0).as("score"))
-    val pruned = prunedPostings(spark, dir, allExp, buckets)
     // relaxed per-query-term df: DISTINCT docs holding >= 1 expansion
-    // posting, one bounded aggregate (count distinct skips the
-    // non-matching nulls) — exact by construction over the pruned,
-    // post-tombstone postings
-    val dfRow = pruned.agg(count(lit(1)).as("_n"),
-      terms.zipWithIndex.map { case (t, i) =>
-        countDistinct(when(inSet(col("term"), expansion(t)), col("doc_id")))
-          .as(s"_df$i") }: _*).head()
-    val stats = CorpusStats(nDocs, totalTokens,
-      terms.zipWithIndex.map { case (t, i) =>
-        t -> dfRow.getLong(i + 1) }.toMap)
+    // posting — exact by construction over the pruned, post-tombstone
+    // postings. Nothing in the vocabulary matching any query term is an
+    // empty result, typed off the index's own postings schema (" " can
+    // never be a token: the tokenization law splits on whitespace)
+    val ir = indexRead(spark, dir, if (allExp.isEmpty) Seq(" ") else allExp,
+      terms.map(t => setDf(expansion(t))))
+    if (allExp.isEmpty) return ir.none
     // relaxed tf = Σ tf over the term's expansion postings (a token
     // matches exactly one dictionary term, so the sum IS the scan path's
     // matching-token count); a doc row exists only when >= 1 expansion
-    // posting exists, which is exactly the scan's `matched > 0` filter
-    val grouped = pruned.groupBy("doc_id").agg(
-      first(col("dl")).as("dl"),
-      terms.zipWithIndex.map { case (t, i) =>
-        coalesce(sum(when(inSet(col("term"), expansion(t)), col("tf"))),
-          lit(0.0)).as(s"_tf$i") }: _*)
-    val lenNorm = lit(params.k1) *
-      (lit(1.0 - params.b) + lit(params.b) * col("dl") / lit(stats.avgdl))
-    val score = terms.zipWithIndex.map { case (t, i) =>
-      val tf = col(s"_tf$i")
-      lit(stats.idf(t)) * (tf * lit(params.k1 + 1.0)) / (tf + lenNorm)
-    }.reduce(_ + _)
-    val scored = grouped
-      .select(col("doc_id"), round(score, roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+    // posting exists, which is exactly the scan's match filter
+    pivotTopK(ir, terms, terms.map(t => inSet(col("term"), expansion(t))), k,
+      params, roundTo)
   }
+
+  /** The ES `max_expansions` cut: when `maxExpansions > 0` binds, keep
+    * the top terms by (advisory df desc, term asc) — deterministic. */
+  private def capExpansion(matched: Seq[(String, Long)],
+                           maxExpansions: Int): Seq[String] =
+    (if (maxExpansions > 0 && matched.length > maxExpansions)
+      matched.sortBy { case (t, df) => (-df, t) }.take(maxExpansions)
+    else matched).map(_._1)
 
   /**
    * Fuzzy-match top-k from a persisted postings index — [[fuzzyTopK]]
@@ -681,6 +719,41 @@ object Search {
                      params: Bm25Params = Bm25Params(),
                      roundTo: Int = 4,
                      tieBreaker: Double = 0.0): DataFrame = {
+    val terms = multiFieldTerms(fields, mode, tieBreaker, query)
+    // per-field stats in ONE aggregate pass: N once, then (Σdl, df...)
+    // per field — tokens(null text) is null, so sizes/contains coalesce
+    val toks = fields.map { case (f, _) => tokens(col(f)) }
+    val (nDocs, c) = scanCounts(docs, toks.flatMap { tok =>
+      sum(coalesce(size(tok).cast("long"), lit(0L))) +:
+        terms.map(t => sum(when(array_contains(tok, t), 1L).otherwise(0L)))
+    })
+    val fieldScores = toks.zip(fields).zipWithIndex.map { case ((tok, (_, boost)), fi) =>
+      val base = fi * (1 + terms.length)
+      // a DEAD field (empty/null across the whole corpus) has avgdl = 0:
+      // its length norm would divide 0.0/0.0 = NaN and poison the combined
+      // score for EVERY matched doc — skip it driver-side (it can match
+      // nothing anyway), contributing exactly +0.0 like an absent term
+      if (c(base) == 0L) lit(0.0)
+      else {
+        val stats = CorpusStats(nDocs, c(base),
+          terms.zip(c.slice(base + 1, base + 1 + terms.length)).toMap)
+        // null-field rows score +0.0 for this field (tf reads coalesce to 0)
+        val tf0 = coalesce(tok, array().cast("array<string>"))
+        lit(boost) * termScores(terms, stats, params,
+          t => size(filter(tf0, x => x === lit(t))).cast("double"),
+          coalesce(size(tok).cast("double"), lit(0.0)))
+      }
+    }
+    val matched = toks.flatMap(tok =>
+      terms.map(t => when(array_contains(tok, t), 1).otherwise(0))).reduce(_ + _)
+    rankTail(docs.where(matched > 0).select(col(idCol).as("doc_id"),
+      round(combineFieldScores(fieldScores, mode, tieBreaker), roundTo).as("score")), k)
+  }
+
+  /** The multi-field argument laws shared by both forms; the analyzed
+    * query terms. */
+  private def multiFieldTerms(fields: Seq[(String, Double)], mode: String,
+                              tieBreaker: Double, query: String): Seq[String] = {
     require(fields.nonEmpty, "need at least one (field, boost)")
     require(mode == "most_fields" || mode == "best_fields",
       s"unknown multi-field mode '$mode' (most_fields | best_fields)")
@@ -691,48 +764,7 @@ object Search {
         "most_fields already sums every field")
     val terms = queryTerms(query)
     require(terms.nonEmpty, "empty query")
-    // per-field stats in ONE aggregate pass: N once, then (Σdl, df...)
-    // per field — tokens(null text) is null, so sizes/contains coalesce
-    val toks = fields.map { case (f, _) => tokens(col(f)) }
-    val aggCols = toks.flatMap { tok =>
-      sum(coalesce(size(tok).cast("long"), lit(0L))) +:
-        terms.map(t => sum(when(array_contains(tok, t), 1L).otherwise(0L)))
-    }
-    val row = docs.agg(count(lit(1)).as("n"), aggCols: _*).head()
-    val nDocs = row.getLong(0)
-    val statsPerField = fields.indices.map { fi =>
-      val base = 1 + fi * (1 + terms.length)
-      CorpusStats(nDocs, row.getLong(base),
-        terms.zipWithIndex.map { case (t, i) =>
-          t -> row.getLong(base + 1 + i) }.toMap)
-    }
-    val fieldScores = fields.zipWithIndex.map { case ((f, boost), fi) =>
-      // a DEAD field (empty/null across the whole corpus) has avgdl = 0:
-      // its lenNorm would divide 0.0/0.0 = NaN and poison the combined
-      // score for EVERY matched doc — skip it driver-side (it can match
-      // nothing anyway), contributing exactly +0.0 like an absent term
-      if (statsPerField(fi).totalTokens == 0L) lit(0.0)
-      else {
-        val tok = toks(fi)
-        val dl = coalesce(size(tok).cast("double"), lit(0.0))
-        // null-field rows score +0.0 for this field (tf reads coalesce to 0)
-        val tf0 = coalesce(tok, array().cast("array<string>"))
-        lit(boost) * scoreCol(terms, statsPerField(fi), params, tf0, dl)
-      }
-    }
-    val combined = combineFieldScores(fieldScores, mode, tieBreaker)
-    val matched = fields.flatMap { case (f, _) =>
-      terms.map(t => when(array_contains(tokens(col(f)), t), 1).otherwise(0))
-    }.reduce(_ + _)
-    val scored = docs
-      .where(matched > 0)
-      .select(col(idCol).as("doc_id"),
-        round(combined, roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+    terms
   }
 
   /**
@@ -760,50 +792,22 @@ object Search {
                             params: Bm25Params = Bm25Params(),
                             roundTo: Int = 4,
                             tieBreaker: Double = 0.0): DataFrame = {
-    require(fields.nonEmpty, "need at least one (indexDir, boost)")
-    require(mode == "most_fields" || mode == "best_fields",
-      s"unknown multi-field mode '$mode' (most_fields | best_fields)")
-    require(tieBreaker >= 0.0 && tieBreaker <= 1.0,
-      s"tie_breaker must be in [0, 1]: got $tieBreaker")
-    require(tieBreaker == 0.0 || mode == "best_fields",
-      "tie_breaker only applies to best_fields (dis_max); " +
-        "most_fields already sums every field")
-    val terms = queryTerms(query)
-    require(terms.nonEmpty, "empty query")
+    val terms = multiFieldTerms(fields, mode, tieBreaker, query)
     val statsPerField = fields.map { case (dir, _) => readStats(spark, dir) }
     val nDocs = statsPerField.map(_._1).distinct
     require(nDocs.size == 1,
       s"field indexes disagree on corpus size (${nDocs.mkString(", ")}): " +
         "multi-field indexes must be built and maintained over the SAME corpus")
     val perField: Seq[Option[DataFrame]] =
-      fields.zipWithIndex.map { case ((dir, boost), fi) =>
-        val (n, totalTokens, buckets) = statsPerField(fi)
-        // dead field (avgdl = 0): its lenNorm would be 0/0 = NaN — skip,
-        // contributing exactly +0.0 (the multiFieldTopK driver-side guard)
-        if (totalTokens == 0L) None
+      fields.zip(statsPerField).zipWithIndex.map { case (((dir, boost), st), fi) =>
+        // dead field (avgdl = 0): skipped, contributing exactly +0.0 (the
+        // multiFieldTopK driver-side guard)
+        if (st._2 == 0L) None
         else {
-          val pruned = prunedPostings(spark, dir, terms, buckets)
-          val dfRow = pruned.agg(count(lit(1)).as("_n"),
-            terms.zipWithIndex.map { case (t, i) =>
-              sum(when(col("term") === t, 1L).otherwise(0L)).as(s"_df$i") }: _*)
-            .head()
-          val stats = CorpusStats(n, totalTokens,
-            terms.zipWithIndex.map { case (t, i) =>
-              t -> (if (dfRow.isNullAt(i + 1)) 0L
-                    else dfRow.getLong(i + 1)) }.toMap)
-          val grouped = pruned.groupBy("doc_id").agg(
-            first(col("dl")).as("dl"),
-            terms.zipWithIndex.map { case (t, i) =>
-              coalesce(sum(when(col("term") === t, col("tf"))), lit(0.0))
-                .as(s"_tf$i") }: _*)
-          val lenNorm = lit(params.k1) *
-            (lit(1.0 - params.b) + lit(params.b) * col("dl") / lit(stats.avgdl))
-          val score = terms.zipWithIndex.map { case (t, i) =>
-            val tf = col(s"_tf$i")
-            lit(stats.idf(t)) * (tf * lit(params.k1 + 1.0)) / (tf + lenNorm)
-          }.reduce(_ + _)
-          Some(grouped.select(col("doc_id"),
-            (lit(boost) * score).as(s"_s$fi")))
+          val ir = indexRead(spark, dir, terms, terms.map(termDf), indexStats = Some(st))
+          Some(tfPivot(ir.pruned, terms.map(isTerm)).select(col("doc_id"),
+            (lit(boost) * termScores(terms, ir.stats(terms), params,
+              pivotCol("_tf", terms), col("dl"))).as(s"_s$fi")))
         }
       }
     val present = perField.flatten
@@ -815,14 +819,8 @@ object Search {
       if (perField(fi).isEmpty) lit(0.0)
       else coalesce(col(s"_s$fi"), lit(0.0))
     }
-    val combined = combineFieldScores(fieldScores, mode, tieBreaker)
-    val scored = joined
-      .select(col("doc_id"), round(combined, roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+    rankTail(joined.select(col("doc_id"),
+      round(combineFieldScores(fieldScores, mode, tieBreaker), roundTo).as("score")), k)
   }
 
   /** Cosine top-k against ONE literal query vector: map-only scoring +
@@ -834,16 +832,10 @@ object Search {
     val nrm = math.sqrt(queryVec.foldLeft(0.0)((a, x) => a + x * x))
     val qv = if (nrm > 0) queryVec.map(_ / nrm) else queryVec
     val qCol = array(qv.map(lit): _*)
-    val scored = vecs
-      .select(col(idCol).as("doc_id"),
-        round(Similarity.dot(
-          Similarity.unitize(col(vecCol).cast("array<double>")), qCol),
-          roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+    rankTail(vecs.select(col(idCol).as("doc_id"),
+      round(Similarity.dot(
+        Similarity.unitize(col(vecCol).cast("array<double>")), qCol),
+        roundTo).as("score")), k)
   }
 
   /**
@@ -869,13 +861,7 @@ object Search {
       .crossJoin(broadcast(qv))
       .select(col("query_id"), col("doc_id"),
         round(Similarity.dot(col("_rv"), col("_qv")), roundTo).as("score"))
-    scored.groupBy("query_id")
-      .agg(graft.functions.TopKAgg.top_k(
-        struct((-col("score")).as("ns"), col("doc_id")), k).as("_top"))
-      .select(col("query_id"), posexplode(col("_top")))
-      .select(col("query_id"), col("col.doc_id").as("doc_id"),
-        (col("pos") + 1).cast("int").as("rank"),
-        (-col("col.ns")).as("score"))
+    topKPerKey(scored, "query_id", k)
   }
 
   /**
@@ -913,18 +899,9 @@ object Search {
     * rank window. */
   private def rrfFuseBatch(bm: DataFrame, vc: DataFrame, k: Int,
                            rrfK: Int): DataFrame = {
-    val fused = bm.join(vc, Seq("query_id", "doc_id"), "full_outer")
-      .withColumn("rrf_score", rrfScoreCol(rrfK))
-    fused.groupBy("query_id")
-      .agg(graft.functions.TopKAgg.top_k(
-        struct((-col("rrf_score")).as("ns"), col("doc_id"),
-          col("bm25_rank"), col("vec_rank")), k).as("_top"))
-      .select(col("query_id"), posexplode(col("_top")))
-      .select(col("query_id"), col("col.doc_id").as("doc_id"),
-        (col("pos") + 1).cast("int").as("rank"),
-        col("col.bm25_rank").as("bm25_rank"),
-        col("col.vec_rank").as("vec_rank"),
-        (-col("col.ns")).as("rrf_score"))
+    topKPerKey(bm.join(vc, Seq("query_id", "doc_id"), "full_outer")
+      .withColumn("rrf_score", rrfScoreCol(rrfK)), "query_id", k,
+      "rrf_score", Seq("bm25_rank", "vec_rank"))
   }
 
   /**
@@ -1336,6 +1313,97 @@ object Search {
       .cast("int"))
   }
 
+  /** The index prologue's read: exact N / token total, the pruned
+    * post-tombstone postings, and their df aggregate — run lazily, at
+    * most once, so an early empty return skips it. */
+  private final class IndexRead(val nDocs: Long, val totalTokens: Long,
+                                val pruned: DataFrame, dfCols: Seq[Column]) {
+    def avgdl: Double = totalTokens.toDouble / nDocs
+    /** One bounded aggregate over the pruned postings: |dfCols| longs (a
+      * null sum — no posting of the term — reads 0). */
+    lazy val dfs: IndexedSeq[Long] = {
+      val row = pruned.agg(count(lit(1)), dfCols: _*).head()
+      dfCols.indices.map(i => if (row.isNullAt(i + 1)) 0L else row.getLong(i + 1))
+    }
+    def stats(terms: Seq[String]): CorpusStats =
+      CorpusStats(nDocs, totalTokens, terms.zip(dfs).toMap)
+    /** The empty result, typed off the index's own postings schema. */
+    def none: DataFrame = pruned.where(lit(false))
+      .select(col("doc_id"), lit(0).cast("int").as("rank"), lit(0.0).as("score"))
+  }
+
+  /** The index prologue every indexed kind opens with: [[readStats]] (or
+    * the caller's already-read triple) → [[prunedPostings]] of
+    * `readTerms` → when `positionsFor` names a position-reading kind, the
+    * refusal of an index that stores no positions → the exact df
+    * aggregate of `dfCols` ([[termDf]] / [[setDf]] per role). */
+  private def indexRead(spark: org.apache.spark.sql.SparkSession, dir: String,
+                        readTerms: Seq[String], dfCols: Seq[Column],
+                        positionsFor: Option[String] = None,
+                        indexStats: Option[(Long, Long, Int)] = None): IndexRead = {
+    val (nDocs, totalTokens, buckets) = indexStats.getOrElse(readStats(spark, dir))
+    val pruned = prunedPostings(spark, dir, readTerms, buckets)
+    positionsFor.foreach(kind => require(pruned.schema.fieldNames.contains("positions"),
+      s"postings index at $dir stores no positions (built with " +
+        "positional = false, or predating the positional schema): rebuild " +
+        s"with positional postings to serve $kind queries"))
+    new IndexRead(nDocs, totalTokens, pruned, dfCols)
+  }
+
+  /** Exact df of one term: (term, doc) postings are unique, so its row
+    * count IS the df. */
+  private def termDf(t: String): Column = sum(when(col("term") === t, 1L).otherwise(0L))
+
+  /** df of a term SET (an expansion, a span_or clause): distinct docs
+    * holding ≥ 1 of its postings. */
+  private def setDf(ts: Seq[String]): Column =
+    countDistinct(when(inSet(col("term"), ts), col("doc_id")))
+
+  /** Per-doc pivot of the pruned postings: `dl` plus one `_tf<i>` column
+    * per role predicate — the posting's tf, 0.0 when the doc has none, so
+    * an absent term contributes exactly +0.0 like the scan's
+    * size(filter) = 0. Columns are named by POSITION, never by term text:
+    * a term containing '.' (node.js, a URL) in a column name would parse
+    * as nested-field access downstream. */
+  private def tfPivot(pruned: DataFrame, roles: Seq[Column],
+                      extra: Seq[Column] = Nil): DataFrame =
+    pruned.groupBy("doc_id").agg(first(col("dl")).as("dl"),
+      roles.zipWithIndex.map { case (r, i) =>
+        coalesce(sum(when(r, col("tf"))), lit(0.0)).as(s"_tf$i") } ++ extra: _*)
+
+  /** Per-doc pivot of the stored positions: `dl` plus one `_ps<i>` set per
+    * role predicate (empty when absent; collect_list skips the
+    * non-matching nulls and flatten unwraps the per-posting arrays). */
+  private def positionPivot(pruned: DataFrame, roles: Seq[Column]): DataFrame =
+    pruned.groupBy("doc_id").agg(first(col("dl")).as("dl"),
+      roles.zipWithIndex.map { case (r, i) =>
+        flatten(collect_list(when(r, col("positions")))).as(s"_ps$i") }: _*)
+
+  /** `term = t`, the role predicate of an exact term. */
+  private def isTerm(t: String): Column = col("term") === t
+
+  /** A pivot column by its term's position in `terms`. */
+  private def pivotCol(prefix: String, terms: Seq[String]): String => Column = {
+    val idx = terms.zipWithIndex.toMap
+    t => col(s"$prefix${idx(t)}")
+  }
+
+  /** The BM25 tail of the tf-pivot kinds: [[tfPivot]] over one role per
+    * term, the [[termScores]] sum in sorted term order (the scan
+    * projection verbatim), an optional minimum of present terms — a
+    * Filter in the plan only when given — cursor and rank tail. */
+  private def pivotTopK(ir: IndexRead, terms: Seq[String], roles: Seq[Column],
+                        k: Int, params: Bm25Params, roundTo: Int,
+                        minShouldMatch: Option[Int] = None,
+                        searchAfter: Option[(Double, Any)] = None): DataFrame = {
+    val grouped = tfPivot(ir.pruned, roles)
+    val present = terms.indices.map(i => when(col(s"_tf$i") > 0.0, 1).otherwise(0))
+    rankTail(minShouldMatch.fold(grouped)(m => grouped.where(present.reduce(_ + _) >= m))
+      .select(col("doc_id"), round(termScores(terms, ir.stats(terms), params,
+        pivotCol("_tf", terms), col("dl")), roundTo).as("score"))
+      .transform(afterFilter(searchAfter)), k)
+  }
+
   /**
    * BM25 top-k from a persisted postings index — bit-identical output to
    * [[bm25TopK]] over the source corpus (same rounding, same tie-break,
@@ -1356,62 +1424,26 @@ object Search {
                       params: Bm25Params = Bm25Params(),
                       roundTo: Int = 4, minShouldMatch: Int = 1,
                       searchAfter: Option[(Double, Any)] = None): DataFrame =
-    indexedBm25TopKWith(spark, dir, readStats(spark, dir), query, k, params,
-      roundTo, minShouldMatch, searchAfter)
+    indexedBm25TopKWith(spark, dir, readStats(spark, dir), queryTerms(query), k,
+      params, roundTo, minShouldMatch, searchAfter)
 
-  /** [[indexedBm25TopK]] over an already-read [[readStats]] triple (a
-    * caller that needed the stats itself reads them once per query). */
+  /** [[indexedBm25TopK]] over already-analyzed terms and an already-read
+    * [[readStats]] triple (a caller that needed the stats itself reads
+    * them once per query). `minShouldMatch` counts the DISTINCT present
+    * terms from the pivot columns (grouped rows exist only for docs with
+    * >= 1 term, so the default 1 is a no-op filter). */
   private def indexedBm25TopKWith(spark: org.apache.spark.sql.SparkSession,
                                   dir: String, indexStats: (Long, Long, Int),
-                                  query: String, k: Int, params: Bm25Params,
+                                  terms: Seq[String], k: Int, params: Bm25Params,
                                   roundTo: Int, minShouldMatch: Int,
                                   searchAfter: Option[(Double, Any)])
       : DataFrame = {
     require(minShouldMatch >= 1, "minShouldMatch must be >= 1")
-    val terms = queryTerms(query)
     require(terms.nonEmpty, "empty query")
-    val (nDocs, totalTokens, buckets) = indexStats
-    val avgdl = totalTokens.toDouble / nDocs
-    val pruned = prunedPostings(spark, dir, terms, buckets)
-    // exact per-term df in ONE bounded aggregate (|terms| longs)
-    val dfRow = pruned.agg(
-      count(lit(1)).as("_n"), // force a non-empty agg list even for 1 term
-      terms.map(t => sum(when(col("term") === t, 1L).otherwise(0L))
-        .as(s"df_$t")): _*).head()
-    val stats = CorpusStats(nDocs, totalTokens,
-      terms.zipWithIndex.map { case (t, i) =>
-        t -> (if (dfRow.isNullAt(i + 1)) 0L else dfRow.getLong(i + 1)) }.toMap)
-    // pivot: each (doc, term) posting is one row, so sum(when) just
-    // selects it; a doc missing a term gets tf=0.0 — contributing exactly
-    // +0.0, like the scan path's size(filter)=0. Pivot columns are named
-    // by the term's POSITION in the sorted term list, never by the term
-    // text itself: a term containing '.' (node.js, a URL) embedded in a
-    // column name would parse as nested-field access downstream.
-    val grouped = pruned.groupBy("doc_id").agg(
-      first(col("dl")).as("dl"),
-      terms.zipWithIndex.map { case (t, i) =>
-        coalesce(sum(when(col("term") === t, col("tf"))), lit(0.0))
-          .as(s"_tf$i") }: _*)
-    val lenNorm = lit(params.k1) *
-      (lit(1.0 - params.b) + lit(params.b) * col("dl") / lit(avgdl))
-    val score = terms.zipWithIndex.map { case (t, i) =>
-      val tf = col(s"_tf$i")
-      lit(stats.idf(t)) * (tf * lit(params.k1 + 1.0)) / (tf + lenNorm)
-    }.reduce(_ + _)
-    // minimum_should_match on the index path: count the DISTINCT present
-    // terms from the same pivot columns (grouped rows exist only for
-    // docs with >= 1 term, so the default 1 is a no-op filter)
-    val matchedTerms = terms.indices
-      .map(i => when(col(s"_tf$i") > 0.0, 1).otherwise(0)).reduce(_ + _)
-    val scored = grouped
-      .where(matchedTerms >= minShouldMatch)
-      .select(col("doc_id"), round(score, roundTo).as("score"))
-      .transform(afterFilter(searchAfter))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+    val ir = indexRead(spark, dir, terms, terms.map(termDf),
+      indexStats = Some(indexStats))
+    pivotTopK(ir, terms, terms.map(isTerm), k, params, roundTo,
+      Some(minShouldMatch), searchAfter)
   }
 
   /**
@@ -1424,55 +1456,24 @@ object Search {
    * pays ONE pruned read per batch instead of per query, with no rank
    * window anywhere (a stopword term cannot create a corpus-sized
    * single-task sort). Per query the output is BIT-IDENTICAL to
-   * [[indexedBm25TopK]] — and hence to the corpus scan — because the
-   * contribution uses the scan path's association verbatim
-   * (idf · (tf · (k1+1)) / (tf + lenNorm)) and the per-(query, doc) sum
-   * folds in sorted TERM order (an absent term adds exactly +0.0 in the
-   * pivot path, which IEEE addition cannot distinguish from being
-   * skipped).
+   * [[indexedBm25TopK]] — and hence to the corpus scan — through the
+   * shared [[batchTopK]] tail. The df here is a grouped count, not the
+   * single-query [[termDf]] columns: a batch's term union grows with the
+   * query count, and one conditional sum per term per posting row would
+   * grow with it.
    */
   def indexedBm25TopKBatch(spark: org.apache.spark.sql.SparkSession,
                            dir: String, queries: DataFrame, k: Int,
                            params: Bm25Params = Bm25Params(),
                            roundTo: Int = 4): DataFrame = {
     val (nDocs, totalTokens, buckets) = readStats(spark, dir)
-    val avgdl = totalTokens.toDouble / nDocs
-    // union of the batch's terms: bounded by definition (queries are tiny)
-    val allTerms = queries
-      .select(explode(array_distinct(tokens(col("query_text")))).as("term"))
-      .distinct().collect().map(_.getString(0)).sorted.toSeq
+    val allTerms = batchTerms(queries)
     require(allTerms.nonEmpty, "batch has no query terms")
     val pruned = prunedPostings(spark, dir, allTerms, buckets)
-    // exact per-term df in ONE bounded aggregate ((term, doc) postings are
-    // unique, so the row count IS the df) — |terms| longs to the driver
     val dfMap = pruned.groupBy("term").agg(count(lit(1)).as("df"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val stats = CorpusStats(nDocs, totalTokens,
-      allTerms.map(t => t -> dfMap.getOrElse(t, 0L)).toMap)
-    val qTerms = queries.select(col("query_id"),
-      explode(array_distinct(tokens(col("query_text")))).as("term"))
-    val idfByTerm = typedLit(allTerms.map(t => t -> stats.idf(t)).toMap)
-    val contrib = pruned
-      .join(broadcast(qTerms), Seq("term"))
-      .withColumn("idf", element_at(idfByTerm, col("term")))
-      .withColumn("contrib",
-        col("idf") * (col("tf") * lit(params.k1 + 1.0)) /
-          (col("tf") + lit(params.k1) *
-            (lit(1.0 - params.b) + lit(params.b) * col("dl") / lit(avgdl))))
-    // fixed-order sum: fold contributions in TERM order (the module law)
-    val scored = contrib.groupBy("query_id", "doc_id")
-      .agg(sort_array(collect_list(struct(col("term"), col("contrib"))))
-        .as("_c"))
-      .withColumn("score", round(
-        expr("aggregate(_c, 0D, (a, x) -> a + x.contrib)"), roundTo))
-      .drop("_c")
-    scored.groupBy("query_id")
-      .agg(graft.functions.TopKAgg.top_k(
-        struct((-col("score")).as("ns"), col("doc_id")), k).as("_top"))
-      .select(col("query_id"), posexplode(col("_top")))
-      .select(col("query_id"), col("col.doc_id").as("doc_id"),
-        (col("pos") + 1).cast("int").as("rank"),
-        (-col("col.ns")).as("score"))
+    batchTopK(pruned, queries, allTerms, CorpusStats(nDocs, totalTokens,
+      allTerms.map(t => t -> dfMap.getOrElse(t, 0L)).toMap), k, params, roundTo)
   }
 
   // ------------------------------------------------------------------
@@ -1725,15 +1726,35 @@ object Search {
     size(starts).cast("double")
   }
 
-  /** The phrase score law, shared scan/index side: BM25 with the PHRASE
-    * frequency as tf and the sum of the member terms' idfs (each
-    * occurrence in the phrase counted — the Lucene PhraseWeight
-    * convention) as the combined idf. `idfSum` folds driver-side in
-    * PHRASE order on both paths, so the float arithmetic cannot diverge. */
-  private def phraseScore(idfSum: Double, ptf: Column, dl: Column,
-                          avgdl: Double, p: Bm25Params): Column = {
-    val lenNorm = lit(p.k1) * (lit(1.0 - p.b) + lit(p.b) * dl / lit(avgdl))
-    lit(idfSum) * (ptf * lit(p.k1 + 1.0)) / (ptf + lenNorm)
+  /** The phrase-shaped rank tail, shared by every phrase, span and
+    * phrase-prefix kind in both forms: over `(doc_id, _ptf, dl)` rows —
+    * `_ptf` the kind's occurrence count — keep `_ptf > 0` and score BM25
+    * with `_ptf` as tf and `idfSum` as idf ([[bm25Term]]), then
+    * [[rankTail]]. */
+  private def phraseRank(freqs: DataFrame, idfSum: Double, avgdl: Double,
+                         k: Int, p: Bm25Params, roundTo: Int): DataFrame =
+    rankTail(freqs.where(col("_ptf") > 0).select(col("doc_id"),
+      round(bm25Term(lit(idfSum), col("_ptf"), col("dl"), avgdl, p), roundTo)
+        .as("score")), k)
+
+  /** The scan form's `(doc_id, _ptf, dl)` rows for [[phraseRank]]. */
+  private def scanFreqs(docs: DataFrame, idCol: String, tok: Column,
+                        ptf: Column): DataFrame =
+    docs.select(col(idCol).as("doc_id"), ptf.as("_ptf"),
+      size(tok).cast("double").as("dl"))
+
+  /** Σ idf over `terms` in GIVEN order, folded driver-side — the combined
+    * idf of a phrase (each occurrence counted, the Lucene PhraseWeight
+    * convention) or of a span chain; the same fold on both forms. */
+  private def idfSum(stats: CorpusStats, terms: Seq[String]): Double =
+    terms.foldLeft(0.0)((a, t) => a + stats.idf(t))
+
+  /** Validated phrase arguments: the phrase tokens in order. */
+  private def phraseArgs(phrase: String, slop: Int): Seq[String] = {
+    require(slop >= 0, "slop must be non-negative")
+    val pTerms = phraseTokens(phrase)
+    require(pTerms.nonEmpty, "empty phrase")
+    pTerms
   }
 
   /**
@@ -1741,7 +1762,7 @@ object Search {
    * analog): only documents containing the EXACT adjacent in-order token
    * sequence qualify; score = BM25 with the phrase occurrence count as
    * tf and Σ idf(term) over the phrase's terms as idf (see
-   * [[phraseScore]]). Same shape as [[bm25TopK]]: map-only scan (the
+   * [[phraseRank]]). Same shape as [[bm25TopK]]: map-only scan (the
    * occurrence count is a HOF projection over the shared tokenization
    * law), distributed TakeOrdered, rank window over ≤ k rows. Ties break
    * to the smaller id; scores round to `roundTo` decimals. `slop > 0`
@@ -1751,26 +1772,11 @@ object Search {
   def phraseTopK(docs: DataFrame, idCol: String, textCol: String,
                  phrase: String, k: Int, params: Bm25Params = Bm25Params(),
                  roundTo: Int = 4, slop: Int = 0): DataFrame = {
-    require(slop >= 0, "slop must be non-negative")
-    val pTerms = phraseTokens(phrase)
-    require(pTerms.nonEmpty, "empty phrase")
-    val distinctTerms = pTerms.distinct.sorted
-    val stats = corpusStats(docs, textCol, distinctTerms)
-    val idfSum = pTerms.foldLeft(0.0)((a, t) => a + stats.idf(t))
+    val pTerms = phraseArgs(phrase, slop)
+    val stats = corpusStats(docs, textCol, pTerms.distinct.sorted)
     val tok = tokens(col(textCol))
-    val ptf = phraseFreq(tok, pTerms, slop)
-    val scored = docs
-      .select(col(idCol).as("doc_id"), ptf.as("_ptf"),
-        size(tok).cast("double").as("_dl"))
-      .where(col("_ptf") > 0)
-      .select(col("doc_id"), round(
-        phraseScore(idfSum, col("_ptf"), col("_dl"), stats.avgdl, params),
-        roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+    phraseRank(scanFreqs(docs, idCol, tok, phraseFreq(tok, pTerms, slop)),
+      idfSum(stats, pTerms), stats.avgdl, k, params, roundTo)
   }
 
   /**
@@ -1789,35 +1795,12 @@ object Search {
                         phrase: String, k: Int,
                         params: Bm25Params = Bm25Params(),
                         roundTo: Int = 4, slop: Int = 0): DataFrame = {
-    require(slop >= 0, "slop must be non-negative")
-    val pTerms = phraseTokens(phrase)
-    require(pTerms.nonEmpty, "empty phrase")
+    val pTerms = phraseArgs(phrase, slop)
     val distinctTerms = pTerms.distinct.sorted
-    val (nDocs, totalTokens, buckets) = readStats(spark, dir)
-    val avgdl = totalTokens.toDouble / nDocs
-    val pruned = prunedPostings(spark, dir, distinctTerms, buckets)
-    require(pruned.schema.fieldNames.contains("positions"),
-      s"postings index at $dir stores no positions (built with " +
-        "positional = false, or predating the positional schema): rebuild " +
-        "with positional postings to serve phrase queries")
-    // exact per-term df in ONE bounded aggregate (the indexedBm25TopK law)
-    val dfRow = pruned.agg(
-      count(lit(1)).as("_n"),
-      distinctTerms.map(t => sum(when(col("term") === t, 1L).otherwise(0L)))
-        .zipWithIndex.map { case (c, i) => c.as(s"_df$i") }: _*).head()
-    val stats = CorpusStats(nDocs, totalTokens,
-      distinctTerms.zipWithIndex.map { case (t, i) =>
-        t -> (if (dfRow.isNullAt(i + 1)) 0L else dfRow.getLong(i + 1)) }.toMap)
-    val idfSum = pTerms.foldLeft(0.0)((a, t) => a + stats.idf(t))
-    // pivot each term's position set into a positional column (missing
-    // term -> empty set; collect_list skips the non-matching nulls and
-    // each (doc, term) posting is unique, so flatten unwraps 0-or-1 arrays)
-    val idxOf = distinctTerms.zipWithIndex.toMap
-    val grouped = pruned.groupBy("doc_id").agg(
-      first(col("dl")).as("dl"),
-      distinctTerms.zipWithIndex.map { case (t, i) =>
-        flatten(collect_list(when(col("term") === t, col("positions"))))
-          .as(s"_ps$i") }: _*)
+    val ir = indexRead(spark, dir, distinctTerms, distinctTerms.map(termDf),
+      positionsFor = Some("phrase"))
+    val grouped = positionPivot(ir.pruned, distinctTerms.map(isTerm))
+    val ps = pivotCol("_ps", distinctTerms)
     // slop 0: adjacency is the shifted-position-set intersection (bases
     // land in [0, dl−m] by construction). slop > 0: the [[phraseFreq]]
     // position-window law over the SAME base domain — every candidate
@@ -1827,29 +1810,19 @@ object Search {
     val starts =
       if (slop == 0)
         pTerms.zipWithIndex.map { case (t, j) =>
-          transform(col(s"_ps${idxOf(t)}"), p => p - lit(j))
+          transform(ps(t), p => p - lit(j))
         }.reduce((a, b) => array_intersect(a, b))
       else {
         val m = pTerms.length
         when(col("dl") >= lit(m.toDouble),
           filter(sequence(lit(0), col("dl").cast("int") - lit(m)), b =>
             pTerms.zipWithIndex.map { case (t, j) =>
-              exists(col(s"_ps${idxOf(t)}"),
-                p => abs(p - (b + lit(j))) <= lit(slop))
+              exists(ps(t), p => abs(p - (b + lit(j))) <= lit(slop))
             }.reduce(_ && _)))
           .otherwise(array().cast("array<int>"))
       }
-    val scored = grouped
-      .withColumn("_ptf", size(starts).cast("double"))
-      .where(col("_ptf") > 0)
-      .select(col("doc_id"), round(
-        phraseScore(idfSum, col("_ptf"), col("dl"), avgdl, params),
-        roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+    phraseRank(grouped.withColumn("_ptf", size(starts).cast("double")),
+      idfSum(ir.stats(distinctTerms), pTerms), ir.avgdl, k, params, roundTo)
   }
 
   // ------------------------------------------------------------------
@@ -1923,16 +1896,12 @@ object Search {
         else col(lonCol) >= qLon - lonPad && col(lonCol) <= qLon + lonPad)
     val d = haversineKm(lit(qLat), lit(qLon),
       col(latCol).cast("double"), col(lonCol).cast("double"))
-    val scored = boxed
+    rankTail(boxed
       .select(col(idCol).as("doc_id"), d.as("_d"))
       .where(col("_d") <= lit(radiusKm)) // exact filter; rounding is display
-      .select(col("doc_id"), round(col("_d"), roundTo).as("distance_km"))
-      .orderBy(col("distance_km").asc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("distance_km").asc,
-        col("doc_id").asc)))
-      .select("doc_id", "rank", "distance_km")
+      .select(col("doc_id"), round(col("_d"), roundTo).as("distance_km")), k,
+      Seq(col("distance_km").asc, col("doc_id").asc),
+      Seq("doc_id", "rank", "distance_km"))
   }
 
   /**
@@ -2151,34 +2120,23 @@ object Search {
     require(Set("max", "sum", "avg", "none")(scoreMode),
       s"score_mode must be max|sum|avg|none: got '$scoreMode'")
     require(minChildren >= 1, "minChildren must be >= 1")
-    val terms = queryTerms(query)
-    require(terms.nonEmpty, "empty query")
-    val stats = corpusStats(children, textCol, terms)
-    val tok = tokens(col(textCol))
-    val dl = size(tok).cast("double")
-    val matched = terms.map(t => when(array_contains(tok, t), 1).otherwise(0))
-      .reduce(_ + _)
+    val s = scanScore(children, textCol, queryTerms(query), params)
     val child = children
-      .where(matched >= 1)
-      .select(col(parentCol).as("parent_id"),
-        scoreCol(terms, stats, params, tok, dl).as("_cs"))
+      .where(s.matched >= 1)
+      .select(col(parentCol).as("parent_id"), s.score.as("_cs"))
     val agg = scoreMode match {
       case "max" => max(col("_cs"))
       case "sum" => sum(col("_cs"))
       case "avg" => avg(col("_cs"))
       case "none" => lit(0.0)
     }
-    val scored = child.groupBy("parent_id")
+    rankTail(child.groupBy("parent_id")
       .agg(round(agg, roundTo).as("score"),
         count(lit(1)).as("_nc"))
       .where(col("_nc") >= minChildren)
-      .select(col("parent_id"), col("score"))
-      .orderBy(col("score").desc, col("parent_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc,
-        col("parent_id").asc)))
-      .select("parent_id", "rank", "score")
+      .select(col("parent_id"), col("score")), k,
+      Seq(col("score").desc, col("parent_id").asc),
+      Seq("parent_id", "rank", "score"))
   }
 
   /**
@@ -2195,35 +2153,28 @@ object Search {
                    query: String, params: Bm25Params = Bm25Params(),
                    roundTo: Int = 4): DataFrame = {
     val terms = queryTerms(query)
-    require(terms.nonEmpty, "empty query")
-    val stats = corpusStats(docs, textCol, terms)
-    val tok = tokens(col(textCol))
-    val dl = size(tok).cast("double")
-    val lenNorm = lit(params.k1) *
-      (lit(1.0 - params.b) + lit(params.b) * dl / lit(stats.avgdl))
-    val matched = terms.map(t => when(array_contains(tok, t), 1).otherwise(0))
-      .reduce(_ + _)
-    // ONE corpus scan: per-term (term, tf, df, idf) structs explode in
-    // place — df/idf are driver-folded constants inside the struct, so
-    // the row-to-m-rows expansion costs a projection, not m re-scans
+    val s = scanScore(docs, textCol, terms, params)
+    // ONE corpus scan: per-term (term, tf, df, idf, contribution)
+    // structs explode in place — df/idf are driver-folded constants inside
+    // the struct, so the row-to-m-rows expansion costs a projection, not
+    // m re-scans
     val termStructs = terms.map { t =>
-      struct(lit(t).as("term"),
-        size(filter(tok, x => x === lit(t))).cast("double").as("tf"),
-        lit(stats.df.getOrElse(t, 0L)).as("df"),
-        lit(stats.idf(t)).as("idf"))
+      struct(lit(t).as("term"), s.tf(t).as("tf"),
+        lit(s.stats.df.getOrElse(t, 0L)).as("df"),
+        lit(s.stats.idf(t)).as("idf"),
+        bm25Term(lit(s.stats.idf(t)), s.tf(t), s.dl, s.stats.avgdl, params).as("c"))
     }
     docs
-      .where(matched >= 1)
-      .select(col(idCol).as("doc_id"), dl.as("_dl"), lenNorm.as("_ln"),
-        round(scoreCol(terms, stats, params, tok, dl), roundTo).as("score"),
+      .where(s.matched >= 1)
+      .select(col(idCol).as("doc_id"), s.dl.as("_dl"),
+        round(s.score, roundTo).as("score"),
         explode(array(termStructs: _*)).as("_e"))
       .where(col("_e.tf") > 0)
       .select(col("doc_id"), col("_e.term").as("term"),
         col("_e.tf").cast("long").as("tf"), col("_e.df").as("df"),
         round(col("_e.idf"), 6).as("idf"),
         col("_dl").cast("long").as("dl"),
-        round(col("_e.idf") * (col("_e.tf") * lit(params.k1 + 1.0)) /
-          (col("_e.tf") + col("_ln")), 6).as("contribution"),
+        round(col("_e.c"), 6).as("contribution"),
         col("score"))
       .orderBy("doc_id", "term")
   }
@@ -2244,15 +2195,11 @@ object Search {
                  minMatched: Int = 1): DataFrame = {
     require(minMatched >= 1, "minMatched must be >= 1")
     val n = size(filter(col(itemsCol), e => pred(e)))
-    val scored = docs
+    rankTail(docs
       .select(col(idCol).as("doc_id"), n.as("n_matched"))
-      .where(col("n_matched") >= minMatched)
-      .orderBy(col("n_matched").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("n_matched").desc,
-        col("doc_id").asc)))
-      .select("doc_id", "rank", "n_matched")
+      .where(col("n_matched") >= minMatched), k,
+      Seq(col("n_matched").desc, col("doc_id").asc),
+      Seq("doc_id", "rank", "n_matched"))
   }
 
   // ------------------------------------------------------------------
@@ -2280,6 +2227,28 @@ object Search {
     })).cast("double")
   }
 
+  /** Validated single-term span clauses, in clause order. */
+  private def spanTerms(clauses: Seq[String], slop: Int): Seq[String] = {
+    require(clauses.nonEmpty, "span_near needs >= 1 clause")
+    require(slop >= 0, "slop must be non-negative")
+    clauses.map { c =>
+      val t = queryTerms(c)
+      require(t.length == 1, s"span clauses are single terms: got '$c'")
+      t.head
+    }
+  }
+
+  /** Per-term 0-based position array over the shared tokenization law —
+    * the span scan paths' pivot. Empty-token guard (the phraseFreq
+    * convention): sequence(0, -1) on a zero-token doc yields the
+    * DESCENDING [0, -1] and element_at(tok, 0) throws unconditionally —
+    * such docs have no positions at all. */
+  private def scanPositions(tok: Column, t: String): Column =
+    when(size(tok) >= 1,
+      filter(sequence(lit(0), size(tok) - 1),
+        i => element_at(tok, i + 1) === lit(t)))
+      .otherwise(array().cast("array<int>"))
+
   /**
    * span_near top-k (the ES `span_near` query with `in_order: true` and
    * single-term clauses): a document matches when its tokens contain the
@@ -2295,84 +2264,30 @@ object Search {
                    clauses: Seq[String], slop: Int, k: Int,
                    params: Bm25Params = Bm25Params(),
                    roundTo: Int = 4): DataFrame = {
-    require(clauses.nonEmpty, "span_near needs >= 1 clause")
-    require(slop >= 0, "slop must be non-negative")
-    val terms = clauses.map(c => { val t = queryTerms(c)
-      require(t.length == 1, s"span clauses are single terms: got '$c'"); t.head })
-    val distinctTerms = terms.distinct.sorted
-    val stats = corpusStats(docs, textCol, distinctTerms)
-    val idfSum = terms.foldLeft(0.0)((a, t) => a + stats.idf(t))
+    val terms = spanTerms(clauses, slop)
+    val stats = corpusStats(docs, textCol, terms.distinct.sorted)
     val tok = tokens(col(textCol))
-    // empty-token guard (the phraseFreq convention): sequence(0, -1) on a
-    // zero-token doc yields the DESCENDING [0, -1] and element_at(tok, 0)
-    // throws unconditionally — such docs have no positions at all
-    val posOf = distinctTerms.map(t => t ->
-      when(size(tok) >= 1,
-        filter(sequence(lit(0), size(tok) - 1),
-          i => element_at(tok, i + 1) === lit(t)))
-        .otherwise(array().cast("array<int>"))).toMap
-    val tf = spanNearTf(terms.map(posOf), slop)
-    val scored = docs
-      .select(col(idCol).as("doc_id"), tf.as("_stf"),
-        size(tok).cast("double").as("_dl"))
-      .where(col("_stf") > 0)
-      .select(col("doc_id"), round(
-        phraseScore(idfSum, col("_stf"), col("_dl"), stats.avgdl, params),
-        roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+    phraseRank(scanFreqs(docs, idCol, tok,
+        spanNearTf(terms.map(scanPositions(tok, _)), slop)),
+      idfSum(stats, terms), stats.avgdl, k, params, roundTo)
   }
 
   /** [[spanNearTopK]] from a persisted POSITIONAL postings index —
     * bit-identical output at Σ df posting rows of read: per-term position
     * sets pivot from the stored arrays (the [[indexedPhraseTopK]] shape),
-    * the chain law is [[spanNearTf] verbatim, df/idf from the same exact
+    * the chain law is [[spanNearTf]] verbatim, df/idf from the same exact
     * bounded aggregate. */
   def indexedSpanNearTopK(spark: org.apache.spark.sql.SparkSession,
                           dir: String, clauses: Seq[String], slop: Int,
                           k: Int, params: Bm25Params = Bm25Params(),
                           roundTo: Int = 4): DataFrame = {
-    require(clauses.nonEmpty, "span_near needs >= 1 clause")
-    require(slop >= 0, "slop must be non-negative")
-    val terms = clauses.map(c => { val t = queryTerms(c)
-      require(t.length == 1, s"span clauses are single terms: got '$c'"); t.head })
+    val terms = spanTerms(clauses, slop)
     val distinctTerms = terms.distinct.sorted
-    val (nDocs, totalTokens, buckets) = readStats(spark, dir)
-    val avgdl = totalTokens.toDouble / nDocs
-    val pruned = prunedPostings(spark, dir, distinctTerms, buckets)
-    require(pruned.schema.fieldNames.contains("positions"),
-      s"postings index at $dir stores no positions (built with " +
-        "positional = false, or predating the positional schema): rebuild " +
-        "with positional postings to serve span queries")
-    val dfRow = pruned.agg(
-      count(lit(1)).as("_n"),
-      distinctTerms.map(t => sum(when(col("term") === t, 1L).otherwise(0L)))
-        .zipWithIndex.map { case (c, i) => c.as(s"_df$i") }: _*).head()
-    val stats = CorpusStats(nDocs, totalTokens,
-      distinctTerms.zipWithIndex.map { case (t, i) =>
-        t -> (if (dfRow.isNullAt(i + 1)) 0L else dfRow.getLong(i + 1)) }.toMap)
-    val idfSum = terms.foldLeft(0.0)((a, t) => a + stats.idf(t))
-    val idxOf = distinctTerms.zipWithIndex.toMap
-    val grouped = pruned.groupBy("doc_id").agg(
-      first(col("dl")).as("dl"),
-      distinctTerms.zipWithIndex.map { case (t, i) =>
-        flatten(collect_list(when(col("term") === t, col("positions"))))
-          .as(s"_ps$i") }: _*)
-    val tf = spanNearTf(terms.map(t => col(s"_ps${idxOf(t)}")), slop)
-    val scored = grouped
-      .withColumn("_stf", tf)
-      .where(col("_stf") > 0)
-      .select(col("doc_id"), round(
-        phraseScore(idfSum, col("_stf"), col("dl"), avgdl, params),
-        roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+    val ir = indexRead(spark, dir, distinctTerms, distinctTerms.map(termDf),
+      positionsFor = Some("span"))
+    phraseRank(positionPivot(ir.pruned, distinctTerms.map(isTerm)).withColumn("_ptf",
+        spanNearTf(terms.map(pivotCol("_ps", distinctTerms)), slop)),
+      idfSum(ir.stats(distinctTerms), terms), ir.avgdl, k, params, roundTo)
   }
 
   /**
@@ -2386,27 +2301,22 @@ object Search {
                     term: String, end: Int, k: Int,
                     params: Bm25Params = Bm25Params(),
                     roundTo: Int = 4): DataFrame = {
-    require(end >= 1, "end must be >= 1")
-    val ts = queryTerms(term)
-    require(ts.length == 1, s"span_first matches a single term: got '$term'")
-    val t = ts.head
+    val t = spanFirstTerm(term, end)
     val stats = corpusStats(docs, textCol, Seq(t))
     val tok = tokens(col(textCol))
     // positions are 0-based, so "span ends within the first `end`
     // positions" = occurrence index < end
-    val tf = size(filter(slice(tok, 1, end), x => x === lit(t))).cast("double")
-    val scored = docs
-      .select(col(idCol).as("doc_id"), tf.as("_stf"),
-        size(tok).cast("double").as("_dl"))
-      .where(col("_stf") > 0)
-      .select(col("doc_id"), round(
-        phraseScore(stats.idf(t), col("_stf"), col("_dl"), stats.avgdl, params),
-        roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+    phraseRank(scanFreqs(docs, idCol, tok,
+        size(filter(slice(tok, 1, end), x => x === lit(t))).cast("double")),
+      stats.idf(t), stats.avgdl, k, params, roundTo)
+  }
+
+  /** Validated span_first arguments: the one analyzed term. */
+  private def spanFirstTerm(term: String, end: Int): String = {
+    require(end >= 1, "end must be >= 1")
+    val ts = queryTerms(term)
+    require(ts.length == 1, s"span_first matches a single term: got '$term'")
+    ts.head
   }
 
   /** [[spanFirstTopK]] from a persisted POSITIONAL postings index:
@@ -2416,32 +2326,11 @@ object Search {
                            dir: String, term: String, end: Int, k: Int,
                            params: Bm25Params = Bm25Params(),
                            roundTo: Int = 4): DataFrame = {
-    require(end >= 1, "end must be >= 1")
-    val ts = queryTerms(term)
-    require(ts.length == 1, s"span_first matches a single term: got '$term'")
-    val t = ts.head
-    val (nDocs, totalTokens, buckets) = readStats(spark, dir)
-    val avgdl = totalTokens.toDouble / nDocs
-    val pruned = prunedPostings(spark, dir, Seq(t), buckets)
-    require(pruned.schema.fieldNames.contains("positions"),
-      s"postings index at $dir stores no positions (built with " +
-        "positional = false, or predating the positional schema): rebuild " +
-        "with positional postings to serve span queries")
-    val dfCnt = pruned.agg(count(lit(1))).head().getLong(0)
-    val stats = CorpusStats(nDocs, totalTokens, Map(t -> dfCnt))
-    val scored = pruned
-      .select(col("doc_id"), col("dl"),
-        size(filter(col("positions"), p => p < lit(end))).cast("double")
-          .as("_stf"))
-      .where(col("_stf") > 0)
-      .select(col("doc_id"), round(
-        phraseScore(stats.idf(t), col("_stf"), col("dl"), avgdl, params),
-        roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+    val t = spanFirstTerm(term, end)
+    val ir = indexRead(spark, dir, Seq(t), Seq(termDf(t)), positionsFor = Some("span"))
+    phraseRank(ir.pruned.select(col("doc_id"), col("dl"),
+        size(filter(col("positions"), p => p < lit(end))).cast("double").as("_ptf")),
+      ir.stats(Seq(t)).idf(t), ir.avgdl, k, params, roundTo)
   }
 
   // ------------------------------------------------------------------
@@ -2454,28 +2343,28 @@ object Search {
 
   /** Parse span_or clauses: each inner Seq is one clause's alternative
     * single terms (a 1-element Seq = a plain span_term clause). */
-  private def parseOrClauses(clauses: Seq[Seq[String]]): Seq[Seq[String]] =
+  private def parseOrClauses(clauses: Seq[Seq[String]], slop: Int): Seq[Seq[String]] = {
+    require(clauses.nonEmpty, "span_near needs >= 1 clause")
+    require(slop >= 0, "slop must be non-negative")
     clauses.map { c =>
       val ts = c.flatMap(queryTerms).distinct.sorted
       require(ts.nonEmpty, "a span_or clause needs >= 1 term")
       ts
     }
+  }
 
-  /** Per-term 0-based position array over the shared tokenization law —
-    * the span scan paths' pivot (empty-token guard per phraseFreq). */
-  private def scanPositions(tok: Column, t: String): Column =
-    when(size(tok) >= 1,
-      filter(sequence(lit(0), size(tok) - 1),
-        i => element_at(tok, i + 1) === lit(t)))
-      .otherwise(array().cast("array<int>"))
+  /** The span_or clause idf fold: left-assoc Σ over clauses in query
+    * order of each clause's UNION-df idf. */
+  private def clauseIdfSum(nDocs: Long, clauseDfs: Seq[Long]): Double =
+    clauseDfs.foldLeft(0.0)((a, df) => a + idfOf(nDocs, df))
 
   /**
    * span_near over span_or clauses (the ES `span_near` whose clauses may
    * be `span_or`s of single terms; `in_order: true`): clause j's position
    * set is the UNION of its alternatives' positions, and the greedy
    * chain law ([[spanNearTf]]) runs over the union sets — 1-term clauses
-   * recover [[spanNearTopK]] exactly. A SINGLE multi-term clause is the
-   * standalone `span_or` query: the chain degenerates to "any
+   * recover [[spanNearTopK]] exactly. A SINGLE multi-term clause at slop 0
+   * is the standalone `span_or` query: the chain degenerates to "any
    * occurrence", tf = |union|. Scoring: clause idf uses the clause's
    * UNION df (#docs holding ANY alternative — a span_or clause is one
    * subquery, so its rarity is the union's, not its alternatives' sum),
@@ -2486,50 +2375,19 @@ object Search {
                      clauses: Seq[Seq[String]], slop: Int, k: Int,
                      params: Bm25Params = Bm25Params(),
                      roundTo: Int = 4): DataFrame = {
-    require(clauses.nonEmpty, "span_near needs >= 1 clause")
-    require(slop >= 0, "slop must be non-negative")
-    val alts = parseOrClauses(clauses)
-    val distinctTerms = alts.flatten.distinct.sorted
+    val alts = parseOrClauses(clauses, slop)
     val tok = tokens(col(textCol))
     // ONE stats pass: N, Σdl, each clause's union df
-    val dfAggs = alts.map(ts =>
-      sum(when(ts.map(t => array_contains(tok, t)).reduce(_ || _), 1L)
-        .otherwise(0L)))
-    val row = docs.agg(count(lit(1)).as("_n"),
-      (sum(size(tok).cast("long")).as("_tot") +:
-        dfAggs.zipWithIndex.map { case (c, i) => c.as(s"_df$i") }): _*).head()
-    val nDocs = row.getLong(0)
-    val avgdl = row.getLong(1).toDouble / nDocs
-    val idfSum = alts.indices.foldLeft(0.0) { (a, j) =>
-      a + idfOf(nDocs, if (row.isNullAt(j + 2)) 0L else row.getLong(j + 2)) }
-    val posOf = distinctTerms.map(t => t -> scanPositions(tok, t)).toMap
+    val (nDocs, c) = scanCounts(docs, sum(size(tok).cast("long")) +:
+      alts.map(ts => sum(when(ts.map(t => array_contains(tok, t)).reduce(_ || _), 1L)
+        .otherwise(0L))))
     // union = concat: alternatives are DISTINCT terms, so their position
     // sets are disjoint (no double counting); the chain law never needs
     // sorted inputs (filter + array_min are order-free)
-    val clausePos = alts.map(ts => concat(ts.map(posOf): _*))
-    val tf = spanNearTf(clausePos, slop)
-    val scored = docs
-      .select(col(idCol).as("doc_id"), tf.as("_stf"),
-        size(tok).cast("double").as("_dl"))
-      .where(col("_stf") > 0)
-      .select(col("doc_id"), round(
-        phraseScore(idfSum, col("_stf"), col("_dl"), avgdl, params),
-        roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+    val tf = spanNearTf(alts.map(ts => concat(ts.map(scanPositions(tok, _)): _*)), slop)
+    phraseRank(scanFreqs(docs, idCol, tok, tf), clauseIdfSum(nDocs, c.tail),
+      c.head.toDouble / nDocs, k, params, roundTo)
   }
-
-  /** Standalone `span_or`: the 1-clause form of [[spanOrNearTopK]] —
-    * tf = total occurrences of ANY alternative, idf from the union df. */
-  def spanOrTopK(docs: DataFrame, idCol: String, textCol: String,
-                 terms: Seq[String], k: Int,
-                 params: Bm25Params = Bm25Params(),
-                 roundTo: Int = 4): DataFrame =
-    spanOrNearTopK(docs, idCol, textCol, Seq(terms), slop = 0, k = k,
-      params = params, roundTo = roundTo)
 
   /** [[spanOrNearTopK]] from a persisted POSITIONAL postings index —
     * bit-identical at Σ df posting rows of read: per-term positions from
@@ -2540,44 +2398,14 @@ object Search {
                             slop: Int, k: Int,
                             params: Bm25Params = Bm25Params(),
                             roundTo: Int = 4): DataFrame = {
-    require(clauses.nonEmpty, "span_near needs >= 1 clause")
-    require(slop >= 0, "slop must be non-negative")
-    val alts = parseOrClauses(clauses)
+    val alts = parseOrClauses(clauses, slop)
     val distinctTerms = alts.flatten.distinct.sorted
-    val (nDocs, totalTokens, buckets) = readStats(spark, dir)
-    val avgdl = totalTokens.toDouble / nDocs
-    val pruned = prunedPostings(spark, dir, distinctTerms, buckets)
-    require(pruned.schema.fieldNames.contains("positions"),
-      s"postings index at $dir stores no positions (built with " +
-        "positional = false, or predating the positional schema): rebuild " +
-        "with positional postings to serve span queries")
-    val dfAggs = alts.map(ts =>
-      countDistinct(when(col("term").isin(ts: _*), col("doc_id"))))
-    val dfRow = pruned.agg(dfAggs.head.as("_df0"),
-      dfAggs.tail.zipWithIndex.map { case (c, i) => c.as(s"_df${i + 1}") }: _*)
-      .head()
-    val idfSum = alts.indices.foldLeft(0.0) { (a, j) =>
-      a + idfOf(nDocs, dfRow.getLong(j)) }
-    val idxOf = distinctTerms.zipWithIndex.toMap
-    val grouped = pruned.groupBy("doc_id").agg(
-      first(col("dl")).as("dl"),
-      distinctTerms.zipWithIndex.map { case (t, i) =>
-        flatten(collect_list(when(col("term") === t, col("positions"))))
-          .as(s"_ps$i") }: _*)
-    val clausePos = alts.map(ts =>
-      concat(ts.map(t => col(s"_ps${idxOf(t)}")): _*))
-    val tf = spanNearTf(clausePos, slop)
-    val scored = grouped
-      .withColumn("_stf", tf)
-      .where(col("_stf") > 0)
-      .select(col("doc_id"), round(
-        phraseScore(idfSum, col("_stf"), col("dl"), avgdl, params),
-        roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+    val ir = indexRead(spark, dir, distinctTerms, alts.map(setDf),
+      positionsFor = Some("span"))
+    val ps = pivotCol("_ps", distinctTerms)
+    phraseRank(positionPivot(ir.pruned, distinctTerms.map(isTerm)).withColumn("_ptf",
+        spanNearTf(alts.map(ts => concat(ts.map(ps): _*)), slop)),
+      clauseIdfSum(ir.nDocs, ir.dfs), ir.avgdl, k, params, roundTo)
   }
 
   /** The span_not tf law, shared verbatim by the scan and indexed paths:
@@ -2601,6 +2429,18 @@ object Search {
     })).cast("double")
   }
 
+  /** Validated span_not arguments: (include terms in clause order,
+    * sorted distinct exclude terms). */
+  private def spanNotArgs(include: Seq[String], slop: Int, exclude: Seq[String],
+                          pre: Int, post: Int): (Seq[String], Seq[String]) = {
+    require(include.nonEmpty, "span_not needs >= 1 include clause")
+    require(pre >= 0 && post >= 0, "slop/pre/post must be non-negative")
+    val terms = spanTerms(include, slop)
+    val exc = exclude.flatMap(queryTerms).distinct.sorted
+    require(exc.nonEmpty, "span_not needs >= 1 exclude term")
+    (terms, exc)
+  }
+
   /**
    * span_not top-k (the ES `span_not` query): include = an in-order
    * span_near chain of single terms (a 1-element `include` is the plain
@@ -2617,33 +2457,13 @@ object Search {
                   pre: Int = 0, post: Int = 0, k: Int = 10,
                   params: Bm25Params = Bm25Params(),
                   roundTo: Int = 4): DataFrame = {
-    require(include.nonEmpty, "span_not needs >= 1 include clause")
-    require(slop >= 0 && pre >= 0 && post >= 0,
-      "slop/pre/post must be non-negative")
-    val terms = include.map(c => { val t = queryTerms(c)
-      require(t.length == 1, s"span clauses are single terms: got '$c'"); t.head })
-    val exc = exclude.flatMap(queryTerms).distinct.sorted
-    require(exc.nonEmpty, "span_not needs >= 1 exclude term")
-    val distinctTerms = terms.distinct.sorted
-    val stats = corpusStats(docs, textCol, distinctTerms)
-    val idfSum = terms.foldLeft(0.0)((a, t) => a + stats.idf(t))
+    val (terms, exc) = spanNotArgs(include, slop, exclude, pre, post)
+    val stats = corpusStats(docs, textCol, terms.distinct.sorted)
     val tok = tokens(col(textCol))
-    val posOf = (distinctTerms ++ exc).distinct
-      .map(t => t -> scanPositions(tok, t)).toMap
-    val excPos = concat(exc.map(posOf): _*)
-    val tf = spanNotTf(terms.map(posOf), slop, excPos, pre, post)
-    val scored = docs
-      .select(col(idCol).as("doc_id"), tf.as("_stf"),
-        size(tok).cast("double").as("_dl"))
-      .where(col("_stf") > 0)
-      .select(col("doc_id"), round(
-        phraseScore(idfSum, col("_stf"), col("_dl"), stats.avgdl, params),
-        roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+    val tf = spanNotTf(terms.map(scanPositions(tok, _)), slop,
+      concat(exc.map(scanPositions(tok, _)): _*), pre, post)
+    phraseRank(scanFreqs(docs, idCol, tok, tf), idfSum(stats, terms),
+      stats.avgdl, k, params, roundTo)
   }
 
   /** [[spanNotTopK]] from a persisted POSITIONAL postings index —
@@ -2656,50 +2476,15 @@ object Search {
                          exclude: Seq[String], pre: Int = 0, post: Int = 0,
                          k: Int = 10, params: Bm25Params = Bm25Params(),
                          roundTo: Int = 4): DataFrame = {
-    require(include.nonEmpty, "span_not needs >= 1 include clause")
-    require(slop >= 0 && pre >= 0 && post >= 0,
-      "slop/pre/post must be non-negative")
-    val terms = include.map(c => { val t = queryTerms(c)
-      require(t.length == 1, s"span clauses are single terms: got '$c'"); t.head })
-    val exc = exclude.flatMap(queryTerms).distinct.sorted
-    require(exc.nonEmpty, "span_not needs >= 1 exclude term")
+    val (terms, exc) = spanNotArgs(include, slop, exclude, pre, post)
     val distinctInc = terms.distinct.sorted
     val allTerms = (distinctInc ++ exc).distinct.sorted
-    val (nDocs, totalTokens, buckets) = readStats(spark, dir)
-    val avgdl = totalTokens.toDouble / nDocs
-    val pruned = prunedPostings(spark, dir, allTerms, buckets)
-    require(pruned.schema.fieldNames.contains("positions"),
-      s"postings index at $dir stores no positions (built with " +
-        "positional = false, or predating the positional schema): rebuild " +
-        "with positional postings to serve span queries")
-    val dfRow = pruned.agg(
-      count(lit(1)).as("_n"),
-      distinctInc.map(t => sum(when(col("term") === t, 1L).otherwise(0L)))
-        .zipWithIndex.map { case (c, i) => c.as(s"_df$i") }: _*).head()
-    val stats = CorpusStats(nDocs, totalTokens,
-      distinctInc.zipWithIndex.map { case (t, i) =>
-        t -> (if (dfRow.isNullAt(i + 1)) 0L else dfRow.getLong(i + 1)) }.toMap)
-    val idfSum = terms.foldLeft(0.0)((a, t) => a + stats.idf(t))
-    val idxOf = allTerms.zipWithIndex.toMap
-    val grouped = pruned.groupBy("doc_id").agg(
-      first(col("dl")).as("dl"),
-      allTerms.zipWithIndex.map { case (t, i) =>
-        flatten(collect_list(when(col("term") === t, col("positions"))))
-          .as(s"_ps$i") }: _*)
-    val excPos = concat(exc.map(t => col(s"_ps${idxOf(t)}")): _*)
-    val tf = spanNotTf(terms.map(t => col(s"_ps${idxOf(t)}")), slop,
-      excPos, pre, post)
-    val scored = grouped
-      .withColumn("_stf", tf)
-      .where(col("_stf") > 0)
-      .select(col("doc_id"), round(
-        phraseScore(idfSum, col("_stf"), col("dl"), avgdl, params),
-        roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+    val ir = indexRead(spark, dir, allTerms, distinctInc.map(termDf),
+      positionsFor = Some("span"))
+    val ps = pivotCol("_ps", allTerms)
+    phraseRank(positionPivot(ir.pruned, allTerms.map(isTerm)).withColumn("_ptf",
+        spanNotTf(terms.map(ps), slop, concat(exc.map(ps): _*), pre, post)),
+      idfSum(ir.stats(distinctInc), terms), ir.avgdl, k, params, roundTo)
   }
 
   /**
@@ -2722,20 +2507,8 @@ object Search {
                    roundTo: Int = 4): DataFrame = {
     val ts = terms.flatMap(queryTerms).distinct.sorted
     require(ts.nonEmpty, "terms_set needs >= 1 term")
-    val stats = corpusStats(docs, textCol, ts)
-    val tok = tokens(col(textCol))
-    val dl = size(tok).cast("double")
-    val matched = ts.map(t => when(array_contains(tok, t), 1).otherwise(0))
-      .reduce(_ + _)
-    val scored = docs
-      .where(matched >= greatest(coalesce(msm.cast("int"), lit(1)), lit(1)))
-      .select(col(idCol).as("doc_id"),
-        round(scoreCol(ts, stats, params, tok, dl), roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+    bm25TopKWith(docs, idCol, scanScore(docs, textCol, ts, params), k, roundTo,
+      greatest(coalesce(msm.cast("int"), lit(1)), lit(1)))
   }
 
   // ------------------------------------------------------------------
@@ -2743,13 +2516,6 @@ object Search {
   // term but the last matches exactly in sequence, the LAST term
   // matches as a prefix at its slot
   // ------------------------------------------------------------------
-
-  /** The shared idf law ([[CorpusStats.idf]]) over an explicit df — the
-    * phrase-prefix paths mix exact (fixed-term) and relaxed (prefix) dfs
-    * in one fold, so the scalar form keeps both paths' float arithmetic
-    * pinned to the identical sequence of operations. */
-  private def idfOf(nDocs: Long, df: Long): Double =
-    math.log(1.0 + (nDocs - df + 0.5) / (df + 0.5))
 
   /** Phrase-prefix idf fold: fixed terms in PHRASE order (repeats count
     * each occurrence, the [[phraseTopK]] Lucene convention), then the
@@ -2779,10 +2545,8 @@ object Search {
                        phrase: String, k: Int,
                        params: Bm25Params = Bm25Params(),
                        roundTo: Int = 4): DataFrame = {
-    val pTerms = phraseTokens(phrase)
-    require(pTerms.nonEmpty, "empty phrase")
+    val pTerms = phraseArgs(phrase, 0)
     val fixed = pTerms.init
-    val prefix = pTerms.last
     val distinctFixed = fixed.distinct.sorted
     // ONE row-local codegen kernel per expression tree computes (dl, ptf,
     // df flags) from a single tokenize ([[graft.functions.PhrasePrefixStats]])
@@ -2796,37 +2560,18 @@ object Search {
     // kernel's differential spec; same two-pass shape (bounded stats
     // aggregate, then the map-only scoring scan).
     val statsCol = graft.functions.EsFunctions.phrase_prefix_stats(
-      col(textCol), fixed, prefix)
+      col(textCol), fixed, pTerms.last)
     // one bounded aggregate: n, Σdl, exact df per fixed term, relaxed
     // (prefix) df for the last term
-    val dfCols = distinctFixed.indices.map(i =>
-      coalesce(sum(element_at(col("_s.hits"), lit(i + 1)).cast("long")),
-        lit(0L))) :+
-      coalesce(sum(element_at(col("_s.hits"), lit(distinctFixed.length + 1))
-        .cast("long")), lit(0L))
-    val row = docs.select(statsCol.as("_s")).agg(count(lit(1)).as("n"),
-      (sum(col("_s.dl").cast("long")) +: dfCols): _*).head()
-    val nDocs = row.getLong(0)
-    require(nDocs > 0, "empty corpus")
-    val avgdl = row.getLong(1).toDouble / nDocs
-    val fixedDf = distinctFixed.zipWithIndex
-      .map { case (t, i) => t -> row.getLong(i + 2) }.toMap
-    val prefixDf = row.getLong(distinctFixed.length + 2)
-    val idfSum = phrasePrefixIdfSum(nDocs, fixed, fixedDf, prefixDf)
-    val scored = docs
-      .select(col(idCol).as("doc_id"), statsCol.as("_s"))
-      .select(col("doc_id"),
-        col("_s.ptf").cast("double").as("_ptf"),
-        col("_s.dl").cast("double").as("_dl"))
-      .where(col("_ptf") > 0)
-      .select(col("doc_id"), round(
-        phraseScore(idfSum, col("_ptf"), col("_dl"), avgdl, params),
-        roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+    val (nDocs, c) = scanCounts(docs.select(statsCol.as("_s")),
+      sum(col("_s.dl").cast("long")) +: (0 to distinctFixed.length).map(i =>
+        sum(element_at(col("_s.hits"), lit(i + 1)).cast("long"))))
+    val idfs = phrasePrefixIdfSum(nDocs, fixed,
+      distinctFixed.zip(c.tail).toMap, c.last)
+    phraseRank(docs.select(col(idCol).as("doc_id"), statsCol.as("_s"))
+      .select(col("doc_id"), col("_s.ptf").cast("double").as("_ptf"),
+        col("_s.dl").cast("double").as("dl")),
+      idfs, c.head.toDouble / nDocs, k, params, roundTo)
   }
 
   /**
@@ -2851,84 +2596,40 @@ object Search {
                               roundTo: Int = 4,
                               maxExpansions: Int = 50): DataFrame = {
     require(maxExpansions >= 0, "maxExpansions must be >= 0 (0 = unlimited)")
-    val pTerms = phraseTokens(phrase)
-    require(pTerms.nonEmpty, "empty phrase")
+    val pTerms = phraseArgs(phrase, 0)
     val fixed = pTerms.init
     val prefix = pTerms.last
     val distinctFixed = fixed.distinct.sorted
     val m = pTerms.length
-    // expansion: one vocabulary-sized filter, one bounded collect; a
-    // binding cap keeps the top terms by (advisory df desc, term asc) —
-    // the indexedRelaxedTopK determinism law
-    val matched = termDictionary(spark, dir,
+    val expansion = capExpansion(termDictionary(spark, dir,
         prefilter = Some(col("term").startsWith(lit(prefix))))
       .select(col("term"), col("df")).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
-    val expansion =
-      (if (maxExpansions > 0 && matched.length > maxExpansions)
-        matched.sortBy { case (t, df) => (-df, t) }.take(maxExpansions)
-      else matched).map(_._1)
-    val (nDocs, totalTokens, buckets) = readStats(spark, dir)
-    val avgdl = totalTokens.toDouble / nDocs
+      .map(r => (r.getString(0), r.getLong(1))).toSeq, maxExpansions)
     val allTerms = (distinctFixed ++ expansion).distinct.sorted
     // ONE postings open per query: the pruned read doubles as the schema
     // probe (" " can never be a token, so a single-term phrase with no
-    // expansion still gets a typed, empty frame)
-    val pruned = prunedPostings(spark, dir,
-      if (allTerms.isEmpty) Seq(" ") else allTerms, buckets)
-    // positional-schema check FIRST (it needs only the postings schema,
-    // not the expansion): a non-positional index must refuse loudly even
-    // when the prefix matches no vocabulary term — an empty result from
-    // an index that could never serve the query would mask the misuse
-    require(pruned.schema.fieldNames.contains("positions"),
-      s"postings index at $dir stores no positions (built with " +
-        "positional = false, or predating the positional schema): rebuild " +
-        "with positional postings to serve phrase-prefix queries")
-    if (expansion.isEmpty)
-      // no vocabulary term carries the prefix — empty result, typed off
-      // the index's own postings schema (the indexedRelaxedTopK trick)
-      return pruned
-        .where(lit(false))
-        .select(col("doc_id"), lit(0).cast("int").as("rank"),
-          lit(0.0).as("score"))
-    // exact fixed dfs + relaxed prefix df in ONE bounded aggregate over
-    // the pruned, post-tombstone postings
-    val dfRow = pruned.agg(count(lit(1)).as("_n"),
-      (distinctFixed.map(t =>
-        sum(when(col("term") === t, 1L).otherwise(0L))) :+
-        countDistinct(when(inSet(col("term"), expansion), col("doc_id"))))
-        .zipWithIndex.map { case (c, i) => c.as(s"_df$i") }: _*).head()
-    val fixedDf = distinctFixed.zipWithIndex.map { case (t, i) =>
-      t -> (if (dfRow.isNullAt(i + 1)) 0L else dfRow.getLong(i + 1)) }.toMap
-    val prefixDf = dfRow.getLong(distinctFixed.length + 1)
-    val idfSum = phrasePrefixIdfSum(nDocs, fixed, fixedDf, prefixDf)
-    // pivot per-term position sets + ONE prefix-expansion position set
-    // (flatten unwraps the 0-or-1 collected arrays per role)
-    val idxOf = distinctFixed.zipWithIndex.toMap
-    val grouped = pruned.groupBy("doc_id").agg(
-      first(col("dl")).as("dl"),
-      (distinctFixed.zipWithIndex.map { case (t, i) =>
-        flatten(collect_list(when(col("term") === t, col("positions"))))
-          .as(s"_ps$i") } :+
-        flatten(collect_list(when(inSet(col("term"), expansion),
-          col("positions")))).as("_pp")): _*)
-    // starts = ∩ (fixed set_j − j) ∩ (expansion set − (m−1)): pure
+    // expansion still gets a typed, empty frame). The positional check
+    // runs FIRST: a non-positional index must refuse loudly even when the
+    // prefix matches no vocabulary term — an empty result from an index
+    // that could never serve the query would mask the misuse
+    val ir = indexRead(spark, dir, if (allTerms.isEmpty) Seq(" ") else allTerms,
+      distinctFixed.map(termDf) :+ setDf(expansion),
+      positionsFor = Some("phrase-prefix"))
+    if (expansion.isEmpty) return ir.none
+    val idfs = phrasePrefixIdfSum(ir.nDocs, fixed,
+      distinctFixed.zip(ir.dfs).toMap, ir.dfs.last)
+    // the fixed terms' position sets + ONE prefix-expansion set (the last
+    // role); starts = ∩ (fixed set_j − j) ∩ (expansion set − (m−1)): pure
     // integer set arithmetic over stored positions, text never re-read
-    val shifted = fixed.zipWithIndex.map { case (t, j) =>
-      transform(col(s"_ps${idxOf(t)}"), p => p - lit(j))
-    } :+ transform(col("_pp"), p => p - lit(m - 1))
-    val starts = shifted.reduce((a, b) => array_intersect(a, b))
-    val scored = grouped
-      .withColumn("_ptf", size(starts).cast("double"))
-      .where(col("_ptf") > 0)
-      .select(col("doc_id"), round(
-        phraseScore(idfSum, col("_ptf"), col("dl"), avgdl, params),
-        roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+    val grouped = positionPivot(ir.pruned,
+      distinctFixed.map(isTerm) :+ inSet(col("term"), expansion))
+    val ps = pivotCol("_ps", distinctFixed)
+    val starts = (fixed.zipWithIndex.map { case (t, j) =>
+      transform(ps(t), p => p - lit(j))
+    } :+ transform(col(s"_ps${distinctFixed.length}"), p => p - lit(m - 1)))
+      .reduce((a, b) => array_intersect(a, b))
+    phraseRank(grouped.withColumn("_ptf", size(starts).cast("double")),
+      idfs, ir.avgdl, k, params, roundTo)
   }
 
   // ------------------------------------------------------------------
@@ -2962,26 +2663,17 @@ object Search {
     val nTerms = termsOf(mustNot)
     require(mTerms.nonEmpty || sTerms.nonEmpty,
       "bool query needs at least one must or should term")
-    val scoring = (mTerms ++ sTerms).distinct.sorted
-    val stats = corpusStats(docs, textCol, scoring)
-    val tok = tokens(col(textCol))
-    val dl = size(tok).cast("double")
-    val mustPred = mTerms.map(t => array_contains(tok, t))
+    val s = scanScore(docs, textCol, (mTerms ++ sTerms).distinct.sorted, params)
+    val mustPred = mTerms.map(t => array_contains(s.tok, t))
       .foldLeft(lit(true))(_ && _)
-    val notPred = nTerms.map(t => !array_contains(tok, t))
+    val notPred = nTerms.map(t => !array_contains(s.tok, t))
       .foldLeft(lit(true))(_ && _)
     val shouldPred =
       if (mTerms.nonEmpty) lit(true)
-      else sTerms.map(t => array_contains(tok, t)).reduce(_ || _)
-    val scored = docs
+      else sTerms.map(t => array_contains(s.tok, t)).reduce(_ || _)
+    rankTail(docs
       .where(mustPred && notPred && shouldPred)
-      .select(col(idCol).as("doc_id"),
-        round(scoreCol(scoring, stats, params, tok, dl), roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+      .select(col(idCol).as("doc_id"), round(s.score, roundTo).as("score")), k)
   }
 
   /**
@@ -3003,46 +2695,20 @@ object Search {
     require(mTerms.nonEmpty || sTerms.nonEmpty,
       "bool query needs at least one must or should term")
     val scoring = (mTerms ++ sTerms).distinct.sorted
-    val (nDocs, totalTokens, buckets) = readStats(spark, dir)
-    val avgdl = totalTokens.toDouble / nDocs
-    val readTerms = (scoring ++ nTerms).distinct.sorted
-    val pruned = prunedPostings(spark, dir, readTerms, buckets)
-    val dfRow = pruned.agg(
-      count(lit(1)).as("_n"),
-      scoring.zipWithIndex.map { case (t, i) =>
-        sum(when(col("term") === t, 1L).otherwise(0L)).as(s"_df$i") }: _*)
-      .head()
-    val stats = CorpusStats(nDocs, totalTokens,
-      scoring.zipWithIndex.map { case (t, i) =>
-        t -> (if (dfRow.isNullAt(i + 1)) 0L else dfRow.getLong(i + 1)) }.toMap)
-    val grouped = pruned.groupBy("doc_id").agg(
-      first(col("dl")).as("dl"),
-      (scoring.zipWithIndex.map { case (t, i) =>
-        coalesce(sum(when(col("term") === t, col("tf"))), lit(0.0))
-          .as(s"_tf$i") } :+
-        coalesce(max(when(
-          if (nTerms.isEmpty) lit(false) else col("term").isin(nTerms: _*),
-          1).otherwise(0)), lit(0)).as("_hasnot")): _*)
-    val mustOk = mTerms.map(t => col(s"_tf${scoring.indexOf(t)}") > 0.0)
-      .foldLeft(lit(true))(_ && _)
+    val ir = indexRead(spark, dir, (scoring ++ nTerms).distinct.sorted,
+      scoring.map(termDf))
+    val grouped = tfPivot(ir.pruned, scoring.map(isTerm),
+      Seq(coalesce(max(when(inSet(col("term"), nTerms), 1).otherwise(0)), lit(0))
+        .as("_hasnot")))
+    val tf = pivotCol("_tf", scoring)
+    val mustOk = mTerms.map(t => tf(t) > 0.0).foldLeft(lit(true))(_ && _)
     val shouldOk =
       if (mTerms.nonEmpty) lit(true)
-      else sTerms.map(t => col(s"_tf${scoring.indexOf(t)}") > 0.0)
-        .reduce(_ || _)
-    val lenNorm = lit(params.k1) *
-      (lit(1.0 - params.b) + lit(params.b) * col("dl") / lit(avgdl))
-    val score = scoring.zipWithIndex.map { case (t, i) =>
-      val tf = col(s"_tf$i")
-      lit(stats.idf(t)) * (tf * lit(params.k1 + 1.0)) / (tf + lenNorm)
-    }.reduce(_ + _)
-    val scored = grouped
+      else sTerms.map(t => tf(t) > 0.0).reduce(_ || _)
+    rankTail(grouped
       .where(mustOk && col("_hasnot") === 0 && shouldOk)
-      .select(col("doc_id"), round(score, roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+      .select(col("doc_id"), round(termScores(scoring, ir.stats(scoring), params,
+        tf, col("dl")), roundTo).as("score")), k)
   }
 
   // ------------------------------------------------------------------
@@ -3106,8 +2772,6 @@ object Search {
   private def boolPredScore(node: BoolNode, stats: CorpusStats,
                             params: Bm25Params, tfOf: String => Column,
                             dl: Column): (Column, Column) = {
-    val lenNorm = lit(params.k1) *
-      (lit(1.0 - params.b) + lit(params.b) * dl / lit(stats.avgdl))
     def pred(n: BoolNode): Column = n match {
       case BoolNode.Term(text, _) =>
         termsOf(text).map(t => tfOf(t) > lit(0.0)).reduce(_ || _)
@@ -3121,10 +2785,7 @@ object Search {
     }
     def score(n: BoolNode): Column = n match {
       case BoolNode.Term(text, boost) =>
-        lit(boost) * termsOf(text).distinct.sorted.map { t =>
-          val tf = tfOf(t)
-          lit(stats.idf(t)) * (tf * lit(params.k1 + 1.0)) / (tf + lenNorm)
-        }.reduce(_ + _)
+        lit(boost) * termScores(termsOf(text).distinct.sorted, stats, params, tfOf, dl)
       case BoolNode.Bool(m, s, _, boost) =>
         val parts = m.map(score) ++
           s.map(c => when(pred(c), score(c)).otherwise(lit(0.0)))
@@ -3148,20 +2809,10 @@ object Search {
     require(hasPositiveClause(node),
       "bool tree needs a guaranteed positive (must/should) clause — a " +
         "purely negative query matches the whole corpus")
-    val scoring = scoringTermsOf(node).distinct.sorted
-    val stats = corpusStats(docs, textCol, scoring)
-    val tok = tokens(col(textCol))
-    val dl = size(tok).cast("double")
-    val (pred, score) = boolPredScore(node, stats, params,
-      t => size(filter(tok, x => x === lit(t))).cast("double"), dl)
-    val scored = docs
-      .where(pred)
-      .select(col(idCol).as("doc_id"), round(score, roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+    val s = scanScore(docs, textCol, scoringTermsOf(node).distinct.sorted, params)
+    val (pred, score) = boolPredScore(node, s.stats, params, s.tf, s.dl)
+    rankTail(docs.where(pred)
+      .select(col(idCol).as("doc_id"), round(score, roundTo).as("score")), k)
   }
 
   /**
@@ -3180,32 +2831,11 @@ object Search {
         "purely negative query matches the whole corpus")
     val scoring = scoringTermsOf(node).distinct.sorted
     val readTerms = allTermsOf(node).distinct.sorted
-    val (nDocs, totalTokens, buckets) = readStats(spark, dir)
-    val pruned = prunedPostings(spark, dir, readTerms, buckets)
-    val dfRow = pruned.agg(
-      count(lit(1)).as("_n"),
-      scoring.zipWithIndex.map { case (t, i) =>
-        sum(when(col("term") === t, 1L).otherwise(0L)).as(s"_df$i") }: _*)
-      .head()
-    val stats = CorpusStats(nDocs, totalTokens,
-      scoring.zipWithIndex.map { case (t, i) =>
-        t -> (if (dfRow.isNullAt(i + 1)) 0L else dfRow.getLong(i + 1)) }.toMap)
-    val idxOf = readTerms.zipWithIndex.toMap
-    val grouped = pruned.groupBy("doc_id").agg(
-      first(col("dl")).as("dl"),
-      readTerms.zipWithIndex.map { case (t, i) =>
-        coalesce(sum(when(col("term") === t, col("tf"))), lit(0.0))
-          .as(s"_tf$i") }: _*)
-    val (pred, score) = boolPredScore(node, stats, params,
-      t => col(s"_tf${idxOf(t)}"), col("dl"))
-    val scored = grouped
-      .where(pred)
-      .select(col("doc_id"), round(score, roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+    val ir = indexRead(spark, dir, readTerms, scoring.map(termDf))
+    val (pred, score) = boolPredScore(node, ir.stats(scoring), params,
+      pivotCol("_tf", readTerms), col("dl"))
+    rankTail(tfPivot(ir.pruned, readTerms.map(isTerm)).where(pred)
+      .select(col("doc_id"), round(score, roundTo).as("score")), k)
   }
 
   /**
@@ -3591,6 +3221,18 @@ object Search {
   // more_like_this: the ES MLT query — "find documents like this one"
   // ------------------------------------------------------------------
 
+  /** The like text's term frequencies and its candidate terms (tf >=
+    * minTermFreq, sorted) — the one like-text analysis the three MLT
+    * entry points share ([[tokens]]' law, driver-side: [[phraseTokens]]). */
+  private def likeTerms(likeText: String,
+                        minTermFreq: Int): (Map[String, Int], Seq[String]) = {
+    val tf = phraseTokens(likeText).groupBy(identity).map { case (t, xs) => t -> xs.size }
+    val cands = tf.filter(_._2 >= minTermFreq).keys.toSeq.sorted
+    require(cands.nonEmpty,
+      s"no like-text term reaches min_term_freq=$minTermFreq")
+    (tf, cands)
+  }
+
   /** The shared MLT term-selection law: from per-like-doc term
     * frequencies, keep tf >= minTermFreq and corpus df >= minDocFreq,
     * score each survivor tf · idf (the engine's BM25 idf) ROUNDED to 6
@@ -3605,19 +3247,31 @@ object Search {
       .flatMap { case (t, f) =>
         val d = df.getOrElse(t, 0L)
         if (d < minDocFreq) None
-        else {
-          val idf = math.log(1.0 + (nDocs - d + 0.5) / (d + 0.5))
-          Some((t, BigDecimal(f * idf)
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
-        }
+        else Some((t, BigDecimal(f * idfOf(nDocs, d))
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
       }
-    scored.sortBy { case (t, s) => (-s, t) }
+    val selected = scored.sortBy { case (t, s) => (-s, t) }
       .take(maxQueryTerms).map(_._1).sorted
+    require(selected.nonEmpty,
+      s"no candidate term reaches min_doc_freq=$minDocFreq")
+    selected
   }
 
-  /** Driver-side twin of [[tokens]] for ONE text (the like doc). */
-  private def tokenizeOne(text: String): Seq[String] =
-    text.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
+  /** The scan MLT: ONE stats pass gives N, Σdl and every candidate's df;
+    * the selected terms (a subset of the candidates) then score with
+    * those same stats through [[bm25TopKWith]] — bit-identical to a
+    * fresh stats pass over the selected terms, one corpus pass fewer. */
+  private def moreLikeThisScan(docs: DataFrame, idCol: String, textCol: String,
+                               likeText: String, k: Int, maxQueryTerms: Int,
+                               minTermFreq: Int, minDocFreq: Int,
+                               params: Bm25Params, roundTo: Int): DataFrame = {
+    val (tf, cands) = likeTerms(likeText, minTermFreq)
+    val stats = corpusStats(docs, textCol, cands)
+    val selected = selectMltTerms(tf, stats.df, stats.nDocs, maxQueryTerms,
+      minTermFreq, minDocFreq)
+    bm25TopKWith(docs, idCol,
+      scanScore(docs, textCol, selected, params, stats = Some(stats)), k, roundTo)
+  }
 
   /**
    * more_like_this top-k (the ES MLT query, like = an existing document):
@@ -3631,9 +3285,8 @@ object Search {
    * reassigned over the surviving page.
    *
    * Scale shape: one id-pushdown fetch of the like doc (a single text to
-   * the driver), one candidate-bounded df aggregate (explode of
-   * array_intersect — candidate terms only, never the vocabulary), then
-   * the map-only bm25 scan + distributed TakeOrdered.
+   * the driver), one bounded stats aggregate over the candidate terms,
+   * then the map-only bm25 scan + distributed TakeOrdered.
    */
   def moreLikeThisTopK(docs: DataFrame, idCol: String, textCol: String,
                        likeId: Any, k: Int, maxQueryTerms: Int = 25,
@@ -3644,27 +3297,11 @@ object Search {
       .select(col(textCol)).head(2)
     require(likeRows.length == 1,
       s"like doc $likeId: expected exactly one row, got ${likeRows.length}")
-    val tf = tokenizeOne(Option(likeRows(0).getString(0)).getOrElse(""))
-      .groupBy(identity).map { case (t, xs) => t -> xs.size }
-    val cands = tf.filter(_._2 >= minTermFreq).keys.toSeq.sorted
-    require(cands.nonEmpty,
-      s"no like-doc term reaches min_term_freq=$minTermFreq")
-    // candidate df + N in ONE pass (N rides as a count of all rows via a
-    // second aggregate would rescan; the corpus count here is the same
-    // bounded partial+final count every stats pass pays)
-    val dfMap = docs.select(explode(array_distinct(array_intersect(
-        tokens(col(textCol)), array(cands.map(lit): _*)))).as("term"))
-      .groupBy("term").agg(count(lit(1)).as("df")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val nDocs = docs.count()
-    val selected = selectMltTerms(tf, dfMap, nDocs, maxQueryTerms,
-      minTermFreq, minDocFreq)
-    require(selected.nonEmpty,
-      s"no candidate term reaches min_doc_freq=$minDocFreq")
     // top-(k+1) then drop the like doc: the remaining prefix of k rows IS
     // the top-k over "everyone else" whether or not the like doc ranked
-    val page = bm25TopK(docs, idCol, textCol, selected.mkString(" "),
-        k + 1, params, roundTo)
+    val page = moreLikeThisScan(docs, idCol, textCol,
+        Option(likeRows(0).getString(0)).getOrElse(""), k + 1, maxQueryTerms,
+        minTermFreq, minDocFreq, params, roundTo)
       .filter(col("doc_id") =!= lit(likeId))
       .orderBy("rank").limit(k)
     page.select(col("doc_id"),
@@ -3682,22 +3319,9 @@ object Search {
                            likeText: String, k: Int, maxQueryTerms: Int = 25,
                            minTermFreq: Int = 2, minDocFreq: Int = 5,
                            params: Bm25Params = Bm25Params(),
-                           roundTo: Int = 4): DataFrame = {
-    val tf = tokenizeOne(likeText).groupBy(identity)
-      .map { case (t, xs) => t -> xs.size }
-    val cands = tf.filter(_._2 >= minTermFreq).keys.toSeq.sorted
-    require(cands.nonEmpty,
-      s"no like-text term reaches min_term_freq=$minTermFreq")
-    val dfMap = docs.select(explode(array_distinct(array_intersect(
-        tokens(col(textCol)), array(cands.map(lit): _*)))).as("term"))
-      .groupBy("term").agg(count(lit(1)).as("df")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val selected = selectMltTerms(tf, dfMap, docs.count(), maxQueryTerms,
-      minTermFreq, minDocFreq)
-    require(selected.nonEmpty,
-      s"no candidate term reaches min_doc_freq=$minDocFreq")
-    bm25TopK(docs, idCol, textCol, selected.mkString(" "), k, params, roundTo)
-  }
+                           roundTo: Int = 4): DataFrame =
+    moreLikeThisScan(docs, idCol, textCol, likeText, k, maxQueryTerms,
+      minTermFreq, minDocFreq, params, roundTo)
 
   /**
    * more_like_this from a persisted postings index — the
@@ -3717,19 +3341,13 @@ object Search {
                               minDocFreq: Int = 5,
                               params: Bm25Params = Bm25Params(),
                               roundTo: Int = 4): DataFrame = {
-    val tf = tokenizeOne(likeText).groupBy(identity)
-      .map { case (t, xs) => t -> xs.size }
-    val cands = tf.filter(_._2 >= minTermFreq).keys.toSeq.sorted
-    require(cands.nonEmpty,
-      s"no like-text term reaches min_term_freq=$minTermFreq")
+    val (tf, cands) = likeTerms(likeText, minTermFreq)
     val dfMap = termDictionary(spark, dir, Some(inSet(col("term"), cands)))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val indexStats = readStats(spark, dir)
     val selected = selectMltTerms(tf, dfMap, indexStats._1, maxQueryTerms,
       minTermFreq, minDocFreq)
-    require(selected.nonEmpty,
-      s"no candidate term reaches min_doc_freq=$minDocFreq")
-    indexedBm25TopKWith(spark, dir, indexStats, selected.mkString(" "), k,
+    indexedBm25TopKWith(spark, dir, indexStats, selected, k,
       params, roundTo, minShouldMatch = 1, searchAfter = None)
   }
 
@@ -3760,13 +3378,7 @@ object Search {
       "function_score needs >= 1 function (fieldFactor / gaussDecay)")
     require(Set("multiply", "sum")(boostMode),
       s"boostMode must be multiply or sum: got '$boostMode'")
-    val terms = queryTerms(query)
-    require(terms.nonEmpty, "empty query")
-    val stats = corpusStats(docs, textCol, terms)
-    val tok = tokens(col(textCol))
-    val dl = size(tok).cast("double")
-    val matched = terms.map(t => when(array_contains(tok, t), 1).otherwise(0))
-      .reduce(_ + _)
+    val s = scanScore(docs, textCol, queryTerms(query), params)
     val fns = Seq(
       fieldFactor.map { case (c, factor) =>
         log(lit(1.0) + lit(factor) * coalesce(col(c).cast("double"), lit(0.0)))
@@ -3779,7 +3391,6 @@ object Search {
         when(v.isNull, lit(1.0)).otherwise(
           exp((v - lit(origin)) * (v - lit(origin)) / lit(-2.0 * sigma2)))
       }).flatten
-    val qScore = scoreCol(terms, stats, params, tok, dl)
     // multiply mode folds LEFT from the query score — ((bm25 × f1) × f2)
     // — matching the documented "bm25, then field factor, then decay"
     // association and the oracle's evaluation order exactly (IEEE
@@ -3787,17 +3398,10 @@ object Search {
     // contract). sum mode keeps ES score_mode=multiply semantics:
     // qScore + (f1 × f2).
     val combined =
-      if (boostMode == "multiply") fns.foldLeft(qScore)(_ * _)
-      else qScore + fns.reduce(_ * _)
-    val scored = docs
-      .where(matched >= 1)
-      .select(col(idCol).as("doc_id"),
-        round(combined, roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+      if (boostMode == "multiply") fns.foldLeft(s.score)(_ * _)
+      else s.score + fns.reduce(_ * _)
+    rankTail(docs.where(s.matched >= 1)
+      .select(col(idCol).as("doc_id"), round(combined, roundTo).as("score")), k)
   }
 
   /**
@@ -3822,23 +3426,13 @@ object Search {
     val nTerms = queryTerms(negative)
     require(pTerms.nonEmpty, "empty positive query")
     require(nTerms.nonEmpty, "empty negative query")
-    val stats = corpusStats(docs, textCol, pTerms)
-    val tok = tokens(col(textCol))
-    val dl = size(tok).cast("double")
-    val matched = pTerms.map(t => when(array_contains(tok, t), 1)
-      .otherwise(0)).reduce(_ + _)
-    val negHit = nTerms.map(t => array_contains(tok, t)).reduce(_ || _)
-    val pos = round(scoreCol(pTerms, stats, params, tok, dl), roundTo)
-    val scored = docs
-      .where(matched >= 1)
+    val s = scanScore(docs, textCol, pTerms, params)
+    val negHit = nTerms.map(t => array_contains(s.tok, t)).reduce(_ || _)
+    val pos = round(s.score, roundTo)
+    rankTail(docs.where(s.matched >= 1)
       .select(col(idCol).as("doc_id"),
         round(when(negHit, pos * lit(negativeBoost)).otherwise(pos),
-          roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+          roundTo).as("score")), k)
   }
 
   /**
@@ -3860,28 +3454,20 @@ object Search {
                    params: Bm25Params = Bm25Params(),
                    roundTo: Int = 4): DataFrame = {
     require(k > 0, "k must be positive")
-    val terms = queryTerms(query)
-    require(terms.nonEmpty, "empty query")
-    val stats = corpusStats(docs, textCol, terms)
-    val tok = tokens(col(textCol))
-    val dl = size(tok).cast("double")
-    val matched = terms.map(t => when(array_contains(tok, t), 1).otherwise(0))
-      .reduce(_ + _)
-    val scored = docs
-      .where(matched >= 1 && col(collapseCol).isNotNull)
-      .select(col(collapseCol).cast("string").as("value"),
-        col(idCol).as("doc_id"),
-        round(scoreCol(terms, stats, params, tok, dl), roundTo).as("score"))
-    val best = scored.groupBy("value")
-      .agg(graft.functions.TopKAgg.top_k(
-        struct((-col("score")).as("ns"), col("doc_id")), 1).as("_top"))
-      .select(col("value"), explode(col("_top")).as("_b"))
-      .select(col("_b.doc_id").as("doc_id"), col("value"),
-        (-col("_b.ns")).as("score"))
-    val cut = best.orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    cut.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "value", "rank", "score")
+    rankTail(topKPerKey(perValueScores(docs, idCol, textCol, query, collapseCol,
+      params, roundTo), "value", 1), k, out = Seq("doc_id", "value", "rank", "score"))
+  }
+
+  /** `(value, doc_id, score)` of every matched doc with a non-null
+    * `valueCol` — the [[bm25TopK]] score law keyed for a per-value cut
+    * ([[collapseTopK]], [[topHitsFacet]]). */
+  private def perValueScores(docs: DataFrame, idCol: String, textCol: String,
+                             query: String, valueCol: String, params: Bm25Params,
+                             roundTo: Int): DataFrame = {
+    val s = scanScore(docs, textCol, queryTerms(query), params)
+    docs.where(s.matched >= 1 && col(valueCol).isNotNull)
+      .select(col(valueCol).cast("string").as("value"), col(idCol).as("doc_id"),
+        round(s.score, roundTo).as("score"))
   }
 
   /**
@@ -3915,25 +3501,17 @@ object Search {
     require(pTerms.nonEmpty, "empty rescore phrase")
     // phrase stats over the FULL corpus (the phraseTopK law — the window
     // changes which docs are scored, never the statistics)
-    val distinctTerms = pTerms.distinct.sorted
-    val stats = corpusStats(docs, textCol, distinctTerms)
-    val idfSum = pTerms.foldLeft(0.0)((a, t) => a + stats.idf(t))
+    val stats = corpusStats(docs, textCol, pTerms.distinct.sorted)
     val tok = tokens(col(textCol))
     val windowDocs = docs.join(broadcast(primary),
       docs(idCol) === primary("doc_id"))
     val ptf = phraseFreq(tok, pTerms)
     val secondary = when(ptf > 0,
-      round(phraseScore(idfSum, ptf, size(tok).cast("double"),
+      round(bm25Term(lit(idfSum(stats, pTerms)), ptf, size(tok).cast("double"),
         stats.avgdl, params), roundTo)).otherwise(lit(0.0))
-    val rescored = windowDocs
-      .select(primary("doc_id"),
-        round(lit(queryWeight) * col("_primary") +
-          lit(rescoreWeight) * secondary, roundTo).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    rescored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "score")
+    rankTail(windowDocs.select(primary("doc_id"),
+      round(lit(queryWeight) * col("_primary") +
+        lit(rescoreWeight) * secondary, roundTo).as("score")), k)
   }
 
   /**
@@ -3963,13 +3541,8 @@ object Search {
         levenshtein(col("term"), lit(t), maxEdits).as("distance"),
         col("df"))
       .filter(col("distance") >= 1) // -1 = beyond maxEdits; 0 = the term
-    val cut = cand
-      .orderBy(col("distance").asc, col("df").desc, col("suggestion").asc)
-      .limit(n)
-    cut.withColumn("rank", row_number().over(
-        Window.orderBy(col("distance").asc, col("df").desc,
-          col("suggestion").asc)))
-      .select("suggestion", "distance", "df", "rank")
+    rankTail(cand, n, Seq(col("distance").asc, col("df").desc, col("suggestion").asc),
+      Seq("suggestion", "distance", "df", "rank"))
   }
 
   /**
@@ -3985,14 +3558,10 @@ object Search {
     require(n > 0, "n must be positive")
     val p = prefix.toLowerCase(java.util.Locale.ROOT).trim
     require(p.nonEmpty, "empty prefix")
-    val cut = termDictionary(spark, dir,
+    rankTail(termDictionary(spark, dir,
         prefilter = Some(col("term").startsWith(lit(p))))
-      .select(col("term").as("suggestion"), col("df"))
-      .orderBy(col("df").desc, col("suggestion").asc)
-      .limit(n)
-    cut.withColumn("rank", row_number().over(
-        Window.orderBy(col("df").desc, col("suggestion").asc)))
-      .select("suggestion", "df", "rank")
+      .select(col("term").as("suggestion"), col("df")), n,
+      Seq(col("df").desc, col("suggestion").asc), Seq("suggestion", "df", "rank"))
   }
 
   /**
@@ -4034,15 +3603,12 @@ object Search {
     // oracle reproduces this exact sequence
     val fgP = col("fg_df").cast("double") / lit(fgCount.toDouble)
     val bgP = col("bg_df").cast("double") / lit(n.toDouble)
-    val scored = counts
+    rankTail(counts
       .filter(col("fg_df") > 0 && fgP > bgP)
       .select(col("term"), col("fg_df"), col("bg_df"),
-        round((fgP - bgP) * (fgP / bgP), roundTo).as("score"))
-      .orderBy(col("score").desc, col("term").asc)
-      .limit(topN)
-    scored.withColumn("rank",
-      row_number().over(Window.orderBy(col("score").desc, col("term").asc)))
-      .select("term", "fg_df", "bg_df", "score", "rank")
+        round((fgP - bgP) * (fgP / bgP), roundTo).as("score")), topN,
+      Seq(col("score").desc, col("term").asc),
+      Seq("term", "fg_df", "bg_df", "score", "rank"))
   }
 
   /**
@@ -4064,25 +3630,8 @@ object Search {
                    params: Bm25Params = Bm25Params(),
                    roundTo: Int = 4): DataFrame = {
     require(k > 0, "k must be positive")
-    val terms = queryTerms(query)
-    require(terms.nonEmpty, "empty query")
-    val stats = corpusStats(docs, textCol, terms)
-    val tok = tokens(col(textCol))
-    val dl = size(tok).cast("double")
-    val matched = terms.map(t => when(array_contains(tok, t), 1).otherwise(0))
-      .reduce(_ + _)
-    val scored = docs
-      .where(matched >= 1 && col(facetCol).isNotNull)
-      .select(col(facetCol).cast("string").as("value"),
-        col(idCol).as("doc_id"),
-        round(scoreCol(terms, stats, params, tok, dl), roundTo).as("score"))
-    scored.groupBy("value")
-      .agg(graft.functions.TopKAgg.top_k(
-        struct((-col("score")).as("ns"), col("doc_id")), k).as("_top"))
-      .select(col("value"), posexplode(col("_top")))
-      .select(col("value"), col("col.doc_id").as("doc_id"),
-        (col("pos") + 1).cast("int").as("rank"),
-        (-col("col.ns")).as("score"))
+    topKPerKey(perValueScores(docs, idCol, textCol, query, facetCol, params,
+      roundTo), "value", k)
   }
 
   /**
@@ -4365,13 +3914,10 @@ object Search {
     * cannot diverge in the fusion step. Input is ≤ 2·kCand rows. */
   private def rrfFuse(bm: DataFrame, vc: DataFrame, k: Int,
                       rrfK: Int): DataFrame = {
-    val fused = bm.join(vc, Seq("doc_id"), "full_outer")
-      .withColumn("rrf_score", rrfScoreCol(rrfK))
-      .orderBy(col("rrf_score").desc, col("doc_id").asc)
-      .limit(k)
-    fused.withColumn("rank",
-      row_number().over(Window.orderBy(col("rrf_score").desc, col("doc_id").asc)))
-      .select("doc_id", "rank", "bm25_rank", "vec_rank", "rrf_score")
+    rankTail(bm.join(vc, Seq("doc_id"), "full_outer")
+      .withColumn("rrf_score", rrfScoreCol(rrfK)), k,
+      Seq(col("rrf_score").desc, col("doc_id").asc),
+      Seq("doc_id", "rank", "bm25_rank", "vec_rank", "rrf_score"))
   }
 
   /**

@@ -2887,7 +2887,7 @@ object Queries {
     //      oracle recomputes every query's ranking from raw text with the
     //      SAME ascending-term fold (list_reduce over list(... ORDER BY
     //      term)) and the batch path's exact association
-    //      (idf·(tf·(k1+1)) — the scan path's scoreCol verbatim, so
+    //      (idf·(tf·(k1+1)) — the one `Search.bm25Term` every path uses, so
     //      batch == single-query holds to the ulp) — a hash match pins the
     //      postings shape,
     //      the fold order AND the heap's (score desc, id asc) cut. ----
@@ -3132,7 +3132,7 @@ object Queries {
 
     // ---- batch hybrid search (two queries, each fusing its own BM25 and
     //      cosine candidate lists): the q87 fusion law per query, the q99
-    //      batch-BM25 association (idf·(tf·(k1+1)), the scan scoreCol) and
+    //      batch-BM25 association (idf·(tf·(k1+1)), `Search.bm25Term`) and
     //      ascending-term
     //      fold, the heap cut's (rrf desc, doc_id asc) order — all
     //      recomputed generically in DuckDB. A hash match pins the WHOLE

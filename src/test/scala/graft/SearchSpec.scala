@@ -1809,8 +1809,8 @@ class SearchSpec extends SparkSpec {
         slop = 3, k = 10)))
     // standalone span_or: tf = occurrences of ANY alternative; doc 4
     // "a a b" has tf 3 for (a|b)
-    val or4 = Search.spanOrTopK(hand.filter(col("doc_id") === 4), "doc_id",
-      "text", Seq("a", "b"), k = 10).collect()
+    val or4 = Search.spanOrNearTopK(hand.filter(col("doc_id") === 4), "doc_id",
+      "text", Seq(Seq("a", "b")), slop = 0, k = 10).collect()
     assert(or4.length === 1 && or4.head.getLong(0) === 4L)
     // span_not: (a then b, slop 4) minus spans with c inside [p1-1, pm+1].
     // doc 1 "a x b x c": span [0,2], c at 4 > 2+1 -> SURVIVES;
@@ -2688,5 +2688,66 @@ class SearchSpec extends SparkSpec {
     }
     assert(got.toMap === Map("bm25" -> 4, "phrase" -> 4, "phrase_prefix" -> 7,
       "wildcard" -> 7, "mlt" -> 6))
+  }
+
+  test("every scan query kind refuses an empty corpus with 'empty corpus'") {
+    // the stats pass reads N before any per-corpus sum: over zero rows
+    // Σdl is null, and reading it first failed with ROW_VALUE_IS_NULL
+    val empty = pinCorpus.filter(lit(false))
+    val q = "spark window"
+    import Search.BoolNode._
+    val kinds = Seq[(String, () => Any)](
+      "bm25" -> (() => Search.bm25TopK(empty, "doc_id", "text", q, 5)),
+      "batch" -> (() => Search.bm25TopKBatch(empty, "doc_id", "text",
+        Seq((1L, q)).toDF("query_id", "query_text"), 5)),
+      "fuzzy" -> (() => Search.fuzzyTopK(empty, "doc_id", "text", q, 5)),
+      "prefix" -> (() => Search.prefixTopK(empty, "doc_id", "text", q, 5)),
+      "wildcard" -> (() => Search.wildcardTopK(empty, "doc_id", "text", "sp*", 5)),
+      "regexp" -> (() => Search.regexpTopK(empty, "doc_id", "text", "sp.*", 5)),
+      "multi-field" -> (() => Search.multiFieldTopK(empty, "doc_id",
+        Seq(("text", 1.0), ("title", 2.0)), q, 5)),
+      "phrase" -> (() => Search.phraseTopK(empty, "doc_id", "text", q, 5)),
+      "span near" -> (() => Search.spanNearTopK(empty, "doc_id", "text",
+        Seq("spark", "window"), 1, 5)),
+      "span first" -> (() => Search.spanFirstTopK(empty, "doc_id", "text", "spark", 3, 5)),
+      "span or-near" -> (() => Search.spanOrNearTopK(empty, "doc_id", "text",
+        Seq(Seq("spark", "node")), 0, 5)),
+      "span not" -> (() => Search.spanNotTopK(empty, "doc_id", "text",
+        Seq("spark"), 0, Seq("node"), k = 5)),
+      "phrase-prefix" -> (() => Search.phrasePrefixTopK(empty, "doc_id", "text", "spark wi", 5)),
+      "bool" -> (() => Search.boolTopK(empty, "doc_id", "text", "spark", k = 5)),
+      "bool-tree" -> (() => Search.boolQueryTopK(empty, "doc_id", "text",
+        Bool(must = Seq(Term("spark"))), 5)),
+      "mlt text" -> (() => Search.moreLikeThisTextTopK(empty, "doc_id", "text",
+        "spark spark window", 5, minTermFreq = 1, minDocFreq = 1)),
+      "terms-set" -> (() => Search.termsSetTopK(empty, "doc_id", "text",
+        Seq("spark"), lit(1), 5)),
+      "function-score" -> (() => Search.functionScoreTopK(empty, "doc_id", "text", q, 5,
+        fieldFactor = Some(("pop", 0.1)))),
+      "boosting" -> (() => Search.boostingTopK(empty, "doc_id", "text", q, "node", 5)),
+      "collapse" -> (() => Search.collapseTopK(empty, "doc_id", "text", q, "grp", 5)),
+      "rescore" -> (() => Search.rescoreTopK(empty, "doc_id", "text", q, q, 5)),
+      "has-child" -> (() => Search.hasChildTopK(empty, "parent_id", "text", q, 5)),
+      "top-hits" -> (() => Search.topHitsFacet(empty, "text", q, "doc_id", "grp", 5)),
+      "explain" -> (() => Search.explainScore(empty, "doc_id", "text", q)))
+    val wrong = kinds.flatMap { case (kind, call) =>
+      try { call(); Some(s"$kind: no error") }
+      catch {
+        case e: IllegalArgumentException if e.getMessage.contains("empty corpus") => None
+        case e: Throwable => Some(s"$kind: ${e.getClass.getSimpleName}: ${e.getMessage}")
+      }
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
+
+  test("scan more-like-this takes N, Σdl and the candidate dfs from ONE " +
+      "stats pass: 2 jobs before the first row") {
+    val docs = pinCorpus
+    val likeText = docs.filter(col("doc_id") === 7L).head().getString(1)
+    def mlt() = Search.moreLikeThisTextTopK(docs, "doc_id", "text", likeText, 10,
+      maxQueryTerms = 4, minTermFreq = 1, minDocFreq = 2)
+    mlt() // warm
+    val jobs = jobsSubmitted(mlt())
+    assert(jobs.size === 2, jobs.mkString(", "))
   }
 }
