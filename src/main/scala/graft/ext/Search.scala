@@ -24,12 +24,16 @@ import graft.sources.EngineParquet
  *    ([[scanCounts]] reads N first and refuses an empty corpus), the
  *    matched-term count and the score column;
  *  - [[indexRead]], the index prologue: [[readStats]] → the pruned,
- *    post-tombstone postings → the positional-schema check → one exact df
- *    aggregate; [[tfPivot]] and [[positionPivot]] then turn postings into
- *    per-doc tf / position columns;
+ *    post-tombstone postings → the positional-schema check, with no Spark
+ *    job; [[tfPivot]] and [[positionPivot]] then turn postings into
+ *    per-doc tf / position columns, and [[withIdf]] counts each role's df
+ *    over that same pivot inside the scoring plan (one read of the pruned
+ *    postings per query) and broadcasts the idfs into it as data;
  *  - [[bm25Term]], THE term score (the association above, on every path:
  *    scan, index, batch, phrase-shaped, explain) — why scan == indexed
- *    holds to the last ulp; [[idfOf]], THE idf;
+ *    holds to the last ulp; [[idfOf]], THE idf — the scan folds it on the
+ *    driver, the index evaluates the same function in its plan
+ *    ([[idfCol]]);
  *  - [[rankTail]], the cut + rank window of every single-query top-k, and
  *    [[topKPerKey]], the bounded per-key heap of the batch/facet forms.
  *
@@ -81,8 +85,15 @@ object Search {
     * union (span_or) dfs and the MLT term selection all fold through this
     * one scalar form, so every path's float arithmetic is the identical
     * sequence of operations. */
-  private def idfOf(nDocs: Long, df: Long): Double =
+  private[graft] def idfOf(nDocs: Long, df: Long): Double =
     math.log(1.0 + (nDocs - df + 0.5) / (df + 0.5))
+
+  /** [[idfOf]] over an in-plan df column: the driver's function itself,
+    * evaluated where the df is counted. Not a re-derivation with Spark's
+    * `log`, which is `StrictMath.log` and differs from `math.log` in the
+    * last ulp for some dfs — so in-plan idf is bit-equal to the driver's. */
+  private val idfUdf = udf((nDocs: Long, df: Long) => idfOf(nDocs, df))
+  private[graft] def idfCol(nDocs: Long, df: Column): Column = idfUdf(lit(nDocs), df)
 
   /** Corpus statistics for a bounded term set: one distributed
     * partial+final aggregate, |terms|+2 longs back to the driver. */
@@ -123,13 +134,17 @@ object Search {
     idf * (tf * lit(p.k1 + 1.0)) /
       (tf + lit(p.k1) * (lit(1.0 - p.b) + lit(p.b) * dl / lit(avgdl)))
 
-  /** Σ [[bm25Term]] over `terms` in GIVEN (sorted) order, left-assoc, idf
-    * folded driver-side; `tfOf(t)` reads a term's tf (a token-array
-    * projection on the scan, a pivot column on the index). */
-  private def termScores(terms: Seq[String], stats: CorpusStats, p: Bm25Params,
-                         tfOf: String => Column, dl: Column): Column =
-    terms.map(t => bm25Term(lit(stats.idf(t)), tfOf(t), dl, stats.avgdl, p))
-      .reduce(_ + _)
+  /** Σ [[bm25Term]] over `terms` in GIVEN (sorted) order, left-assoc;
+    * `idfOf(t)` reads a term's idf (a driver-folded literal on the scan,
+    * an element of the in-plan idf row on the index — [[withIdf]]) and
+    * `tfOf(t)` its tf (a token-array projection on the scan, a pivot
+    * column on the index). */
+  private def termScores(terms: Seq[String], idfOf: String => Column, avgdl: Double,
+                         p: Bm25Params, tfOf: String => Column, dl: Column): Column =
+    terms.map(t => bm25Term(idfOf(t), tfOf(t), dl, avgdl, p)).reduce(_ + _)
+
+  /** A scan's driver-folded idf, as the literal [[termScores]] reads. */
+  private def idfLit(stats: CorpusStats): String => Column = t => lit(stats.idf(t))
 
   /** The scan prologue's columns over ONE tokenization of the text. */
   private final case class ScanScore(stats: CorpusStats, tok: Column, dl: Column,
@@ -156,7 +171,7 @@ object Search {
     val tf = (t: String) => size(filter(tok, x => eq(x, t))).cast("double")
     ScanScore(st, tok, dl, tf,
       terms.map(t => when(has(t), 1).otherwise(0)).reduce(_ + _),
-      termScores(terms, st, params, tf, dl))
+      termScores(terms, idfLit(st), st.avgdl, params, tf, dl))
   }
 
   /** THE rank tail of every single-query top-k: the distributed
@@ -397,17 +412,42 @@ object Search {
                                     dir: String,
                                     prefilter: Option[Column] = None)
   : DataFrame = {
+    val raw = dictionaryDeltas(spark, dir)
+    // a term-level prefilter commutes with the per-term df aggregation —
+    // applying it BEFORE the groupBy cuts the vocabulary-sized shuffle to
+    // candidate terms only (the suggesters' fast path)
+    prefilter.fold(raw)(raw.where).groupBy("term").agg(sum(col("df")).as("df"))
+  }
+
+  /** The dictionary's raw `(term, df)` rows: one per term per build/
+    * append/stream delta, not yet summed. */
+  private def dictionaryDeltas(spark: org.apache.spark.sql.SparkSession,
+                               dir: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/terms")
     require(fsOf(spark, dir).exists(p),
       s"postings index at $dir has no term dictionary (terms/): it " +
         "predates the dictionary scheme — rebuild with buildPostingsIndex " +
         "or run search-compact to create it, then retry the fuzzy/prefix query")
-    val raw = EngineParquet.read(spark, Seq(p.toString))
-    // a term-level prefilter commutes with the per-term df aggregation —
-    // applying it BEFORE the groupBy cuts the vocabulary-sized shuffle to
-    // candidate terms only (the relaxed-expansion fast path)
-    prefilter.map(raw.filter).getOrElse(raw)
-      .groupBy("term").agg(sum(col("df")).as("df"))
+    EngineParquet.read(spark, Seq(p.toString))
+  }
+
+  /** The dictionary terms each of `preds` matches, with their df summed
+    * across deltas — the expansion read of the relaxed, phrase-prefix and
+    * MLT kinds. ONE map-only job: `prefilter` (a cheap necessary
+    * condition, pushed into the parquet reader) then the OR of `preds`
+    * cut the vocabulary to the matching rows, at most (matching terms ×
+    * deltas) of them reach the driver, and the per-term df sums there —
+    * no vocabulary-sized shuffle. Each result is sorted by term. */
+  private def dictionaryMatches(spark: org.apache.spark.sql.SparkSession,
+                                dir: String, preds: Seq[Column],
+                                prefilter: Option[Column] = None)
+      : Seq[Seq[(String, Long)]] = {
+    val raw = dictionaryDeltas(spark, dir)
+    val rows = prefilter.fold(raw)(raw.where)
+      .select(col("term") +: col("df") +: preds: _*)
+      .where(preds.reduce(_ || _)).collect()
+    preds.indices.map(i => rows.filter(_.getBoolean(i + 2))
+      .groupMapReduce(_.getString(0))(_.getLong(1))(_ + _).toSeq.sorted)
   }
 
   /**
@@ -450,15 +490,19 @@ object Search {
     * predicate the scan applies per token, so a doc's relaxed tf is
     * exactly Σ_{e∈expansion} tf(doc, e) and the relaxed df is the count
     * of distinct docs holding ≥1 expansion posting — both recomputed from
-    * the pruned, tombstone-anti-joined postings; N/avgdl come from the
-    * exact stats record. Fold orders are the [[relaxedTopK]] laws (terms
-    * sorted, left-assoc sum), so even IEEE addition cannot diverge them.
+    * the pruned, tombstone-anti-joined postings, in ONE plan: the relaxed
+    * df is the count of pivot docs with a non-zero relaxed tf
+    * ([[withIdf]]), over the same read the scores use. N/avgdl come from
+    * the exact stats record. Fold orders are the [[relaxedTopK]] laws
+    * (terms sorted, left-assoc sum), so even IEEE addition cannot diverge
+    * them.
     *
-    * Scale shape: ONE vocabulary-sized dictionary pass (|terms| filters,
-    * one bounded collect of the matched expansion — never the corpus),
-    * then the [[indexedBm25TopK]] pruned-bucket read over the expansion
-    * terms' `tb=` directories: Σ_e df(e) posting rows instead of the two
-    * full corpus scans [[relaxedTopK]] pays. `maxExpansions > 0` caps a
+    * Scale shape: ONE map-only dictionary read ([[dictionaryMatches]]:
+    * the matching rows, at most matching terms × dictionary deltas, to the
+    * driver, which sums their df — no dictionary shuffle, never the
+    * corpus), then the [[indexedBm25TopK]] pruned-bucket read over the
+    * expansion terms' `tb=` directories: Σ_e df(e) posting rows instead of
+    * the two full corpus scans [[relaxedTopK]] pays. `maxExpansions > 0` caps a
     * runaway expansion (a one-letter prefix) ES-style, keeping the top
     * terms by (advisory df desc, term asc) — a DOCUMENTED deviation from
     * scan equality when it binds. */
@@ -473,9 +517,8 @@ object Search {
     require(maxExpansions >= 0, "maxExpansions must be >= 0 (0 = unlimited)")
     // NECESSARY-condition prefilter (ES walks a Levenshtein automaton over
     // its term index for the same reason): the OR of every query term's
-    // cheap test runs BEFORE the dictionary aggregate — candidate terms,
-    // not the whole vocabulary, pay the df shuffle and the exact
-    // (DP-levenshtein/regex) predicate. Purely an optimization: `cheap`
+    // cheap test runs BEFORE the exact (DP-levenshtein/regex) predicate,
+    // pushed into the dictionary read. Purely an optimization: `cheap`
     // must be implied by `pred`, so the match set is unchanged — BUT the
     // dictionary is shared by ALL terms, so the OR is only a valid
     // prefilter when EVERY term contributed a cheap condition; a term
@@ -485,20 +528,15 @@ object Search {
     val pre =
       if (cheaps.forall(_.isDefined)) cheaps.flatten.reduceOption(_ || _)
       else None
-    val dict = termDictionary(spark, dir, pre)
-    // expansion: a (prefiltered-)vocabulary-sized filter per query term,
-    // one bounded collect (the expansion is at most vocabulary-sized; cap
-    // via maxExpansions for serving)
-    val matched = terms.map { t =>
-      val p = cheap(col("term"), t) match {
-        case Some(c) => c && pred(col("term"), t)
-        case None => pred(col("term"), t)
-      }
-      dict.filter(p).select(lit(t).as("qt"), col("term"), col("df"))
-    }.reduce(_ unionByName _).collect()
-    val expansion: Map[String, Seq[String]] = terms.map { t =>
-      t -> capExpansion(matched.filter(_.getString(0) == t)
-        .map(r => (r.getString(1), r.getLong(2))).toSeq, maxExpansions)
+    // expansion: one map-only dictionary read for every query term (the
+    // expansion is at most vocabulary-sized; cap via maxExpansions for
+    // serving)
+    val matched = dictionaryMatches(spark, dir, terms.zip(cheaps).map {
+      case (t, Some(c)) => c && pred(col("term"), t)
+      case (t, None) => pred(col("term"), t)
+    }, pre)
+    val expansion: Map[String, Seq[String]] = terms.zip(matched).map {
+      case (t, m) => t -> capExpansion(m, maxExpansions)
     }.toMap
     val allExp = expansion.values.flatten.toSeq.distinct.sorted
     // relaxed per-query-term df: DISTINCT docs holding >= 1 expansion
@@ -506,8 +544,7 @@ object Search {
     // postings. Nothing in the vocabulary matching any query term is an
     // empty result, typed off the index's own postings schema (" " can
     // never be a token: the tokenization law splits on whitespace)
-    val ir = indexRead(spark, dir, if (allExp.isEmpty) Seq(" ") else allExp,
-      terms.map(t => setDf(expansion(t))))
+    val ir = indexRead(spark, dir, if (allExp.isEmpty) Seq(" ") else allExp)
     if (allExp.isEmpty) return ir.none
     // relaxed tf = Σ tf over the term's expansion postings (a token
     // matches exactly one dictionary term, so the sum IS the scan path's
@@ -568,7 +605,7 @@ object Search {
                         params: Bm25Params = Bm25Params(), roundTo: Int = 4,
                         maxExpansions: Int = 50): DataFrame =
     // the prefix test IS already cheap — passing it as the prefilter too
-    // pushes it BEFORE the dictionary's df aggregate
+    // pushes it into the dictionary read
     indexedRelaxedTopK(spark, dir, queryTerms(query), k, params, roundTo,
       maxExpansions,
       cheap = (x, t) => Some(x.startsWith(lit(t))))(
@@ -739,7 +776,7 @@ object Search {
           terms.zip(c.slice(base + 1, base + 1 + terms.length)).toMap)
         // null-field rows score +0.0 for this field (tf reads coalesce to 0)
         val tf0 = coalesce(tok, array().cast("array<string>"))
-        lit(boost) * termScores(terms, stats, params,
+        lit(boost) * termScores(terms, idfLit(stats), stats.avgdl, params,
           t => size(filter(tf0, x => x === lit(t))).cast("double"),
           coalesce(size(tok).cast("double"), lit(0.0)))
       }
@@ -771,8 +808,8 @@ object Search {
    * Multi-field BM25 top-k from persisted postings indexes — the
    * [[multiFieldTopK]] semantics answered from one STANDING index per
    * field (`fields` = (index dir, boost) in scoring order). Each field's
-   * list rides its own pruned `tb=` read + exact df aggregate + pivot
-   * scoring (the [[indexedBm25TopK]] machinery verbatim, boost applied
+   * list rides its own pruned `tb=` read + pivot with in-plan df + scoring
+   * (the [[indexedBm25TopK]] machinery verbatim, boost applied
    * outside the term sum like the scan path); fields combine per `mode`
    * over a full-outer join of the bounded per-field MATCH SETS (a doc
    * absent from a field contributes exactly +0.0 — IEEE-identical to the
@@ -804,9 +841,9 @@ object Search {
         // multiFieldTopK driver-side guard)
         if (st._2 == 0L) None
         else {
-          val ir = indexRead(spark, dir, terms, terms.map(termDf), indexStats = Some(st))
-          Some(tfPivot(ir.pruned, terms.map(isTerm)).select(col("doc_id"),
-            (lit(boost) * termScores(terms, ir.stats(terms), params,
+          val ir = indexRead(spark, dir, terms, indexStats = Some(st))
+          Some(tfPivot(ir, terms.map(isTerm)).select(col("doc_id"),
+            (lit(boost) * termScores(terms, pivotIdf(terms), ir.avgdl, params,
               pivotCol("_tf", terms), col("dl"))).as(s"_s$fi")))
         }
       }
@@ -1313,20 +1350,11 @@ object Search {
       .cast("int"))
   }
 
-  /** The index prologue's read: exact N / token total, the pruned
-    * post-tombstone postings, and their df aggregate — run lazily, at
-    * most once, so an early empty return skips it. */
+  /** The index prologue's read: exact N / token total and the pruned
+    * post-tombstone postings. */
   private final class IndexRead(val nDocs: Long, val totalTokens: Long,
-                                val pruned: DataFrame, dfCols: Seq[Column]) {
+                                val pruned: DataFrame) {
     def avgdl: Double = totalTokens.toDouble / nDocs
-    /** One bounded aggregate over the pruned postings: |dfCols| longs (a
-      * null sum — no posting of the term — reads 0). */
-    lazy val dfs: IndexedSeq[Long] = {
-      val row = pruned.agg(count(lit(1)), dfCols: _*).head()
-      dfCols.indices.map(i => if (row.isNullAt(i + 1)) 0L else row.getLong(i + 1))
-    }
-    def stats(terms: Seq[String]): CorpusStats =
-      CorpusStats(nDocs, totalTokens, terms.zip(dfs).toMap)
     /** The empty result, typed off the index's own postings schema. */
     def none: DataFrame = pruned.where(lit(false))
       .select(col("doc_id"), lit(0).cast("int").as("rank"), lit(0.0).as("score"))
@@ -1335,10 +1363,10 @@ object Search {
   /** The index prologue every indexed kind opens with: [[readStats]] (or
     * the caller's already-read triple) → [[prunedPostings]] of
     * `readTerms` → when `positionsFor` names a position-reading kind, the
-    * refusal of an index that stores no positions → the exact df
-    * aggregate of `dfCols` ([[termDf]] / [[setDf]] per role). */
+    * refusal of an index that stores no positions. No Spark job: df is
+    * counted inside the scoring plan ([[withIdf]]). */
   private def indexRead(spark: org.apache.spark.sql.SparkSession, dir: String,
-                        readTerms: Seq[String], dfCols: Seq[Column],
+                        readTerms: Seq[String],
                         positionsFor: Option[String] = None,
                         indexStats: Option[(Long, Long, Int)] = None): IndexRead = {
     val (nDocs, totalTokens, buckets) = indexStats.getOrElse(readStats(spark, dir))
@@ -1347,45 +1375,89 @@ object Search {
       s"postings index at $dir stores no positions (built with " +
         "positional = false, or predating the positional schema): rebuild " +
         s"with positional postings to serve $kind queries"))
-    new IndexRead(nDocs, totalTokens, pruned, dfCols)
+    new IndexRead(nDocs, totalTokens, pruned)
   }
 
-  /** Exact df of one term: (term, doc) postings are unique, so its row
-    * count IS the df. */
-  private def termDf(t: String): Column = sum(when(col("term") === t, 1L).otherwise(0L))
+  /** THE df and idf of every indexed kind — ES's "DFS query then fetch"
+    * as one plan, not a df job ahead of the scoring job. `pivot` holds one
+    * row per doc, so the number of rows where `present(i)` holds IS role
+    * i's df (an exact term, an expansion, a span_or clause): ONE
+    * partial+final aggregate counts them — only a partial count row per
+    * task crosses its SinglePartition exchange — [[idfCol]] turns each
+    * count into an idf, `sums` folds those into further idfs (a phrase's
+    * Σ idf), and that one row, the array `_idf` (role idfs in role order,
+    * then the sums), is broadcast into every pivot row. idf is data, not
+    * a literal, so two queries of one shape share their generated code.
+    *
+    * The count reads the pivot's own postings exchange (a ReusedExchange
+    * in the physical plan: the pruned postings are scanned once). That
+    * holds while both sides compute the same pivot aggregate, so
+    * `present` reads every pivot column, the idfs travel as ONE array
+    * (column pruning cannot drop a count the score does not read), and
+    * the pivots group by (doc_id, dl) — dl is a function of doc_id —
+    * instead of carrying a `first(dl)` the count side would prune. */
+  private def withIdf(pivot: DataFrame, nDocs: Long, present: Seq[Column],
+                      sums: (Int => Column) => Seq[Column] = _ => Nil): DataFrame = {
+    val dfs = present.zipWithIndex.map { case (p, i) => count(when(p, 1)).as(s"_df$i") }
+    val idf = (i: Int) => idfCol(nDocs, col(s"_df$i"))
+    pivot.crossJoin(broadcast(pivot.agg(dfs.head, dfs.tail: _*)
+      .select(array(present.indices.map(idf) ++ sums(idf): _*).as("_idf"))))
+  }
 
-  /** df of a term SET (an expansion, a span_or clause): distinct docs
-    * holding ≥ 1 of its postings. */
-  private def setDf(ts: Seq[String]): Column =
-    countDistinct(when(inSet(col("term"), ts), col("doc_id")))
+  /** Element `i` of [[withIdf]]'s idf row. */
+  private def idfAt(i: Int): Column = col("_idf")(i)
 
-  /** Per-doc pivot of the pruned postings: `dl` plus one `_tf<i>` column
-    * per role predicate — the posting's tf, 0.0 when the doc has none, so
-    * an absent term contributes exactly +0.0 like the scan's
-    * size(filter) = 0. Columns are named by POSITION, never by term text:
-    * a term containing '.' (node.js, a URL) in a column name would parse
-    * as nested-field access downstream. */
-  private def tfPivot(pruned: DataFrame, roles: Seq[Column],
-                      extra: Seq[Column] = Nil): DataFrame =
-    pruned.groupBy("doc_id").agg(first(col("dl")).as("dl"),
-      roles.zipWithIndex.map { case (r, i) =>
-        coalesce(sum(when(r, col("tf"))), lit(0.0)).as(s"_tf$i") } ++ extra: _*)
+  /** Per-doc pivot of the pruned postings with its [[withIdf]] row: `dl`
+    * plus one `_tf<i>` column per role predicate — the posting's tf, 0.0
+    * when the doc has none, so an absent term contributes exactly +0.0
+    * like the scan's size(filter) = 0 — and role i's idf at `_idf[i]`
+    * (present: tf > 0). Columns are named by POSITION, never by term
+    * text: a term containing '.' (node.js, a URL) in a column name would
+    * parse as nested-field access downstream. */
+  private def tfPivot(ir: IndexRead, roles: Seq[Column]): DataFrame = {
+    val tfs = roles.zipWithIndex.map { case (r, i) =>
+      coalesce(sum(when(r, col("tf"))), lit(0.0)).as(s"_tf$i") }
+    withIdf(ir.pruned.groupBy("doc_id", "dl").agg(tfs.head, tfs.tail: _*), ir.nDocs,
+      roles.indices.map(i => col(s"_tf$i") > 0.0))
+  }
 
-  /** Per-doc pivot of the stored positions: `dl` plus one `_ps<i>` set per
-    * role predicate (empty when absent; collect_list skips the
-    * non-matching nulls and flatten unwraps the per-posting arrays). */
-  private def positionPivot(pruned: DataFrame, roles: Seq[Column]): DataFrame =
-    pruned.groupBy("doc_id").agg(first(col("dl")).as("dl"),
-      roles.zipWithIndex.map { case (r, i) =>
-        flatten(collect_list(when(r, col("positions")))).as(s"_ps$i") }: _*)
+  /** Per-doc pivot of the stored positions with its [[withIdf]] row: `dl`
+    * plus one `_ps<i>` set per role predicate (empty when absent;
+    * collect_list skips the non-matching nulls and flatten unwraps the
+    * per-posting arrays), role idfs present on a non-empty set, and
+    * `_idfs`, the kind's combined idf folded from them by `idfSum`. */
+  private def positionPivot(ir: IndexRead, roles: Seq[Column])
+                           (idfSum: (Int => Column) => Column): DataFrame = {
+    val ps = roles.zipWithIndex.map { case (r, i) =>
+      flatten(collect_list(when(r, col("positions")))).as(s"_ps$i") }
+    withIdf(ir.pruned.groupBy("doc_id", "dl").agg(ps.head, ps.tail: _*), ir.nDocs,
+      roles.indices.map(i => size(col(s"_ps$i")) > 0), idf => Seq(idfSum(idf)))
+      .withColumn("_idfs", idfAt(roles.length))
+  }
+
+  /** The phrase-shaped idf fold on the index: Σ over `terms` in GIVEN
+    * order of each term's role idf (`role(t)` its position), left-assoc
+    * from 0.0 — [[idfSum]]'s float sequence verbatim. */
+  private def idfFold(terms: Seq[String], role: String => Int)
+                     (idf: Int => Column): Column =
+    terms.foldLeft(lit(0.0))((a, t) => a + idf(role(t)))
 
   /** `term = t`, the role predicate of an exact term. */
   private def isTerm(t: String): Column = col("term") === t
 
+  /** A term's role number: its position in `terms`. */
+  private def roleOf(terms: Seq[String]): String => Int = terms.zipWithIndex.toMap
+
   /** A pivot column by its term's position in `terms`. */
   private def pivotCol(prefix: String, terms: Seq[String]): String => Column = {
-    val idx = terms.zipWithIndex.toMap
-    t => col(s"$prefix${idx(t)}")
+    val role = roleOf(terms)
+    t => col(s"$prefix${role(t)}")
+  }
+
+  /** A term's idf from the pivot's [[withIdf]] row. */
+  private def pivotIdf(terms: Seq[String]): String => Column = {
+    val role = roleOf(terms)
+    t => idfAt(role(t))
   }
 
   /** The BM25 tail of the tf-pivot kinds: [[tfPivot]] over one role per
@@ -1396,10 +1468,10 @@ object Search {
                         k: Int, params: Bm25Params, roundTo: Int,
                         minShouldMatch: Option[Int] = None,
                         searchAfter: Option[(Double, Any)] = None): DataFrame = {
-    val grouped = tfPivot(ir.pruned, roles)
+    val grouped = tfPivot(ir, roles)
     val present = terms.indices.map(i => when(col(s"_tf$i") > 0.0, 1).otherwise(0))
     rankTail(minShouldMatch.fold(grouped)(m => grouped.where(present.reduce(_ + _) >= m))
-      .select(col("doc_id"), round(termScores(terms, ir.stats(terms), params,
+      .select(col("doc_id"), round(termScores(terms, pivotIdf(terms), ir.avgdl, params,
         pivotCol("_tf", terms), col("dl")), roundTo).as("score"))
       .transform(afterFilter(searchAfter)), k)
   }
@@ -1413,11 +1485,16 @@ object Search {
    * Scale shape: the driver computes the needed buckets from the query
    * terms alone ([[termBucket]]) and opens ONLY those `tb=` directories as
    * explicit paths (≤ |terms| existence RPCs; never a full-tree listing),
-   * with `term IN (...)` pushed into the parquet reader on top. Per-term
-   * df is ONE bounded aggregate over the pruned postings; scoring pivots
-   * each term's single (doc, term) posting into a column and adds them in
-   * sorted term order, so the arithmetic is the [[bm25TopK]] projection
-   * verbatim. The global top-k is the same distributed TakeOrdered.
+   * with `term IN (...)` pushed into the parquet reader on top. Scoring
+   * pivots each term's single (doc, term) posting into a column and adds
+   * them in sorted term order, so the arithmetic is the [[bm25TopK]]
+   * projection verbatim. Per-term df is counted over that same pivot in
+   * the same plan ([[withIdf]]: a one-row partial+final aggregate on the
+   * pivot's reused exchange, broadcast back as the idf row), so the
+   * pruned postings are read once per query, and the idf reaches the
+   * score as data — the bit-equal [[idfOf]], not a literal — so queries of
+   * one shape reuse their generated code. The global top-k is the same
+   * distributed TakeOrdered.
    */
   def indexedBm25TopK(spark: org.apache.spark.sql.SparkSession, dir: String,
                       query: String, k: Int,
@@ -1440,8 +1517,7 @@ object Search {
       : DataFrame = {
     require(minShouldMatch >= 1, "minShouldMatch must be >= 1")
     require(terms.nonEmpty, "empty query")
-    val ir = indexRead(spark, dir, terms, terms.map(termDf),
-      indexStats = Some(indexStats))
+    val ir = indexRead(spark, dir, terms, indexStats = Some(indexStats))
     pivotTopK(ir, terms, terms.map(isTerm), k, params, roundTo,
       Some(minShouldMatch), searchAfter)
   }
@@ -1457,10 +1533,10 @@ object Search {
    * window anywhere (a stopword term cannot create a corpus-sized
    * single-task sort). Per query the output is BIT-IDENTICAL to
    * [[indexedBm25TopK]] — and hence to the corpus scan — through the
-   * shared [[batchTopK]] tail. The df here is a grouped count, not the
-   * single-query [[termDf]] columns: a batch's term union grows with the
-   * query count, and one conditional sum per term per posting row would
-   * grow with it.
+   * shared [[batchTopK]] tail. The df here is a grouped count collected
+   * before the scoring job, not the single-query [[withIdf]] row: a
+   * batch's term union grows with the query count, and one conditional
+   * count per term per pivot row would grow with it.
    */
   def indexedBm25TopKBatch(spark: org.apache.spark.sql.SparkSession,
                            dir: String, queries: DataFrame, k: Int,
@@ -1622,7 +1698,7 @@ object Search {
     * the parquet reader on top — the shared read path of
     * [[indexedBm25TopK]] and [[indexedPhraseTopK]]. Tombstoned docs
     * ([[deleteFromPostingsIndex]]) are anti-joined out against the
-    * bounded delete set, so every consumer (scoring, df aggregates,
+    * bounded delete set, so every consumer (scoring, in-plan df counts,
     * position pivots) sees post-delete postings. */
   private def prunedPostings(spark: org.apache.spark.sql.SparkSession,
                              dir: String, terms: Seq[String],
@@ -1729,12 +1805,13 @@ object Search {
   /** The phrase-shaped rank tail, shared by every phrase, span and
     * phrase-prefix kind in both forms: over `(doc_id, _ptf, dl)` rows —
     * `_ptf` the kind's occurrence count — keep `_ptf > 0` and score BM25
-    * with `_ptf` as tf and `idfSum` as idf ([[bm25Term]]), then
+    * with `_ptf` as tf and `idf` as idf ([[bm25Term]]) — a driver-folded
+    * literal on the scan, the pivot's `_idfs` on the index — then
     * [[rankTail]]. */
-  private def phraseRank(freqs: DataFrame, idfSum: Double, avgdl: Double,
+  private def phraseRank(freqs: DataFrame, idf: Column, avgdl: Double,
                          k: Int, p: Bm25Params, roundTo: Int): DataFrame =
     rankTail(freqs.where(col("_ptf") > 0).select(col("doc_id"),
-      round(bm25Term(lit(idfSum), col("_ptf"), col("dl"), avgdl, p), roundTo)
+      round(bm25Term(idf, col("_ptf"), col("dl"), avgdl, p), roundTo)
         .as("score")), k)
 
   /** The scan form's `(doc_id, _ptf, dl)` rows for [[phraseRank]]. */
@@ -1776,7 +1853,7 @@ object Search {
     val stats = corpusStats(docs, textCol, pTerms.distinct.sorted)
     val tok = tokens(col(textCol))
     phraseRank(scanFreqs(docs, idCol, tok, phraseFreq(tok, pTerms, slop)),
-      idfSum(stats, pTerms), stats.avgdl, k, params, roundTo)
+      lit(idfSum(stats, pTerms)), stats.avgdl, k, params, roundTo)
   }
 
   /**
@@ -1787,8 +1864,8 @@ object Search {
    * intersection of its per-term position sets shifted by each term's
    * phrase offset (`pos(t_j) − j`), so adjacency is pure integer set
    * arithmetic over the stored `positions` arrays. Same pruned-bucket
-   * read, exact df aggregate, driver-folded idf sum and tie-break as the
-   * BM25 twin. Indexes built before the positional schema fail loudly —
+   * read, in-plan df and tie-break as the BM25 twin; the idf sum folds
+   * on the one-row df side in phrase order ([[idfFold]]). Indexes built before the positional schema fail loudly —
    * rebuild or append-compact to upgrade.
    */
   def indexedPhraseTopK(spark: org.apache.spark.sql.SparkSession, dir: String,
@@ -1797,9 +1874,9 @@ object Search {
                         roundTo: Int = 4, slop: Int = 0): DataFrame = {
     val pTerms = phraseArgs(phrase, slop)
     val distinctTerms = pTerms.distinct.sorted
-    val ir = indexRead(spark, dir, distinctTerms, distinctTerms.map(termDf),
-      positionsFor = Some("phrase"))
-    val grouped = positionPivot(ir.pruned, distinctTerms.map(isTerm))
+    val ir = indexRead(spark, dir, distinctTerms, positionsFor = Some("phrase"))
+    val grouped = positionPivot(ir, distinctTerms.map(isTerm))(
+      idfFold(pTerms, roleOf(distinctTerms)))
     val ps = pivotCol("_ps", distinctTerms)
     // slop 0: adjacency is the shifted-position-set intersection (bases
     // land in [0, dl−m] by construction). slop > 0: the [[phraseFreq]]
@@ -1822,7 +1899,7 @@ object Search {
           .otherwise(array().cast("array<int>"))
       }
     phraseRank(grouped.withColumn("_ptf", size(starts).cast("double")),
-      idfSum(ir.stats(distinctTerms), pTerms), ir.avgdl, k, params, roundTo)
+      col("_idfs"), ir.avgdl, k, params, roundTo)
   }
 
   // ------------------------------------------------------------------
@@ -2269,25 +2346,25 @@ object Search {
     val tok = tokens(col(textCol))
     phraseRank(scanFreqs(docs, idCol, tok,
         spanNearTf(terms.map(scanPositions(tok, _)), slop)),
-      idfSum(stats, terms), stats.avgdl, k, params, roundTo)
+      lit(idfSum(stats, terms)), stats.avgdl, k, params, roundTo)
   }
 
   /** [[spanNearTopK]] from a persisted POSITIONAL postings index —
     * bit-identical output at Σ df posting rows of read: per-term position
     * sets pivot from the stored arrays (the [[indexedPhraseTopK]] shape),
-    * the chain law is [[spanNearTf]] verbatim, df/idf from the same exact
-    * bounded aggregate. */
+    * the chain law is [[spanNearTf]] verbatim, df/idf counted in the
+    * same plan over the position pivot. */
   def indexedSpanNearTopK(spark: org.apache.spark.sql.SparkSession,
                           dir: String, clauses: Seq[String], slop: Int,
                           k: Int, params: Bm25Params = Bm25Params(),
                           roundTo: Int = 4): DataFrame = {
     val terms = spanTerms(clauses, slop)
     val distinctTerms = terms.distinct.sorted
-    val ir = indexRead(spark, dir, distinctTerms, distinctTerms.map(termDf),
-      positionsFor = Some("span"))
-    phraseRank(positionPivot(ir.pruned, distinctTerms.map(isTerm)).withColumn("_ptf",
+    val ir = indexRead(spark, dir, distinctTerms, positionsFor = Some("span"))
+    phraseRank(positionPivot(ir, distinctTerms.map(isTerm))(
+        idfFold(terms, roleOf(distinctTerms))).withColumn("_ptf",
         spanNearTf(terms.map(pivotCol("_ps", distinctTerms)), slop)),
-      idfSum(ir.stats(distinctTerms), terms), ir.avgdl, k, params, roundTo)
+      col("_idfs"), ir.avgdl, k, params, roundTo)
   }
 
   /**
@@ -2308,7 +2385,7 @@ object Search {
     // positions" = occurrence index < end
     phraseRank(scanFreqs(docs, idCol, tok,
         size(filter(slice(tok, 1, end), x => x === lit(t))).cast("double")),
-      stats.idf(t), stats.avgdl, k, params, roundTo)
+      lit(stats.idf(t)), stats.avgdl, k, params, roundTo)
   }
 
   /** Validated span_first arguments: the one analyzed term. */
@@ -2320,17 +2397,18 @@ object Search {
   }
 
   /** [[spanFirstTopK]] from a persisted POSITIONAL postings index:
-    * ONE term's postings (≤ df rows), tf = stored positions < `end`,
+    * ONE term's postings (≤ df rows) pivoted per doc (the pivot's exchange
+    * is what its in-plan df reads), tf = stored positions < `end`,
     * bit-identical scores. */
   def indexedSpanFirstTopK(spark: org.apache.spark.sql.SparkSession,
                            dir: String, term: String, end: Int, k: Int,
                            params: Bm25Params = Bm25Params(),
                            roundTo: Int = 4): DataFrame = {
     val t = spanFirstTerm(term, end)
-    val ir = indexRead(spark, dir, Seq(t), Seq(termDf(t)), positionsFor = Some("span"))
-    phraseRank(ir.pruned.select(col("doc_id"), col("dl"),
-        size(filter(col("positions"), p => p < lit(end))).cast("double").as("_ptf")),
-      ir.stats(Seq(t)).idf(t), ir.avgdl, k, params, roundTo)
+    val ir = indexRead(spark, dir, Seq(t), positionsFor = Some("span"))
+    phraseRank(positionPivot(ir, Seq(isTerm(t)))(idf => idf(0)).withColumn("_ptf",
+        size(filter(col("_ps0"), p => p < lit(end))).cast("double")),
+      col("_idfs"), ir.avgdl, k, params, roundTo)
   }
 
   // ------------------------------------------------------------------
@@ -2385,14 +2463,15 @@ object Search {
     // sets are disjoint (no double counting); the chain law never needs
     // sorted inputs (filter + array_min are order-free)
     val tf = spanNearTf(alts.map(ts => concat(ts.map(scanPositions(tok, _)): _*)), slop)
-    phraseRank(scanFreqs(docs, idCol, tok, tf), clauseIdfSum(nDocs, c.tail),
+    phraseRank(scanFreqs(docs, idCol, tok, tf), lit(clauseIdfSum(nDocs, c.tail)),
       c.head.toDouble / nDocs, k, params, roundTo)
   }
 
   /** [[spanOrNearTopK]] from a persisted POSITIONAL postings index —
-    * bit-identical at Σ df posting rows of read: per-term positions from
-    * the stored arrays, clause union dfs from ONE bounded countDistinct
-    * aggregate over the pruned postings. */
+    * bit-identical at Σ df posting rows of read: one pivot role per
+    * CLAUSE, whose position set is the union of its alternatives' stored
+    * arrays (the chain law is order-free, so the union's order does not
+    * matter) and whose presence count is the clause's union df. */
   def indexedSpanOrNearTopK(spark: org.apache.spark.sql.SparkSession,
                             dir: String, clauses: Seq[Seq[String]],
                             slop: Int, k: Int,
@@ -2400,12 +2479,11 @@ object Search {
                             roundTo: Int = 4): DataFrame = {
     val alts = parseOrClauses(clauses, slop)
     val distinctTerms = alts.flatten.distinct.sorted
-    val ir = indexRead(spark, dir, distinctTerms, alts.map(setDf),
-      positionsFor = Some("span"))
-    val ps = pivotCol("_ps", distinctTerms)
-    phraseRank(positionPivot(ir.pruned, distinctTerms.map(isTerm)).withColumn("_ptf",
-        spanNearTf(alts.map(ts => concat(ts.map(ps): _*)), slop)),
-      clauseIdfSum(ir.nDocs, ir.dfs), ir.avgdl, k, params, roundTo)
+    val ir = indexRead(spark, dir, distinctTerms, positionsFor = Some("span"))
+    phraseRank(positionPivot(ir, alts.map(inSet(col("term"), _)))(idf =>
+        alts.indices.foldLeft(lit(0.0))((a, j) => a + idf(j))).withColumn("_ptf",
+        spanNearTf(alts.indices.map(j => col(s"_ps$j")), slop)),
+      col("_idfs"), ir.avgdl, k, params, roundTo)
   }
 
   /** The span_not tf law, shared verbatim by the scan and indexed paths:
@@ -2462,7 +2540,7 @@ object Search {
     val tok = tokens(col(textCol))
     val tf = spanNotTf(terms.map(scanPositions(tok, _)), slop,
       concat(exc.map(scanPositions(tok, _)): _*), pre, post)
-    phraseRank(scanFreqs(docs, idCol, tok, tf), idfSum(stats, terms),
+    phraseRank(scanFreqs(docs, idCol, tok, tf), lit(idfSum(stats, terms)),
       stats.avgdl, k, params, roundTo)
   }
 
@@ -2470,21 +2548,20 @@ object Search {
     * bit-identical: include-term positions AND exclude-term positions
     * both pivot from the pruned postings (an excluded-only doc never
     * scores, so pruning to include∪exclude terms loses nothing); df/idf
-    * of the include terms from the same bounded aggregate. */
+    * of the include terms counted in the same plan over that pivot. */
   def indexedSpanNotTopK(spark: org.apache.spark.sql.SparkSession,
                          dir: String, include: Seq[String], slop: Int,
                          exclude: Seq[String], pre: Int = 0, post: Int = 0,
                          k: Int = 10, params: Bm25Params = Bm25Params(),
                          roundTo: Int = 4): DataFrame = {
     val (terms, exc) = spanNotArgs(include, slop, exclude, pre, post)
-    val distinctInc = terms.distinct.sorted
-    val allTerms = (distinctInc ++ exc).distinct.sorted
-    val ir = indexRead(spark, dir, allTerms, distinctInc.map(termDf),
-      positionsFor = Some("span"))
+    val allTerms = (terms ++ exc).distinct.sorted
+    val ir = indexRead(spark, dir, allTerms, positionsFor = Some("span"))
     val ps = pivotCol("_ps", allTerms)
-    phraseRank(positionPivot(ir.pruned, allTerms.map(isTerm)).withColumn("_ptf",
+    phraseRank(positionPivot(ir, allTerms.map(isTerm))(
+        idfFold(terms, roleOf(allTerms))).withColumn("_ptf",
         spanNotTf(terms.map(ps), slop, concat(exc.map(ps): _*), pre, post)),
-      idfSum(ir.stats(distinctInc), terms), ir.avgdl, k, params, roundTo)
+      col("_idfs"), ir.avgdl, k, params, roundTo)
   }
 
   /**
@@ -2571,7 +2648,7 @@ object Search {
     phraseRank(docs.select(col(idCol).as("doc_id"), statsCol.as("_s"))
       .select(col("doc_id"), col("_s.ptf").cast("double").as("_ptf"),
         col("_s.dl").cast("double").as("dl")),
-      idfs, c.head.toDouble / nDocs, k, params, roundTo)
+      lit(idfs), c.head.toDouble / nDocs, k, params, roundTo)
   }
 
   /**
@@ -2587,8 +2664,9 @@ object Search {
    * duplicate-free). The prefix term's relaxed df is recomputed exactly
    * as distinct docs holding ≥1 expansion posting; fixed dfs, idf fold,
    * tie-break and rounding are the scan law verbatim — bit-identical
-   * unless the cap binds. Cost: one vocabulary-sized dictionary pass +
-   * Σ df postings of the touched terms; the corpus is never scanned.
+   * unless the cap binds. Cost: one map-only dictionary read (the
+   * prefix pushed into it) + Σ df postings of the touched terms, read
+   * once; the corpus is never scanned.
    */
   def indexedPhrasePrefixTopK(spark: org.apache.spark.sql.SparkSession,
                               dir: String, phrase: String, k: Int,
@@ -2601,10 +2679,8 @@ object Search {
     val prefix = pTerms.last
     val distinctFixed = fixed.distinct.sorted
     val m = pTerms.length
-    val expansion = capExpansion(termDictionary(spark, dir,
-        prefilter = Some(col("term").startsWith(lit(prefix))))
-      .select(col("term"), col("df")).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq, maxExpansions)
+    val expansion = capExpansion(dictionaryMatches(spark, dir,
+      Seq(col("term").startsWith(lit(prefix)))).head, maxExpansions)
     val allTerms = (distinctFixed ++ expansion).distinct.sorted
     // ONE postings open per query: the pruned read doubles as the schema
     // probe (" " can never be a token, so a single-term phrase with no
@@ -2613,23 +2689,25 @@ object Search {
     // prefix matches no vocabulary term — an empty result from an index
     // that could never serve the query would mask the misuse
     val ir = indexRead(spark, dir, if (allTerms.isEmpty) Seq(" ") else allTerms,
-      distinctFixed.map(termDf) :+ setDf(expansion),
       positionsFor = Some("phrase-prefix"))
     if (expansion.isEmpty) return ir.none
-    val idfs = phrasePrefixIdfSum(ir.nDocs, fixed,
-      distinctFixed.zip(ir.dfs).toMap, ir.dfs.last)
     // the fixed terms' position sets + ONE prefix-expansion set (the last
-    // role); starts = ∩ (fixed set_j − j) ∩ (expansion set − (m−1)): pure
-    // integer set arithmetic over stored positions, text never re-read
-    val grouped = positionPivot(ir.pruned,
-      distinctFixed.map(isTerm) :+ inSet(col("term"), expansion))
+    // role, whose presence count is the prefix term's relaxed df); the
+    // idf fold is [[phrasePrefixIdfSum]]'s: fixed terms in phrase order,
+    // then the prefix. starts = ∩ (fixed set_j − j) ∩ (expansion set −
+    // (m−1)): pure integer set arithmetic over stored positions, text
+    // never re-read
+    val nf = distinctFixed.length
+    val grouped = positionPivot(ir,
+        distinctFixed.map(isTerm) :+ inSet(col("term"), expansion))(idf =>
+      idfFold(fixed, roleOf(distinctFixed))(idf) + idf(nf))
     val ps = pivotCol("_ps", distinctFixed)
     val starts = (fixed.zipWithIndex.map { case (t, j) =>
       transform(ps(t), p => p - lit(j))
-    } :+ transform(col(s"_ps${distinctFixed.length}"), p => p - lit(m - 1)))
+    } :+ transform(col(s"_ps$nf"), p => p - lit(m - 1)))
       .reduce((a, b) => array_intersect(a, b))
     phraseRank(grouped.withColumn("_ptf", size(starts).cast("double")),
-      idfs, ir.avgdl, k, params, roundTo)
+      col("_idfs"), ir.avgdl, k, params, roundTo)
   }
 
   // ------------------------------------------------------------------
@@ -2695,20 +2773,19 @@ object Search {
     require(mTerms.nonEmpty || sTerms.nonEmpty,
       "bool query needs at least one must or should term")
     val scoring = (mTerms ++ sTerms).distinct.sorted
-    val ir = indexRead(spark, dir, (scoring ++ nTerms).distinct.sorted,
-      scoring.map(termDf))
-    val grouped = tfPivot(ir.pruned, scoring.map(isTerm),
-      Seq(coalesce(max(when(inSet(col("term"), nTerms), 1).otherwise(0)), lit(0))
-        .as("_hasnot")))
+    val ir = indexRead(spark, dir, (scoring ++ nTerms).distinct.sorted)
+    // one role per scoring term, then ONE for the mustNot set: a doc with
+    // any mustNot posting has tf > 0 there
+    val grouped = tfPivot(ir, scoring.map(isTerm) :+ inSet(col("term"), nTerms))
     val tf = pivotCol("_tf", scoring)
     val mustOk = mTerms.map(t => tf(t) > 0.0).foldLeft(lit(true))(_ && _)
     val shouldOk =
       if (mTerms.nonEmpty) lit(true)
       else sTerms.map(t => tf(t) > 0.0).reduce(_ || _)
     rankTail(grouped
-      .where(mustOk && col("_hasnot") === 0 && shouldOk)
-      .select(col("doc_id"), round(termScores(scoring, ir.stats(scoring), params,
-        tf, col("dl")), roundTo).as("score")), k)
+      .where(mustOk && col(s"_tf${scoring.length}") === 0.0 && shouldOk)
+      .select(col("doc_id"), round(termScores(scoring, pivotIdf(scoring), ir.avgdl,
+        params, tf, col("dl")), roundTo).as("score")), k)
   }
 
   // ------------------------------------------------------------------
@@ -2769,9 +2846,9 @@ object Search {
     * whose inner must-terms might partially match); mustNot never
     * scores. Match rule per node: all must ∧ none mustNot ∧ (should
     * optional when must present, else ≥ 1 should). */
-  private def boolPredScore(node: BoolNode, stats: CorpusStats,
-                            params: Bm25Params, tfOf: String => Column,
-                            dl: Column): (Column, Column) = {
+  private def boolPredScore(node: BoolNode, idfOf: String => Column,
+                            avgdl: Double, params: Bm25Params,
+                            tfOf: String => Column, dl: Column): (Column, Column) = {
     def pred(n: BoolNode): Column = n match {
       case BoolNode.Term(text, _) =>
         termsOf(text).map(t => tfOf(t) > lit(0.0)).reduce(_ || _)
@@ -2785,7 +2862,8 @@ object Search {
     }
     def score(n: BoolNode): Column = n match {
       case BoolNode.Term(text, boost) =>
-        lit(boost) * termScores(termsOf(text).distinct.sorted, stats, params, tfOf, dl)
+        lit(boost) * termScores(termsOf(text).distinct.sorted, idfOf, avgdl, params,
+          tfOf, dl)
       case BoolNode.Bool(m, s, _, boost) =>
         val parts = m.map(score) ++
           s.map(c => when(pred(c), score(c)).otherwise(lit(0.0)))
@@ -2810,7 +2888,8 @@ object Search {
       "bool tree needs a guaranteed positive (must/should) clause — a " +
         "purely negative query matches the whole corpus")
     val s = scanScore(docs, textCol, scoringTermsOf(node).distinct.sorted, params)
-    val (pred, score) = boolPredScore(node, s.stats, params, s.tf, s.dl)
+    val (pred, score) = boolPredScore(node, idfLit(s.stats), s.stats.avgdl, params,
+      s.tf, s.dl)
     rankTail(docs.where(pred)
       .select(col(idCol).as("doc_id"), round(score, roundTo).as("score")), k)
   }
@@ -2829,12 +2908,11 @@ object Search {
     require(hasPositiveClause(node),
       "bool tree needs a guaranteed positive (must/should) clause — a " +
         "purely negative query matches the whole corpus")
-    val scoring = scoringTermsOf(node).distinct.sorted
     val readTerms = allTermsOf(node).distinct.sorted
-    val ir = indexRead(spark, dir, readTerms, scoring.map(termDf))
-    val (pred, score) = boolPredScore(node, ir.stats(scoring), params,
+    val ir = indexRead(spark, dir, readTerms)
+    val (pred, score) = boolPredScore(node, pivotIdf(readTerms), ir.avgdl, params,
       pivotCol("_tf", readTerms), col("dl"))
-    rankTail(tfPivot(ir.pruned, readTerms.map(isTerm)).where(pred)
+    rankTail(tfPivot(ir, readTerms.map(isTerm)).where(pred)
       .select(col("doc_id"), round(score, roundTo).as("score")), k)
   }
 
@@ -3260,16 +3338,19 @@ object Search {
   /** The scan MLT: ONE stats pass gives N, Σdl and every candidate's df;
     * the selected terms (a subset of the candidates) then score with
     * those same stats through [[bm25TopKWith]] — bit-identical to a
-    * fresh stats pass over the selected terms, one corpus pass fewer. */
+    * fresh stats pass over the selected terms, one corpus pass fewer.
+    * `exclude` drops one id from the ranked docs only (the stats still
+    * count it). */
   private def moreLikeThisScan(docs: DataFrame, idCol: String, textCol: String,
                                likeText: String, k: Int, maxQueryTerms: Int,
                                minTermFreq: Int, minDocFreq: Int,
-                               params: Bm25Params, roundTo: Int): DataFrame = {
+                               params: Bm25Params, roundTo: Int,
+                               exclude: Option[Any] = None): DataFrame = {
     val (tf, cands) = likeTerms(likeText, minTermFreq)
     val stats = corpusStats(docs, textCol, cands)
     val selected = selectMltTerms(tf, stats.df, stats.nDocs, maxQueryTerms,
       minTermFreq, minDocFreq)
-    bm25TopKWith(docs, idCol,
+    bm25TopKWith(exclude.fold(docs)(id => docs.where(col(idCol) =!= lit(id))), idCol,
       scanScore(docs, textCol, selected, params, stats = Some(stats)), k, roundTo)
   }
 
@@ -3281,8 +3362,8 @@ object Search {
    * smaller term — then rank the corpus with [[bm25TopK]]'s law verbatim
    * over the selected terms. Corpus stats cover the WHOLE corpus (the
    * like doc included — ES index-stats semantics); the like doc itself is
-   * EXCLUDED from the hits (the ES like-by-id convention), with ranks
-   * reassigned over the surviving page.
+   * EXCLUDED from the hits (the ES like-by-id convention) before the one
+   * [[rankTail]] cut, so ranks run over the surviving docs.
    *
    * Scale shape: one id-pushdown fetch of the like doc (a single text to
    * the driver), one bounded stats aggregate over the candidate terms,
@@ -3297,17 +3378,9 @@ object Search {
       .select(col(textCol)).head(2)
     require(likeRows.length == 1,
       s"like doc $likeId: expected exactly one row, got ${likeRows.length}")
-    // top-(k+1) then drop the like doc: the remaining prefix of k rows IS
-    // the top-k over "everyone else" whether or not the like doc ranked
-    val page = moreLikeThisScan(docs, idCol, textCol,
-        Option(likeRows(0).getString(0)).getOrElse(""), k + 1, maxQueryTerms,
-        minTermFreq, minDocFreq, params, roundTo)
-      .filter(col("doc_id") =!= lit(likeId))
-      .orderBy("rank").limit(k)
-    page.select(col("doc_id"),
-      row_number().over(Window.orderBy(col("score").desc,
-        col("doc_id").asc)).as("rank"),
-      col("score"))
+    moreLikeThisScan(docs, idCol, textCol,
+      Option(likeRows(0).getString(0)).getOrElse(""), k, maxQueryTerms,
+      minTermFreq, minDocFreq, params, roundTo, exclude = Some(likeId))
   }
 
   /**
@@ -3326,8 +3399,9 @@ object Search {
   /**
    * more_like_this from a persisted postings index — the
    * [[moreLikeThisTextTopK]] semantics answered from a standing index:
-   * candidate df reads the TERM DICTIONARY (a candidate-filtered
-   * vocabulary aggregate — never the corpus), N from the exact stats
+   * candidate df reads the TERM DICTIONARY (one map-only read of the
+   * candidates' rows, summed on the driver — never the corpus), N from
+   * the exact stats
    * record, ranking via [[indexedBm25TopK]]'s pruned `tb=` buckets.
    * Bit-identical to the scan form over the indexed corpus right after a
    * build or compact; through appends/tombstones the dictionary df is
@@ -3342,8 +3416,7 @@ object Search {
                               params: Bm25Params = Bm25Params(),
                               roundTo: Int = 4): DataFrame = {
     val (tf, cands) = likeTerms(likeText, minTermFreq)
-    val dfMap = termDictionary(spark, dir, Some(inSet(col("term"), cands)))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val dfMap = dictionaryMatches(spark, dir, Seq(inSet(col("term"), cands))).head.toMap
     val indexStats = readStats(spark, dir)
     val selected = selectMltTerms(tf, dfMap, indexStats._1, maxQueryTerms,
       minTermFreq, minDocFreq)

@@ -68,11 +68,14 @@ object StreamingEmbedDedup {
 
   case class BucketedVec(bucket: String, vec_id: Long, vec: Array[Double])
   case class VecMatch(vec_id: Long, matched_id: Long, cosine: Double)
-  private case class VMember(vec_id: Long, vec: Array[Double])
+  // the state classes are package-visible, not private: Spark's generated
+  // state-encoder code constructs and reads them, and cannot reach a
+  // private nested class
+  private[streaming] case class VMember(vec_id: Long, vec: Array[Double])
 
   /** Bucketed vector carrying its full `maxBits` signature (adaptive path). */
   case class SigVec(bucket: String, vec_id: Long, vec: Array[Double], sig: Long)
-  private case class SMember(vec_id: Long, vec: Array[Double], sig: Long)
+  private[streaming] case class SMember(vec_id: Long, vec: Array[Double], sig: Long)
 
   /** Auto keyBits targets ~this many members per grouping key at the
     * capacity horizon — bounds the per-key RocksDB list read, while the

@@ -35,7 +35,9 @@ object StreamingSemDedup {
 
   case class LabeledVec(cluster_id: Int, vec_id: Long, vec: Array[Double])
   case class KeptVec(vec_id: Long, cluster_id: Int)
-  private case class SMember(vec_id: Long, vec: Array[Double])
+  // package-visible, not private: Spark's generated state-encoder code
+  // constructs and reads it, and cannot reach a private nested class
+  private[streaming] case class SMember(vec_id: Long, vec: Array[Double])
 
   class SemDedupProcessor(threshold: Double, maxCluster: Int)
     extends StatefulProcessor[Int, LabeledVec, KeptVec] {

@@ -2669,7 +2669,9 @@ class SearchSpec extends SparkSpec {
   test("indexed bm25, phrase, phrase-prefix, wildcard and more-like-this " +
       "submit a pinned number of Spark jobs per query") {
     // the serving loop's job count, planning included: a stats or df pass
-    // that moves to (or off) the query path changes it
+    // that moves to (or off) the query path changes it. df counts inside
+    // the scoring plan (no df job of its own) and the term-dictionary
+    // expansion is one map-only job (no dictionary shuffle)
     val dir = java.nio.file.Files.createTempDirectory("graft-pinjobs").toString
     Search.buildPostingsIndex(pinCorpus, "doc_id", "text", dir, buckets = 8)
     val likeText = pinCorpus.filter(col("doc_id") === 7L).head().getString(1)
@@ -2686,8 +2688,8 @@ class SearchSpec extends SparkSpec {
       query().collect() // warm the footer and listing caches
       kind -> jobsSubmitted(query().collect()).size
     }
-    assert(got.toMap === Map("bm25" -> 4, "phrase" -> 4, "phrase_prefix" -> 7,
-      "wildcard" -> 7, "mlt" -> 6))
+    assert(got.toMap === Map("bm25" -> 4, "phrase" -> 4, "phrase_prefix" -> 5,
+      "wildcard" -> 5, "mlt" -> 5))
   }
 
   test("every scan query kind refuses an empty corpus with 'empty corpus'") {
@@ -2749,5 +2751,127 @@ class SearchSpec extends SparkSpec {
     mlt() // warm
     val jobs = jobsSubmitted(mlt())
     assert(jobs.size === 2, jobs.mkString(", "))
+  }
+
+  test("in-plan idf is bit-equal to idfOf: every df in 0..3000 at N = 3000, " +
+      "and a sample at N = 5e7") {
+    // Spark's own log is StrictMath.log, which differs from idfOf's
+    // math.log in the last ulp for some dfs: the in-plan form must be the
+    // driver's function, evaluated in a Spark projection
+    def mismatches(n: Long, dfs: Seq[Long]): Seq[Long] =
+      dfs.toDF("df").select(col("df"), Search.idfCol(n, col("df"))).collect()
+        .collect { case r if java.lang.Double.doubleToRawLongBits(r.getDouble(1)) !=
+          java.lang.Double.doubleToRawLongBits(Search.idfOf(n, r.getLong(0))) => r.getLong(0) }
+    assert(mismatches(3000L, 0L to 3000L) === Nil)
+    val big = 50000000L
+    val rnd = new scala.util.Random(5)
+    val sample = (0L to 2000L) ++ Seq.fill(3000)(rnd.nextLong(big + 1)) ++
+      ((big - 2000L) to big)
+    assert(mismatches(big, sample) === Nil)
+  }
+
+  /** Every node of an executed plan, AQE query stages unwrapped; a reused
+    * exchange is listed but not descended (its subtree ran once, where it
+    * first appears). */
+  private def planNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    p +: (p match {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+      case q: QueryStageExec => planNodes(q.plan)
+      case _: ReusedExchangeExec => Nil
+      case o => o.children.flatMap(planNodes)
+    })
+  }
+
+  test("every indexed single-query kind scans its pruned postings once: one " +
+      "postings FileScan per index, the df side on a ReusedExchange, only " +
+      "partial counts through a SinglePartition exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.{FileSourceScanExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    import Search.BoolNode._
+    val root = java.nio.file.Files.createTempDirectory("graft-onescan").toString
+    val dir = s"$root/text"
+    Search.buildPostingsIndex(pinCorpus, "doc_id", "text", dir, buckets = 8)
+    Search.buildPostingsIndex(pinCorpus, "doc_id", "title", s"$root/title", buckets = 8)
+    val likeText = pinCorpus.filter(col("doc_id") === 7L).head().getString(1)
+    val kinds = Seq[(String, Int, () => org.apache.spark.sql.DataFrame)](
+      ("bm25", 1, () => Search.indexedBm25TopK(spark, dir, "spark window merge", 10)),
+      ("bm25 msm", 1, () => Search.indexedBm25TopK(spark, dir, "spark window merge", 10,
+        minShouldMatch = 2)),
+      ("fuzzy", 1, () => Search.indexedFuzzyTopK(spark, dir, "spork windw", 10)),
+      ("prefix", 1, () => Search.indexedPrefixTopK(spark, dir, "win mer", 10)),
+      ("wildcard", 1, () => Search.indexedWildcardTopK(spark, dir, "w?nd* sp*", 10)),
+      ("regexp", 1, () => Search.indexedRegexpTopK(spark, dir, "sp[ao]rk", 10)),
+      ("multi-field", 2, () => Search.indexedMultiFieldTopK(spark,
+        Seq((dir, 1.0), (s"$root/title", 2.0)), "spark merge", 10)),
+      ("phrase", 1, () => Search.indexedPhraseTopK(spark, dir, "spark window", 10)),
+      ("phrase slop", 1, () => Search.indexedPhraseTopK(spark, dir, "spark window", 10,
+        slop = 1)),
+      ("span near", 1, () => Search.indexedSpanNearTopK(spark, dir, Seq("spark", "merge"),
+        2, 10)),
+      ("span first", 1, () => Search.indexedSpanFirstTopK(spark, dir, "merge", 3, 10)),
+      ("span or", 1, () => Search.indexedSpanOrNearTopK(spark, dir,
+        Seq(Seq("spark"), Seq("window", "node")), 1, 10)),
+      ("span not", 1, () => Search.indexedSpanNotTopK(spark, dir, Seq("spark"), 0,
+        Seq("node"), k = 10)),
+      ("phrase-prefix", 1, () => Search.indexedPhrasePrefixTopK(spark, dir, "spark win", 10)),
+      ("bool", 1, () => Search.indexedBoolTopK(spark, dir, "spark", "window", "node")),
+      ("bool-tree", 1, () => Search.indexedBoolQueryTopK(spark, dir,
+        Bool(must = Seq(Term("spark")), should = Seq(Term("window", 2.0)),
+          mustNot = Seq(Term("node"))), 10)),
+      ("mlt", 1, () => Search.indexedMoreLikeThisTopK(spark, dir, likeText, 10,
+        minTermFreq = 1, minDocFreq = 2)))
+    val wrong = kinds.flatMap { case (kind, indexes, query) =>
+      val df = query()
+      df.collect()
+      val nodes = planNodes(df.queryExecution.executedPlan)
+      val scans = nodes.count {
+        case f: FileSourceScanExec => f.relation.location.rootPaths.exists(_.toString.contains("/postings"))
+        case _ => false
+      }
+      val reused = nodes.count(_.isInstanceOf[ReusedExchangeExec])
+      // a SinglePartition exchange carries one partial count row per task:
+      // its child is an aggregate with no grouping key
+      val funnels = nodes.collect {
+        case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition => e.child
+      }.map {
+        case w: WholeStageCodegenExec => w.child
+        case o => o
+      }.filterNot {
+        case a: BaseAggregateExec => a.groupingExpressions.isEmpty
+        case _ => false
+      }
+      Seq(
+        if (scans != indexes) Some(s"$kind: $scans postings scans, expected $indexes") else None,
+        if (reused < indexes) Some(s"$kind: $reused reused exchanges") else None,
+        if (funnels.nonEmpty) Some(s"$kind: rows funnel into one partition through " +
+          funnels.map(_.nodeName).mkString(", ")) else None).flatten
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
+
+  test("a second indexed query of the same shape compiles no new classes: " +
+      "bm25, phrase and phrase-prefix read idf as data") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = java.nio.file.Files.createTempDirectory("graft-codegen").toString
+    Search.buildPostingsIndex(pinCorpus, "doc_id", "text", dir, buckets = 8)
+    val shapes = Seq(
+      "bm25" -> ((q: String) => Search.indexedBm25TopK(spark, dir, q, 10),
+        "spark window merge", "node alpha query"),
+      "phrase" -> ((q: String) => Search.indexedPhraseTopK(spark, dir, q, 10),
+        "spark window", "merge node"),
+      "phrase-prefix" -> ((q: String) => Search.indexedPhrasePrefixTopK(spark, dir, q, 10),
+        "spark win", "node win"))
+    val compiled = shapes.map { case (kind, (query, first, second)) =>
+      query(first).collect()
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      query(second).collect()
+      kind -> (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
+    }
+    assert(compiled.forall(_._2 == 0L), compiled.mkString(", "))
   }
 }

@@ -46,6 +46,34 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     java.nio.file.Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
   }
 
+  /** The ERROR-level log messages of this JVM (driver and local-mode
+    * executors alike) while `body` runs, seen by an appender on the root
+    * logger. */
+  def errorsLogged(body: => Any): Seq[String] = {
+    import org.apache.logging.log4j.Level
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-spec-errors", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = org.apache.logging.log4j.LogManager.getContext(false)
+      .asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, Level.ERROR, null)
+    ctx.updateLoggers()
+    try body
+    finally {
+      root.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
   /** The Spark jobs submitted while `body` runs, each named by its last
     * stage (`count at Similarity.scala:2338`), seen by a listener between
     * two sentinel jobs (listener delivery is asynchronous; the sentinels

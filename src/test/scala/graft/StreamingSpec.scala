@@ -349,7 +349,8 @@ class StreamingSpec extends SparkSpec {
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    // the state encoder's generated code must compile (see the AUTO test)
+    try assert(!errorsLogged {
       val dim = 16
       val rnd = new scala.util.Random(11)
       val centers = (0 until 20).map(_ => Array.fill(dim)(rnd.nextGaussian()))
@@ -382,7 +383,8 @@ class StreamingSpec extends SparkSpec {
         .select("vec_id", "matched_id").distinct().as[(Long, Long)].collect().toSet
       assert(all === Set((103L, 3L), (107L, 7L), (300L, 3L), (300L, 103L)), s"got $all")
       q.stop()
-    } finally {
+    }.exists(_.contains("Failed to compile")))
+    finally {
       prev match {
         case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
         case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -398,7 +400,8 @@ class StreamingSpec extends SparkSpec {
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    // the state encoder's generated code must compile (see the AUTO test)
+    try assert(!errorsLogged {
       val e = sf("sf0.001", "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>")
           .as("embedding"))
@@ -428,7 +431,8 @@ class StreamingSpec extends SparkSpec {
       assert(got.size < rows.length,
         "sf0.001 embeddings should contain semantic dups")
       q.stop()
-    } finally {
+    }.exists(_.contains("Failed to compile")))
+    finally {
       prev match {
         case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
         case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -590,7 +594,10 @@ class StreamingSpec extends SparkSpec {
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    // the state encoder's generated code must compile: a state class the
+    // generated Java cannot reach logs "Failed to compile" for its state
+    // reads and writes, which fall back to an interpreted projection
+    try assert(!errorsLogged {
       val dim = 8
       val rnd = new scala.util.Random(23)
       def fresh() = Array.fill(dim)(rnd.nextGaussian()).toSeq
@@ -647,7 +654,8 @@ class StreamingSpec extends SparkSpec {
         s"second-half comparisons $secondHalf vs first-half $firstHalf — " +
           "per-row cost is scaling with accumulated state")
       q.stop()
-    } finally {
+    }.exists(_.contains("Failed to compile")))
+    finally {
       prev match {
         case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
         case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
