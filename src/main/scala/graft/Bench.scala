@@ -436,10 +436,6 @@ object Bench {
       new ProcessBuilder("sync").inheritIO().start().waitFor()
       Thread.sleep(2000)
     } catch { case _: Throwable => () }
-    def med3q(f: => Unit): Double = {
-      val secs = (1 to 3).map { _ => quiesce(); time(f) }
-      secs.sorted.apply(1)
-    }
     import org.apache.spark.sql.functions.udf
     val dim1m = 64
     // clustered ANN corpus: cluster = id % 20k (50 rows/cluster), center

@@ -69,16 +69,6 @@ object BenchAB {
                 i -> concat('w', pmod(xxhash64(id, i), 100))), ' ')""")
         .as("text")).repartition(64).cache()
 
-    // the neardup_1m corpus, verbatim (planted near-pairs)
-    def neardupDocs(planted: Int) = {
-      val base = spark.range(1000000L).select(col("id").as("doc_id"),
-        expr("""array_join(transform(
-                  sequence(1, 40),
-                  i -> concat('t', pmod(xxhash64(id, i), 200000))), ' ')""")
-          .as("text"))
-      base.cache()
-    }
-
     val secs = op match {
       case "postings1m" | "postings1m_nopos" =>
         val docs = bm25Docs; docs.count()

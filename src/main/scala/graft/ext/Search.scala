@@ -1006,18 +1006,22 @@ object Search {
     * [[compactPostingsIndex]]'s stats rewrite and its `deletes/` removal:
     * [[readStats]] subtracts only the UN-folded part of the pending
     * delete mass, so base-net-plus-still-present-deletes can never
-    * double-subtract (see the epoch rule there). */
+    * double-subtract (see the epoch rule there). Published through
+    * [[graft.sink.FsAtomic.replaceDir]]: nothing can rebuild the record
+    * exactly (N counts empty docs), so a crash mid-write must leave the
+    * previous one. */
   private def writeStats(spark: org.apache.spark.sql.SparkSession, dir: String,
                          nDocs: Long, totalTokens: Long, buckets: Int,
                          tombEpoch: Long = -1L, tombDocs: Long = 0L,
                          tombTokens: Long = 0L,
                          foldedBatch: Long = -1L): Unit = {
     import spark.implicits._
-    Seq((nDocs, totalTokens, buckets, tombEpoch, tombDocs, tombTokens,
+    val rec = Seq((nDocs, totalTokens, buckets, tombEpoch, tombDocs, tombTokens,
         foldedBatch))
       .toDF("n_docs", "total_tokens", "buckets",
         "tomb_epoch", "tomb_docs", "tomb_tokens", "folded_batch")
-      .write.mode("overwrite").parquet(s"$dir/stats")
+    graft.sink.FsAtomic.replaceDir(fsOf(spark, dir),
+      new org.apache.hadoop.fs.Path(s"$dir/stats"))(p => rec.write.parquet(p.toString))
   }
 
   /** The highest streaming-delta batch id a completed compaction already
@@ -1043,8 +1047,11 @@ object Search {
       throw new IllegalStateException(s"no record in $path"))
 
   private def statsRecord(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): org.apache.spark.sql.Row =
+                          dir: String): org.apache.spark.sql.Row = {
+    graft.sink.FsAtomic.heal(fsOf(spark, dir),
+      new org.apache.hadoop.fs.Path(s"$dir/stats"))
     record(spark, s"$dir/stats")
+  }
 
   /** Full base record incl. the folded-tombstone triple (absent on
     * pre-tombstone indexes → (-1, 0, 0): no generation folded yet). */
@@ -1090,11 +1097,11 @@ object Search {
                                dir: String): (Long, Long, Int) = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    // readers heal an interrupted tombstone swap too: without this, a
-    // crash between the delete path's two renames would serve the index
-    // with ZERO tombstones (takedowns resurface) until some maintenance
-    // op happened to run. Two existence probes in the common case.
-    healTombstoneSwap(fs, dir)
+    // readers heal an interrupted tombstone swap too (statsRecord heals
+    // the stats record's): without this, a crash inside the delete path's
+    // swap would serve the index with ZERO tombstones (takedowns
+    // resurface) until some maintenance op happened to run
+    healDeletes(fs, dir)
     val base = statsRecord(spark, dir)
     val (n0, t0, buckets, fe, fd, ft) = baseStatsOf(base)
     val bs = new org.apache.hadoop.fs.Path(s"$dir/batch_stats")
@@ -1557,33 +1564,8 @@ object Search {
   // without a rebuild
   // ------------------------------------------------------------------
 
-  /** Heal an interrupted tombstone-set swap: [[deleteFromPostingsIndex]]
-    * stages the new complete set and swaps directories (rename old aside,
-    * rename staging in) — a crash between the two renames leaves the set
-    * aside under `deletes-old`. Maintenance entry points restore it
-    * before doing anything else, so accumulated tombstones can never be
-    * silently lost. */
-  private def healTombstoneSwap(fs: org.apache.hadoop.fs.FileSystem,
-                                dir: String): Unit = {
-    val live = new org.apache.hadoop.fs.Path(s"$dir/deletes")
-    val aside = new org.apache.hadoop.fs.Path(s"$dir/deletes-old")
-    if (!fs.exists(live)) {
-      // heal runs on the QUERY path too (readStats): two concurrent
-      // readers can race the aside->live rename. A failed rename whose
-      // target now exists means the other healer won — proceed; only a
-      // failure with live STILL absent is a real corruption.
-      if (fs.exists(aside) && !fs.rename(aside, live) && !fs.exists(live))
-        throw new IllegalStateException(
-          s"could not restore interrupted tombstone swap at $aside")
-    } else if (fs.exists(aside)) {
-      // the swap COMPLETED (live present): the aside copy is garbage from
-      // a crash after the second rename — remove it, or a LATER heal
-      // (after compaction retires live) would resurrect the stale set and
-      // subtract already-folded mass with the wrong sign
-      fs.delete(aside, true)
-      ()
-    }
-  }
+  private def healDeletes(fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit =
+    graft.sink.FsAtomic.heal(fs, new org.apache.hadoop.fs.Path(s"$dir/deletes"))
 
   /** The index's tombstone set `(doc_id)`, if any — bounded by the
     * [[deleteFromPostingsIndex]] contract (a delete list is takedown- or
@@ -1615,10 +1597,9 @@ object Search {
    * move together (ids without totals = queries exclude postings but
    * over-count N forever, and the idempotence anti-join would block the
    * retry from healing it). The new COMPLETE set (old ∪ new ids + updated
-   * totals + generation epoch) is staged and swapped in as one directory
-   * rename pair; an interrupted swap is restored by [[healTombstoneSwap]]
-   * at the next maintenance call. Every state is therefore either the
-   * old complete set or the new complete set.
+   * totals + generation epoch) is staged and swapped in by
+   * [[graft.sink.FsAtomic.replaceDir]], so every state is either the old
+   * complete set or the new complete set.
    *
    * Contract: `ids` must be ids that were actually indexed (the
    * append-path discipline); the set stays bounded (it broadcasts into
@@ -1633,7 +1614,7 @@ object Search {
                               idCol: String = "doc_id"): Unit = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    healTombstoneSwap(fs, dir)
+    healDeletes(fs, dir)
     val newIds0 = ids.select(col(idCol).as("doc_id")).distinct()
     val old = postingsTombstones(spark, dir)
     val newIds = old
@@ -1653,25 +1634,15 @@ object Search {
       val (_, _, _, fe, _, _) = readBaseStatsFull(spark, dir)
       (0L, 0L, fe + 1)
     }
-    // stage the complete new set, then swap it in atomically
-    val staging = new org.apache.hadoop.fs.Path(s"$dir/deletes-staging")
-    val live = new org.apache.hadoop.fs.Path(s"$dir/deletes")
-    val aside = new org.apache.hadoop.fs.Path(s"$dir/deletes-old")
-    fs.delete(staging, true); fs.delete(aside, true)
-    old.map(_.unionByName(newIds)).getOrElse(newIds)
-      .write.parquet(s"$staging/ids")
     import spark.implicits._
-    Seq((d0 + nNew, t0 + tokensRemoved, epoch))
-      .toDF("n_docs_removed", "tokens_removed", "epoch")
-      .write.parquet(s"$staging/stats")
-    if (fs.exists(live) && !fs.rename(live, aside))
-      throw new IllegalStateException(s"could not stage $live aside")
-    if (!fs.rename(staging, live)) {
-      if (fs.exists(aside)) fs.rename(aside, live)
-      throw new IllegalStateException(
-        "tombstone swap failed; original set restored")
+    graft.sink.FsAtomic.replaceDir(fs,
+        new org.apache.hadoop.fs.Path(s"$dir/deletes")) { staging =>
+      old.map(_.unionByName(newIds)).getOrElse(newIds)
+        .write.parquet(s"$staging/ids")
+      Seq((d0 + nNew, t0 + tokensRemoved, epoch))
+        .toDF("n_docs_removed", "tokens_removed", "epoch")
+        .write.parquet(s"$staging/stats")
     }
-    fs.delete(aside, true)
   }
 
   /** The pending tombstone record: (docs removed, tokens removed,
@@ -2918,11 +2889,10 @@ object Search {
 
   /**
    * Compact a postings index: append/streaming maintenance leaves one
-   * file per (bucket, batch) — rewrite back to ~one file per bucket with
-   * the [[Similarity.compactIndex]] verify-then-atomic-swap discipline
-   * (full row-count check on the rewritten tree; the live `postings/`
-   * swaps only after it passes, and a failed swap restores the original).
-   * The streaming maintainer's `batch_stats/` deltas fold into the base
+   * file per (bucket, batch) — rewrite back to ~one file per bucket
+   * through [[graft.sink.FsAtomic.replaceDir]], behind a full row-count
+   * check on the rewritten tree. The streaming maintainer's
+   * `batch_stats/` deltas fold into the base
    * stats record afterwards, so a long-lived stream's per-batch rows
    * don't accumulate into query-time reads. Offline maintenance op, like
    * `ann-compact`: not concurrent with commits. Returns (files before,
@@ -2931,19 +2901,10 @@ object Search {
                            dir: String): (Long, Long) = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    healTombstoneSwap(fs, dir)
+    healDeletes(fs, dir)
     val post = new org.apache.hadoop.fs.Path(s"$dir/postings")
-    val newDir = new org.apache.hadoop.fs.Path(s"$dir/postings-compacting")
-    val oldDir = new org.apache.hadoop.fs.Path(s"$dir/postings-precompact")
-    fs.delete(newDir, true); fs.delete(oldDir, true)
-    def countFiles(p: org.apache.hadoop.fs.Path): Long =
-      if (!fs.exists(p)) 0L
-      else fs.listStatus(p).map { st =>
-        if (st.isDirectory) countFiles(st.getPath)
-        else if (st.getPath.getName.startsWith("_") ||
-          st.getPath.getName.startsWith(".")) 0L else 1L
-      }.sum
-    val before = countFiles(post)
+    graft.sink.FsAtomic.heal(fs, post)
+    val before = graft.sink.ShardState.countDataFiles(fs, post)
     // effective stats BEFORE touching anything (base + streaming deltas −
     // pending tombstones: readStats already nets the delete mass out, so
     // the post-compaction base record simply inherits it)
@@ -2955,21 +2916,13 @@ object Search {
       .map(d => data0.join(broadcast(d), Seq("doc_id"), "left_anti"))
       .getOrElse(data0)
     val total = data.count()
-    data.repartition(buckets, col("tb"))
-      .write.mode("overwrite").partitionBy("tb").parquet(newDir.toString)
-    val rewritten = spark.read.parquet(newDir.toString).count()
-    if (rewritten != total) {
-      fs.delete(newDir, true)
-      throw new IllegalStateException(s"postings compaction aborted: " +
-        s"rewrote $rewritten of $total rows; postings left intact")
+    graft.sink.FsAtomic.replaceDir(fs, post) { staging =>
+      data.repartition(buckets, col("tb"))
+        .write.partitionBy("tb").parquet(staging.toString)
+      val rewritten = spark.read.parquet(staging.toString).count()
+      if (rewritten != total) throw new IllegalStateException(
+        s"postings compaction aborted: rewrote $rewritten of $total rows; postings left intact")
     }
-    if (!fs.rename(post, oldDir))
-      throw new IllegalStateException(s"could not stage $post aside")
-    if (!fs.rename(newDir, post)) {
-      fs.rename(oldDir, post)
-      throw new IllegalStateException("swap failed; original postings restored")
-    }
-    fs.delete(oldDir, true)
     // fold the streaming deltas AND the tombstone mass into the base
     // record, then retire both (tombstoned rows are physically gone now).
     // The base record remembers WHICH tombstone generation it folded
@@ -3002,33 +2955,23 @@ object Search {
         val (_, _, _, fe, fd, ft) = readBaseStatsFull(spark, dir)
         writeStats(spark, dir, n, t, buckets, fe, fd, ft, foldedBatch)
     }
+    // (healDeletes above left no deletes-old that a later heal could
+    // resurrect with already-folded mass)
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/batch_stats"), true)
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/deletes"), true)
-    // any swap leftovers retire with the set they belonged to — a stale
-    // deletes-old surviving this point could be resurrected by a later
-    // heal and subtract already-folded mass
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/deletes-old"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/deletes-staging"), true)
     // rewrite the term dictionary EXACTLY from the compacted postings —
     // retiring append/stream duplicates and tombstoned-only terms, and
     // CREATING terms/ on a pre-dictionary index (the documented upgrade
-    // path for relaxed queries). Staged + renamed, not overwritten in
-    // place: a crash mid-overwrite could leave a PARTIAL dictionary that
-    // silently under-expands; an interrupted rename leaves terms/ absent,
-    // which relaxed queries refuse loudly. (A crash BEFORE this point
-    // leaves the old dictionary — a superset of the live vocabulary,
-    // still correct for expansion; see [[termDictionary]].)
-    val termsStaging = new org.apache.hadoop.fs.Path(s"$dir/terms-compacting")
-    fs.delete(termsStaging, true)
-    spark.read.parquet(post.toString)
-      .groupBy("term").agg(count(lit(1)).as("df"))
-      .write.parquet(termsStaging.toString)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/terms"), true)
-    if (!fs.rename(termsStaging, new org.apache.hadoop.fs.Path(s"$dir/terms")))
-      throw new IllegalStateException(
-        s"could not install the rebuilt term dictionary at $dir/terms — " +
-          "relaxed queries will refuse until a search-compact recreates it")
-    (before, countFiles(post))
+    // path for relaxed queries). (A crash BEFORE this point leaves the old
+    // dictionary — a superset of the live vocabulary, still correct for
+    // expansion; see [[termDictionary]].)
+    graft.sink.FsAtomic.replaceDir(fs,
+        new org.apache.hadoop.fs.Path(s"$dir/terms")) { staging =>
+      spark.read.parquet(post.toString)
+        .groupBy("term").agg(count(lit(1)).as("df"))
+        .write.parquet(staging.toString)
+    }
+    (before, graft.sink.ShardState.countDataFiles(fs, post))
   }
 
   // ------------------------------------------------------------------

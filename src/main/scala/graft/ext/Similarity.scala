@@ -1705,10 +1705,9 @@ object Similarity {
    * Compact a [[buildIndex]] directory: append/streaming maintenance
    * accumulates one file per (cell, batch); this rewrites each cell back
    * to ~`cellSalt` files (default one — raise it when a cell outgrows a
-   * single task, see [[saltedCellKey]]) with the same atomic-swap
-   * discipline as the bundle
-   * compactor (write-new / rename-old / rename-new / delete-old, doc-count
-   * integrity gate — a failed rewrite leaves the original cells intact).
+   * single task, see [[saltedCellKey]]) through
+   * [[graft.sink.FsAtomic.replaceDir]], behind a row-count integrity gate
+   * (a failed rewrite leaves the original cells intact).
    * Returns (filesBefore, filesAfter).
    */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
@@ -1716,17 +1715,8 @@ object Similarity {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
     val cells = new org.apache.hadoop.fs.Path(s"$dir/cells")
-    val newDir = new org.apache.hadoop.fs.Path(s"$dir/cells-compacting")
-    val oldDir = new org.apache.hadoop.fs.Path(s"$dir/cells-precompact")
-    fs.delete(newDir, true); fs.delete(oldDir, true)
-    def countFiles(p: org.apache.hadoop.fs.Path): Long =
-      if (!fs.exists(p)) 0L
-      else fs.listStatus(p).map { st =>
-        if (st.isDirectory) countFiles(st.getPath)
-        else if (st.getPath.getName.startsWith("_") ||
-          st.getPath.getName.startsWith(".")) 0L else 1L
-      }.sum
-    val before = countFiles(cells)
+    graft.sink.FsAtomic.heal(fs, cells)
+    val before = graft.sink.ShardState.countDataFiles(fs, cells)
     // physical removal of tombstoned rows rides the rewrite ([[deleteFromIndex]])
     val data0 = spark.read.parquet(cells.toString)
     val data = indexTombstones(spark, dir)
@@ -1736,24 +1726,16 @@ object Similarity {
     val nlist =
       if (cellSalt <= 1) 0
       else spark.read.parquet(s"$dir/centroids").count().toInt
-    data.transform(saltedCellRepartition(_, cellSalt, nlist))
-      .write.mode("overwrite").partitionBy("cent_id").parquet(newDir.toString)
-    val rewritten = spark.read.parquet(newDir.toString).count()
-    if (rewritten != total) {
-      fs.delete(newDir, true)
-      throw new IllegalStateException(
+    graft.sink.FsAtomic.replaceDir(fs, cells) { staging =>
+      data.transform(saltedCellRepartition(_, cellSalt, nlist))
+        .write.partitionBy("cent_id").parquet(staging.toString)
+      val rewritten = spark.read.parquet(staging.toString).count()
+      if (rewritten != total) throw new IllegalStateException(
         s"index compaction aborted: rewrote $rewritten of $total rows; cells left intact")
     }
-    if (!fs.rename(cells, oldDir))
-      throw new IllegalStateException(s"could not stage $cells aside")
-    if (!fs.rename(newDir, cells)) {
-      fs.rename(oldDir, cells)
-      throw new IllegalStateException("swap failed; original cells restored")
-    }
-    fs.delete(oldDir, true)
     // tombstoned rows are physically gone now — retire the set
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/deletes"), true)
-    (before, countFiles(cells))
+    (before, graft.sink.ShardState.countDataFiles(fs, cells))
   }
 
   /** Index health at build time and now — the rebuild trigger. */

@@ -675,12 +675,8 @@ object CorpusPipeline {
     val stages = rec.putObject("stage_secs")
     st.stageSecs.foreach { case (k, v) =>
       stages.put(k, math.rint(v * 1000) / 1000) }
-    val tmp = new org.apache.hadoop.fs.Path(bundleDir, ".pipeline_stats.json.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(mapper.writerWithDefaultPrettyPrinter().writeValueAsString(rec)
-      .getBytes("UTF-8"))
-    finally out.close()
-    graft.sink.FsAtomic.renameReplace(fs, tmp,
-      new org.apache.hadoop.fs.Path(bundleDir, "pipeline_stats.json"))
+    graft.sink.FsAtomic.publish(fs,
+      new org.apache.hadoop.fs.Path(bundleDir, "pipeline_stats.json"),
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(rec).getBytes("UTF-8"))
   }
 }

@@ -165,18 +165,6 @@ object BundleInstall {
       .sortBy(_.getName)
     if (manifests.isEmpty) return
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    // overwrite-ATOMIC publish: a plain delete+rename leaves a window in
-    // which concurrent resolveAlias/readAlias see no alias file at all —
-    // the reference's alias update has no such gap. Replace semantics
-    // (and the local-scheme .crc sidecar handling) live in
-    // [[FsAtomic.renameReplace]], shared with the multi-bundle manifest
-    // publish.
-    def writeAtomic(target: Path, body: String): Unit = {
-      val tmp = new Path(target.getParent, s".${target.getName}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-      FsAtomic.renameReplace(fs, tmp, target)
-    }
     val entries = manifests.map { mp =>
       val in = fs.open(mp)
       val root = try mapper.readTree(in.readAllBytes()) finally in.close()
@@ -208,8 +196,11 @@ object BundleInstall {
             s"dot): '$a' in bundle $name")
         val rec = mapper.createObjectNode()
         rec.put("bundle", name); rec.put("indexName", idx)
-        writeAtomic(new Path(installDir, s"_aliases/$a"),
-          mapper.writeValueAsString(rec))
+        // overwrite-ATOMIC publish: a plain delete+rename leaves a window
+        // in which concurrent resolveAlias/readAlias see no alias file at
+        // all — the reference's alias update has no such gap
+        FsAtomic.publish(fs, new Path(installDir, s"_aliases/$a"),
+          mapper.writeValueAsBytes(rec))
       }
     }
     val applied = mapper.createArrayNode()
@@ -228,7 +219,7 @@ object BundleInstall {
     }
     val rec = mapper.createObjectNode()
     rec.set[com.fasterxml.jackson.databind.node.ObjectNode]("applied", applied)
-    writeAtomic(marker, mapper.writeValueAsString(rec))
+    FsAtomic.publish(fs, marker, mapper.writeValueAsBytes(rec))
   }
 
   /** Path-segment-safe alias/bundle name: the charset the `_index` guard
@@ -422,11 +413,7 @@ object BundleInstall {
           // generation wins the steal marker; the winner republishes.
           val steal = new Path(bundle, s"_claims/shard_$k.steal.${gen + 1}")
           if (claimIfAbsent(fs, steal, consumerId)) {
-            val tmp = new Path(bundle, s"_claims/.shard_$k.claim.tmp")
-            val out = fs.create(tmp, true)
-            try out.write(claimBody(consumerId, gen + 1).getBytes("UTF-8"))
-            finally out.close()
-            FsAtomic.renameReplace(fs, tmp, claim)
+            FsAtomic.publish(fs, claim, claimBody(consumerId, gen + 1).getBytes("UTF-8"))
             (true, true, gen + 1)
           } else (false, false, 0L)
         case Some(_) => (false, false, 0L) // live owner

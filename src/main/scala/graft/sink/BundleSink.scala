@@ -91,9 +91,10 @@ object BundleSink {
       val ix = IndexFiles.multi(outRoot, idx)
       val perShard = (0 until numShards)
         .map(sh => sh -> counts.getOrElse((idx, sh), 0L)).toMap
-      publishManifest(fs, ix.manifest, BundleManifest.render(idx, typeName,
+      FsAtomic.publish(fs, ix.manifest, BundleManifest.render(idx, typeName,
         ix.workDir, numShards, format, Some(BundleManifest.Completed(codec, perShard,
-          BundleManifest.aliasContract(aliasFor(idx), finalSettings), None))))
+          BundleManifest.aliasContract(aliasFor(idx), finalSettings), None)))
+        .getBytes("UTF-8"))
       // all indices share the single scan's schema -> one inferred mapping
       // serves every index (per-index divergence would need per-index
       // sources, which is the one-job-per-index case, not this one)
@@ -118,7 +119,7 @@ object BundleSink {
     * anything is written: an unsupported pair leaves no `_STARTED` and no
     * `data/` behind. "columnar" is the parquet writer over typed source
     * columns (DocTransform.docsColumnar) instead of one JSON string. */
-  private def codecFor(format: String, compression: Option[String]): String = {
+  private[sink] def codecFor(format: String, compression: Option[String]): String = {
     val (codec, supported) = format match {
       case "json"                 => (compression.getOrElse("gzip"), JsonCodecs)
       case "parquet" | "columnar" => (compression.getOrElse("zstd"), ParquetCodecs)
@@ -262,16 +263,6 @@ object BundleSink {
     try out.write(content.getBytes("UTF-8")) finally out.close()
   }
 
-  /** Publish `content` as `target` through a tmp file and a rename-replace
-    * ([[FsAtomic]]): a concurrent reader sees the old or the new manifest,
-    * never a partial or missing one. */
-  private def publishManifest(fs: FileSystem, target: Path, content: String): Unit = {
-    val tmp = new Path(target.getParent,
-      s".${target.getName}.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    writeFile(fs, tmp, content)
-    FsAtomic.renameReplace(fs, tmp, target)
-  }
-
   /** Publish `manifest` as the index's manifest file, refreshing its
     * shard_state.json first: files and bytes from one listing per shard
     * dir (no data scan), docs from the manifest's counts. */
@@ -279,7 +270,7 @@ object BundleSink {
                            manifest: String): Unit = {
     ix.state.foreach(ShardState.write(fs, _, ShardState.list(fs, ix.data, numShards,
       BundleManifest.parseShardCounts(manifest))))
-    publishManifest(fs, ix.manifest, manifest)
+    FsAtomic.publish(fs, ix.manifest, manifest.getBytes("UTF-8"))
   }
 
   // ===== optimistic manifest concurrency (append CAS chain) =====
@@ -756,9 +747,9 @@ object BundleSink {
     // a full rewrite resets manifest authority to manifest.json: any append
     // CAS chain on the old bundle contents is obsolete
     fs.delete(ix.cas, true)
-    publishManifest(fs, ix.manifest, BundleManifest.render(indexName, typeName,
+    FsAtomic.publish(fs, ix.manifest, BundleManifest.render(indexName, typeName,
       outDir, numShards, format, Some(BundleManifest.Completed(codec, perShard,
-        BundleManifest.aliasContract(alias, finalSettings), None))))
+        BundleManifest.aliasContract(alias, finalSettings), None))).getBytes("UTF-8"))
     fs.delete(new Path(outDir, "_STARTED"), false)
 
     Result(outDir, numShards, total, perShard)

@@ -18,13 +18,25 @@ private[graft] object ShardState {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  /** Data files of one shard directory (none when it does not exist);
-    * `_`- and `.`-prefixed names are markers and checksums, not data. */
+  private def listed(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    try fs.listStatus(dir).toSeq
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  /** `_`- and `.`-prefixed names are markers and checksums, not data. */
+  private def isData(st: FileStatus): Boolean =
+    st.isFile && !st.getPath.getName.startsWith("_") &&
+      !st.getPath.getName.startsWith(".")
+
+  /** Data files of one shard directory (none when it does not exist). */
   def dataFiles(fs: FileSystem, shardDir: Path): Seq[FileStatus] =
-    (try fs.listStatus(shardDir).toSeq
-     catch { case _: java.io.FileNotFoundException => Seq.empty })
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
+    listed(fs, shardDir).filter(isData)
+
+  /** Data files under `dir` at any depth (0 when it does not exist) — the
+    * files-before/after figure of every compaction. */
+  def countDataFiles(fs: FileSystem, dir: Path): Long =
+    listed(fs, dir).map(st =>
+      if (st.isDirectory) countDataFiles(fs, st.getPath)
+      else if (isData(st)) 1L else 0L).sum
 
   /** (files, bytes) of one shard directory, from one listing. */
   def listing(fs: FileSystem, shardDir: Path): (Long, Long) = {
@@ -45,8 +57,7 @@ private[graft] object ShardState {
     val json = mapper.createArrayNode()
     entries.foreach(e => json.addObject().put("shard", e.shard)
       .put("docs", e.docs).put("files", e.files).put("bytes", e.bytes))
-    val out = fs.create(file, true)
-    try out.write(mapper.writeValueAsBytes(json)) finally out.close()
+    FsAtomic.publish(fs, file, mapper.writeValueAsBytes(json))
   }
 
   /** The entries of `file`, None when it does not exist (bundles predating

@@ -745,7 +745,8 @@ object StreamingCorpus {
    * rule compares each new doc against all earlier same-cluster rows),
    * but replayed batches append duplicate ROWS and every batch appends a
    * new FILE — this rewrites to distinct (doc_id, cluster_id, uv) rows in
-   * ~one file per partition, with the verify-then-atomic-swap discipline.
+   * ~one file per partition, count-checked and swapped in through
+   * [[graft.sink.FsAtomic.replaceDir]].
    *
    * Compacted rows take `batch_id = -1`: prior-state reads exclude only
    * the CURRENT batch's id, and no future batch is −1, so the snapshot
@@ -757,32 +758,24 @@ object StreamingCorpus {
   def compactSemDedupState(spark: org.apache.spark.sql.SparkSession,
                            outDir: String): (Long, Long) = {
     import org.apache.hadoop.fs.Path
-    val dir = s"$outDir/state/semdedup"
+    val dir = new Path(s"$outDir/state/semdedup")
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(outDir), spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(dir))) return (0L, 0L)
-    val newDir = new Path(s"$dir-compacting")
-    val oldDir = new Path(s"$dir-precompact")
-    fs.delete(newDir, true); fs.delete(oldDir, true)
-    val data = spark.read.parquet(dir)
+    graft.sink.FsAtomic.heal(fs, dir)
+    if (!fs.exists(dir)) return (0L, 0L)
+    val data = spark.read.parquet(dir.toString)
     val before = data.count()
     val snap = data.drop("batch_id").distinct()
       .withColumn("batch_id", org.apache.spark.sql.functions.lit(-1L))
-    snap.write.mode(SaveMode.Overwrite).parquet(newDir.toString)
-    val after = spark.read.parquet(newDir.toString).count()
-    val expect = data.drop("batch_id").distinct().count()
-    if (after != expect) {
-      fs.delete(newDir, true)
-      throw new IllegalStateException(s"semdedup state compaction aborted: " +
-        s"snapshot has $after of $expect distinct rows; state left intact")
+    val after = graft.sink.FsAtomic.replaceDir(fs, dir) { staging =>
+      snap.write.parquet(staging.toString)
+      val after = spark.read.parquet(staging.toString).count()
+      val expect = data.drop("batch_id").distinct().count()
+      if (after != expect) throw new IllegalStateException(
+        s"semdedup state compaction aborted: " +
+          s"snapshot has $after of $expect distinct rows; state left intact")
+      after
     }
-    if (!fs.rename(new Path(dir), oldDir))
-      throw new IllegalStateException(s"could not stage $dir aside")
-    if (!fs.rename(newDir, new Path(dir))) {
-      fs.rename(oldDir, new Path(dir))
-      throw new IllegalStateException("swap failed; original state restored")
-    }
-    fs.delete(oldDir, true)
     (before, after)
   }
 }

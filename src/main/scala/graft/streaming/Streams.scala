@@ -347,13 +347,6 @@ object EventStreams {
       .select(col("window.start").as("window_start"), col("event_type"),
         col("cnt"), col("sum_value"))
 
-  /** Sliding windows: 1-hour windows every 15 minutes. */
-  def slidingCounts(events: DataFrame): DataFrame =
-    watermarked(events, "ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("window_start"), col("cnt"))
-
   /** Session windows with a 30-minute gap (built-in session_window —
     * the streaming form of the q29 gaps-and-islands query). */
   def sessionCounts(events: DataFrame, gap: String = "30 minutes"): DataFrame =
@@ -362,11 +355,6 @@ object EventStreams {
       .agg(count(lit(1)).as("events_in_session"))
       .select(col("session_window.start").as("session_start"),
         col("user_id"), col("events_in_session"))
-
-  /** Exactly-once-per-id within the watermark horizon. */
-  def dedupedEvents(events: DataFrame, watermark: String = "1 hour"): DataFrame =
-    watermarked(events, "ts", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
 
   /** Stream-static enrichment: join the event stream against a (periodically
     * reloaded by Spark per micro-batch) dimension table — the streaming form

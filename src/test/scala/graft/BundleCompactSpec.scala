@@ -32,33 +32,41 @@ class BundleCompactSpec extends SparkSpec {
       graft.functions.EsFunctions.es_shard(col("_routing"), 3)).count()
     assert(misplaced === 0L)
     // no leftover staging dirs
-    assert(!Files.exists(java.nio.file.Paths.get(s"$dir/idx/data-compacting")))
-    assert(!Files.exists(java.nio.file.Paths.get(s"$dir/idx/data-precompact")))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$dir/idx/data-staging")))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$dir/idx/data-old")))
   }
 
   test("parquet bundle compaction: format from manifest, typed columns intact") {
     // the earlier json-schema-only rewrite would have parsed parquet bytes
     // as json lines and swapped garbage into place — this pins the
-    // format-aware path end to end on a COLUMNAR (typed-field) bundle
-    val dir = Files.createTempDirectory("graft-compact-pq").toString
-    val docs = DocTransform.docsColumnar(
-      sf("sf0.001", "orders"), "o_orderkey", Some("o_custkey"))
-    BundleSink.write(docs, s"$dir/idx", 3, 4, repartition = true, format = "columnar")
-    val pre = spark.read.parquet(s"$dir/idx/data")
-    val preCount = pre.count()
-    val preSum = pre.agg(sum("o_totalprice")).head().getDouble(0)
+    // format-aware path end to end on a COLUMNAR (typed-field) bundle, at
+    // the default codec and at one the manifest must carry through
+    for (compression <- Seq(None, Some("snappy"))) {
+      val dir = Files.createTempDirectory("graft-compact-pq").toString
+      val docs = DocTransform.docsColumnar(
+        sf("sf0.001", "orders"), "o_orderkey", Some("o_custkey"))
+      BundleSink.write(docs, s"$dir/idx", 3, 4, repartition = true, format = "columnar",
+        compression = compression)
+      val pre = spark.read.parquet(s"$dir/idx/data")
+      val preCount = pre.count()
+      val preSum = pre.agg(sum("o_totalprice")).head().getDouble(0)
 
-    val r = BundleCompact.compact(spark, s"$dir/idx", filesPerShard = 1)
-    assert(r.docs === preCount)
-    assert(r.filesAfter <= 3L)
+      val r = BundleCompact.compact(spark, s"$dir/idx", filesPerShard = 1)
+      assert(r.docs === preCount)
+      assert(r.filesAfter <= 3L)
 
-    val back = spark.read.parquet(s"$dir/idx/data")
-    assert(back.count() === preCount)
-    // typed content survived byte-exactly enough to re-aggregate
-    assert(math.abs(back.agg(sum("o_totalprice")).head().getDouble(0) - preSum) < 1e-6)
-    val misplaced = back.filter(col("_shard") =!=
-      graft.functions.EsFunctions.es_shard(col("_routing"), 3)).count()
-    assert(misplaced === 0L)
+      val back = spark.read.parquet(s"$dir/idx/data")
+      assert(back.count() === preCount)
+      // typed content survived byte-exactly enough to re-aggregate
+      assert(math.abs(back.agg(sum("o_totalprice")).head().getDouble(0) - preSum) < 1e-6)
+      val misplaced = back.filter(col("_shard") =!=
+        graft.functions.EsFunctions.es_shard(col("_routing"), 3)).count()
+      assert(misplaced === 0L)
+      val suffix = s".${compression.getOrElse("zstd")}.parquet"
+      val files = new java.io.File(s"$dir/idx/data").listFiles().filter(_.isDirectory)
+        .flatMap(_.listFiles()).map(_.getName).filter(_.startsWith("part-"))
+      assert(files.nonEmpty && files.forall(_.endsWith(suffix)), files.toSeq)
+    }
   }
 
   test("multi-index bundle compaction: per (index, shard), layout preserved") {
