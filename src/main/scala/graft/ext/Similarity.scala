@@ -13,6 +13,21 @@ import org.apache.spark.sql.functions._
  * into a bucket-equi-join; recall is tunable via tables x bits.
  * All arithmetic in codegen'd higher-order functions (zip_with/aggregate) —
  * no UDFs, no driver collection.
+ *
+ * IVF-PQ (IVFADC; Jégou, Douze & Schmid, TPAMI 2011) — the online searches
+ * ([[ivfPqTopK]], [[ivfPqResidualTopK]]), the persisted index
+ * ([[buildIndex]], [[indexTopK]]), its appends, its stream and its cell
+ * split all run four private steps over one [[Quantizer]] (coarse
+ * centroids, PQ codebooks, raw-or-residual flag), so a build and a query
+ * cannot disagree on how a vector is coded or scored:
+ *  - [[fit]] trains it ([[loadIndexMeta]] reads a persisted one);
+ *  - [[encode]] assigns corpus rows to their nearest cell and codes them;
+ *  - [[probe]] assigns each query to its nprobe nearest cells with its LUT;
+ *  - [[adcTopK]] joins probed cells to coded rows, scores ADC, cuts the
+ *    tie-aware shortlist and re-ranks it exactly (or ranks ADC alone).
+ * Residual codes quantize r = v − c (c = the row's cell centroid), and the
+ * score decomposes exactly: dot(q, v) = dot(q, c) + dot(q, r), so the LUT
+ * stays per query and only the per-(query, cell) dot(q, c) is added.
  */
 object Similarity {
 
@@ -242,11 +257,13 @@ object Similarity {
     * `centroids/` — so an existing ANN index's centroids serve directly
     * as a frozen clustering for streams ([[loadClusterCentroids]]). */
   def trainClusterCentroids(df: DataFrame, idCol: String, vecCol: String,
-                            k: Int, iters: Int = 4, path: String): Unit = {
-    val spark = df.sparkSession
+                            k: Int, iters: Int = 4, path: String): Unit =
+    writeCentroids(df.sparkSession, kmeansArray(df, idCol, vecCol, k, iters), path)
+
+  private def writeCentroids(spark: org.apache.spark.sql.SparkSession,
+                             cents: IndexedSeq[Seq[Double]], path: String): Unit = {
     import spark.implicits._
-    kmeansArray(df, idCol, vecCol, k, iters).zipWithIndex
-      .map { case (v, i) => (i, v) }.toSeq.toDF("cent_id", "centv")
+    cents.zipWithIndex.map { case (v, i) => (i, v) }.toDF("cent_id", "centv")
       .write.mode("overwrite").parquet(path)
   }
 
@@ -1118,13 +1135,38 @@ object Similarity {
     cs
   }
 
+  /** PQ codes of `v` (array<int>, m per vector) under `model`'s input
+    * transform and codebooks — the one encode expression. */
+  private def codesOf(v: Column, model: PqModel): Column =
+    graft.functions.PqFunctions.pq_encode(permute(v, model),
+      model.centroids, model.m, model.k, model.subDim)
+
+  /** The m*k lookup table of query `v` under `model` — the one LUT
+    * expression; a candidate's ADC score is [[adcScore]] over its codes. */
+  private def lutOf(v: Column, model: PqModel): Column =
+    graft.functions.PqFunctions.pq_lut(permute(v, model),
+      model.centroids, model.m, model.k, model.subDim)
+
+  private def adcScore(model: PqModel): Column =
+    graft.functions.PqFunctions.pq_score(col("_lut"), col("codes"), model.k)
+
   /** Corpus side of PQ search: (id, codes array<int>) — m ints per vector
     * instead of dim doubles (precompute once, reuse across query batches). */
   def pqEncode(corpus: DataFrame, idCol: String, vecCol: String,
                model: PqModel): DataFrame =
     corpus.select(col(idCol).as("nid"),
-      graft.functions.PqFunctions.pq_encode(permute(unitize(asDouble(col(vecCol))), model),
-        model.centroids, model.m, model.k, model.subDim).as("codes"))
+      codesOf(unitize(asDouble(col(vecCol))), model).as("codes"))
+
+  /** The exhaustive compressed-domain scan of [[pqTopK]] and
+    * [[pqTopKRerank]]: every (query, corpus) pair but self-pairs, as
+    * (qid, nid, _psim). */
+  private def pqScan(queries: DataFrame, encodedCorpus: DataFrame,
+                     qidCol: String, vecCol: String, model: PqModel): DataFrame =
+    queries.select(col(qidCol).as("qid"),
+        lutOf(unitize(asDouble(col(vecCol))), model).as("_lut"))
+      .crossJoin(encodedCorpus)
+      .filter(col("qid") =!= col("nid"))
+      .select(col("qid"), col("nid"), adcScore(model).as("_psim"))
 
   /**
    * PQ top-k: compressed-domain scan. Queries build an m*k lookup table
@@ -1144,16 +1186,9 @@ object Similarity {
    */
   def pqTopK(queries: DataFrame, encodedCorpus: DataFrame, qidCol: String,
              vecCol: String, model: PqModel, k: Int,
-             roundTo: Int = 4): DataFrame = {
-    val q = queries.select(col(qidCol).as("qid"),
-      graft.functions.PqFunctions.pq_lut(permute(unitize(asDouble(col(vecCol))), model),
-        model.centroids, model.m, model.k, model.subDim).as("_lut"))
-    rankTail(q.crossJoin(encodedCorpus)
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        round(graft.functions.PqFunctions.pq_score(col("_lut"), col("codes"), model.k),
-          roundTo).as("sim")), k)
-  }
+             roundTo: Int = 4): DataFrame =
+    rankTail(pqScan(queries, encodedCorpus, qidCol, vecCol, model)
+      .select(col("qid"), col("nid"), round(col("_psim"), roundTo).as("sim")), k)
 
   /**
    * PQ search with exact re-rank — the production PQ pipeline: the
@@ -1168,20 +1203,116 @@ object Similarity {
                    qidCol: String, idCol: String, vecCol: String,
                    model: PqModel, k: Int, rerankFactor: Int = 64,
                    roundTo: Int = 4): DataFrame = {
-    val q = queries.select(col(qidCol).as("qid"),
-      graft.functions.PqFunctions.pq_lut(permute(unitize(asDouble(col(vecCol))), model),
-        model.centroids, model.m, model.k, model.subDim).as("_lut"))
     // tie-aware [[shortlist]] over a synthetic hash bucket (the full scan
     // has no cells): no single task ever sorts one query's full
     // corpus-sized candidate stream
-    val cands = shortlist(q.crossJoin(encodedCorpus)
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        graft.functions.PqFunctions.pq_score(col("_lut"), col("codes"), model.k).as("_psim"),
-        pmod(xxhash64(col("nid")), lit(64)).as("_bkt")), "_bkt", k * rerankFactor)
+    val cands = shortlist(pqScan(queries, encodedCorpus, qidCol, vecCol, model)
+      .withColumn("_bkt", pmod(xxhash64(col("nid")), lit(64))), "_bkt", k * rerankFactor)
     exactRerank(cands, queries, qidCol, vecCol,
       unitRows(corpus, idCol, vecCol, "nid", "_cv"), k, roundTo)
   }
+
+  /** The IVF-PQ quantizer (see the object doc): coarse centroids (index =
+    * cent_id), PQ codebooks, and whether the codes quantize cell residuals. */
+  private case class Quantizer(cents: IndexedSeq[Seq[Double]], model: PqModel,
+                               residual: Boolean)
+
+  /** `v − cents(cell)` as one codegen'd projection: the IVFADC residual. */
+  private def residualOf(v: Column, cell: Column, cents: IndexedSeq[Seq[Double]]): Column = {
+    val (flat, _, d) = flatCents(cents)
+    graft.functions.PqFunctions.cell_residual(v, cell, flat, d)
+  }
+
+  /** Fit step: coarse centroids, then PQ codebooks — on the corpus's unit
+    * vectors for raw codes, on the assigned cell residuals
+    * (`normalize = false`: re-normalizing a residual would discard the
+    * magnitude the codebooks exist to capture) for residual ones. */
+  private def fit(corpus: DataFrame, idCol: String, vecCol: String,
+                  nlist: Int, kmeansIters: Int, residual: Boolean, m: Int,
+                  k: Int, opqIters: Int, sampleSize: Int): Quantizer = {
+    val cents = coarseCentroids(corpus, idCol, vecCol, nlist, kmeansIters)
+    val dim = cents.head.length
+    val model =
+      if (!residual) pqTrain(corpus, vecCol, dim, m = m, k = k,
+        sampleSize = sampleSize, opqIters = opqIters)
+      else pqTrain(assignCells(corpus, idCol, vecCol, "nid", "vec", cents, probes = 1)
+          .withColumn("_rv", residualOf(col("vec"), col("cent_id"), cents)),
+        "_rv", dim, m = m, k = k, sampleSize = sampleSize, opqIters = opqIters,
+        normalize = false)
+    Quantizer(cents, model, residual)
+  }
+
+  /** Encode step: `(cent_id, nid, codes, vec, keep…)` — each assignable
+    * row of `rows` in its nearest cell, `vec` its unit vector. */
+  private def encode(q: Quantizer, rows: DataFrame, idCol: String,
+                     vecCol: String, keep: Seq[String]): DataFrame =
+    withCodes(q, assignCells(rows, idCol, vecCol, "nid", "vec", q.cents,
+        probes = 1, keep = keep))
+      .select(col("cent_id") +: col("nid") +: col("codes") +: col("vec") +:
+        keep.map(col): _*)
+
+  /** `codes` for rows that already carry (`cent_id`, `vec`): residual codes
+    * quantize `vec − cents(cent_id)`, raw codes `vec` itself. */
+  private def withCodes(q: Quantizer, cells: DataFrame): DataFrame = {
+    val x = if (q.residual) residualOf(col("vec"), col("cent_id"), q.cents) else col("vec")
+    cells.withColumn("codes", codesOf(x, q.model))
+  }
+
+  /** Probe step: each query's `min(nprobe, nlist)` nearest cells as
+    * (qid, _qv, cent_id, _lut, _cdot), `_cdot` the residual decomposition's
+    * dot(q, c) — 0.0 for raw codes, which quantize v whole. */
+  private def probe(q: Quantizer, queries: DataFrame, qidCol: String,
+                    vecCol: String, nprobe: Int): DataFrame =
+    assignCells(queries, qidCol, vecCol, "qid", "_qv", q.cents,
+        probes = math.min(nprobe, q.cents.length))
+      .withColumn("_lut", lutOf(col("_qv"), q.model))
+      .withColumn("_cdot",
+        if (!q.residual) lit(0.0)
+        else {
+          val (flat, _, d) = flatCents(q.cents)
+          graft.functions.PqFunctions.cell_dot(col("_qv"), col("cent_id"), flat, d)
+        })
+
+  /**
+   * Score step: the probed query cells join the encoded `cells` on
+   * cent_id (corpus rows live in one cell, so (qid, nid) pairs are already
+   * unique), self-pairs drop, and each pair scores ADC `_psim` = `_cdot` +
+   * LUT lookups. Only (qid, nid, _psim) flows through the candidate-cut
+   * windows: at nprobe/nlist of a 10^6+ corpus the candidate stream is
+   * 10^7-10^8 rows, and carrying full-width vectors through that sort
+   * multiplied its shuffle ~40x (measured 34 GB spill at the 1M bench
+   * tier). The per-cell [[shortlist]] keeps the global window at <= nprobe
+   * * k * rerankFactor rows per query (+ tie groups); then `cv` (nid, _cv)
+   * joins back for the finalists alone ([[exactRerank]]), or, without a
+   * vector source, the ADC scores rank as they are.
+   */
+  private def adcTopK(q: Quantizer, probed: DataFrame, cells: DataFrame,
+                      queries: DataFrame, qidCol: String, vecCol: String,
+                      cv: Option[DataFrame], k: Int, rerankFactor: Int,
+                      roundTo: Int): DataFrame = {
+    val cands = shortlist(
+      probed.join(cells.select("cent_id", "nid", "codes"), Seq("cent_id"))
+        .filter(col("qid") =!= col("nid"))
+        .select(col("cent_id"), col("qid"), col("nid"),
+          (col("_cdot") + adcScore(q.model)).as("_psim")),
+      "cent_id", k * rerankFactor)
+    cv match {
+      case Some(v) => exactRerank(cands, queries, qidCol, vecCol, v, k, roundTo)
+      case None =>
+        rankTail(cands.select(col("qid"), col("nid"),
+          round(col("_psim"), roundTo).as("sim"), col("_psim")), k, by = "_psim")
+    }
+  }
+
+  /** The online IVF-PQ search: encode the corpus, probe, score, and
+    * re-rank against the corpus's own unit vectors. */
+  private def onlineSearch(q: Quantizer, queries: DataFrame, corpus: DataFrame,
+                           qidCol: String, idCol: String, vecCol: String,
+                           k: Int, nprobe: Int, rerankFactor: Int,
+                           roundTo: Int): DataFrame =
+    adcTopK(q, probe(q, queries, qidCol, vecCol, nprobe),
+      encode(q, corpus, idCol, vecCol, Nil), queries, qidCol, vecCol,
+      Some(unitRows(corpus, idCol, vecCol, "nid", "_cv")), k, rerankFactor, roundTo)
 
   /**
    * IVF-PQ: the standard billion-scale composition (Jégou, Douze &
@@ -1192,83 +1323,35 @@ object Similarity {
    * pair, and the exact re-rank (tie-aware, see [[pqTopKRerank]]) restores
    * exact-neighbor precision on k*rerankFactor finalists. Shuffle shape:
    * one broadcast cell assignment per side + one equi-join on cent_id —
-   * no all-pairs stage anywhere.
+   * no all-pairs stage anywhere. `model` codes the raw unit vectors.
    */
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, qidCol: String,
                 idCol: String, vecCol: String, model: PqModel, k: Int,
                 nlist: Int = 16, nprobe: Int = 4, kmeansIters: Int = 2,
-                rerankFactor: Int = 64, roundTo: Int = 4): DataFrame = {
-    val cents = coarseCentroids(corpus, idCol, vecCol, nlist, kmeansIters)
-    val corpusCells = assignCells(corpus, idCol, vecCol, "nid", "_cv", cents, probes = 1)
-      .withColumn("codes", graft.functions.PqFunctions.pq_encode(permute(col("_cv"), model),
-        model.centroids, model.m, model.k, model.subDim))
-      .select(col("cent_id"), col("nid"), col("codes"), col("_cv"))
-    val queryCells = assignCells(queries, qidCol, vecCol, "qid", "_qv", cents, probes = nprobe)
-      .withColumn("_lut", graft.functions.PqFunctions.pq_lut(permute(col("_qv"), model),
-        model.centroids, model.m, model.k, model.subDim))
-    // corpus rows live in exactly one cell -> (qid, nid) already unique.
-    // Only (qid, nid, _psim) flows through the candidate-cut windows — at
-    // nprobe/nlist of a 10^6+ corpus the candidate stream is 10^7-10^8 rows,
-    // and carrying the full-width vectors through that sort multiplied its
-    // shuffle ~40x (measured 34 GB spill at the 1M bench tier). The exact
-    // re-rank joins vectors back for just the k*rerankFactor finalists;
-    // the per-cell [[shortlist]] cut keeps the global window at <= nprobe
-    // * k * rerankFactor rows per query (+ tie groups).
-    val cands = shortlist(queryCells.join(corpusCells.drop("_cv"), Seq("cent_id"))
-      .filter(col("qid") =!= col("nid"))
-      .select(col("cent_id"), col("qid"), col("nid"),
-        graft.functions.PqFunctions.pq_score(col("_lut"), col("codes"), model.k).as("_psim")),
-        "cent_id", k * rerankFactor)
-    exactRerank(cands, queries, qidCol, vecCol,
-      unitRows(corpus, idCol, vecCol, "nid", "_cv"), k, roundTo)
-  }
+                rerankFactor: Int = 64, roundTo: Int = 4): DataFrame =
+    onlineSearch(
+      Quantizer(coarseCentroids(corpus, idCol, vecCol, nlist, kmeansIters), model,
+        residual = false),
+      queries, corpus, qidCol, idCol, vecCol, k, nprobe, rerankFactor, roundTo)
 
   /**
    * Residual (IVFADC) form of [[ivfPqTopK]]: the PQ codebooks train on
-   * CELL RESIDUALS (vec − cellCentroid, `normalize = false` — zero-mean,
-   * low spread, far less code collision inside tight cells), candidates
-   * score as the exact decomposition dot(q, v) = dot(q, c) + dot(q, r̂)
-   * (per-(query, cell) `cell_dot` + the per-query residual LUT), and the
-   * shortlist exact-reranks against the source vectors. Unlike
-   * [[ivfPqTopK]] the model cannot be caller-supplied: residual codebooks
-   * only exist AFTER the coarse quantizer, so training happens inside —
-   * with the same deterministic inputs as `buildIndex(residual = true)`,
-   * which is the identity the differential law in SimilaritySpec pins
-   * (persisted residual index == this, bit-exact, at equal knobs).
+   * cell residuals (zero-mean, low spread — far less code collision inside
+   * tight cells), so unlike [[ivfPqTopK]] the model cannot be
+   * caller-supplied: residual codebooks only exist after the coarse
+   * quantizer, and [[fit]] trains both from the same deterministic inputs
+   * as `buildIndex(residual = true)`.
    */
   def ivfPqResidualTopK(queries: DataFrame, corpus: DataFrame, qidCol: String,
                         idCol: String, vecCol: String, k: Int,
                         nlist: Int = 16, nprobe: Int = 4, kmeansIters: Int = 2,
                         m: Int = 8, kCodes: Int = 16, opqIters: Int = 0,
                         sampleSize: Int = 10000,
-                        rerankFactor: Int = 64, roundTo: Int = 4): DataFrame = {
-    val cents = coarseCentroids(corpus, idCol, vecCol, nlist, kmeansIters)
-    val (flat, _, dim) = flatCents(cents)
-    val resDf = assignCells(corpus, idCol, vecCol, "nid", "_cv", cents, probes = 1)
-      .withColumn("_rv", graft.functions.PqFunctions.cell_residual(
-        col("_cv"), col("cent_id"), flat, dim))
-    val model = pqTrain(resDf, "_rv", dim, m = m, k = kCodes,
-      sampleSize = sampleSize, opqIters = opqIters, normalize = false)
-    val corpusCells = resDf
-      .withColumn("codes", graft.functions.PqFunctions.pq_encode(
-        permute(col("_rv"), model), model.centroids, model.m, model.k, model.subDim))
-      .select(col("cent_id"), col("nid"), col("codes"))
-    val queryCells = assignCells(queries, qidCol, vecCol, "qid", "_qv", cents,
-        probes = math.min(nprobe, cents.length))
-      .withColumn("_lut", graft.functions.PqFunctions.pq_lut(permute(col("_qv"), model),
-        model.centroids, model.m, model.k, model.subDim))
-      .withColumn("_cdot", graft.functions.PqFunctions.cell_dot(
-        col("_qv"), col("cent_id"), flat, dim))
-    // candidate stream + two-level tie-aware cut + exact re-rank: the
-    // [[ivfPqTopK]] shape verbatim, with the ADC score shifted by _cdot
-    val cands = shortlist(queryCells.join(corpusCells, Seq("cent_id"))
-      .filter(col("qid") =!= col("nid"))
-      .select(col("cent_id"), col("qid"), col("nid"),
-        (col("_cdot") + graft.functions.PqFunctions.pq_score(
-          col("_lut"), col("codes"), model.k)).as("_psim")), "cent_id", k * rerankFactor)
-    exactRerank(cands, queries, qidCol, vecCol,
-      unitRows(corpus, idCol, vecCol, "nid", "_cv"), k, roundTo)
-  }
+                        rerankFactor: Int = 64, roundTo: Int = 4): DataFrame =
+    onlineSearch(
+      fit(corpus, idCol, vecCol, nlist, kmeansIters, residual = true, m, kCodes,
+        opqIters, sampleSize),
+      queries, corpus, qidCol, idCol, vecCol, k, nprobe, rerankFactor, roundTo)
 
   /**
    * Persistable IVF-PQ index — the "build once, query many" shape a large
@@ -1297,38 +1380,11 @@ object Similarity {
                  cellSalt: Int = 1, storeVectors: Boolean = true,
                  residual: Boolean = false,
                  payloadCols: Seq[String] = Nil): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    require(!payloadCols.exists(Seq("cent_id", "nid", "codes", "vec").contains),
+    require(!payloadCols.exists(CellCols.contains),
       s"payloadCols collide with the index layout columns: $payloadCols")
-    val dim = corpus.filter(col(vecCol).isNotNull)
-      .select(size(asDouble(col(vecCol)))).head().getInt(0)
-    val cents = coarseCentroids(corpus, idCol, vecCol, nlist, kmeansIters)
-    val assigned = assignCells(corpus, idCol, vecCol, "nid", "_cv", cents,
-      probes = 1, keep = payloadCols)
-    // residual=true is full IVFADC (Jégou et al., TPAMI 2011): codes
-    // quantize (vec − cellCentroid) instead of the raw vector, and the PQ
-    // codebooks train on residual samples (zero-mean, low spread — far
-    // less code collision inside tight cells). Scoring decomposes exactly:
-    // dot(q, v) = dot(q, c) + dot(q, r), so the query LUT stays per-query
-    // and only the cheap per-(query, cell) centroid dot is added.
-    val (model, encoded) =
-      if (!residual) {
-        val mdl = pqTrain(corpus, vecCol, dim, m = m, k = k,
-          sampleSize = sampleSize, opqIters = opqIters)
-        (mdl, assigned.withColumn("codes", graft.functions.PqFunctions.pq_encode(
-          permute(col("_cv"), mdl), mdl.centroids, mdl.m, mdl.k, mdl.subDim)))
-      } else {
-        val (flat, _, _) = flatCents(cents)
-        val resDf = assigned.withColumn("_rv",
-          graft.functions.PqFunctions.cell_residual(col("_cv"), col("cent_id"), flat, dim))
-        val mdl = pqTrain(resDf, "_rv", dim, m = m, k = k,
-          sampleSize = sampleSize, opqIters = opqIters, normalize = false)
-        (mdl, resDf.withColumn("codes", graft.functions.PqFunctions.pq_encode(
-          permute(col("_rv"), mdl), mdl.centroids, mdl.m, mdl.k, mdl.subDim))
-          .drop("_rv"))
-      }
-    val enc = encoded
+    val q = fit(corpus, idCol, vecCol, nlist, kmeansIters, residual, m, k,
+      opqIters, sampleSize)
+    encode(q, corpus, idCol, vecCol, payloadCols)
       // vec rides the index so re-rank never goes back to the source table;
       // codes alone serve compressed-domain scans. storeVectors=false drops
       // it for the footprint: at 1e9 64-dim rows, stored vectors are ~0.5 TB
@@ -1338,38 +1394,31 @@ object Similarity {
       // attribute payload columns ride each row into its cell file, so a
       // filtered search ([[indexTopK]]'s `filter`) becomes a parquet
       // predicate INSIDE the probed cells — no corpus join at query time
-      .select(col("cent_id") +: col("nid") +: col("codes") +:
-        col("_cv").as("vec") +: payloadCols.map(col): _*)
-    (if (storeVectors) enc else enc.drop("vec"))
+      .transform(df => if (storeVectors) df else df.drop("vec"))
       // co-locate each cell before the partitioned write: without this,
       // every task writes a sliver of every cell — tasks × nlist tiny files
       // (32k at the 1M bench tier; the write took 66 s and every later
       // listing paid for it). One exchange -> ~cellSalt files per cell.
       .transform(saltedCellRepartition(_, cellSalt, nlist))
       .write.mode("overwrite").partitionBy("cent_id").parquet(s"$dir/cells")
-    cents.zipWithIndex.map { case (v, i) => (i, v) }.toSeq
-      .toDF("cent_id", "centv")
-      .write.mode("overwrite").parquet(s"$dir/centroids")
-    Seq((dim, model.m, model.k, nlist, model.centroids.toSeq,
-        model.perm.toSeq, model.rot.toSeq, residual))
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    writeCentroids(spark, q.cents, s"$dir/centroids")
+    Seq((q.model.dim, q.model.m, q.model.k, nlist, q.model.centroids.toSeq,
+        q.model.perm.toSeq, q.model.rot.toSeq, residual))
       .toDF("dim", "m", "k", "nlist", "pq_centroids", "perm", "rot", "residual")
       .write.mode("overwrite").parquet(s"$dir/model")
     // the index records its own build-time health (sampled mean
     // vector->centroid cosine + max cell share) so [[indexDriftReport]]
     // has a baseline to compare appended data against
-    val (rows, avgCos, maxFrac) =
-      cellStats(spark.read.parquet(s"$dir/cells"), cents, sampleSize = 2000)
-    Seq((rows, avgCos, maxFrac)).toDF("rows", "avg_cos", "max_cell_frac")
-      .write.mode("overwrite").parquet(s"$dir/stats")
+    writeCellStats(spark, dir, q.cents, sampleSize = 2000)
   }
 
-  /** Load a [[buildIndex]] directory's PQ model + IVF centroids (both
-    * driver-bounded: m·k·subDim + nlist·dim doubles) + whether codes are
-    * cell residuals. Pre-residual indexes lack the flag column → false. */
+  /** Load a [[buildIndex]] directory's quantizer: PQ model + IVF centroids
+    * (both driver-bounded: m·k·subDim + nlist·dim doubles) + whether codes
+    * are cell residuals. Pre-residual indexes lack the flag column → false. */
   private def loadIndexMeta(spark: org.apache.spark.sql.SparkSession,
-                            dir: String)
-      : (PqModel, IndexedSeq[Seq[Double]], Boolean) = {
-    import spark.implicits._
+                            dir: String): Quantizer = {
     val mdf = spark.read.parquet(s"$dir/model")
     val mr = mdf.head()
     val model = PqModel(mr.getAs[Int]("dim"), mr.getAs[Int]("m"), mr.getAs[Int]("k"),
@@ -1378,9 +1427,7 @@ object Similarity {
       mr.getAs[scala.collection.Seq[Double]]("rot").toArray)
     val residual = mdf.schema.fieldNames.contains("residual") &&
       mr.getAs[Boolean]("residual")
-    val cents: IndexedSeq[Seq[Double]] = spark.read.parquet(s"$dir/centroids")
-      .orderBy("cent_id").as[(Int, Seq[Double])].collect().map(_._2).toIndexedSeq
-    (model, cents, residual)
+    Quantizer(loadClusterCentroids(spark, s"$dir/centroids"), model, residual)
   }
 
   /**
@@ -1393,19 +1440,9 @@ object Similarity {
    * rebuild when the corpus distribution shifts enough that recall decays.
    */
   def appendToIndex(rows: DataFrame, idCol: String, vecCol: String,
-                    dir: String, cellSalt: Int = 1): Unit = {
-    requireNotTombstonedNids(rows, idCol, dir)
-    val nlist = // needed only to size the salted exchange; tiny driver read
-      if (cellSalt <= 1) 0
-      else rows.sparkSession.read.parquet(s"$dir/centroids").count().toInt
-    encodeForIndex(rows, idCol, vecCol, dir)
-      // appends conform to the index's own layout: a codes-only index
-      // (storeVectors=false) must not grow a partial vec column
-      .transform(df => if (indexStoresVectors(rows.sparkSession, dir)) df
-                       else df.drop("vec"))
-      .transform(saltedCellRepartition(_, cellSalt, nlist)) // see buildIndex
+                    dir: String, cellSalt: Int = 1): Unit =
+    encodeForIndex(rows, idCol, vecCol, dir, cellSalt)
       .write.mode("append").partitionBy("cent_id").parquet(s"$dir/cells")
-  }
 
   /** Refuse to re-ingest a currently-TOMBSTONED nid (the
     * [[graft.ext.Search]] postings-append guard mirrored to the ANN
@@ -1466,11 +1503,24 @@ object Similarity {
       newIds.write.mode("append").parquet(s"$dir/deletes/ids")
   }
 
+  /** The core columns of an index's cell rows; anything else in the cells
+    * is an attribute payload column. */
+  private val CellCols = Seq("cent_id", "nid", "codes", "vec")
+
+  /** The data columns of a [[buildIndex]] directory's cells (the partition
+    * column `cent_id` lives in the paths): one parquet footer, no listing
+    * of the cells/ tree and no Spark job — Spark's own schema inference
+    * only where the footer read falls back. */
+  private def cellsSchema(spark: org.apache.spark.sql.SparkSession,
+                          dir: String): org.apache.spark.sql.types.StructType =
+    graft.sources.EngineParquet.schema(spark, s"$dir/cells")
+      .getOrElse(spark.read.parquet(s"$dir/cells").schema)
+
   /** Whether a [[buildIndex]] directory stores full vectors in its cells
     * (`storeVectors = true`) or codes only — a schema sniff, no data read. */
   private[graft] def indexStoresVectors(
       spark: org.apache.spark.sql.SparkSession, dir: String): Boolean =
-    spark.read.parquet(s"$dir/cells").schema.fieldNames.contains("vec")
+    cellsSchema(spark, dir).fieldNames.contains("vec")
 
   /**
    * Derive a codes-only twin of a vectors-stored index: same centroids,
@@ -1531,41 +1581,31 @@ object Similarity {
     else df.repartition(math.max(1, 2 * nlist * cellSalt),
       col("cent_id"), pmod(hash(col("nid")), lit(cellSalt)))
 
-  /** The attribute payload columns a [[buildIndex]] directory carries —
-    * everything in the cells schema beyond the core layout. Schema sniff,
-    * no data read. */
-  private[graft] def indexPayloadCols(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Seq[String] =
-    spark.read.parquet(s"$dir/cells").schema.fieldNames.toSeq
-      .filterNot(Seq("cent_id", "nid", "codes", "vec").contains)
-
-  /** (cent_id, nid, codes, vec[, payload...]) rows for `rows` under an
-    * existing index's STORED quantizer + codebooks — the shared encode step
-    * of [[appendToIndex]] and the streaming maintainer
-    * ([[graft.streaming.AnnIndexStream]]). Appends conform to the index's
-    * own payload schema: whatever attribute columns the build carried must
-    * be present on `rows` under the same names. */
+  /**
+   * `rows` as cell rows ready to write into an existing index — the one
+   * write-side step of [[appendToIndex]] and the streaming maintainer
+   * ([[graft.streaming.AnnIndexStream]]): refuse tombstoned ids, [[encode]]
+   * under the index's STORED quantizer (no retraining), conform to the
+   * index's own layout (a codes-only index must not grow a partial vec
+   * column; whatever payload columns the build carried must be present on
+   * `rows` under the same names), and co-locate each cell
+   * ([[saltedCellRepartition]], nlist from the loaded quantizer).
+   */
   private[graft] def encodeForIndex(rows: DataFrame, idCol: String,
-                                    vecCol: String, dir: String): DataFrame = {
-    val (model, cents, residual) = loadIndexMeta(rows.sparkSession, dir)
-    val payload = indexPayloadCols(rows.sparkSession, dir)
+                                    vecCol: String, dir: String,
+                                    cellSalt: Int = 1,
+                                    pin: Boolean = false): DataFrame = {
+    val spark = rows.sparkSession
+    requireNotTombstonedNids(rows, idCol, dir)
+    val q = loadIndexMeta(spark, dir)
+    val layout = cellsSchema(spark, dir).fieldNames.toSeq
+    val payload = layout.filterNot(CellCols.contains)
     val missing = payload.filterNot(rows.columns.contains)
     require(missing.isEmpty,
       s"index at $dir carries payload columns $payload; rows are missing $missing")
-    val assigned = assignCells(rows, idCol, vecCol, "nid", "_cv", cents,
-      probes = 1, keep = payload)
-    val toEncode =
-      if (!residual) permute(col("_cv"), model)
-      else {
-        val (flat, _, d) = flatCents(cents)
-        permute(graft.functions.PqFunctions.cell_residual(
-          col("_cv"), col("cent_id"), flat, d), model)
-      }
-    assigned
-      .withColumn("codes", graft.functions.PqFunctions.pq_encode(
-        toEncode, model.centroids, model.m, model.k, model.subDim))
-      .select(col("cent_id") +: col("nid") +: col("codes") +:
-        col("_cv").as("vec") +: payload.map(col): _*)
+    encode(q, rows, idCol, vecCol, payload)
+      .transform(df => if (layout.contains("vec")) df else df.drop("vec"))
+      .transform(saltedCellRepartition(_, cellSalt, q.cents.length, pin))
   }
 
   /** Query a [[buildIndex]] directory: same contract and (at equal knobs /
@@ -1618,30 +1658,15 @@ object Similarity {
     import spark.implicits._
     require(filterSelectivity > 0 && filterSelectivity <= 1.0,
       s"filterSelectivity must be in (0, 1], got $filterSelectivity")
-    val (model, cents, residual) = loadIndexMeta(spark, dir)
+    val q = loadIndexMeta(spark, dir)
+    val nlist = q.cents.length
     val baseProbe =
       if (nprobe > 0) nprobe
-      else math.max(4, math.sqrt(cents.length.toDouble).round.toInt)
+      else math.max(4, math.sqrt(nlist.toDouble).round.toInt)
     val effProbe =
       if (filter.isEmpty) baseProbe
-      else math.min(cents.length,
-        math.ceil(baseProbe / filterSelectivity).toInt)
-    // residual decomposition dot(q, v) = dot(q, c) + dot(q, r̂): the LUT is
-    // still per-QUERY (dot(q, r̂) reads the residual codebooks with q
-    // itself); only the exact dot(q, c) term is added — computed here on
-    // the (query x probed cell) rows, never on the corpus-sized candidate
-    // stream
-    val queryCellsBase = assignCells(queries, qidCol, vecCol, "qid", "_qv", cents,
-        probes = math.min(effProbe, cents.length))
-      .withColumn("_lut", graft.functions.PqFunctions.pq_lut(permute(col("_qv"), model),
-        model.centroids, model.m, model.k, model.subDim))
-    val queryCells =
-      if (!residual) queryCellsBase.withColumn("_cdot", lit(0.0))
-      else {
-        val (flat, _, d) = flatCents(cents)
-        queryCellsBase.withColumn("_cdot",
-          graft.functions.PqFunctions.cell_dot(col("_qv"), col("cent_id"), flat, d))
-      }
+      else math.min(nlist, math.ceil(baseProbe / filterSelectivity).toInt)
+    val probed = probe(q, queries, qidCol, vecCol, effProbe)
     // bounded driver collect by construction (<= nlist ints): the probed
     // union selects which cell DIRECTORIES the scan opens. Listing only
     // those paths (basePath keeps cent_id a partition column) matters
@@ -1651,21 +1676,22 @@ object Similarity {
     // ~99% of the files are then skipped. Existence is probed per cell
     // (<= nlist RPCs, driver-bounded) because a centroid's cell dir is
     // absent when no vector ever landed there.
-    val probed = queryCells.select("cent_id").distinct().as[Int].collect().sorted
+    val cellIds = probed.select("cent_id").distinct().as[Int].collect().sorted
     val cellsRoot = s"$dir/cells"
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    val probedPaths = probed.map(c => s"$cellsRoot/cent_id=$c")
+    val probedPaths = cellIds.map(c => s"$cellsRoot/cent_id=$c")
       .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
     val cells0 =
       if (probedPaths.isEmpty) // all probed cells empty: nothing to scan
-        spark.read.parquet(cellsRoot).where(lit(false))
+        spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+          cellsSchema(spark, dir).add("cent_id", "int"))
       else spark.read.option("basePath", cellsRoot).parquet(probedPaths: _*)
         // belt-and-braces static partition filter on top of the explicit
         // listing: free (the listed paths already satisfy it), keeps the
         // probe set visible in the plan's PartitionFilters, and guards
         // against a stray dir sneaking into a glob-expanded path set
-        .where(col("cent_id").isin(probed.map(_.asInstanceOf[Any]): _*))
+        .where(col("cent_id").isin(cellIds.map(_.asInstanceOf[Any]): _*))
     // attribute predicate INSIDE the probed scan: pushes to the parquet
     // reader (payload columns are plain row columns in the cell files)
     val cells1 = filter.map(cells0.where).getOrElse(cells0)
@@ -1674,31 +1700,16 @@ object Similarity {
     val cells = indexTombstones(spark, dir)
       .map(d => cells1.join(broadcast(d), Seq("nid"), "left_anti"))
       .getOrElse(cells1)
-    val hasVec = cells.schema.fieldNames.contains("vec")
-    // from here: identical shape to ivfPqTopK (codes-only candidate stream,
-    // two-level tie-aware cut, exact re-rank on the index's own vectors)
-    val scored = shortlist(
-      queryCells.join(if (hasVec) cells.drop("vec") else cells, Seq("cent_id"))
-        .filter(col("qid") =!= col("nid"))
-        .select(col("cent_id"), col("qid"), col("nid"),
-          (col("_cdot") + graft.functions.PqFunctions.pq_score(
-            col("_lut"), col("codes"), model.k)).as("_psim")),
-      "cent_id", k * rerankFactor)
-    val cvOpt: Option[DataFrame] =
-      if (hasVec) Some(cells.select(col("nid"), col("vec").as("_cv")))
+    val cv: Option[DataFrame] =
+      if (cells.schema.fieldNames.contains("vec"))
+        Some(cells.select(col("nid"), col("vec").as("_cv")))
       else rerankCorpus.map { corpus =>
         require(rerankIdCol.nonEmpty,
           "rerankCorpus needs rerankIdCol (the corpus id column)")
         val rvc = if (rerankVecCol.nonEmpty) rerankVecCol else vecCol
         unitRows(corpus, rerankIdCol, rvc, "nid", "_cv")
       }
-    cvOpt match {
-      case Some(cv) =>
-        exactRerank(scored, queries, qidCol, vecCol, cv, k, roundTo)
-      case None => // compressed-domain only: ADC ranking, no exact stage
-        rankTail(scored.select(col("qid"), col("nid"),
-          round(col("_psim"), roundTo).as("sim"), col("_psim")), k, by = "_psim")
-    }
+    adcTopK(q, probed, cells, queries, qidCol, vecCol, cv, k, rerankFactor, roundTo)
   }
 
   /**
@@ -1764,18 +1775,14 @@ object Similarity {
   def indexDriftReport(spark: org.apache.spark.sql.SparkSession, dir: String,
                        sampleSize: Int = 2000, cosDropTol: Double = 0.05,
                        skewGrowTol: Double = 0.5): IndexDrift = {
-    import spark.implicits._
-    val (_, cents, _) = loadIndexMeta(spark, dir)
+    val cents = loadClusterCentroids(spark, s"$dir/centroids")
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
     // indexes built before the stats table self-heal: record the CURRENT
     // state as the baseline (healthy by definition — there is nothing
     // older to compare against) so the next probe has one
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/stats"))) {
-      val (rows, avgCos, maxFrac) =
-        cellStats(spark.read.parquet(s"$dir/cells"), cents, sampleSize)
-      Seq((rows, avgCos, maxFrac)).toDF("rows", "avg_cos", "max_cell_frac")
-        .write.mode("overwrite").parquet(s"$dir/stats")
+      val (rows, avgCos, maxFrac) = writeCellStats(spark, dir, cents, sampleSize)
       return IndexDrift(rows, rows, avgCos, avgCos, maxFrac, maxFrac,
         retrainAdvised = false)
     }
@@ -1833,10 +1840,9 @@ object Similarity {
                 rerankCorpus: Option[DataFrame] = None,
                 rerankIdCol: String = "",
                 rerankVecCol: String = ""): Seq[Int] = {
-    import spark.implicits._
     require(sub >= 2, s"sub=$sub: splitting needs at least 2 sub-cells")
-    val (model, cents, residual) = loadIndexMeta(spark, dir)
-    val nlist = cents.length
+    val q = loadIndexMeta(spark, dir)
+    val nlist = q.cents.length
     val target =
       if (centId >= 0) centId
       else spark.read.parquet(s"$dir/cells").groupBy("cent_id").count()
@@ -1853,7 +1859,7 @@ object Similarity {
     val rows = (
       if (storesVec) rows0
       else {
-        val recon = reconstructCol(col("codes"), lit(target), model, cents, residual)
+        val recon = reconstructCol(col("codes"), lit(target), q.model, q.cents, q.residual)
         rerankCorpus match {
           case Some(corpus) =>
             require(rerankIdCol.nonEmpty && rerankVecCol.nonEmpty,
@@ -1874,26 +1880,18 @@ object Similarity {
     val aside = new org.apache.hadoop.fs.Path(s"$dir/.split-old-cent_id=$target")
     fs.delete(staging, true); fs.delete(aside, true)
     val updatedCents: IndexedSeq[Seq[Double]] =
-      cents.updated(target, subCents.head) ++ subCents.tail
-    val reassigned0 = rows.withColumn("cent_id",
+      q.cents.updated(target, subCents.head) ++ subCents.tail
+    val reassigned = rows.withColumn("cent_id",
       element_at(idLut, argBestCell(subCents, col("vec")) + 1))
-    val reassigned =
-      if (!residual) reassigned0 // raw codes encode the vector — cell-free
-      else {
-        // residual codes encode (vec − cellCentroid): moving a row to a new
-        // sub-cell changes its reference point, so re-encode against it
-        val (flat, _, d) = flatCents(updatedCents)
-        reassigned0.withColumn("codes", graft.functions.PqFunctions.pq_encode(
-          permute(graft.functions.PqFunctions.cell_residual(
-            col("vec"), col("cent_id"), flat, d), model),
-          model.centroids, model.m, model.k, model.subDim))
-      }
-    reassigned
+    // raw codes encode the vector alone and ride unchanged; residual codes
+    // encode (vec − cellCentroid), so a moved row re-encodes against its
+    // new sub-centroid
+    (if (q.residual) withCodes(q.copy(cents = updatedCents), reassigned) else reassigned)
       // codes-only cells must not grow the materialized training vec;
       // attribute payload columns (if the build carried any) ride through
       .select(col("cent_id") +: col("nid") +: col("codes") +:
         ((if (storesVec) Seq(col("vec")) else Nil) ++
-          rows0.columns.toSeq.filterNot(Seq("nid", "codes", "vec").contains)
+          rows0.columns.toSeq.filterNot(CellCols.contains)
             .map(col)): _*)
       .transform(saltedCellRepartition(_, cellSalt = 1, nlist = sub))
       .write.mode("overwrite").partitionBy("cent_id").parquet(staging.toString)
@@ -1913,18 +1911,13 @@ object Similarity {
         throw new IllegalStateException(s"swap failed at ${d.getPath}; original cell restored")
       }
     }
-    val updated = updatedCents.zipWithIndex.map { case (v, i) => (i, v) }
-    updated.toDF("cent_id", "centv")
-      .write.mode("overwrite").parquet(s"$dir/centroids")
+    writeCentroids(spark, updatedCents, s"$dir/centroids")
     fs.delete(aside, true); fs.delete(staging, true)
     // re-baseline the index's self-recorded health: the split changed the
     // layout on purpose, so the next drift probe should measure against
     // the post-split state (otherwise a maintenance loop re-triggers on
     // the same already-fixed skew)
-    val (rowsNow, avgCos, maxFrac) = cellStats(
-      spark.read.parquet(s"$dir/cells"), updated.map(_._2), sampleSize = 2000)
-    Seq((rowsNow, avgCos, maxFrac)).toDF("rows", "avg_cos", "max_cell_frac")
-      .write.mode("overwrite").parquet(s"$dir/stats")
+    writeCellStats(spark, dir, updatedCents, sampleSize = 2000)
     newIds
   }
 
@@ -1969,6 +1962,18 @@ object Similarity {
       val after = indexDriftReport(spark, dir)
       Split(ids, d.maxCellFracNow, after.maxCellFracNow)
     }
+  }
+
+  /** [[cellStats]] of a [[buildIndex]] directory's cells against `cents`,
+    * recorded as its health baseline in `dir/stats` and returned. */
+  private def writeCellStats(spark: org.apache.spark.sql.SparkSession, dir: String,
+                             cents: IndexedSeq[Seq[Double]],
+                             sampleSize: Int): (Long, Double, Double) = {
+    import spark.implicits._
+    val st = cellStats(spark.read.parquet(s"$dir/cells"), cents, sampleSize)
+    Seq(st).toDF("rows", "avg_cos", "max_cell_frac")
+      .write.mode("overwrite").parquet(s"$dir/stats")
+    st
   }
 
   /** (rows, sampled mean vector->assigned-centroid cosine, max cell share)

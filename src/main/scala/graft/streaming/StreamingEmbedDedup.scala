@@ -66,15 +66,13 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
  */
 object StreamingEmbedDedup {
 
-  case class BucketedVec(bucket: String, vec_id: Long, vec: Array[Double])
   case class VecMatch(vec_id: Long, matched_id: Long, cosine: Double)
-  // the state classes are package-visible, not private: Spark's generated
-  // state-encoder code constructs and reads them, and cannot reach a
-  // private nested class
-  private[streaming] case class VMember(vec_id: Long, vec: Array[Double])
 
-  /** Bucketed vector carrying its full `maxBits` signature (adaptive path). */
+  /** Bucketed vector carrying its full `maxBits` signature. */
   case class SigVec(bucket: String, vec_id: Long, vec: Array[Double], sig: Long)
+  // the state class is package-visible, not private: Spark's generated
+  // state-encoder code constructs and reads it, and cannot reach a private
+  // nested class
   private[streaming] case class SMember(vec_id: Long, vec: Array[Double], sig: Long)
 
   /** Auto keyBits targets ~this many members per grouping key at the
@@ -93,37 +91,6 @@ object StreamingEmbedDedup {
     val n = math.min(a.length, b.length)
     while (i < n) { s += a(i) * b(i); i += 1 }
     s
-  }
-
-  class EmbedDupProcessor(threshold: Double, maxBucket: Int)
-    extends StatefulProcessor[String, BucketedVec, VecMatch] {
-    @transient private var seen: ListState[VMember] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      seen = getHandle.getListState[VMember]("seen",
-        Encoders.product[VMember], TTLConfig.NONE)
-
-    override def handleInputRows(bucket: String, rows: Iterator[BucketedVec],
-                                 timerValues: TimerValues): Iterator[VecMatch] = {
-      val members = scala.collection.mutable.ArrayBuffer.empty[VMember]
-      if (seen.exists()) members ++= seen.get()
-      val out = scala.collection.mutable.ArrayBuffer.empty[VecMatch]
-      rows.foreach { v =>
-        if (members.size < maxBucket) {
-          members.foreach { m =>
-            if (m.vec_id != v.vec_id) {
-              val c = dot(v.vec, m.vec)
-              if (c >= threshold) out += VecMatch(v.vec_id, m.vec_id, c)
-            }
-          }
-          members += VMember(v.vec_id, v.vec)
-          seen.appendValue(VMember(v.vec_id, v.vec))
-        }
-        // full bucket: stops growing; the vector still matches through its
-        // other tables (batch-path parity)
-      }
-      out.iterator
-    }
   }
 
   /** Comparison depth for a bucket that currently holds `count` members:
@@ -172,23 +139,9 @@ object StreamingEmbedDedup {
     }
   }
 
-  /** Bucketed form of a vector stream: one row per (vector, table). */
-  def bucketed(vecs: DataFrame, idCol: String, vecCol: String, dim: Int,
-               tables: Int = 8, bits: Int = 8): Dataset[BucketedVec] = {
-    import vecs.sparkSession.implicits._
-    val asD = col(vecCol).cast("array<double>")
-    vecs
-      .select(col(idCol).cast("long").as("vec_id"),
-        Similarity.unitize(asD).as("_v"),
-        posexplode(array((0 until tables).map(t =>
-          Similarity.lshSignature(asD, dim, t, bits)): _*)))
-      .select(concat(col("pos"), lit(":"), col("col")).as("bucket"),
-        col("vec_id"), col("_v").as("vec"))
-      .as[BucketedVec]
-  }
-
-  /** Bucketed + full-signature form for the adaptive path: the grouping key
-    * is the `keyBits` low-bit prefix of the `maxBits` signature. */
+  /** Bucketed + full-signature form of a vector stream, one row per
+    * (vector, table): the grouping key is the `keyBits` low-bit prefix of
+    * the `maxBits` signature. */
   def bucketedAdaptive(vecs: DataFrame, idCol: String, vecCol: String, dim: Int,
                        tables: Int, keyBits: Int, maxBits: Int): Dataset[SigVec] = {
     import vecs.sparkSession.implicits._
@@ -211,16 +164,28 @@ object StreamingEmbedDedup {
     * `tables = 0` / `bits = 0` = AUTO (the scale-correct setting): routes to
     * [[matchesAuto]] with its default capacity horizon — knobs derived the
     * way [[graft.ext.Similarity.autoLshKnobs]] does for batch, with
-    * comparison depth adapting to ACCUMULATED state size per bucket. */
+    * comparison depth adapting to ACCUMULATED state size per bucket.
+    * Fixed knobs run the same processor at `keyBits = maxBits = bits`: the
+    * grouping key is then the full signature, so the depth mask always
+    * passes and every bucket member is compared (`bits` <= 62). */
   def matches(vecs: DataFrame, idCol: String, vecCol: String, dim: Int,
               tables: Int = 8, bits: Int = 8, threshold: Double = 0.9,
-              maxBucket: Int = 10000): Dataset[VecMatch] = {
+              maxBucket: Int = 10000): Dataset[VecMatch] =
     if (tables == 0 || bits == 0)
-      return matchesAuto(vecs, idCol, vecCol, dim, threshold, maxBucket = maxBucket)
-    val b = bucketed(vecs, idCol, vecCol, dim, tables, bits)
+      matchesAuto(vecs, idCol, vecCol, dim, threshold, maxBucket = maxBucket)
+    else matchBuckets(vecs, idCol, vecCol, dim, tables, bits, bits,
+      threshold, targetBucket = 1, maxBucket)
+
+  /** The one transformWithState plan of both matchers. */
+  private def matchBuckets(vecs: DataFrame, idCol: String, vecCol: String,
+                           dim: Int, tables: Int, keyBits: Int, maxBits: Int,
+                           threshold: Double, targetBucket: Int,
+                           maxBucket: Int): Dataset[VecMatch] = {
+    val b = bucketedAdaptive(vecs, idCol, vecCol, dim, tables, keyBits, maxBits)
     import b.sparkSession.implicits._
     b.groupByKey(_.bucket)
-      .transformWithState(new EmbedDupProcessor(threshold, maxBucket),
+      .transformWithState(
+        new AdaptiveEmbedDupProcessor(threshold, keyBits, maxBits, targetBucket, maxBucket),
         TimeMode.None(), OutputMode.Append())
   }
 
@@ -252,11 +217,7 @@ object StreamingEmbedDedup {
     val keyBits = math.min(maxBits, math.max(8, math.ceil(
       math.log(math.max(1.0, horizonRows.toDouble / stateBucketTarget)) /
         math.log(2.0)).toInt))
-    val b = bucketedAdaptive(vecs, idCol, vecCol, dim, tables, keyBits, maxBits)
-    import b.sparkSession.implicits._
-    b.groupByKey(_.bucket)
-      .transformWithState(
-        new AdaptiveEmbedDupProcessor(threshold, keyBits, maxBits, targetBucket, maxBucket),
-        TimeMode.None(), OutputMode.Append())
+    matchBuckets(vecs, idCol, vecCol, dim, tables, keyBits, maxBits, threshold,
+      targetBucket, maxBucket)
   }
 }

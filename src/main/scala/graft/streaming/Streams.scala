@@ -178,28 +178,16 @@ object AnnIndexStream {
                                  vecCol: String, cellSalt: Int = 1): Unit = {
     import org.apache.hadoop.fs.Path
     val staging = s"$indexDir/.staging/batch=$batchId"
-    // co-locate cells before the staging write (same discipline as
-    // buildIndex/appendToIndex: without it, every batch task writes a
-    // sliver of every cell — tasks x cells files PER BATCH). Replay-safe:
-    // the exchange is deterministic for a given batch AND its partition
-    // count is PINNED (pin=true; nlist read per batch — a parquet footer,
-    // not a data scan), so part indices — hence the deterministic rename
-    // targets below — are stable across foreachBatch replays. An
-    // AQE-coalesced column-only repartition could renumber parts between
-    // attempt and replay and double-ingest under fresh file names.
-    val nlist =
-      batch.sparkSession.read.parquet(s"$indexDir/centroids").count().toInt
-    // a tombstoned id arriving on the stream is the delete→re-ingest trap
-    // (the PostingsIndexStream guard mirrored): its rows would be
-    // query-invisible yet physically dropped at ann-compact. Fail the
-    // batch loudly — compact, then resume the stream.
-    graft.ext.Similarity.requireNotTombstonedNids(batch, idCol, indexDir)
-    graft.ext.Similarity.encodeForIndex(batch, idCol, vecCol, indexDir)
-      .transform(df => // codes-only indexes must not grow a partial vec column
-        if (graft.ext.Similarity.indexStoresVectors(batch.sparkSession, indexDir)) df
-        else df.drop("vec"))
-      .transform(graft.ext.Similarity.saltedCellRepartition(_, cellSalt, nlist,
-        pin = true))
+    // the appendToIndex rows: a tombstoned id fails the batch loudly (the
+    // PostingsIndexStream guard mirrored — compact, then resume), and cells
+    // co-locate before the staging write. Replay-safe: the exchange is
+    // deterministic for a given batch AND its partition count is PINNED
+    // (pin=true), so part indices — hence the deterministic rename targets
+    // below — are stable across foreachBatch replays. An AQE-coalesced
+    // column-only repartition could renumber parts between attempt and
+    // replay and double-ingest under fresh file names.
+    graft.ext.Similarity.encodeForIndex(batch, idCol, vecCol, indexDir, cellSalt,
+        pin = true)
       .write.mode("overwrite").partitionBy("cent_id").parquet(staging)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(indexDir), batch.sparkSession.sparkContext.hadoopConfiguration)

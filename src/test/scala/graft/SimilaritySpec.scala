@@ -1497,6 +1497,36 @@ class SimilaritySpec extends SparkSpec {
     assert(recall >= 0.9, s"post-append recall $recall")
   }
 
+  test("build/append encode identity: encodeForIndex over the build corpus " +
+      "returns every stored (cent_id, nid, codes) row exactly, in every layout") {
+    // a build and an append share one encoder; were they ever to diverge
+    // (raw-vs-residual fork, OPQ transform, payload projection), appended
+    // rows would land in other cells or carry other codes than a rebuild
+    // over the same rows gives
+    val dim = 16
+    val rnd = new scala.util.Random(149)
+    val centers = (0 until 6).map(_ => Array.fill(dim)(rnd.nextGaussian()))
+    val corpus = (0 until 300).map { i =>
+      val c = centers(i % 6)
+      (i.toLong, c.map(x => (x + 0.15 * rnd.nextGaussian()).toFloat).toSeq, i % 3)
+    }.toDF("vec_id", "embedding", "label")
+    for ((name, residual, opqIters, payload) <- Seq(
+        ("raw", false, 0, Nil), ("residual", true, 0, Nil),
+        ("residual+opq", true, 2, Nil), ("payload", false, 0, Seq("label")))) {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-enc-$name").toString
+      Similarity.buildIndex(corpus, "vec_id", "embedding", dir, nlist = 6,
+        kmeansIters = 2, m = 4, k = 8, residual = residual, opqIters = opqIters,
+        payloadCols = payload)
+      val cols = Seq("cent_id", "nid", "codes") ++ payload
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select(cols.map(col): _*).collect().map(_.toSeq).toSeq
+      val stored = rows(spark.read.parquet(s"$dir/cells"))
+      val encoded = rows(Similarity.encodeForIndex(corpus, "vec_id", "embedding", dir))
+      assert(stored.length === 300 && encoded.length === 300, name)
+      assert(encoded.toSet === stored.toSet, s"$name: re-encode differs from the build")
+    }
+  }
+
   test("ANN index lifecycle: compaction is result-identical, drift probe flags a shifted append") {
     val dim = 16
     val rnd = new scala.util.Random(71)
